@@ -120,7 +120,7 @@ def q_cv_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cv_stats_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang column sketch on documents (exact-mode for oracle parity;
-    the scale path flips EngineConfig.approx_distinct -> HLL)."""
+    the scale path leaves EngineConfig.exact off -> HLL)."""
     docs = _t(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_rows"),

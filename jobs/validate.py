@@ -35,7 +35,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from xsd2json_spark.engine import EngineConfig, ValidationEngine
+from xsd2json_spark.engine import ValidationEngine
 from xsd2json_spark.plans.audit import ResumableRunner
 from xsd2json_spark.spec.loader import load_spec
 
@@ -50,7 +50,6 @@ def main(argv=None) -> int:
     ap.add_argument("--resume", action="store_true", help="resume via bucket-lineage audit")
     ap.add_argument("--run-id", default="run1")
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--salt-partitions", type=int, default=0)
     ap.add_argument("--baselines", default=None,
                     help="drift-baseline JSON written by jobs/snapshot.py")
     ap.add_argument("--incremental-prev", default=None, metavar="PATH",
@@ -80,10 +79,7 @@ def main(argv=None) -> int:
 
         with open(args.baselines) as fh:
             baselines = json.load(fh)
-    engine = ValidationEngine(
-        spark, spec, dims=dims, baselines=baselines,
-        config=EngineConfig(salt_partitions=args.salt_partitions),
-    )
+    engine = ValidationEngine(spark, spec, dims=dims, baselines=baselines)
     df = spark.read.parquet(args.input)
 
     if args.incremental_prev:

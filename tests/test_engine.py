@@ -170,18 +170,24 @@ def test_allof_anyof(spark, files):
     assert vm["any"]["violation_count"] == 0
 
 
-def test_unique_salted_and_plain_agree(spark, files):
-    spec = Spec(name="t", key_columns=["repo", "path", "commit"], constraints=[Unique(id="uq", columns=["repo", "path", "commit"])])
-    # all three physical strategies must agree:
-    hashed = ValidationEngine(spark, spec, config=EngineConfig(unique_via_hash=True)).run(files)
-    plain = ValidationEngine(spark, spec, config=EngineConfig(unique_via_hash=False, salt_partitions=0)).run(files)
-    salted = ValidationEngine(spark, spec, config=EngineConfig(unique_via_hash=False, salt_partitions=8)).run(files)
-    n_hash = verdict_map(hashed)["uq"]["violation_count"]
-    n_plain = verdict_map(plain)["uq"]["violation_count"]
-    n_salted = verdict_map(salted)["uq"]["violation_count"]
-    assert n_hash == n_plain == n_salted
+def test_unique_hash_path_matches_groupby_oracle(spark, files):
+    """The key-hash unique plan (hash count, then verify on the true key)
+    must find exactly the duplicate groups of a plain per-key count."""
+    cols = ["repo", "path", "commit"]
+    spec = Spec(name="t", key_columns=cols, constraints=[Unique(id="uq", columns=cols)])
+    res = ValidationEngine(spark, spec).run(files)
+    oracle = (
+        files.select(*cols).na.drop(subset=cols)
+        .groupBy(*cols).count().filter(F.col("count") > 1)
+    )
+    n_hash = verdict_map(res)["uq"]["violation_count"]
+    assert n_hash == oracle.count()
+    got = res.violations.filter(F.col("constraint_id") == "uq").select(*cols)
+    want = oracle.select(*[F.col(c).cast("string").alias(c) for c in cols])
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
     # ids 1009, 2018, ... borrow the previous id's key -> one dup group each
-    assert n_plain == _expected_count(1009, skip_zero=True)
+    assert n_hash == _expected_count(1009, skip_zero=True)
+    res.unpersist()
 
 
 def test_fk_broadcast_and_smj_agree(spark, files, dims):
@@ -273,10 +279,10 @@ def test_generation_parallelism_invariant(spark):
     assert a.exceptAll(b).count() == 0
 
 
-def test_single_pass_observe_matches_two_pass(spark):
-    """config.single_pass rides verdict counters + sketch on the
-    violation scan (CollectMetrics): same verdicts and violations as
-    the two-pass plan, one wide-column scan instead of two."""
+def test_single_pass_fused_matches_two_pass(spark):
+    """config.fused derives verdict counters, sketch and violation rows
+    from one narrow cached scan: same verdicts and violations as the
+    two-pass plan, one wide-column scan instead of two."""
     from xsd2json_spark import spec_from_dict
     from xsd2json_spark.sources.synth import files_table, repos_dim
 
@@ -306,36 +312,20 @@ def test_single_pass_observe_matches_two_pass(spark):
         }
 
     two = ValidationEngine(spark, spec, dims=dims).run(files)
-    one = ValidationEngine(spark, spec, dims=dims, config=EngineConfig(single_pass=True)).run(files)
+    one = ValidationEngine(spark, spec, dims=dims, config=EngineConfig(fused=True)).run(files)
     assert vmap(one) == vmap(two)
     a = two.violations
     b = one.violations
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # the single-pass violations plan carries the observed metrics node
+    # the single-pass violations plan reads the narrow cache's fail flags
     plan = one.violations._jdf.queryExecution().analyzed().toString()
-    assert "CollectMetrics" in plan
+    assert "__fail_0" in plan
     # stats present with sane values
     st = {r["column"]: r for r in one.stats.collect()}
     assert st["content"]["count"] == 20_000 and st["content"]["null_count"] >= 0
     one.unpersist()
     two.unpersist()
     files.unpersist()
-
-
-def test_single_pass_falls_back_for_partitioned_specs(spark):
-    from xsd2json_spark import spec_from_dict
-    from xsd2json_spark.sources.synth import files_table
-
-    spec = spec_from_dict({
-        "name": "sp2", "key_columns": ["repo"], "partition_by": ["lang"],
-        "constraints": [{"kind": "not_null", "id": "nn", "column": "content"}],
-    })
-    files = files_table(spark, n_rows=2_000)
-    res = ValidationEngine(spark, spec, config=EngineConfig(single_pass=True)).run(files)
-    rows = res.verdicts.collect()
-    assert len(rows) >= 2  # per-partition verdicts still work (two-pass fallback)
-    assert all(r["partition_key"] != "ALL" for r in rows)
-    res.unpersist()
 
 
 def test_quantile_constraint_bounds_and_groups(spark):
@@ -531,8 +521,8 @@ def test_fused_matches_two_pass(spark):
 
 
 def test_fused_partitioned_spec(spark):
-    """Unlike the observe mode, fused supports partition_by (the agg is
-    a plain groupBy over the cache, not a grand-aggregate metric)."""
+    """Fused supports partition_by: the agg is a plain groupBy over the
+    cache, one verdict row per (partition, constraint)."""
     from xsd2json_spark import spec_from_dict
     from xsd2json_spark.sources.synth import files_table
 
@@ -559,10 +549,10 @@ def test_fused_partitioned_spec(spark):
 
 
 def test_fused_resolution_rules(spark):
-    """Auto (None) -> two-pass (measured: the narrow-derivative cache
+    """Default -> two-pass (measured: the narrow-derivative cache
     round-trip LOSES to a second codegen'd scan on narrow content,
     BENCH/BYTES_PER_ROW.md); fused is an explicit opt-in for wide
-    (KB+) content, and even forced it falls back for exact-distinct
+    (KB+) content, and even then it falls back for exact-distinct
     runs and row-less specs."""
     from xsd2json_spark import spec_from_dict
 
@@ -572,8 +562,6 @@ def test_fused_resolution_rules(spark):
     assert not ValidationEngine(spark, spec, config=EngineConfig(fused=False))._resolve_fused()
     assert not ValidationEngine(
         spark, spec, config=EngineConfig(fused=True, exact=True))._resolve_fused()
-    assert not ValidationEngine(
-        spark, spec, config=EngineConfig(fused=True, approx_distinct=False))._resolve_fused()
     table_only = spec_from_dict({
         "name": "t", "key_columns": ["repo"],
         "constraints": [{"kind": "unique", "id": "uq", "columns": ["repo", "path", "commit"]}],
@@ -640,7 +628,7 @@ def test_functional_dependency_fixture(spark):
 
 
 def test_functional_dependency_expr_and_single_pass(spark):
-    """Dependent may be an expression; two-pass and observe single-pass
+    """Dependent may be an expression; two-pass and fused single-pass
     agree (FD is a table-level check in both plans)."""
     from xsd2json_spark.spec.constraints import FunctionalDependency, NotNull
 
@@ -654,7 +642,7 @@ def test_functional_dependency_expr_and_single_pass(spark):
         ],
     )
     two = ValidationEngine(spark, spec).run(df)
-    one = ValidationEngine(spark, spec, config=EngineConfig(single_pass=True)).run(df)
+    one = ValidationEngine(spark, spec, config=EngineConfig(fused=True)).run(df)
     # length(s): k=1 -> {2}, k=2 -> {2}, k=3 -> {1} => all consistent
     assert verdict_map(two)["fdlen"]["passed"]
     assert verdict_map(one)["fdlen"]["passed"]
@@ -688,7 +676,7 @@ def test_max_fail_ratio_verdict_policy(spark, files):
 
 
 def test_max_fail_ratio_exact_boundary_and_single_pass(spark):
-    """passed iff violations <= ratio * evaluated, inclusive; observe
+    """passed iff violations <= ratio * evaluated, inclusive; fused
     single-pass applies the same policy."""
     rows = [(i, None if i < 2 else "v") for i in range(10)]
     df = spark.createDataFrame(rows, "id int, v string")
@@ -698,18 +686,16 @@ def test_max_fail_ratio_exact_boundary_and_single_pass(spark):
                  constraints=[NotNull(id="nn", column="v", max_fail_ratio=0.19)])
     assert verdict_map(ValidationEngine(spark, at).run(df))["nn"]["passed"]
     assert not verdict_map(ValidationEngine(spark, below).run(df))["nn"]["passed"]
-    sp = EngineConfig(single_pass=True)
+    sp = EngineConfig(fused=True)
     assert verdict_map(ValidationEngine(spark, at, config=sp).run(df))["nn"]["passed"]
     assert not verdict_map(ValidationEngine(spark, below, config=sp).run(df))["nn"]["passed"]
 
 
 def test_single_pass_clean_table_regression(spark):
-    """Regression: a violation-FREE run must not lose the observed
-    metrics. AQE's empty-relation propagation replaces an empty grouped
-    -aggregate subtree INCLUDING the CollectMetrics node, so the
-    metric-firing action must be a global aggregate (engine fix in
-    _run_single_pass); before the fix obs.get threw on any clean
-    table — the common production case."""
+    """Regression: a violation-FREE single-pass run must still report
+    its verdict counters (evaluated_count included) and an empty
+    violations table — the common production case. An empty violation
+    scan must not take the counters with it."""
     df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k int, s string")
     spec = Spec(
         name="t", key_columns=["k"],
@@ -718,7 +704,7 @@ def test_single_pass_clean_table_regression(spark):
             Unique(id="uq", columns=["k"]),
         ],
     )
-    res = ValidationEngine(spark, spec, config=EngineConfig(single_pass=True)).run(df)
+    res = ValidationEngine(spark, spec, config=EngineConfig(fused=True)).run(df)
     vm = verdict_map(res)
     assert vm["nn"]["passed"] and vm["nn"]["evaluated_count"] == 100
     assert vm["uq"]["passed"]

@@ -74,6 +74,24 @@ def test_incremental_equals_full_recompute(spark, snapshots):
     assert inc["t_nn"][0] > 0 and inc["t_len"][0] > 0  # non-vacuous fixture
 
 
+def test_incremental_applies_max_fail_ratio_like_full_run(spark, snapshots):
+    """Composed counters go through the engine's verdict rule: a
+    max_fail_ratio constraint tolerated by a from-scratch run on the
+    current snapshot is tolerated by the incremental verdicts too."""
+    a, b = snapshots
+    doc = dict(SPEC, constraints=[
+        {"kind": "not_null", "id": "t_nn", "column": "text", "max_fail_ratio": 0.2},
+        *SPEC["constraints"][1:],
+    ])
+    spec = spec_from_dict(doc)
+    prev = ValidationEngine(spark, spec).run(a).verdicts
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev))
+    full = vmap(ValidationEngine(spark, spec).run(b).verdicts)
+    assert inc == full
+    assert full["t_nn"][0] > 0 and full["t_nn"][1]  # tolerated, not clean
+    assert not full["t_len"][1]  # the strict rule still applies
+
+
 def test_incremental_empty_delta_is_identity(spark, snapshots):
     a, _ = snapshots
     spec = spec_from_dict(SPEC)

@@ -125,6 +125,41 @@ def test_resume_drift_runs_once_globally(spark, tmp_path):
     files.unpersist()
 
 
+def test_audit_applies_max_fail_ratio_like_single_shot(spark, tmp_path):
+    """The bucket fold re-derives ``passed`` from the summed counts with
+    the engine's verdict rule: a max_fail_ratio constraint that passes a
+    single-shot run passes the audit too (and strict ones still fail)."""
+    files = files_table(spark, n_rows=4000).cache()
+    files.count()
+    spec = Spec(
+        name="resume_ratio",
+        key_columns=["repo", "path", "commit"],
+        constraints=[
+            # ids divisible by 997 have NULL content: 5 of 4000 rows
+            NotNull(id="nn_tol", column="content", max_fail_ratio=0.01),
+            Enum(id="en", column="lang", values=["python", "java", "scala", "go", "js", "sql"]),
+            Unique(id="uq", columns=["repo", "path", "commit"]),
+        ],
+    )
+
+    def vmap(df):
+        return {
+            (r["partition_key"], r["constraint_id"]): (r["violation_count"], r["evaluated_count"], r["passed"])
+            for r in df.collect()
+        }
+
+    single = ValidationEngine(spark, spec).run(files)
+    truth = vmap(single.verdicts)
+    single.unpersist()
+    assert truth[("ALL", "nn_tol")] == (5, 4000, True)  # tolerated, not clean
+    assert not truth[("ALL", "en")][2]
+
+    runner = ResumableRunner(ValidationEngine(spark, spec), str(tmp_path / "ratio"), run_id="r1", n_buckets=4)
+    runner.run(files)
+    assert vmap(runner.global_verdicts()) == truth
+    files.unpersist()
+
+
 def test_staging_partition_pruning(spark, tmp_path):
     """The per-bucket read is a partition-pruned scan of the staged
     layout (PartitionFilters on __bucket), not a full-table filter."""

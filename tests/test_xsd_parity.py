@@ -15,17 +15,22 @@ import pytest
 from tools.xsd_parity import JSON_DIR, XSD_DIR, semantically_equal
 from xsd2json_spark.spec.xsd_compiler import XsdCompiler, xsd_to_json_schema
 
+HAVE_CORPUS = os.path.isdir(XSD_DIR)
+needs_corpus = pytest.mark.skipif(not HAVE_CORPUS, reason=f"reference XSD corpus not found at {XSD_DIR}")
+
 FIXTURES = sorted(
     f[:-4]
-    for f in os.listdir(XSD_DIR)
+    for f in (os.listdir(XSD_DIR) if HAVE_CORPUS else [])
     if f.endswith(".xsd") and os.path.exists(os.path.join(JSON_DIR, f[:-4] + ".json"))
 )
 
 
+@needs_corpus
 def test_full_corpus_count():
     assert len(FIXTURES) == 135
 
 
+@needs_corpus
 @pytest.mark.parametrize("name", FIXTURES)
 def test_golden_parity(name):
     with open(os.path.join(JSON_DIR, name + ".json")) as fh:

@@ -19,8 +19,6 @@ Modes:
   fused    — round-5: one codegen'd scan -> narrow cached derivative
              (fail flags + sketch inputs + keys); agg, violations and
              key-only table checks read the cache (content once).
-  observe  — CollectMetrics single pass (kept for reference; breaks
-             whole-stage codegen).
 
 Usage: python tools/bytes_per_row.py [n_rows]
 """
@@ -123,7 +121,6 @@ def main():
     modes = {
         "two_pass": EngineConfig(fused=False),
         "fused": EngineConfig(fused=True),
-        "observe": EngineConfig(single_pass=True),
     }
     results = {}
     for name, cfg in modes.items():

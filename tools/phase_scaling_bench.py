@@ -46,7 +46,7 @@ uq = next(c for c in spec.constraints if isinstance(c, Unique))
 fk = next(c for c in spec.constraints if isinstance(c, ForeignKey))
 
 def t_agg():
-    t0 = time.perf_counter(); eng._agg_pass(df).collect(); return time.perf_counter() - t0
+    t0 = time.perf_counter(); eng.row_verdicts_and_stats(df)[0].collect(); return time.perf_counter() - t0
 def t_viol():
     t0 = time.perf_counter(); eng.row_violations(df).count(); return time.perf_counter() - t0
 def t_unique():

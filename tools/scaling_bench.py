@@ -43,7 +43,6 @@ from xsd2json_spark.sources.synth import repos_dim
 from bench import FILES_SPEC
 
 cores = int(sys.argv[1]); path = sys.argv[2]; n_rows = int(sys.argv[3]); timed = int(sys.argv[4])
-single_pass = len(sys.argv) > 5 and sys.argv[5] == "1"
 # equal 48g heap at BOTH levels (measured: 8g heap costs local[32]
 # ~45% throughput via GC pressure; equal heaps also avoid handicapping
 # either level)
@@ -53,11 +52,8 @@ spark = get_spark(app_name=f"scale{{cores}}", master=f"local[{{cores}}]", shuffl
 df = spark.read.parquet(path)
 df.count()
 
-from xsd2json_spark.engine import EngineConfig
-cfg = EngineConfig(single_pass=single_pass)
-
 def one_run():
-    eng = ValidationEngine(spark, spec_from_dict(FILES_SPEC), dims={{"repos_dim": repos_dim(spark)}}, config=cfg)
+    eng = ValidationEngine(spark, spec_from_dict(FILES_SPEC), dims={{"repos_dim": repos_dim(spark)}})
     t0 = time.perf_counter()
     res = eng.run(df)
     res.verdicts.collect()
@@ -78,10 +74,9 @@ print("RESULT " + json.dumps({{"cores": cores, "sec": round(best, 3),
 """
 
 
-def run_child(cores: int, path: str, n_rows: int, pin: bool, single_pass: bool) -> dict:
+def run_child(cores: int, path: str, n_rows: int, pin: bool) -> dict:
     script = CHILD.format(repo=REPO)
-    cmd = [sys.executable, "-c", script, str(cores), path, str(n_rows), str(TIMED_RUNS),
-           "1" if single_pass else "0"]
+    cmd = [sys.executable, "-c", script, str(cores), path, str(n_rows), str(TIMED_RUNS)]
     if pin and shutil.which("taskset"):
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
     out = subprocess.run(
@@ -136,11 +131,6 @@ def measure_burn(cores: int, pin: bool) -> float:
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     pin = "--no-pin" not in sys.argv
-    # two-pass engine by default: measured at 64M/local[32], the
-    # observe-mode single pass is ~2x SLOWER (139s vs 75s — the
-    # CollectMetrics node defeats whole-stage codegen around the scan);
-    # --single-pass opts in for comparison runs
-    single_pass = "--single-pass" in sys.argv
     # --levels lo,hi picks the N and 4N core counts (default 8,32). The
     # north rule fixes the RATIO (4x), not N itself; lower levels (e.g.
     # 4,16) leave headroom below the host's own thread-scaling ceiling,
@@ -186,7 +176,7 @@ def main():
     results = {lo: [], hi: []}
     burns = {lo: [], hi: []}
     for cores in (lo, hi) * pairs:
-        r = run_child(cores, path, n_rows, pin=pin, single_pass=single_pass)
+        r = run_child(cores, path, n_rows, pin=pin)
         print(f"child local[{cores}]: {r['all_times']} s (agg {r['agg_phase']}, viol {r['viol_phase']})")
         results[cores].append(r)
         b = measure_burn(cores, pin)
@@ -214,7 +204,6 @@ def main():
     report = {
         "n_rows": n_rows,
         "pinned": pin,
-        "single_pass_engine": single_pass,
         f"local[{lo}]": n,
         f"local[{hi}]": n4,
         f"scaling_efficiency_{lo}_to_{hi}": round(eff, 3),
@@ -242,8 +231,7 @@ def main():
 
 Per BASELINE.md's measurement plan: the same full-constraint validation
 job (bench.py FILES_SPEC: 6 row-level constraints + unique + FK +
-cardinality + 3-column sketch; engine mode:
-{"TRUE single-pass (observe/CollectMetrics — one wide-column scan/run)" if single_pass else "two-pass"};
+cardinality + 3-column sketch; engine mode: two-pass;
 hash-unique + broadcast anti-join) over the SAME deterministic synthetic
 (repo,path,commit,lang,content) parquet ({n_rows:,} rows), at N={lo} and
 4N={hi} cores in fresh JVMs (ParallelGC), JIT-warmed, children

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from xsd2json_spark.engine.validate import VERDICT_COLUMNS, ValidationEngine
+from xsd2json_spark.engine.validate import VERDICT_COLUMNS, VERDICT_SCHEMA, ValidationEngine, verdict_passed
 from xsd2json_spark.spec.constraints import Cardinality, Drift, ForeignKey, Spec, Unique
 
 
@@ -143,7 +143,7 @@ def incremental_row_verdicts(
         "constraint_id",
         (z("__pv") + z("__av") - z("__rv")).alias("violation_count"),
         (z("__pe") + z("__ae") - z("__re")).alias("evaluated_count"),
-    ).withColumn("passed", F.col("violation_count") == 0)
+    ).withColumn("passed", verdict_passed(engine.spec))
     if engine.spec.partition_by:
         # a partition exists iff it has rows (evaluated_count is the
         # per-partition row count, identical across constraints): a
@@ -550,13 +550,14 @@ def incremental_verdicts(
     drift_state = drift_state or {}
 
     def _verdict_row(cid, n_col):
+        vc, ec = F.coalesce(F.col("__n"), F.lit(0)).cast("long"), F.lit(None).cast("long")
         return n_col.select(
             F.lit("ALL").alias("partition_key"),
             F.lit(cid).alias("constraint_id"),
-            F.coalesce(F.col("__n"), F.lit(0)).cast("long").alias("violation_count"),
-            F.lit(None).cast("long").alias("evaluated_count"),
-            (F.coalesce(F.col("__n"), F.lit(0)) == 0).alias("passed"),
-        ).select(*VERDICT_COLUMNS)
+            vc.alias("violation_count"),
+            ec.alias("evaluated_count"),
+            verdict_passed(spec, F.lit(cid), vc, ec).alias("passed"),
+        )
 
     composed = []
     for c in spec.table_level():
@@ -593,13 +594,7 @@ def incremental_verdicts(
                 counts = compose_drift_counts(drift_state[c.id], added, removed, c)
                 rows = drift_verdict_rows_from_counts(c, counts, baselines or {})
             composed.append(c)
-            verdicts = verdicts.unionByName(
-                spark.createDataFrame(
-                    rows,
-                    schema="partition_key string, constraint_id string, "
-                    "violation_count long, evaluated_count long, passed boolean",
-                ).select(*VERDICT_COLUMNS)
-            )
+            verdicts = verdicts.unionByName(spark.createDataFrame(rows, schema=VERDICT_SCHEMA))
             continue
         else:
             continue

@@ -19,23 +19,27 @@ Plan shape (idiomatic, Catalyst-friendly):
   the output is proportional to the number of violations, not rows).
 
 - TABLE-LEVEL constraints each get their natural distributed plan:
-  unique     -> two-stage (salted) count per key, HAVING n > 1
+  unique     -> count per 8-byte key hash, HAVING n > 1, then verify
+                the candidates on the true key (broadcast semi join)
   foreign_key-> left_anti join (broadcast when dim is small, else
                 sort-merge with AQE skew handling)
   cardinality-> groupBy(group_key).count() with bound filter
   drift      -> see engine/drift.py (single-pass grid ECDF / category
                 histogram vs persisted baseline snapshot)
 
+- VERDICTS: one rule (``verdict_passed``) turns every
+  (constraint_id, violation_count, evaluated_count) row into ``passed``.
+
 Scale notes: no collect() in any data path (only of per-constraint
 verdict rows, which are O(#constraints x #partitions)); every join side
-that is provably small is broadcast; uniqueness uses spark_partition_id
-as the salt so hot keys partial-aggregate locally before the shuffle.
+that is provably small is broadcast; uniqueness shuffles key hashes, and
+Spark's partial aggregation combines hot keys map-side before the shuffle.
 """
 
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Dict, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -53,6 +57,10 @@ from xsd2json_spark.spec.constraints import (
 )
 
 VERDICT_COLUMNS = ["partition_key", "constraint_id", "violation_count", "evaluated_count", "passed"]
+VERDICT_SCHEMA = (
+    "partition_key string, constraint_id string, violation_count long, "
+    "evaluated_count long, passed boolean"
+)
 VIOLATION_EXTRA = ["constraint_id", "detail"]
 
 #: optimizer size estimate above which Quantile(approx=None) switches
@@ -96,21 +104,37 @@ def _resolve_quantile_approx(approx: Optional[bool], src: DataFrame) -> bool:
     return use_approx
 
 
+def verdict_passed(
+    spec: Spec,
+    constraint_id="constraint_id",
+    violation_count="violation_count",
+    evaluated_count="evaluated_count",
+) -> Column:
+    """THE verdict rule: ``passed`` from a verdict row's constraint id,
+    violation count and evaluated count (column names or Columns). A
+    row-level constraint with ``max_fail_ratio`` (Deequ compliance)
+    passes iff violation_count <= ratio * evaluated_count, inclusive;
+    every other constraint passes iff it has no violations. Without any
+    ratio in the spec this is exactly ``violation_count == 0``. Every
+    producer of verdict rows (two-pass, fused, table-level, incremental
+    composition, the audit's bucket fold) derives ``passed`` here, so a
+    re-aggregated verdict cannot disagree with a single-shot run."""
+    cid, vc, ec = (
+        F.col(x) if isinstance(x, str) else x for x in (constraint_id, violation_count, evaluated_count)
+    )
+    ratios = {c.id: float(c.max_fail_ratio) for c in spec.row_level() if c.max_fail_ratio is not None}
+    if not ratios:
+        return vc == 0
+    mfr = F.create_map(*[F.lit(x) for kv in ratios.items() for x in kv])[cid]
+    return F.when(mfr.isNotNull(), vc.cast("double") <= mfr * ec.cast("double")).otherwise(vc == 0)
+
+
 @dataclass
 class EngineConfig:
-    salt_partitions: int = 0  # 0 = rely on map-side combine; >0 = explicit two-stage
     broadcast_threshold_rows: int = 2_000_000  # dim row count below which FK dims broadcast
-    approx_distinct: bool = True  # HLL vs exact distinct in the sketch
     quantiles: tuple = (0.25, 0.5, 0.75)
     quantile_accuracy: int = 10000
-    exact: bool = False  # True = exact distinct (test/oracle parity mode)
-    # uniqueness via 8-byte key hashes: shuffle xxhash64(key) instead of
-    # the full key tuple (~10x fewer shuffle bytes on string keys), then
-    # verify candidates against the real columns — result stays EXACT
-    # (a hash collision only creates a candidate; the verify groupBy on
-    # the true key discards it). The dominant cost at repo scale is this
-    # shuffle, so this is the default.
-    unique_via_hash: bool = True
+    exact: bool = False  # True = exact distinct in the sketch (test/oracle parity); False = HLL
     # Dup-hash sets at or below this row count are materialized eagerly
     # and BROADCAST into the candidate semi-join (see unique_violations:
     # AQE cannot see through the reducer-side agg+filter, so without the
@@ -119,20 +143,6 @@ class EngineConfig:
     # 5M hashes ~ 40 MB broadcast is the safety ceiling — above it the
     # plan falls back to the shuffled semi join.
     unique_dup_broadcast_limit: int = 5_000_000
-    # TRUE single-pass mode: verdict counters + stats sketch ride the
-    # violation scan as observed metrics (df.observe / CollectMetrics),
-    # so the wide fact columns are decompressed ONCE per run instead of
-    # twice. Restrictions: global specs only (no partition_by — observe
-    # is a grand aggregate) and approx distinct (observe rejects
-    # DISTINCT aggregates). run() falls back to the two-pass plan when
-    # the spec needs either.
-    # MEASURED CAVEAT (keep default False): at 64M rows / local[32] the
-    # single pass is ~2x SLOWER end-to-end (139s vs 75s) — the
-    # CollectMetrics node breaks whole-stage codegen around the scan,
-    # and two codegen'd columnar scans beat one interpreted scan. Use
-    # it when the scan is genuinely IO-bound (cold object storage),
-    # not page-cache-hot local parquet.
-    single_pass: bool = False
     # FUSED single-pass mode: one codegen'd scan projects a NARROW
     # derivative of the fact table — violation keys, one boolean fail
     # flag per row-level constraint, and per-watched-column sketch
@@ -141,9 +151,8 @@ class EngineConfig:
     # stats sketch, violation rows AND the key-only table-level checks
     # (unique / FK / cardinality) all derive from the cache. The wide
     # content column is decompressed and predicate-evaluated exactly
-    # ONCE per run, and unlike the observe mode above the scan keeps
-    # whole-stage codegen (the cache is a columnar InMemoryRelation).
-    # Three-valued: None = auto, True = force, False = always two-pass.
+    # ONCE per run, and the scan keeps whole-stage codegen (the cache
+    # is a columnar InMemoryRelation).
     # MEASURED (BENCH/BYTES_PER_ROW.md, 16M rows, 82 B/row parquet):
     # fused is ~3x SLOWER than two-pass on NARROW content — the narrow
     # derivative (40-char commit keys + 64-char sketch prefixes) is
@@ -153,15 +162,14 @@ class EngineConfig:
     # is KB-wide: BENCH/BYTES_PER_ROW_WIDE.md (same spec, content x16)
     # measures fused 4.0x FASTER than two-pass (124,947 vs 31,440
     # files/s) once the content column dominates row width — which the
-    # engine cannot know before scanning — so AUTO RESOLVES TO
-    # TWO-PASS and fused stays an explicit opt-in for wide-content
-    # tables (real repo files, KB-MB blobs). Exact-distinct runs
-    # (exact=True or approx_distinct=False — the oracle-parity
-    # configs) always fall back to two-pass even when forced:
+    # engine cannot know before scanning — so the default is TWO-PASS
+    # and fused is an explicit opt-in for wide-content tables (real
+    # repo files, KB-MB blobs). Exact-distinct runs (exact=True, the
+    # oracle-parity config) fall back to two-pass even when fused:
     # HLL-over-hash is statistically equivalent to HLL-over-value but
     # not bit-identical, and exact count_distinct would need the full
     # value in the narrow cache, defeating it.
-    fused: Optional[bool] = None
+    fused: bool = False
 
 
 @dataclass
@@ -211,59 +219,38 @@ class ValidationEngine:
         # dup-hash set); handed to ValidationResult._cached so the
         # caller's unpersist() releases them. Reset per run().
         self._extra_cached: list = []
-        # plan-construction memos (see _pred / _row_counter_exprs /
-        # _sketch_exprs): unresolved Column trees, never results
+        # plan-construction memo (see _pred): unresolved Column trees,
+        # never results
         self._pred_cache: dict = {}
-        self._row_counter_cache = None
-        self._sketch_cache: dict = {}
 
     # ------------------------------------------------------------------
-    # row-level: ONE aggregation pass for verdict counters + stats sketch
+    # row-level: ONE plan builder for both the two-pass and fused runs
     # ------------------------------------------------------------------
 
     def _pred(self, c) -> Column:
         """compile_predicate with a per-engine memo. A compiled predicate
         is an immutable UNRESOLVED Column tree, safe to re-bind in any
         plan over any frame, and building one costs dozens of py4j round
-        trips — a run() compiles each constraint up to three times (agg
-        counters, verdict pivot, violation rows), all driver wall-time
-        inside the caller's measured window. Keyed by object identity
-        with a strong ref to the constraint so the id cannot be
-        recycled."""
+        trips — all driver wall-time inside the caller's measured
+        window, repeated per run of the same engine (one per audit
+        bucket). Keyed by object identity with a strong ref to the
+        constraint so the id cannot be recycled."""
         cache = self._pred_cache
         hit = cache.get(id(c))
         if hit is None:
             cache[id(c)] = hit = (c, compile_predicate(c))
         return hit[1]
 
-    def _row_counter_exprs(self):
-        """Memoized per engine: called by BOTH _agg_pass and
-        _verdicts_stats_from_agg (the latter only for the ids); the
-        Column aggregates are reusable unresolved trees (see _pred)."""
-        cached = self._row_counter_cache
-        if cached is None:
-            exprs, ids = [], []
-            for i, c in enumerate(self.spec.row_level()):
-                pred = self._pred(c)
-                exprs.append(F.sum((~pred).cast("long")).alias(f"__viol_{i}"))
-                ids.append(c.id)
-            cached = self._row_counter_cache = (exprs, ids)
-        return list(cached[0]), list(cached[1])
-
-    def _sketch_exprs(self, force_approx: bool = False):
-        cached = self._sketch_cache.get(force_approx)
-        if cached is not None:
-            return list(cached)
-        cfg = self.config
-        exprs = []
-        # aliases are keyed by POSITIONAL INDEX, not the expression text:
-        # a watched expression may contain dots/spaces/quotes that would
-        # make a text-derived alias unparseable as a column reference.
-        for i, col in enumerate(self.spec.watched_columns):
+    def _raw_inputs(self) -> "tuple[list, list]":
+        """The row-level plan's inputs as expressions over the RAW fact
+        frame: per row-level constraint its fail flag ``~pred`` (nullable,
+        so a NULL comparison counts as neither fail nor pass), per
+        watched column its (null flag, prefix, distinct input, numeric)
+        Columns."""
+        fails = [~self._pred(c) for c in self.spec.row_level()]
+        watched = []
+        for col in self.spec.watched_columns:
             c = F.expr(col) if not col.isidentifier() else F.col(col)
-            exact = (cfg.exact or not cfg.approx_distinct) and not force_approx
-            distinct = F.count_distinct(c) if exact else F.approx_count_distinct(c)
-            numeric = c.try_cast("double")
             # min/max over a 64-char PREFIX, not the full value: string
             # min/max puts a var-length value in the agg buffer, which
             # (a) forces SortAggregate and (b) copy-churns on long text —
@@ -271,10 +258,34 @@ class ValidationEngine:
             # Lexicographic order is prefix-monotone, so
             # min(prefix(x)) == prefix(min(x)); the sketch loses nothing
             # it would have shipped to the driver anyway.
-            prefix = F.substring(c.cast("string"), 1, 64)
+            watched.append((c.isNull(), F.substring(c.cast("string"), 1, 64), c, c.try_cast("double")))
+        return fails, watched
+
+    def _row_plan(self, src: DataFrame, fails: list, watched: list, keys) -> "tuple[DataFrame, DataFrame]":
+        """The row-level plan over ``src``: (agg, violation rows).
+
+        ``agg`` is the single wide aggregation — one row per
+        partition_key with a ``__viol_i`` counter per fail flag, six
+        ``__st_i__*`` sketch fields per watched column and ``__total``.
+        A global run (no partition_by) uses a grand aggregate so even an
+        EMPTY input yields one verdict row per constraint (vacuous
+        pass). The violation rows evaluate every fail flag at once into
+        an array of failed constraint ids and explode it (rows with no
+        failure are filtered first, so the output is proportional to
+        the violations, not the rows).
+
+        ``fails`` and ``watched`` come from ``_raw_inputs`` (two-pass)
+        or are the narrow cache's columns (fused)."""
+        cfg = self.config
+        exprs = [F.sum(f.cast("long")).alias(f"__viol_{i}") for i, f in enumerate(fails)]
+        # aliases are keyed by POSITIONAL INDEX, not the expression text:
+        # a watched expression may contain dots/spaces/quotes that would
+        # make a text-derived alias unparseable as a column reference.
+        for i, (null, prefix, value, numeric) in enumerate(watched):
+            distinct = F.count_distinct(value) if cfg.exact else F.approx_count_distinct(value)
             exprs += [
                 F.count(F.lit(1)).alias(f"__st_{i}__count"),
-                F.sum(c.isNull().cast("long")).alias(f"__st_{i}__null_count"),
+                F.sum(null.cast("long")).alias(f"__st_{i}__null_count"),
                 distinct.alias(f"__st_{i}__distinct"),
                 F.min(prefix).alias(f"__st_{i}__min"),
                 F.max(prefix).alias(f"__st_{i}__max"),
@@ -282,72 +293,66 @@ class ValidationEngine:
                     f"__st_{i}__quantiles"
                 ),
             ]
-        self._sketch_cache[force_approx] = exprs
-        return list(exprs)
-
-    def _agg_pass(self, df: DataFrame) -> DataFrame:
-        """The single wide aggregation. Returns one row per partition_key
-        with all constraint counters and sketch fields. A global run
-        (no partition_by) uses a grand aggregate so even an EMPTY input
-        yields one verdict row per constraint (vacuous pass)."""
-        counter_exprs, _ = self._row_counter_exprs()
-        exprs = counter_exprs + self._sketch_exprs() + [F.count(F.lit(1)).alias("__total")]
+        exprs.append(F.count(F.lit(1)).alias("__total"))
         if self.spec.partition_by:
-            return df.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
-        return df.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
+            agg = src.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
+        else:
+            agg = src.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
+
+        row_cs = self.spec.row_level()
+        if not row_cs:
+            return agg, self._empty_violations(keys)
+        failed = F.array_compact(F.array(*[F.when(f, F.lit(c.id)) for f, c in zip(fails, row_cs)]))
+        violations = (
+            src.select(*[F.col(k).cast("string").alias(k) for k in keys], failed.alias("__failed"))
+            .filter(F.size("__failed") > 0)
+            .select(*keys, F.explode("__failed").alias("constraint_id"))
+            .withColumn("detail", F.lit(None).cast("string"))
+        )
+        return agg, violations
 
     def row_verdicts_and_stats(self, df: DataFrame) -> "tuple[DataFrame, DataFrame]":
-        agg = self._agg_pass(df)
-        agg = agg.cache()  # tiny: one row per partition_key
-        self._cached_agg = agg
+        """Row-level verdicts and the stats sketch of ``df``."""
+        agg, _ = self._row_plan(df, *self._raw_inputs(), self._keys(df))
         return self._verdicts_stats_from_agg(agg)
 
-    def _verdicts_stats_from_agg(self, agg: DataFrame) -> "tuple[DataFrame, DataFrame]":
-        """Shared tail of the agg pass: pivot the one-row-per-partition
-        counter/sketch frame into verdict and stats tables. Used by both
-        the two-pass plan and the fused narrow-cache plan (whose agg
-        carries identical __viol_i / __st_i__* / __total aliases)."""
-        _, ids = self._row_counter_exprs()
+    def row_violations(self, df: DataFrame) -> DataFrame:
+        """Violation rows of every row-level constraint over ``df``."""
+        _, violations = self._row_plan(df, *self._raw_inputs(), self._keys(df))
+        return violations
 
-        if ids:
+    def _keys(self, df: DataFrame) -> list:
+        return list(self.spec.key_columns) or df.columns[:1]
+
+    def _verdicts_stats_from_agg(self, agg: DataFrame) -> "tuple[DataFrame, DataFrame]":
+        """Pivot the one-row-per-partition counter/sketch frame into the
+        verdict and stats tables."""
+        row_cs = self.spec.row_level()
+        if row_cs:
             # Column API (not a selectExpr string): constraint ids land as
             # literals, so quotes/commas/backticks in an id cannot alter
             # or break the expression.
-            row_cs = self.spec.row_level()
             pairs = F.inline(
                 F.array(
                     *[
                         F.struct(
-                            F.lit(cid).alias("constraint_id"),
+                            F.lit(c.id).alias("constraint_id"),
                             F.col(f"__viol_{i}").alias("violation_count"),
-                            F.lit(row_cs[i].max_fail_ratio).cast("double").alias("__mfr"),
                         )
-                        for i, cid in enumerate(ids)
+                        for i, c in enumerate(row_cs)
                     ]
                 )
             )
-            stacked = agg.select(
-                "partition_key",
-                F.col("__total").alias("evaluated_count"),
-                pairs,
-            )
             vc = F.coalesce("violation_count", F.lit(0))
-            # max_fail_ratio verdict policy (Deequ compliance): tolerate
-            # up to mfr * evaluated rows failing; default (NULL mfr)
-            # keeps the strict zero-violations rule.
-            passed = F.when(
-                F.col("__mfr").isNotNull(),
-                vc.cast("double") <= F.col("__mfr") * F.col("evaluated_count").cast("double"),
-            ).otherwise(vc == 0)
-            verdicts = stacked.select(
+            verdicts = agg.select("partition_key", F.col("__total").alias("evaluated_count"), pairs).select(
                 "partition_key",
                 "constraint_id",
                 vc.alias("violation_count"),
                 "evaluated_count",
-                passed.alias("passed"),
+                verdict_passed(self.spec, violation_count=vc).alias("passed"),
             )
         else:
-            verdicts = self.spark.createDataFrame([], schema="partition_key string, constraint_id string, violation_count long, evaluated_count long, passed boolean")
+            verdicts = self.spark.createDataFrame([], schema=VERDICT_SCHEMA)
 
         stats_rows = []
         for i, col in enumerate(self.spec.watched_columns):
@@ -377,26 +382,6 @@ class ValidationEngine:
             )
         return verdicts, stats
 
-    # ------------------------------------------------------------------
-    # violation rows: one scan, all row-level predicates at once
-    # ------------------------------------------------------------------
-
-    def row_violations(self, df: DataFrame) -> DataFrame:
-        keys = list(self.spec.key_columns) or df.columns[:1]
-        row_cs = self.spec.row_level()
-        if not row_cs:
-            return self._empty_violations(keys)
-        failed = F.array_compact(
-            F.array(*[F.when(~self._pred(c), F.lit(c.id)) for c in row_cs])
-        )
-        key_cols = [F.col(k).cast("string").alias(k) for k in keys]
-        return (
-            df.select(*key_cols, failed.alias("__failed"))
-            .filter(F.size("__failed") > 0)
-            .select(*keys, F.explode("__failed").alias("constraint_id"))
-            .withColumn("detail", F.lit(None).cast("string"))
-        )
-
     def _empty_violations(self, keys) -> DataFrame:
         fields = ", ".join([f"`{k}` string" for k in keys] + ["constraint_id string", "detail string"])
         return self.spark.createDataFrame([], schema=fields)
@@ -406,57 +391,46 @@ class ValidationEngine:
     # ------------------------------------------------------------------
 
     def unique_violations(self, df: DataFrame, c: Unique) -> DataFrame:
-        """Duplicate keys. Two-stage salted aggregation: stage 1 counts
-        per (key, spark_partition_id-salt) — a pure map-side combine that
-        defuses hot keys before the shuffle — stage 2 sums per key.
-        With salt_partitions=0 we still get Spark's builtin partial
-        aggregation; the explicit form is for huge key cardinality where
-        the hash-agg table would spill."""
+        """Duplicate keys. Rows with any NULL key column are ignored (the
+        embedded-uniqueness reading of NULLs). The shuffle carries an
+        8-byte xxhash64 of the key instead of the key tuple (~10x fewer
+        shuffle bytes on string keys); Spark's partial aggregation
+        combines hot keys map-side before it. Candidates whose hash
+        repeats are then verified on the true key, so the result stays
+        EXACT: a hash collision only creates a candidate, and the verify
+        groupBy discards it."""
         cols = list(c.columns)
         keyed = df.select(*cols).na.drop(subset=cols)
-        if self.config.unique_via_hash:
-            h = F.xxhash64(*[F.col(x) for x in cols])
-            dup_hashes = (
-                keyed.select(h.alias("__h"))
-                .groupBy("__h")
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .filter(F.col("__c") > 1)
-                .select("__h")
-                .persist()
-            )
-            # Materialize the dup set NOW. AQE's runtime stat for the
-            # semi join's build side is the hash shuffle's MAP output
-            # (~11 B/row over the whole table); it cannot know the
-            # reducer-side agg+filter collapses that to the (anomaly-
-            # sized) duplicate set, so the lazy plan sort-merges and
-            # shuffles the ENTIRE keyed table — measured 72 B/row, the
-            # single largest byte mover in the north-star job
-            # (BENCH/BYTES_PER_ROW.md). One eager count + an explicit
-            # broadcast turns the candidate filter into a map-side semi
-            # join: the fact table never shuffles. Above the broadcast
-            # ceiling (a pathologically dup-heavy table) we keep the
-            # shuffled semi join rather than risk executor memory.
-            n_dup = dup_hashes.count()
-            self._extra_cached.append(dup_hashes)
-            right = (
-                F.broadcast(dup_hashes)
-                if n_dup <= self.config.unique_dup_broadcast_limit
-                else dup_hashes
-            )
-            candidates = keyed.withColumn("__h", h).join(right, "__h", "left_semi").drop("__h")
-            counts = candidates.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
-            return counts.filter(F.col("n") > 1).select(
-                *cols,
-                F.lit(c.id).alias("constraint_id"),
-                F.concat(F.lit("duplicates="), F.col("n").cast("string")).alias("detail"),
-            )
-        if self.config.salt_partitions > 0:
-            stage1 = keyed.groupBy(
-                *cols, F.pmod(F.spark_partition_id(), F.lit(self.config.salt_partitions)).alias("__salt")
-            ).agg(F.count(F.lit(1)).alias("__c"))
-            counts = stage1.groupBy(*cols).agg(F.sum("__c").alias("n"))
-        else:
-            counts = keyed.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
+        h = F.xxhash64(*[F.col(x) for x in cols])
+        dup_hashes = (
+            keyed.select(h.alias("__h"))
+            .groupBy("__h")
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .filter(F.col("__c") > 1)
+            .select("__h")
+            .persist()
+        )
+        # Materialize the dup set NOW. AQE's runtime stat for the
+        # semi join's build side is the hash shuffle's MAP output
+        # (~11 B/row over the whole table); it cannot know the
+        # reducer-side agg+filter collapses that to the (anomaly-
+        # sized) duplicate set, so the lazy plan sort-merges and
+        # shuffles the ENTIRE keyed table — measured 72 B/row, the
+        # single largest byte mover in the north-star job
+        # (BENCH/BYTES_PER_ROW.md). One eager count + an explicit
+        # broadcast turns the candidate filter into a map-side semi
+        # join: the fact table never shuffles. Above the broadcast
+        # ceiling (a pathologically dup-heavy table) we keep the
+        # shuffled semi join rather than risk executor memory.
+        n_dup = dup_hashes.count()
+        self._extra_cached.append(dup_hashes)
+        right = (
+            F.broadcast(dup_hashes)
+            if n_dup <= self.config.unique_dup_broadcast_limit
+            else dup_hashes
+        )
+        candidates = keyed.withColumn("__h", h).join(right, "__h", "left_semi").drop("__h")
+        counts = candidates.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
         return counts.filter(F.col("n") > 1).select(
             *cols,
             F.lit(c.id).alias("constraint_id"),
@@ -609,44 +583,40 @@ class ValidationEngine:
         the unique dup-hash set (counted so it can be broadcast — see
         unique_violations).
 
-        With config.single_pass (global specs with row-level
-        constraints), the verdict counters + sketch instead ride the
-        violation scan as observed metrics — ONE decompression of the
-        wide fact columns per run instead of two. With config.fused
-        (the default auto mode, whenever the run allows approx
-        distinct), the same one-decompression property is achieved
-        WITHOUT giving up whole-stage codegen: see _run_fused."""
+        The row-level plan reads the raw frame (two-pass: one scan for
+        the aggregation, one for the violation rows) unless
+        config.fused asks for one decompression of the fact table:
+        see _run_fused."""
         self._extra_cached = []
-        if self.config.single_pass and not self.spec.partition_by and self.spec.row_level():
-            return self._run_single_pass(df)
+        keys = self._keys(df)
         if self._resolve_fused():
-            return self._run_fused(df)
-        verdicts, stats = self.row_verdicts_and_stats(df)
-        keys = list(self.spec.key_columns) or df.columns[:1]
-        return self._finish(
-            verdicts, stats, self.row_violations(df), df, df, keys,
-            [getattr(self, "_cached_agg", None)],
-        )
+            return self._run_fused(df, keys)
+        agg, row_viol = self._row_plan(df, *self._raw_inputs(), keys)
+        return self._finish(agg, row_viol, df, df, keys, [])
 
     def _finish(
         self,
-        verdicts: DataFrame,
-        stats: DataFrame,
+        agg: DataFrame,
         row_viol: DataFrame,
         keyed_src: DataFrame,
         raw_df: DataFrame,
         keys,
         cached,
     ) -> ValidationResult:
-        """Shared table-level pass + result assembly. ``keyed_src`` is
-        the frame the key-only checks (unique / FK / cardinality) read —
-        the raw fact table in two-pass mode, the narrow cache in fused
-        mode (identical results: those checks only touch columns the
-        narrow projection passes through verbatim). Quantile and drift
-        read ``raw_df`` always: they need the actual value distribution
-        of arbitrary expressions, and their scans are column-pruned so
+        """Shared table-level pass + result assembly. ``agg`` is the
+        row-level aggregation (cached here: one row per partition_key,
+        read by both verdicts and stats). ``keyed_src`` is the frame the
+        key-only checks (unique / FK / cardinality) read — the raw fact
+        table in two-pass mode, the narrow cache in fused mode
+        (identical results: those checks only touch columns the narrow
+        projection passes through verbatim). Quantile and drift read
+        ``raw_df`` always: they need the actual value distribution of
+        arbitrary expressions, and their scans are column-pruned so
         they never touch the wide content column unless the constraint
         itself watches it."""
+        agg = agg.cache()
+        cached = [agg, *cached]
+        verdicts, stats = self._verdicts_stats_from_agg(agg)
         all_viol = [row_viol]
         table_ids = []
         drift_rows = []
@@ -689,73 +659,55 @@ class ValidationEngine:
                 .groupBy("constraint_id")
                 .agg(F.count(F.lit(1)).alias("__n"))
             )
-            tv = (
-                ids_df.join(F.broadcast(counts), "constraint_id", "left")
-                .select(
-                    F.lit("ALL").alias("partition_key"),
-                    "constraint_id",
-                    F.coalesce("__n", F.lit(0)).alias("violation_count"),
-                    F.lit(None).cast("long").alias("evaluated_count"),
-                    (F.coalesce("__n", F.lit(0)) == 0).alias("passed"),
-                )
+            vc, ec = F.coalesce("__n", F.lit(0)), F.lit(None).cast("long")
+            tv = ids_df.join(F.broadcast(counts), "constraint_id", "left").select(
+                F.lit("ALL").alias("partition_key"),
+                "constraint_id",
+                vc.alias("violation_count"),
+                ec.alias("evaluated_count"),
+                verdict_passed(self.spec, violation_count=vc, evaluated_count=ec).alias("passed"),
             )
             verdicts = verdicts.unionByName(tv)
         if drift_rows:
-            dv = self.spark.createDataFrame(
-                drift_rows,
-                schema="partition_key string, constraint_id string, violation_count long, "
-                "evaluated_count long, passed boolean",
-            )
-            verdicts = verdicts.unionByName(dv)
+            verdicts = verdicts.unionByName(self.spark.createDataFrame(drift_rows, schema=VERDICT_SCHEMA))
 
         return ValidationResult(
             verdicts=verdicts,
             violations=violations,
             stats=stats,
-            _cached=tuple(d for d in [*cached, *self._extra_cached] if d is not None),
+            _cached=tuple([*cached, *self._extra_cached]),
         )
 
     def _resolve_fused(self) -> bool:
-        """Three-valued EngineConfig.fused -> plan choice. Fused needs
-        (a) at least one row-level constraint (otherwise there is no
-        wide scan to fuse) and (b) approx distinct (the narrow cache
-        carries xxhash64(value), statistically equivalent for the HLL
-        but not bit-identical to hashing the value itself — so the
-        oracle-parity exact configs stay on the two-pass plan and keep
-        bit-stable stats)."""
-        if self.config.fused is not True:
-            # auto (None) resolves to two-pass: on narrow content the
-            # cache round-trip LOSES to a second codegen'd scan
-            # (measured 3x, BENCH/BYTES_PER_ROW.md) and row width is
-            # unknowable before the scan — wide-content callers opt in.
+        """EngineConfig.fused -> plan choice. Fused needs (a) at least
+        one row-level constraint (otherwise there is no wide scan to
+        fuse) and (b) approx distinct (the narrow cache carries
+        xxhash64(value), statistically equivalent for the HLL but not
+        bit-identical to hashing the value itself — so the oracle-parity
+        exact config stays on the two-pass plan and keeps bit-stable
+        stats)."""
+        if not self.config.fused or not self.spec.row_level():
             return False
-        if not self.spec.row_level():
-            return False
-        if self.config.exact or not self.config.approx_distinct:
+        if self.config.exact:
             _log.info("fused: exact-distinct run needs full values; using two-pass plan")
             return False
         return True
 
-    def _run_fused(self, df: DataFrame) -> ValidationResult:
+    def _run_fused(self, df: DataFrame, keys) -> ValidationResult:
         """ONE decompression of the fact table per run, codegen intact.
 
         The scan projects a narrow derivative (~100-300 B/row vs KB-size
-        content): passthrough key/partition/table-check columns, one
-        nullable boolean per row-level constraint (``~pred`` — nullable
-        so NULL-comparison semantics match the two-pass counters
-        exactly), and per watched column the four sketch inputs. That
-        derivative is cached (columnar, MEMORY_AND_DISK) and feeds
-        - the verdict/stats aggregation (identical aliases, shared
-          assembly with the two-pass plan),
-        - the violation explode (flags already computed), and
+        content): passthrough key/partition/table-check columns, the
+        ``_raw_inputs`` fail flags, and per watched column its sketch
+        inputs with the distinct input replaced by a null-guarded
+        xxhash64. That derivative is cached (columnar, MEMORY_AND_DISK)
+        and feeds
+        - the row-level plan (``_row_plan`` over the cached columns), and
         - unique / FK / cardinality, whose columns pass through raw.
         At repo scale this turns 2 full reads of ~KB/row content into
         1 read + a ~10x-smaller cache round-trip; the predicate/regex/
         hash kernels also run once instead of twice."""
         from pyspark import StorageLevel
-
-        row_cs = self.spec.row_level()
-        keys = list(self.spec.key_columns) or df.columns[:1]
 
         passthrough: list = []
         seen = set()
@@ -777,164 +729,29 @@ class ValidationEngine:
                 for x in c.group_by:
                     _add(x)
 
+        fails, watched = self._raw_inputs()
         cols = [F.col(n) for n in passthrough]
-        for i, c in enumerate(row_cs):
-            cols.append((~self._pred(c)).alias(f"__fail_{i}"))
-        for i, w in enumerate(self.spec.watched_columns):
-            wc = F.expr(w) if not w.isidentifier() else F.col(w)
+        cols += [f.alias(f"__fail_{i}") for i, f in enumerate(fails)]
+        for i, (null, prefix, value, numeric) in enumerate(watched):
             cols += [
-                wc.isNull().alias(f"__w_{i}_null"),
-                # prefix-monotone: min/max over the 64-char prefix equals
-                # the prefix of min/max (same dodge as _sketch_exprs)
-                F.substring(wc.cast("string"), 1, 64).alias(f"__w_{i}_prefix"),
+                null.alias(f"__w_{i}_null"),
+                prefix.alias(f"__w_{i}_prefix"),
                 # null-guarded: xxhash64(NULL) is a seed constant, not
                 # NULL — unguarded it would count nulls as a distinct
-                F.when(wc.isNotNull(), F.xxhash64(wc)).alias(f"__w_{i}_hash"),
-                wc.try_cast("double").alias(f"__w_{i}_num"),
+                F.when(value.isNotNull(), F.xxhash64(value)).alias(f"__w_{i}_hash"),
+                numeric.alias(f"__w_{i}_num"),
             ]
         narrow = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-
-        cfg = self.config
-        exprs = [
-            F.sum(F.col(f"__fail_{i}").cast("long")).alias(f"__viol_{i}")
-            for i in range(len(row_cs))
-        ]
-        for i, w in enumerate(self.spec.watched_columns):
-            exprs += [
-                F.count(F.lit(1)).alias(f"__st_{i}__count"),
-                F.sum(F.col(f"__w_{i}_null").cast("long")).alias(f"__st_{i}__null_count"),
-                F.approx_count_distinct(f"__w_{i}_hash").alias(f"__st_{i}__distinct"),
-                F.min(f"__w_{i}_prefix").alias(f"__st_{i}__min"),
-                F.max(f"__w_{i}_prefix").alias(f"__st_{i}__max"),
-                F.percentile_approx(
-                    F.col(f"__w_{i}_num"), list(cfg.quantiles), cfg.quantile_accuracy
-                ).alias(f"__st_{i}__quantiles"),
-            ]
-        exprs.append(F.count(F.lit(1)).alias("__total"))
-        if self.spec.partition_by:
-            agg = narrow.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
-        else:
-            agg = narrow.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
-        agg = agg.cache()  # tiny: one row per partition_key
-        self._cached_agg = agg
-        verdicts, stats = self._verdicts_stats_from_agg(agg)
-
-        if row_cs:
-            failed = F.array_compact(
-                F.array(*[F.when(F.col(f"__fail_{i}"), F.lit(c.id)) for i, c in enumerate(row_cs)])
-            )
-            row_viol = (
-                narrow.select(*[F.col(k).cast("string").alias(k) for k in keys], failed.alias("__failed"))
-                .filter(F.size("__failed") > 0)
-                .select(*keys, F.explode("__failed").alias("constraint_id"))
-                .withColumn("detail", F.lit(None).cast("string"))
-            )
-        else:  # pragma: no cover — _resolve_fused requires row-level
-            row_viol = self._empty_violations(keys)
-
-        return self._finish(verdicts, stats, row_viol, narrow, df, keys, [agg, narrow])
-
-    def _run_single_pass(self, df: DataFrame) -> ValidationResult:
-        """TRUE single-pass: df.observe attaches every verdict counter
-        and sketch aggregate to the violation scan (CollectMetrics), so
-        the one job that computes violation rows ALSO yields the
-        verdicts/stats — the fact table's wide columns are read and
-        decompressed exactly once. Table-level constraints still run
-        their own (column-pruned, key-only) plans inside the same
-        action via the violations union. Eager by construction: the
-        metrics only exist after the action, so run() executes it."""
-        from pyspark.sql import Observation
-
-        counter_exprs, ids = self._row_counter_exprs()
-        sketch_exprs = self._sketch_exprs(force_approx=True)  # observe rejects DISTINCT aggs
-        obs = Observation()
-        observed = df.observe(obs, *counter_exprs, *sketch_exprs, F.count(F.lit(1)).alias("__total"))
-
-        keys = list(self.spec.key_columns) or df.columns[:1]
-        all_viol = [self.row_violations(observed)]
-        table_ids = []
-        drift_rows = []
-        for c in self.spec.table_level():
-            if isinstance(c, Unique):
-                v = self.unique_violations(df, c)
-            elif isinstance(c, ForeignKey):
-                v = self.fk_violations(df, c)
-            elif isinstance(c, Cardinality):
-                v = self.cardinality_violations(df, c)
-            elif isinstance(c, Quantile):
-                v = self.quantile_violations(df, c)
-            elif isinstance(c, FunctionalDependency):
-                v = self.fd_violations(df, c)
-            elif isinstance(c, Drift):
-                from xsd2json_spark.engine.drift import drift_verdict
-
-                dv = drift_verdict(self.spark, df, c, self.baselines)
-                drift_rows.extend(dv if isinstance(dv, list) else [dv])
-                continue
-            else:  # pragma: no cover
-                continue
-            table_ids.append(c.id)
-            all_viol.append(self._conform_violations(v, keys))
-
-        violations = all_viol[0]
-        for v in all_viol[1:]:
-            violations = violations.unionByName(v)
-        violations = violations.persist()
-        # THE action: materializes violation rows into the cache and
-        # fires the observed metrics. It must be a GLOBAL aggregate —
-        # a grouped aggregate's partial stage emits ZERO rows on a
-        # violation-free run, and AQE's empty-relation propagation then
-        # replaces the whole subtree INCLUDING the CollectMetrics node,
-        # so the Observation never completes (measured: obs.get throws
-        # on any clean table). A global agg's partial stage always
-        # emits its one row, so the observed scan is never elided.
-        violations.count()
-        metrics = dict(obs.get)
-        # per-constraint counts now read the populated cache (no rescan)
-        counts = {
-            r["constraint_id"]: r["n"]
-            for r in violations.groupBy("constraint_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-
-        total = metrics.get("__total", 0) or 0
-        vrows = []
-        row_cs = self.spec.row_level()
-        for i, cid in enumerate(ids):
-            n = metrics.get(f"__viol_{i}") or 0
-            mfr = row_cs[i].max_fail_ratio
-            ok = (n <= mfr * total) if mfr is not None else n == 0
-            vrows.append(("ALL", cid, int(n), int(total), bool(ok)))
-        for cid in table_ids:
-            n = counts.get(cid, 0)
-            vrows.append(("ALL", cid, int(n), None, n == 0))
-        vrows.extend(drift_rows)
-        verdicts = self.spark.createDataFrame(
-            vrows,
-            schema="partition_key string, constraint_id string, violation_count long, "
-            "evaluated_count long, passed boolean",
+        agg, row_viol = self._row_plan(
+            narrow,
+            [F.col(f"__fail_{i}") for i in range(len(fails))],
+            [
+                tuple(F.col(f"__w_{i}_{part}") for part in ("null", "prefix", "hash", "num"))
+                for i in range(len(watched))
+            ],
+            keys,
         )
-
-        srows = []
-        for i, col in enumerate(self.spec.watched_columns):
-            cnt = metrics.get(f"__st_{i}__count") or 0
-            nulls = metrics.get(f"__st_{i}__null_count") or 0
-            q = metrics.get(f"__st_{i}__quantiles")
-            srows.append(
-                ("ALL", col, int(cnt), int(nulls),
-                 (nulls / cnt) if cnt else None,
-                 int(metrics.get(f"__st_{i}__distinct") or 0),
-                 metrics.get(f"__st_{i}__min"), metrics.get(f"__st_{i}__max"),
-                 [float(x) for x in q] if q is not None else None)
-            )
-        stats = self.spark.createDataFrame(
-            srows,
-            schema="partition_key string, column string, count long, null_count long, "
-            "null_rate double, distinct long, min string, max string, quantiles array<double>",
-        )
-        return ValidationResult(
-            verdicts=verdicts, violations=violations, stats=stats,
-            _cached=tuple([violations, *self._extra_cached]),
-        )
+        return self._finish(agg, row_viol, narrow, df, keys, [narrow])
 
     def _conform_violations(self, v: DataFrame, keys) -> DataFrame:
         cols = []

@@ -59,16 +59,12 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsd2json_spark.engine.validate import ValidationEngine
+from xsd2json_spark.engine.validate import VERDICT_SCHEMA, ValidationEngine, verdict_passed
 from xsd2json_spark.sources import fsutil
 from xsd2json_spark.spec.constraints import Drift
 
 MANIFEST_SCHEMA = (
     "run_id string, bucket int, status string, n_violations long, n_rows long"
-)
-VERDICT_SCHEMA = (
-    "partition_key string, constraint_id string, violation_count long, "
-    "evaluated_count long, passed boolean"
 )
 DRIFT_BUCKET = -1  # reserved lineage bucket for the single global drift pass
 
@@ -298,7 +294,7 @@ class ResumableRunner:
                 F.sum("violation_count").alias("violation_count"),
                 F.sum("evaluated_count").alias("evaluated_count"),
             )
-            .withColumn("passed", F.col("violation_count") == 0)
+            .withColumn("passed", verdict_passed(self.engine.spec))
         )
 
     def global_violations(self) -> DataFrame:
