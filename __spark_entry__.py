@@ -133,8 +133,8 @@ def q_cv_stats_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cv_unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """unique(o_custkey, o_orderdate): duplicate groups (salted two-stage
-    agg under the hood when configured)."""
+    """unique(o_custkey, o_orderdate): duplicate groups — one
+    key-partitioned count aggregation, HAVING n > 1."""
     orders = _t(spark, sf_dir, "orders")
     # repartition on the key first (the cv_fd/top_revenue shape): the
     # ~1.4M-group partial aggregation otherwise runs inside the 2
@@ -1461,17 +1461,14 @@ def q_cv_incremental_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra copy where doc_id % 20 == 3, adds a copy of every % 10 == 7
     row, and rewrites text where % 13 == 0 (a payload-only update the
     unique state must compose through as +1/-1 = 0). Spark NEVER groups
-    B's keys: it composes A's unique_key_counts state with the
+    B's keys: it composes A's unique count state (state_of) with the
     multiset-aware snapshot delta and reads duplicates straight off the
     composed counts — the batch form of the streaming uniqueness state.
     DuckDB replays a from-scratch GROUP BY ... HAVING on B; equality
     proves the state composition exact (including mixed-payload
     duplicates like doc_id=13, whose two copies differ in text)."""
-    from xsd2json_spark.engine.incremental import (
-        compose_unique_counts,
-        snapshot_delta,
-        unique_key_counts,
-    )
+    from xsd2json_spark.engine.incremental import compose_state, snapshot_delta, state_of
+    from xsd2json_spark.spec.constraints import Unique
 
     docs = _t(spark, sf_dir, "documents")
     a = docs.unionByName(docs.filter(F.col("doc_id") % 10 == 3))
@@ -1493,9 +1490,9 @@ def q_cv_incremental_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter((F.col("doc_id") % 10 == 7) & (F.col("doc_id") < 480))
         )
     )
-    state = unique_key_counts(a, ["doc_id"])
+    c = Unique(id="pk", columns=["doc_id"])
     added, removed = snapshot_delta(a, b, ["doc_id"])
-    composed = compose_unique_counts(state, added, removed, ["doc_id"])
+    composed = compose_state(state_of(a, c), added, removed, c)
     return composed.filter(F.col("n") > 1).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n").cast("long").alias("dup_count"),
@@ -1611,13 +1608,7 @@ def q_cv_incremental_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons). Equality proves the composed counts — the ONLY input
     the drift verdicts read — are exact, for the categorical and the
     numeric flavor in one artifact row set."""
-    from xsd2json_spark.engine.incremental import (
-        compose_drift_bins,
-        compose_drift_counts,
-        drift_category_counts,
-        drift_value_bins,
-        snapshot_delta,
-    )
+    from xsd2json_spark.engine.incremental import compose_state, snapshot_delta, state_of
     from xsd2json_spark.spec.constraints import Drift
 
     grid, ecdf, n_base = _ks_baseline(sf_dir)
@@ -1639,8 +1630,8 @@ def q_cv_incremental_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     added, removed = snapshot_delta(a, b, ["doc_id"])
-    cat = compose_drift_counts(drift_category_counts(a, chi_c), added, removed, chi_c)
-    bins = compose_drift_bins(drift_value_bins(a, ks_c, baselines), added, removed, ks_c, baselines)
+    cat = compose_state(state_of(a, chi_c), added, removed, chi_c)
+    bins = compose_state(state_of(a, ks_c, baselines), added, removed, ks_c, baselines)
     return (
         cat.select(F.lit("cat").alias("kind"), F.col("__cat").cast("string").alias("key"),
                    F.col("n").cast("long").alias("n"))
@@ -1657,20 +1648,16 @@ def q_cv_incremental_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     B deletes doc_id >= 480, rewrites lang to the dangling 'zz' where
     doc_id % 17 == 0, and rewrites text where doc_id % 13 == 0 (a
     payload-only update whose +1/-1 must compose to a net zero on the
-    lang counts). Spark NEVER groups B's keys: it composes A's
-    key_counts state with the multiset-aware snapshot delta, then
+    lang counts). Spark NEVER groups B's keys: it composes A's FK
+    count state (state_of) with the multiset-aware snapshot delta, then
     anti-joins the composed counts against the CURRENT dim (distinct
     langs of A) at verdict time — fact-side state, so a dim change
-    would need no rebuild (engine/incremental.py:fk_dangling_counts).
+    would need no rebuild (engine/validate.py:fk_dangling).
     DuckDB replays a from-scratch NOT IN over B; equality proves the
     composition + verdict-time anti-join exact. Registered past the
     driver's 50-row capture — verify via tools/check_oracle.py."""
-    from xsd2json_spark.engine.incremental import (
-        compose_key_counts,
-        fk_dangling_counts,
-        key_counts,
-        snapshot_delta,
-    )
+    from xsd2json_spark.engine.incremental import compose_state, snapshot_delta, state_of
+    from xsd2json_spark.engine.validate import fk_dangling
     from xsd2json_spark.spec.constraints import ForeignKey
 
     a = _t(spark, sf_dir, "documents")
@@ -1689,11 +1676,10 @@ def q_cv_incremental_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dim = a.select("lang").na.drop().distinct()
-    state = key_counts(a, ["lang"])
-    added, removed = snapshot_delta(a, b, ["doc_id"])
-    composed = compose_key_counts(state, added, removed, ["lang"])
     c = ForeignKey(id="fk_lang", columns=["lang"], ref_table="langs", ref_columns=["lang"])
-    return fk_dangling_counts(composed, dim, c).select(
+    added, removed = snapshot_delta(a, b, ["doc_id"])
+    composed = compose_state(state_of(a, c), added, removed, c)
+    return fk_dangling(composed, dim, c).select(
         F.col("lang").alias("lang"),
         F.col("n").cast("long").alias("dangling_rows"),
     )

@@ -17,14 +17,15 @@ failed, 0 otherwise (CI-gate style).
 --incremental-prev switches to snapshot-delta validation
 (engine/incremental.py): row-level constraint counters compose from the
 previous snapshot's persisted verdicts plus counters over the keyed
-delta only; table-level checks recompute on the current snapshot UNLESS
---state-dir supplies the previous snapshot's materialized states (one
-parquet subdir per constraint id), in which case unique / FK /
-cardinality / drift verdicts COMPOSE from state + delta and never
-re-shuffle the current snapshot's keys. --write-state-dir persists the
-current snapshot's states for the next run (each is
-key/category/grid-cardinality-sized). Only <output>/verdicts is written
-in incremental mode (violations/stats are full-run products).
+delta only. A table-level check recomputes on the current snapshot
+UNLESS --state-dir holds the previous snapshot's count state for it
+(one parquet subdir per constraint id, any Hadoop path: file://,
+hdfs://, s3a://), in which case its verdict COMPOSES from state + delta
+(incremental.compose_state) and never rescans the current snapshot.
+--write-state-dir persists the current snapshot's states for the next
+run (incremental.build_states; each is key/category/grid-cardinality-
+sized). Only <output>/verdicts is written in incremental mode
+(violations/stats are full-run products).
 """
 
 from __future__ import annotations
@@ -83,7 +84,8 @@ def main(argv=None) -> int:
     df = spark.read.parquet(args.input)
 
     if args.incremental_prev:
-        from xsd2json_spark.engine.incremental import incremental_verdicts, split_states
+        from xsd2json_spark.engine.incremental import incremental_verdicts
+        from xsd2json_spark.sources import fsutil
 
         if not args.prev_verdicts:
             ap.error("--incremental-prev requires --prev-verdicts")
@@ -91,17 +93,15 @@ def main(argv=None) -> int:
             ap.error("--incremental-prev and --resume are mutually exclusive")
         prev_df = spark.read.parquet(args.incremental_prev)
         prev_v = spark.read.parquet(args.prev_verdicts)
-        state_kw = {}
+        states = {}
         if args.state_dir:
-            states = {}
             for c in spec.table_level():
                 p = os.path.join(args.state_dir, c.id)
-                if os.path.exists(p):
+                if fsutil.exists(spark, p):
                     states[c.id] = spark.read.parquet(p)
-            state_kw = split_states(spec, states)
         verdicts = incremental_verdicts(
             spark, spec, prev_df, df, prev_v, dims=dims,
-            baselines=baselines, **state_kw,
+            baselines=baselines, states=states,
         )
         verdicts.write.mode("overwrite").parquet(os.path.join(args.output, "verdicts"))
     elif args.resume:

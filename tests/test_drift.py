@@ -8,11 +8,12 @@ from pyspark.sql import functions as F
 
 from xsd2json_spark.engine import ValidationEngine
 from xsd2json_spark.engine.drift import (
-    chi2_drift,
+    chi2_from_counts,
     ks_drift,
     make_categorical_baseline,
     make_numeric_baseline,
 )
+from xsd2json_spark.engine.incremental import state_of
 from xsd2json_spark.engine.stats_math import chi2_sf, gammainc_q, ks_pvalue
 from xsd2json_spark.sources.synth import files_table
 from xsd2json_spark.spec.constraints import Drift, Spec
@@ -81,7 +82,7 @@ def files(spark):
 def test_chi2_no_drift(spark, files):
     base = make_categorical_baseline(files, "lang")
     c = Drift(id="d", column="lang", test="chi2", baseline="b", alpha=0.01)
-    stat, p = chi2_drift(files, c, base)
+    [(_, stat, p)] = chi2_from_counts(state_of(files, c), c, base)
     assert p > 0.99  # identical distribution
 
 
@@ -91,7 +92,7 @@ def test_chi2_drift_detected(spark, files):
         "lang", F.when(F.col("lang") == "python", F.lit("java")).otherwise(F.col("lang"))
     )
     c = Drift(id="d", column="lang", test="chi2", baseline="b", alpha=0.01)
-    stat, p = chi2_drift(shifted, c, base)
+    [(_, stat, p)] = chi2_from_counts(state_of(shifted, c), c, base)
     assert p < 0.01
 
 
@@ -139,18 +140,18 @@ def grouped(spark):
 
 
 def test_chi2_drift_by_group(spark, grouped):
-    from xsd2json_spark.engine.drift import chi2_drift_by, make_categorical_baseline_by
+    from xsd2json_spark.engine.drift import make_categorical_baseline_by
 
     base = make_categorical_baseline_by(grouped, "cat", ["g"])
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
-    res = chi2_drift_by(grouped, c, base)
+    res = chi2_from_counts(state_of(grouped, c), c, base)
     assert len(res) == 2 and all(p > 0.9 for _, _, p in res)  # self-drift passes per group
 
     # shift ONLY g2's category mix: g1 must still pass, g2 must fail
     shifted = grouped.withColumn(
         "cat", F.when((F.col("g") == "g2") & (F.col("cat") == "x"), "y").otherwise(F.col("cat"))
     )
-    by = {k: p for k, _, p in chi2_drift_by(shifted, c, base)}
+    by = {k: p for k, _, p in chi2_from_counts(state_of(shifted, c), c, base)}
     assert by["g1"] > 0.9 and by["g2"] < 0.01
 
 
@@ -170,11 +171,11 @@ def test_ks_drift_by_group(spark, grouped):
 
 
 def test_unseen_group_counts_as_drift(spark, grouped):
-    from xsd2json_spark.engine.drift import chi2_drift_by, make_categorical_baseline_by
+    from xsd2json_spark.engine.drift import make_categorical_baseline_by
 
     base = make_categorical_baseline_by(grouped.filter("g = 'g1'"), "cat", ["g"])
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
-    by = {k: p for k, _, p in chi2_drift_by(grouped, c, base)}
+    by = {k: p for k, _, p in chi2_from_counts(state_of(grouped, c), c, base)}
     assert by["g2"] == 0.0  # group absent from baseline -> fail, not crash
 
 
@@ -199,7 +200,6 @@ def test_vanished_group_counts_as_drift(spark, grouped):
     """A group present in the BASELINE but absent from the current data
     must emit a fail row (population vanished = drift), for chi2 and KS."""
     from xsd2json_spark.engine.drift import (
-        chi2_drift_by,
         ks_drift_by,
         make_categorical_baseline_by,
         make_numeric_baseline_by,
@@ -208,7 +208,7 @@ def test_vanished_group_counts_as_drift(spark, grouped):
     only_g1 = grouped.filter("g = 'g1'")
     cbase = make_categorical_baseline_by(grouped, "cat", ["g"])
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
-    by = {k: p for k, _, p in chi2_drift_by(only_g1, c, cbase)}
+    by = {k: p for k, _, p in chi2_from_counts(state_of(only_g1, c), c, cbase)}
     assert by["g2"] == 0.0 and by["g1"] > 0.9
 
     nbase = make_numeric_baseline_by(grouped, "v", ["g"])

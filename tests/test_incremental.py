@@ -8,9 +8,16 @@ from pyspark.sql import functions as F
 from xsd2json_spark import spec_from_dict
 from xsd2json_spark.engine import ValidationEngine
 from xsd2json_spark.engine.incremental import (
+    compose_state,
     incremental_verdicts,
     snapshot_delta,
+    state_of,
 )
+from xsd2json_spark.engine.validate import (
+    cardinality_violations_from_counts,
+    unique_violations_from_counts,
+)
+from xsd2json_spark.spec.constraints import Unique
 
 SPEC = {
     "name": "inc",
@@ -199,15 +206,10 @@ def _counts_map(df, cols=("doc_id",)):
 
 def test_unique_counts_compose_equals_recompute(spark):
     """The materialized (key, n) uniqueness state rolled forward over
-    the delta must equal unique_key_counts recomputed from scratch on
+    the delta must equal the unique state recomputed from scratch on
     the new snapshot — including keys whose multiplicity changes, keys
     that vanish (n composes to 0 and is dropped), and NULL keys
     (excluded on both paths)."""
-    from xsd2json_spark.engine.incremental import (
-        compose_unique_counts,
-        unique_key_counts,
-    )
-
     a = spark.createDataFrame(
         [(1, "x"), (1, "x"), (2, "y"), (3, "z"), (None, "n"), (None, "n")],
         "doc_id long, text string",
@@ -217,28 +219,22 @@ def test_unique_counts_compose_equals_recompute(spark):
         [(1, "x"), (1, "x"), (1, "x"), (3, "z"), (4, "w"), (4, "w"), (None, "n")],
         "doc_id long, text string",
     )
-    state_a = unique_key_counts(a, ["doc_id"])
+    c = Unique(id="pk", columns=["doc_id"])
     added, removed = snapshot_delta(a, b, ["doc_id"])
-    composed = compose_unique_counts(state_a, added, removed, ["doc_id"])
-    assert _counts_map(composed) == _counts_map(unique_key_counts(b, ["doc_id"]))
+    composed = compose_state(state_of(a, c), added, removed, c)
+    assert _counts_map(composed) == _counts_map(state_of(b, c))
     assert _counts_map(composed) == {(1,): 3, (3,): 1, (4,): 2}
 
 
 def test_unique_violations_from_counts_matches_engine(spark):
     """Violation rows derived from the state table are byte-identical
     to ValidationEngine.unique_violations on the full snapshot."""
-    from xsd2json_spark.engine.incremental import (
-        unique_key_counts,
-        unique_violations_from_counts,
-    )
-    from xsd2json_spark.spec.constraints import Unique
-
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (3, "e"), (3, "f")],
         "doc_id long, text string",
     )
     c = Unique(id="pk", columns=["doc_id"])
-    from_counts = unique_violations_from_counts(unique_key_counts(df, ["doc_id"]), c)
+    from_counts = unique_violations_from_counts(state_of(df, c), c)
     spec = spec_from_dict(
         {"name": "u", "key_columns": ["doc_id"], "constraints": [
             {"kind": "unique", "id": "pk", "columns": ["doc_id"]}]}
@@ -249,31 +245,27 @@ def test_unique_violations_from_counts_matches_engine(spark):
 
 
 def test_incremental_verdicts_with_unique_state(spark, snapshots):
-    """incremental_verdicts(unique_state=...) composes the unique
+    """incremental_verdicts(states={"pk": ...}) composes the unique
     verdict from the state + delta and still equals a from-scratch run
     — for a snapshot WITH duplicates (fail) and after the duplicates
     are removed (pass again)."""
-    from xsd2json_spark.engine.incremental import (
-        compose_unique_counts,
-        unique_key_counts,
-    )
-
     a, b = snapshots
     # duplicate some keys in B so the composed unique check has work
     b_dup = b.unionByName(b.filter(F.col("doc_id") % 31 == 1))
     spec = spec_from_dict(SPEC)
     prev = ValidationEngine(spark, spec).run(a).verdicts
-    state = {"pk": unique_key_counts(a, ["doc_id"])}
-    inc = vmap(incremental_verdicts(spark, spec, a, b_dup, prev, unique_state=state))
+    pk = next(c for c in spec.table_level() if c.id == "pk")
+    state = {"pk": state_of(a, pk)}
+    inc = vmap(incremental_verdicts(spark, spec, a, b_dup, prev, states=state))
     full = vmap(ValidationEngine(spark, spec).run(b_dup).verdicts)
     assert inc == full
     assert inc["pk"][0] > 0 and not inc["pk"][1]
 
     # roll the state forward and validate the NEXT snapshot (dups gone)
     added, removed = snapshot_delta(a, b_dup, ["doc_id"])
-    state2 = {"pk": compose_unique_counts(state["pk"], added, removed, ["doc_id"])}
+    state2 = {"pk": compose_state(state["pk"], added, removed, pk)}
     prev2 = ValidationEngine(spark, spec).run(b_dup).verdicts
-    inc2 = vmap(incremental_verdicts(spark, spec, b_dup, b, prev2, unique_state=state2))
+    inc2 = vmap(incremental_verdicts(spark, spec, b_dup, b, prev2, states=state2))
     full2 = vmap(ValidationEngine(spark, spec).run(b).verdicts)
     assert inc2 == full2
     assert inc2["pk"] == (0, True)
@@ -284,8 +276,6 @@ def test_fk_state_composes_and_matches_engine(spark):
     equals a from-scratch run: dangling rows introduced by the delta
     are counted (per ROW, not per key), repaired rows compose out, and
     NULL FK values pass on both paths."""
-    from xsd2json_spark.engine.incremental import key_counts
-
     dim = spark.createDataFrame([("r1",), ("r2",)], "repo string")
     a = spark.createDataFrame(
         [(1, "r1"), (2, "r2"), (3, "rX"), (4, "rX"), (5, None)],
@@ -305,8 +295,8 @@ def test_fk_state_composes_and_matches_engine(spark):
     )
     dims = {"repos_dim": dim}
     prev = ValidationEngine(spark, spec, dims=dims).run(a).verdicts
-    state = {"fk": key_counts(a, ["repo"])}
-    inc = vmap(incremental_verdicts(spark, spec, a, b, prev, dims=dims, fk_state=state))
+    state = {"fk": state_of(a, spec.constraints[0])}
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev, dims=dims, states=state))
     full = vmap(ValidationEngine(spark, spec, dims=dims).run(b).verdicts)
     assert inc == full
     assert inc["fk"] == (3, False)  # rows 4, 6, 7
@@ -316,8 +306,6 @@ def test_fk_state_survives_dim_change(spark):
     """The FK state is fact-side only: a dim change between snapshots
     needs NO state rebuild — the current dim enters only at the
     verdict-time anti-join."""
-    from xsd2json_spark.engine.incremental import key_counts
-
     a = spark.createDataFrame(
         [(1, "r1"), (2, "r2"), (3, "r2")], "doc_id long, repo string"
     )
@@ -332,9 +320,9 @@ def test_fk_state_survives_dim_change(spark):
     dim_a = spark.createDataFrame([("r1",), ("r2",)], "repo string")
     dim_b = spark.createDataFrame([("r1",)], "repo string")  # r2 retired
     prev = ValidationEngine(spark, spec, dims={"repos_dim": dim_a}).run(a).verdicts
-    state = {"fk": key_counts(a, ["repo"])}
+    state = {"fk": state_of(a, spec.constraints[0])}
     inc = vmap(incremental_verdicts(
-        spark, spec, a, b, prev, dims={"repos_dim": dim_b}, fk_state=state
+        spark, spec, a, b, prev, dims={"repos_dim": dim_b}, states=state
     ))
     full = vmap(ValidationEngine(spark, spec, dims={"repos_dim": dim_b}).run(b).verdicts)
     assert inc == full
@@ -347,12 +335,6 @@ def test_cardinality_state_composes_with_null_groups(spark):
     groupBy keeps and an equi-join composition would silently drop) and
     a group that drains to zero (no row, so a min bound never fires on
     a vanished group)."""
-    from xsd2json_spark.engine.incremental import (
-        cardinality_violations_from_counts,
-        compose_key_counts,
-        key_counts,
-    )
-
     a = spark.createDataFrame(
         [(1, "g1"), (2, "g1"), (3, "g2"), (4, None), (5, None), (6, "g3")],
         "doc_id long, grp string",
@@ -369,10 +351,9 @@ def test_cardinality_state_composes_with_null_groups(spark):
              "min": 2, "max": 3}]}
     )
     prev = ValidationEngine(spark, spec).run(a).verdicts
-    state = {"card": key_counts(a, ["grp"], drop_null_keys=False)}
-    inc = vmap(incremental_verdicts(
-        spark, spec, a, b, prev, cardinality_state=state
-    ))
+    card = spec.constraints[0]
+    state = {"card": state_of(a, card)}
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev, states=state))
     full = vmap(ValidationEngine(spark, spec).run(b).verdicts)
     assert inc == full
     assert inc["card"] == (2, False)  # g1 (4 > max), g2 (1 < min); NULL=3 ok
@@ -380,11 +361,9 @@ def test_cardinality_state_composes_with_null_groups(spark):
     # violation ROWS from the composed state are byte-identical to the
     # engine's from-scratch cardinality_violations on B
     added, removed = snapshot_delta(a, b, ["doc_id"])
-    composed = compose_key_counts(
-        state["card"], added, removed, ["grp"], drop_null_keys=False
-    )
-    from_counts = cardinality_violations_from_counts(composed, spec.constraints[0])
-    direct = ValidationEngine(spark, spec).cardinality_violations(b, spec.constraints[0])
+    composed = compose_state(state["card"], added, removed, card)
+    from_counts = cardinality_violations_from_counts(composed, card)
+    direct = ValidationEngine(spark, spec).cardinality_violations(b, card)
     assert sorted(map(tuple, from_counts.collect())) == sorted(map(tuple, direct.collect()))
 
 
@@ -393,8 +372,6 @@ def test_all_three_states_together(spark):
     table composes every key-shuffle table check and still equals a
     from-scratch run (quantile/drift absent; row-level rides the
     delta)."""
-    from xsd2json_spark.engine.incremental import key_counts
-
     dim = spark.createDataFrame([("r1",), ("r2",)], "repo string")
     a = spark.createDataFrame(
         [(i, "r%d" % (1 + i % 2), "text number %d" % i) for i in range(50)],
@@ -418,12 +395,9 @@ def test_all_three_states_together(spark):
     )
     dims = {"repos_dim": dim}
     prev = ValidationEngine(spark, spec, dims=dims).run(a).verdicts
-    states = dict(
-        unique_state={"pk": key_counts(a, ["doc_id"])},
-        fk_state={"fk": key_counts(a, ["repo"])},
-        cardinality_state={"card": key_counts(a, ["repo"], drop_null_keys=False)},
-    )
-    inc = vmap(incremental_verdicts(spark, spec, a, b, prev, dims=dims, **states))
+    states = {c.id: state_of(a, c) for c in spec.table_level()}
+    assert sorted(states) == ["card", "fk", "pk"]
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev, dims=dims, states=states))
     full = vmap(ValidationEngine(spark, spec, dims=dims).run(b).verdicts)
     assert inc == full
     assert inc["pk"][0] > 0 and inc["fk"][0] > 0 and inc["t_len"][0] > 0
@@ -433,11 +407,6 @@ def test_drift_counts_compose_equals_recompute(spark):
     """Composed chi2 drift state == from-scratch category counts of the
     current snapshot, for adds, updates (category flips), and
     deletes — global and per-group shapes."""
-    from xsd2json_spark.engine.incremental import (
-        compose_drift_counts,
-        drift_category_counts,
-        snapshot_delta,
-    )
     from xsd2json_spark.spec.constraints import Drift
 
     a = spark.createDataFrame(
@@ -456,21 +425,19 @@ def test_drift_counts_compose_equals_recompute(spark):
         Drift(id="d", column="lang", test="chi2", baseline="base"),
         Drift(id="dg", column="lang", test="chi2", baseline="base", group_by=["src"]),
     ):
-        composed = compose_drift_counts(drift_category_counts(a, c), added, removed, c)
-        scratch = drift_category_counts(b, c)
-        key = (lambda r: tuple(r)) 
+        composed = compose_state(state_of(a, c), added, removed, c)
+        scratch = state_of(b, c)
         assert sorted(map(tuple, composed.collect())) == sorted(map(tuple, scratch.collect())), c.id
 
 
 def test_incremental_drift_verdicts_match_full_run(spark):
-    """incremental_verdicts with drift_state equals the from-scratch
+    """incremental_verdicts with drift states equals the from-scratch
     engine verdicts — drifted and undrifted scenarios, global and
     per-group (incl. the vanished-group failure)."""
     from xsd2json_spark.engine.drift import (
         make_categorical_baseline,
         make_categorical_baseline_by,
     )
-    from xsd2json_spark.engine.incremental import drift_category_counts
 
     base_df = spark.createDataFrame(
         [(i, ["py", "go"][i % 2], "g%d" % (i % 2)) for i in range(400)],
@@ -498,12 +465,12 @@ def test_incremental_drift_verdicts_match_full_run(spark):
         "base_by": make_categorical_baseline_by(base_df, "lang", ["grp"]),
     }
     drift_cs = {c.id: c for c in spec.table_level()}
-    state = {cid: drift_category_counts(a, c) for cid, c in drift_cs.items()
+    state = {cid: state_of(a, c) for cid, c in drift_cs.items()
              if c.kind == "drift"}
     for cur in (a, b):  # undrifted (B==A shape) and drifted
         prev = ValidationEngine(spark, spec, baselines=baselines).run(a).verdicts
         inc = incremental_verdicts(
-            spark, spec, a, cur, prev, drift_state=state, baselines=baselines)
+            spark, spec, a, cur, prev, states=state, baselines=baselines)
         full = ValidationEngine(spark, spec, baselines=baselines).run(cur).verdicts
         imap = {(r["partition_key"], r["constraint_id"]): (r["violation_count"], r["passed"])
                 for r in inc.collect()}
@@ -522,7 +489,6 @@ def test_incremental_ks_drift_matches_full_run(spark):
     baseline's quantile grid), for drifted and undrifted snapshots
     with adds, updates, and deletes."""
     from xsd2json_spark.engine.drift import make_numeric_baseline
-    from xsd2json_spark.engine.incremental import drift_value_bins
 
     base_df = spark.createDataFrame(
         [(i, float(i % 100)) for i in range(500)], "doc_id long, x double"
@@ -545,24 +511,24 @@ def test_incremental_ks_drift_matches_full_run(spark):
         ]})
     baselines = {"base": make_numeric_baseline(base_df, "x")}
     ks_c = next(c for c in spec.table_level() if c.kind == "drift")
-    state = {"ks": drift_value_bins(a, ks_c, baselines)}
+    state = {"ks": state_of(a, ks_c, baselines)}
     for cur in (a, b):
         prev = ValidationEngine(spark, spec, baselines=baselines).run(a).verdicts
         inc = incremental_verdicts(
-            spark, spec, a, cur, prev, drift_state=state, baselines=baselines)
+            spark, spec, a, cur, prev, states=state, baselines=baselines)
         full = ValidationEngine(spark, spec, baselines=baselines).run(cur).verdicts
         imap = vmap(inc)
         assert imap == vmap(full)
     assert not imap["ks"][1]  # the shifted snapshot drifts
 
 
-def test_build_and_split_states_cover_all_kinds(spark):
+def test_build_states_covers_all_kinds(spark):
     """build_states emits exactly the maintainable states (unique, FK,
     cardinality, chi2 drift, global KS drift — not quantile, not
-    per-group KS), and split_states routes each to the right
-    incremental_verdicts kwarg."""
+    per-group KS), each keyed by its kind's key columns; the kinds
+    without a state refuse loudly."""
     from xsd2json_spark.engine.drift import make_numeric_baseline
-    from xsd2json_spark.engine.incremental import build_states, split_states
+    from xsd2json_spark.engine.incremental import build_states
 
     df = spark.createDataFrame(
         [(i, "r%d" % (i % 3), float(i % 50), ["py", "go"][i % 2]) for i in range(100)],
@@ -582,13 +548,39 @@ def test_build_and_split_states_cover_all_kinds(spark):
     baselines = {"b": make_numeric_baseline(df, "x")}
     states = build_states(df, spec, baselines=baselines)
     assert sorted(states) == ["card", "chi", "fk", "ks", "pk"]  # no q, no ksg
-    kw = split_states(spec, states)
-    assert sorted(kw["unique_state"]) == ["pk"]
-    assert sorted(kw["fk_state"]) == ["fk"]
-    assert sorted(kw["cardinality_state"]) == ["card"]
-    assert sorted(kw["drift_state"]) == ["chi", "ks"]
+    assert states["pk"].columns == ["doc_id", "n"]
+    assert states["fk"].columns == ["repo", "n"]
+    assert states["card"].columns == ["repo", "n"]
     assert states["ks"].columns == ["__bin", "n"]
     assert states["chi"].columns == ["__cat", "n"]
+    by_id = {c.id: c for c in spec.table_level()}
+    for cid in ("q", "ksg"):
+        with pytest.raises(ValueError, match="no count state"):
+            state_of(df, by_id[cid], baselines)
+
+
+def test_incremental_chi2_empty_baseline_raises_like_full_run(spark, snapshots):
+    """A global chi2 Drift against an empty baseline is a spec error on
+    BOTH paths: the composed-state verdict reads through the same chi2
+    reader as the full run, so it cannot quietly emit a failing row."""
+    from xsd2json_spark.spec.constraints import SpecError
+
+    a, b = snapshots
+    spec = spec_from_dict({
+        "name": "empty_base", "key_columns": ["doc_id"], "constraints": [
+            {"kind": "not_null", "id": "t_nn", "column": "text"},
+            {"kind": "drift", "id": "dr", "column": "text", "test": "chi2", "baseline": "base"},
+        ]})
+    baselines = {"base": {"kind": "categorical", "counts": {}}}
+    dr = spec.table_level()[0]
+    with pytest.raises(SpecError, match="empty baseline"):
+        ValidationEngine(spark, spec, baselines=baselines).run(b)
+    prev = ValidationEngine(spark, spec_from_dict({
+        "name": "empty_base", "key_columns": ["doc_id"],
+        "constraints": [{"kind": "not_null", "id": "t_nn", "column": "text"}]})).run(a).verdicts
+    with pytest.raises(SpecError, match="empty baseline"):
+        incremental_verdicts(
+            spark, spec, a, b, prev, states={"dr": state_of(a, dr)}, baselines=baselines)
 
 
 def test_schema_delta_and_verdict(spark):
@@ -626,3 +618,89 @@ def test_schema_delta_and_verdict(spark):
     b_retype_extra = spark.createDataFrame([(1, "x", 1.0, 2)], "id long, s string, f double, extra int")
     v_ok, _ = schema_delta_verdict(a, b_retype_extra, spec, allow=("added", "type_changed"))
     assert v_ok["passed"]
+
+
+NULL_SPEC = {
+    "name": "nulls", "key_columns": ["doc_id"], "constraints": [
+        {"kind": "unique", "id": "unique", "columns": ["k"]},
+        {"kind": "foreign_key", "id": "fk", "columns": ["k"], "ref_table": "dim",
+         "broadcast": True},
+        {"kind": "cardinality", "id": "cardinality", "group_by": ["grp"], "min": 2, "max": 3},
+        {"kind": "drift", "id": "chi2", "column": "cat", "test": "chi2", "baseline": "base",
+         "group_by": ["grp"]},
+    ]}
+NULL_COLS = "doc_id long, k string, grp string, cat string"
+
+
+@pytest.mark.parametrize("cid", ["unique", "fk", "cardinality", "chi2"])
+def test_null_rules_shared_by_engine_state_and_stream(spark, cid):
+    """One NULL rule per kind across every path over a frame with NULL
+    key, group and category values: unique and FK drop NULL keys,
+    cardinality keeps the NULL group, chi2 drops NULL categories but
+    keeps the NULL group. The engine's violations equal the reader
+    over state_of, compose_state(state_of(a), delta) equals
+    state_of(b), and (FK) the stream-static anti-join flags the same
+    rows as the batch one."""
+    from collections import Counter
+    import json
+
+    from xsd2json_spark.engine.drift import drift_verdicts, make_categorical_baseline_by
+    from xsd2json_spark.engine.validate import fk_dangling
+    from xsd2json_spark.streaming.validate_stream import stream_fk_violations
+
+    a = spark.createDataFrame([
+        (1, "r1", "g1", "py"), (2, "r1", "g1", None), (3, "rX", None, "go"),
+        (4, None, None, "py"), (5, None, "g2", None), (6, "r2", "g2", "go"),
+        (7, "rX", "g1", "py"),
+    ], NULL_COLS)
+    # B: row 7 deleted, row 2 gains a category, NULL-key / NULL-group /
+    # NULL-category rows added
+    b = a.filter("doc_id != 7").withColumn(
+        "cat", F.when(F.col("doc_id") == 2, F.lit("go")).otherwise(F.col("cat"))
+    ).unionByName(spark.createDataFrame(
+        [(8, None, None, None), (9, "rY", None, "py"), (10, "r1", "g2", None)], NULL_COLS))
+    spec = spec_from_dict(NULL_SPEC)
+    c = next(x for x in spec.table_level() if x.id == cid)
+    dim = spark.createDataFrame([("r1",), ("r2",)], "k string")
+    baselines = {"base": make_categorical_baseline_by(a, "cat", ["grp"])}
+    eng = ValidationEngine(spark, spec, dims={"dim": dim}, baselines=baselines)
+    state_b = state_of(b, c)
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+
+    # the NULL rule, read off the state's keys
+    keys = {r[:-1] for r in state_b.collect()}
+    if cid in ("unique", "fk"):
+        assert (None,) not in keys and ("rY",) in keys
+    elif cid == "cardinality":
+        assert (None,) in keys
+    else:
+        assert all(cat is not None for _, cat in keys) and (None, "py") in keys
+
+    # engine violations == the reader over state_of
+    if cid == "unique":
+        direct = eng.unique_violations(b, c)
+        assert rows(direct) == rows(unique_violations_from_counts(state_b, c))
+        assert {r["k"] for r in direct.collect()} == {"r1"}  # the two NULLs are no dup
+    elif cid == "fk":
+        direct = eng.fk_violations(b, c)
+        flagged = Counter(json.loads(r["detail"])["k"] for r in direct.collect())
+        assert flagged == {r["k"]: r["n"] for r in fk_dangling(state_b, dim, c).collect()}
+        assert flagged == {"rX": 1, "rY": 1}  # NULL FK values pass
+    elif cid == "cardinality":
+        direct = eng.cardinality_violations(b, c)
+        assert rows(direct) == rows(cardinality_violations_from_counts(state_b, c))
+        assert {r["grp"] for r in direct.collect()} == {None}  # NULL group: 4 rows > max
+    else:
+        full = [tuple(r) for r in eng.run(b).verdicts.filter(F.col("constraint_id") == cid)
+                .orderBy("partition_key").collect()]
+        assert full == sorted(drift_verdicts(None, c, baselines, counts=state_b))
+        assert "\\N" in {r[0] for r in full}  # the NULL group gets its verdict
+
+    # composed state == from-scratch state on B
+    added, removed = snapshot_delta(a, b, ["doc_id"])
+    assert rows(compose_state(state_of(a, c), added, removed, c)) == rows(state_b)
+
+    if cid == "fk":
+        streamed = stream_fk_violations(b, c, dim)
+        assert sorted(r["doc_id"] for r in streamed.collect()) == sorted(
+            int(r["doc_id"]) for r in direct.collect())

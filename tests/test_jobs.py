@@ -160,3 +160,37 @@ def test_incremental_job_with_state_dir(spark, tmp_path):
         for r in spark.read.parquet(out_b_inc + "/verdicts").collect()
     }
     assert inc == full and len(inc) == 3
+
+
+def test_incremental_job_reads_state_dir_uri(spark, tmp_path):
+    """--state-dir given as a file:// URI is probed through the Hadoop
+    FileSystem, so the supplied state is READ: a doctored pk state that
+    claims a duplicate the current snapshot does not have surfaces in
+    the composed verdict (a full run on B finds no duplicate)."""
+    from jobs.validate import main as val_main
+    from xsd2json_spark import spec_from_dict
+    from xsd2json_spark.engine.incremental import state_of
+
+    doc = {"name": "jobs_uri", "key_columns": ["doc_id"],
+           "constraints": [{"kind": "unique", "id": "pk", "columns": ["doc_id"]}]}
+    spec_path = str(tmp_path / "spec.json")
+    with open(spec_path, "w") as fh:
+        json.dump(doc, fh)
+    a = spark.range(100).select(F.col("id").alias("doc_id"), F.lit("x").alias("text"))
+    a_path, b_path = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    a.write.parquet(a_path)
+    a.filter("doc_id < 90").write.parquet(b_path)
+    out_a, out_b = str(tmp_path / "audit_a"), str(tmp_path / "audit_b")
+    assert val_main(["--input", a_path, "--spec", spec_path, "--output", out_a]) == 0
+    pk = spec_from_dict(doc).constraints[0]
+    doctored = state_of(a, pk).withColumn(
+        "n", F.when(F.col("doc_id") == 5, F.lit(2)).otherwise(F.col("n")).cast("long"))
+    doctored.write.parquet(str(tmp_path / "state" / "pk"))
+    assert val_main([
+        "--input", b_path, "--spec", spec_path, "--output", out_b,
+        "--incremental-prev", a_path, "--prev-verdicts", out_a + "/verdicts",
+        "--state-dir", "file://" + str(tmp_path / "state"),
+    ]) == 1
+    inc = {r["constraint_id"]: (r["violation_count"], r["passed"])
+           for r in spark.read.parquet(out_b + "/verdicts").collect()}
+    assert inc == {"pk": (1, False)}

@@ -4,7 +4,16 @@ column pruning (ReadSchema), join strategies, aggregate modes, and any
 Python in the plan. This is the 'is the plan the one you'd want at
 100 TB' audit (SURVEY §4).
 
-Usage: python tools/plan_report.py
+Usage: python tools/plan_report.py           # writes PLANS.md
+       python tools/plan_report.py --engine  # prints engine plans
+
+--engine prints the optimized logical plans of the ValidationEngine
+run (verdicts / violations / stats) of bench.FILES_SPEC over
+files_table(n_rows=2000) under EngineConfig(), EngineConfig(exact=True)
+and EngineConfig(fused=True), then of incremental_verdicts over the
+same spec, with expression ids (#12, #34L) normalised to '#'. Run it on
+two checkouts and diff the outputs to show a refactor left the plans
+unchanged.
 """
 
 from __future__ import annotations
@@ -115,7 +124,41 @@ def audit(plan: str) -> list:
     return notes
 
 
+def _plan(df) -> str:
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def engine_plans():
+    from pyspark.sql import functions as F
+
+    from bench import FILES_SPEC
+    from xsd2json_spark import spec_from_dict
+    from xsd2json_spark.engine import EngineConfig, ValidationEngine
+    from xsd2json_spark.engine.incremental import incremental_verdicts
+    from xsd2json_spark.sources.synth import files_table, repos_dim
+
+    # pinned so the printed plans do not depend on the host's core count
+    spark = get_spark(app_name="plan_report", master="local[2]", shuffle_partitions=4)
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    spec = spec_from_dict(FILES_SPEC)
+    dims = {"repos_dim": repos_dim(spark)}
+    df = files_table(spark, n_rows=2000)
+    for name, cfg in (("default", EngineConfig()), ("exact", EngineConfig(exact=True)),
+                      ("fused", EngineConfig(fused=True))):
+        res = ValidationEngine(spark, spec, dims=dims, config=cfg).run(df)
+        for part in ("verdicts", "violations", "stats"):
+            print(f"=== {name} {part}")
+            print(_plan(getattr(res, part)))
+        res.unpersist()
+    prev = ValidationEngine(spark, spec, dims=dims).run(df).verdicts
+    cur = df.filter(F.abs(F.xxhash64("repo", "path", "commit")) % 31 != 0)
+    print("=== incremental_verdicts")
+    print(_plan(incremental_verdicts(spark, spec, df, cur, prev, dims=dims)))
+
+
 def main():
+    if "--engine" in sys.argv[1:]:
+        return engine_plans()
     spark = get_spark(app_name="plan_report")
     qs = entrymod.queries()
     out = ["# PLANS — physical-plan audit of headline queries",

@@ -20,8 +20,10 @@ Baseline snapshot format (JSON-serializable dict, see make_snapshot):
 Scale design: the current-side statistics are computed with ONE
 aggregation each —
 
-- chi2: groupBy(col).count() (bounded by category cardinality), then the
-  Pearson statistic driver-side (O(#categories), no row collect).
+- chi2: the constraint's category-count state
+  (``incremental.state_of``: groupBy(group..., category).count(),
+  bounded by category cardinality), then the Pearson statistic
+  driver-side (O(#categories), no row collect) in ``chi2_from_counts``.
 - ks: the baseline stores a ~199-point value grid with its ECDF; the
   current ECDF at those grid points is one agg of
   sum(value <= q_i)/count — 200 counters in a single pass, no sort, no
@@ -34,7 +36,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xsd2json_spark.engine.stats_math import chi2_sf, chi2_stat, ks_pvalue
@@ -86,18 +88,6 @@ def make_numeric_baseline(
         "grid": grid,
         "ecdf": [float(erow[f"e{i}"]) for i in range(len(grid))],
     }
-
-
-def chi2_drift(df: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
-    counts = baseline["counts"]
-    total = sum(counts.values())
-    if total == 0:
-        raise SpecError(f"drift {c.id}: empty baseline")
-    probs = {k: v / total for k, v in counts.items()}
-    rows = df.groupBy(_value_col(c).alias("__cat")).agg(F.count(F.lit(1)).alias("n")).collect()
-    observed = {str(r["__cat"]): r["n"] for r in rows if r["__cat"] is not None}
-    stat, dof = chi2_stat(observed, probs)
-    return stat, chi2_sf(stat, dof)
 
 
 def ks_drift(df: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
@@ -171,7 +161,12 @@ def psi_statistic_df(
     statistic, which makes the whole check oracle-able (no driver-side
     math at all, unlike chi2/KS where only the p-value stays on the
     driver). Returns (by..., psi, n_cats); n_cats counts the union
-    spine per group."""
+    spine per group.
+
+    ``baseline_df`` must hold ONE (``column``, n) row per category (every
+    baseline builder here groups): both sides fold into maps, and a
+    repeated category raises DUPLICATED_MAP_KEY under Spark's default
+    ``spark.sql.mapKeyDedupPolicy=EXCEPTION``."""
     gb = list(by or [])
     obs = (
         df.filter(F.col(column).isNotNull())
@@ -186,8 +181,7 @@ def psi_statistic_df(
     # the documented collect discipline), the baseline aggregates to ONE
     # broadcast row, and the psi sum folds over the union of the two
     # key sets — same cells, same eps clips, 3 scans / 4 exchanges.
-    # Baseline (cat, n) rows must be distinct (every builder groups);
-    # novel observed cats read __b = 0, vanished baseline cats __o = 0.
+    # Novel observed cats read __b = 0, vanished baseline cats __o = 0.
     gm = obs.groupBy(*gb).agg(
         F.map_from_entries(F.collect_list(F.struct("__cat", "__o"))).alias("__m"),
         F.sum("__o").alias("__n"),
@@ -467,26 +461,31 @@ def make_numeric_baseline_by(
     return {"kind": "numeric_by", "group_by": gb, "groups": groups}
 
 
-def chi2_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
-    """Per-group Pearson chi-square in ONE aggregation pass: groupBy
-    (group, category).count(), statistic + p-value driver-side per group
-    (O(#groups x #categories), no row collect).
-    Returns [(group_key, stat, p), ...] — one row per group present in
-    the data OR the baseline: a baseline group with no current rows
-    (a vanished population, the classic drift signal) fails with p=0
-    instead of silently producing no verdict."""
+def chi2_from_counts(counts: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
+    """Pearson chi-square from a category-count state
+    (``incremental.state_of``: (group..., __cat, n) rows, NULL
+    categories already excluded) — a fresh one on the full run, the
+    composed one on the incremental run. The collect is
+    category-cardinality-sized, never the table.
+
+    Returns [(group_key, stat, p), ...]: one "ALL" row for a global
+    constraint; per group, one row for every group present in the
+    counts OR the baseline — a group unseen by the baseline and a
+    baseline group with no current rows (a vanished population, the
+    classic drift signal) both fail with p = 0 instead of silently
+    producing no verdict."""
     gb = list(c.group_by)
-    rows = (
-        df.groupBy(*gb, _value_col(c).alias("__cat"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+    rows = counts.collect()
+    if not gb:
+        total = sum(baseline["counts"].values())
+        if total == 0:
+            raise SpecError(f"drift {c.id}: empty baseline")
+        probs = {k: v / total for k, v in baseline["counts"].items()}
+        stat, dof = chi2_stat({str(r["__cat"]): r["n"] for r in rows}, probs)
+        return [("ALL", stat, chi2_sf(stat, dof))]
     observed: dict = {}
     for r in rows:
-        if r["__cat"] is None:
-            continue
-        key = group_key([r[g] for g in gb])
-        observed.setdefault(key, {})[str(r["__cat"])] = r["n"]
+        observed.setdefault(group_key([r[g] for g in gb]), {})[str(r["__cat"])] = r["n"]
     out = []
     for key, obs in sorted(observed.items()):
         base_counts = baseline["groups"].get(key)
@@ -502,13 +501,32 @@ def chi2_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
     return out
 
 
+def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
+    """Global KS (D, p) from a bin-count state (``incremental.state_of``:
+    (__bin, n) rows against the baseline grid) — the IDENTICAL
+    statistic to ``ks_drift`` on the full snapshot: the ECDF at grid
+    point i is (rows with bin <= i) / n, exactly the avg(v <= grid[i])
+    the full scan computes. The collect is grid-sized."""
+    grid, base_ecdf, n_base = baseline["grid"], baseline["ecdf"], baseline["n"]
+    per_bin = {r["__bin"]: r["n"] for r in bins.collect()}
+    n_cur = sum(per_bin.values())
+    if n_cur == 0:
+        raise SpecError(f"drift {c.id}: no current values")
+    cum = 0
+    d = 0.0
+    for i in range(len(grid)):
+        cum += per_bin.get(i, 0)
+        d = max(d, abs(cum / n_cur - base_ecdf[i]))
+    return d, ks_pvalue(d, n_base, n_cur)
+
+
 def ks_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
     """Per-group two-sample KS via applyInPandas (SURVEY §4.3): each
     group's current ECDF is evaluated at ITS baseline grid inside one
     Arrow batch per group; p-values driver-side.
     Returns [(group_key, d_statistic, p), ...] — baseline groups with no
     current rows (vanished populations) emit a (key, nan, 0.0) fail row
-    like chi2_drift_by."""
+    like chi2_from_counts."""
     import numpy as np
     import pandas as pd
 
@@ -542,32 +560,35 @@ def ks_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
     return out
 
 
-def drift_verdict(spark: SparkSession, df: DataFrame, c: Drift, baselines: dict):
-    """Global drift: returns ONE verdict row tuple (partition_key,
-    constraint_id, violation_count, evaluated_count, passed). With
-    c.group_by set, delegates to drift_verdicts_by (one row per group)."""
-    if c.group_by:
-        return drift_verdicts_by(spark, df, c, baselines)
+def baseline_of(c: Drift, baselines: dict) -> dict:
     baseline: Optional[dict] = baselines.get(c.baseline)
     if baseline is None:
         raise KeyError(f"drift {c.id}: baseline snapshot {c.baseline!r} not provided")
+    return baseline
+
+
+def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=None) -> "list[tuple]":
+    """Verdict row tuples (partition_key, constraint_id,
+    violation_count, evaluated_count, passed) of one Drift constraint:
+    one "ALL" row, or with c.group_by one row per group present in the
+    data or the baseline.
+
+    chi2 and global KS read the constraint's count state: ``counts``
+    when given (the incremental run's composed state; ``df`` is then
+    unused), else chi2 builds a fresh ``state_of(df, c)`` and KS runs
+    its one-aggregation grid scan (``ks_drift``). Per-group KS has no
+    state and runs ``ks_drift_by``."""
+    baseline = baseline_of(c, baselines)
     if c.test == "chi2":
-        stat, p = chi2_drift(df, c, baseline)
+        if counts is None:
+            from xsd2json_spark.engine.incremental import state_of
+
+            counts = state_of(df, c)
+        results = chi2_from_counts(counts, c, baseline)
+    elif counts is not None:
+        results = [("ALL", *ks_from_bins(counts, c, baseline))]
+    elif c.group_by:
+        results = ks_drift_by(df, c, baseline)
     else:
-        stat, p = ks_drift(df, c, baseline)
-    passed = p >= c.alpha
-    return ("ALL", c.id, 0 if passed else 1, None, passed)
-
-
-def drift_verdicts_by(spark: SparkSession, df: DataFrame, c: Drift, baselines: dict) -> "list[tuple]":
-    """Per-group drift verdicts: one (partition_key=group, ...) row per
-    group present in the data or the baseline."""
-    baseline: Optional[dict] = baselines.get(c.baseline)
-    if baseline is None:
-        raise KeyError(f"drift {c.id}: baseline snapshot {c.baseline!r} not provided")
-    results = chi2_drift_by(df, c, baseline) if c.test == "chi2" else ks_drift_by(df, c, baseline)
-    rows = []
-    for key, _stat, p in results:
-        passed = p >= c.alpha
-        rows.append((key, c.id, 0 if passed else 1, None, passed))
-    return rows
+        results = [("ALL", *ks_drift(df, c, baseline))]
+    return [(key, c.id, 0 if p >= c.alpha else 1, None, p >= c.alpha) for key, _stat, p in results]

@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsd2json_spark.engine.compile import compile_predicate
+from xsd2json_spark.engine.drift import drift_verdicts
 from xsd2json_spark.spec.constraints import (
     Cardinality,
     Drift,
@@ -127,6 +128,58 @@ def verdict_passed(
         return vc == 0
     mfr = F.create_map(*[F.lit(x) for kv in ratios.items() for x in kv])[cid]
     return F.when(mfr.isNotNull(), vc.cast("double") <= mfr * ec.cast("double")).otherwise(vc == 0)
+
+
+# ----------------------------------------------------------------------
+# table-level readers: a (key..., n) count frame -> violation rows. The
+# engine and the incremental composition (engine/incremental.py) both
+# read their counts through these, so each detail string is built once.
+# ----------------------------------------------------------------------
+
+
+def unique_violations_from_counts(counts: DataFrame, c: Unique) -> DataFrame:
+    """One row per key with n > 1, detail ``duplicates=n``."""
+    return counts.filter(F.col("n") > 1).select(
+        *c.columns,
+        F.lit(c.id).alias("constraint_id"),
+        F.concat(F.lit("duplicates="), F.col("n").cast("string")).alias("detail"),
+    )
+
+
+def cardinality_violations_from_counts(counts: DataFrame, c: Cardinality) -> DataFrame:
+    """One row per group with n outside [min, max], detail ``count=n``.
+    A group absent from the counts emits nothing, so a min bound never
+    fires on a vanished group."""
+    cond = F.lit(False)
+    if c.min is not None:
+        cond = cond | (F.col("n") < c.min)
+    if c.max is not None:
+        cond = cond | (F.col("n") > c.max)
+    return counts.filter(cond).select(
+        *c.group_by,
+        F.lit(c.id).alias("constraint_id"),
+        F.concat(F.lit("count="), F.col("n").cast("string")).alias("detail"),
+    )
+
+
+def fk_dangling(df: DataFrame, dim: DataFrame, c: ForeignKey, broadcast: bool = True) -> DataFrame:
+    """Rows of ``df`` whose foreign key has no match in ``dim``: the fact
+    rows (or a (key..., n) count state of them) anti-joined against the
+    deduplicated dim refs, with every column of ``df`` kept. NULL FK
+    values pass (dangling-$ref-only semantics, xsd2json.pl:983-986).
+    ``broadcast`` hints the dim side; the batch engine decides it from
+    the dim's row count, the count state and a stream always broadcast."""
+    ref = dim.select(*[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(c.ref_columns)]).dropDuplicates()
+    if broadcast:
+        ref = F.broadcast(ref)
+    cond = None
+    for i, fc in enumerate(c.columns):
+        clause = F.col(fc) == F.col(f"__ref_{i}")
+        cond = clause if cond is None else (cond & clause)
+    fact = df
+    for fc in c.columns:
+        fact = fact.filter(F.col(fc).isNotNull())
+    return fact.join(ref, on=cond, how="left_anti")
 
 
 @dataclass
@@ -399,8 +452,9 @@ class ValidationEngine:
         repeats are then verified on the true key, so the result stays
         EXACT: a hash collision only creates a candidate, and the verify
         groupBy discards it."""
-        cols = list(c.columns)
-        keyed = df.select(*cols).na.drop(subset=cols)
+        from xsd2json_spark.engine.incremental import state_rows
+
+        cols, keyed = state_rows(df, c)
         h = F.xxhash64(*[F.col(x) for x in cols])
         dup_hashes = (
             keyed.select(h.alias("__h"))
@@ -430,34 +484,18 @@ class ValidationEngine:
             else dup_hashes
         )
         candidates = keyed.withColumn("__h", h).join(right, "__h", "left_semi").drop("__h")
-        counts = candidates.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
-        return counts.filter(F.col("n") > 1).select(
-            *cols,
-            F.lit(c.id).alias("constraint_id"),
-            F.concat(F.lit("duplicates="), F.col("n").cast("string")).alias("detail"),
-        )
+        return unique_violations_from_counts(candidates.groupBy(*cols).agg(F.count(F.lit(1)).alias("n")), c)
 
     def fk_violations(self, df: DataFrame, c: ForeignKey) -> DataFrame:
         dim = self.dims.get(c.ref_table)
         if dim is None:
             raise KeyError(f"foreign_key {c.id}: dimension table {c.ref_table!r} not provided")
-        ref = dim.select(*[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(c.ref_columns)]).dropDuplicates()
         do_broadcast = c.broadcast
         if do_broadcast is None:
             if c.ref_table not in self._dim_counts:
                 self._dim_counts[c.ref_table] = dim.count()
             do_broadcast = self._dim_counts[c.ref_table] <= self.config.broadcast_threshold_rows
-        if do_broadcast:
-            ref = F.broadcast(ref)
-        cond = None
-        for i, fc in enumerate(c.columns):
-            clause = F.col(fc) == F.col(f"__ref_{i}")
-            cond = clause if cond is None else (cond & clause)
-        # NULL FK values pass (dangling-$ref-only semantics, xsd2json.pl:983-986)
-        fact = df
-        for fc in c.columns:
-            fact = fact.filter(F.col(fc).isNotNull())
-        viol = fact.join(ref, on=cond, how="left_anti")
+        viol = fk_dangling(df, dim, c, broadcast=do_broadcast)
         keys = list(self.spec.key_columns) or list(c.columns)
         keys = [k for k in keys if k in viol.columns] or list(c.columns)
         return viol.select(
@@ -521,17 +559,9 @@ class ValidationEngine:
         )
 
     def cardinality_violations(self, df: DataFrame, c: Cardinality) -> DataFrame:
-        counts = df.groupBy(*c.group_by).agg(F.count(F.lit(1)).alias("n"))
-        cond = F.lit(False)
-        if c.min is not None:
-            cond = cond | (F.col("n") < c.min)
-        if c.max is not None:
-            cond = cond | (F.col("n") > c.max)
-        return counts.filter(cond).select(
-            *c.group_by,
-            F.lit(c.id).alias("constraint_id"),
-            F.concat(F.lit("count="), F.col("n").cast("string")).alias("detail"),
-        )
+        from xsd2json_spark.engine.incremental import state_of
+
+        return cardinality_violations_from_counts(state_of(df, c), c)
 
     def quantile_violations(self, df: DataFrame, c: Quantile) -> DataFrame:
         """Out-of-bounds p-th percentile, one violation row per
@@ -637,10 +667,7 @@ class ValidationEngine:
                 # the columns it names.
                 v = self.fd_violations(raw_df, c)
             elif isinstance(c, Drift):
-                from xsd2json_spark.engine.drift import drift_verdict
-
-                dv = drift_verdict(self.spark, raw_df, c, self.baselines)
-                drift_rows.extend(dv if isinstance(dv, list) else [dv])
+                drift_rows.extend(drift_verdicts(raw_df, c, self.baselines))
                 continue
             else:  # pragma: no cover
                 continue

@@ -258,14 +258,11 @@ class ResumableRunner:
         drifts = [c for c in self.engine.spec.constraints if isinstance(c, Drift)]
         if not drifts or self.drift_done():
             return
-        from xsd2json_spark.engine.drift import drift_verdict
+        from xsd2json_spark.engine.drift import drift_verdicts
 
         spark = self.engine.spark
         full = self._staged().drop("__bucket")
-        rows = []
-        for c in drifts:
-            dv = drift_verdict(spark, full, c, self.engine.baselines)
-            rows.extend(dv if isinstance(dv, list) else [dv])
+        rows = [r for c in drifts for r in drift_verdicts(full, c, self.engine.baselines)]
         verd = spark.createDataFrame(rows, schema=VERDICT_SCHEMA).withColumn(
             "bucket", F.lit(DRIFT_BUCKET)
         )

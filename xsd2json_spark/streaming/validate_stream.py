@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from xsd2json_spark.engine.compile import compile_predicate
+from xsd2json_spark.engine.validate import fk_dangling
 from xsd2json_spark.spec.constraints import ForeignKey, Spec, Unique
 
 
@@ -108,8 +109,8 @@ def stream_bin_counts(
     drift. Sink these counters and derive verdicts statelessly with
     engine.drift.ks_verdicts_over_bins (per-window D + in-plan pass
     rule): same chained-aggregation avoidance, same restart story, and
-    the counter table doubles as the incremental KS state
-    (engine.incremental.compose_drift_bins composes it)."""
+    the counter table, summed over windows, is the incremental KS
+    state (engine.incremental.state_of / compose_state)."""
     from xsd2json_spark.engine.drift import bin_index_expr
 
     value = (F.expr(c.expr) if c.expr else F.col(c.column)).cast("double")
@@ -194,9 +195,10 @@ def stream_unique_violations(
 
     Scale notes: state is one long per distinct key, hash-partitioned
     by Spark's streaming state store across executors (RocksDB-backed
-    in production) — the same key-partitioned shape as the batch salted
-    unique agg. For unbounded key churn pass ``ttl`` (milliseconds, or
-    a duration string like ``"10 minutes"``): idle keys then expire via
+    in production) — the streaming form of the batch unique count state
+    (engine.incremental.state_of), without its NULL-key drop. For
+    unbounded key churn pass ``ttl`` (milliseconds, or a duration
+    string like ``"10 minutes"``): idle keys then expire via
     ProcessingTimeTimeout and their state is removed, bounding
     retention explicitly (mirroring the watermarked operators above) —
     at the cost that a duplicate arriving after its key expired counts
@@ -240,15 +242,7 @@ def stream_unique_violations(
 
 
 def stream_fk_violations(stream_df: DataFrame, c: ForeignKey, dim_df: DataFrame) -> DataFrame:
-    """Stream-static anti-join: dangling references in flight."""
-    ref = dim_df.select(*[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(c.ref_columns)]).dropDuplicates()
-    cond = None
-    for i, fc in enumerate(c.columns):
-        clause = F.col(fc) == F.col(f"__ref_{i}")
-        cond = clause if cond is None else (cond & clause)
-    fact = stream_df
-    for fc in c.columns:
-        fact = fact.filter(F.col(fc).isNotNull())
-    return fact.join(F.broadcast(ref), on=cond, how="left_anti").withColumn(
-        "constraint_id", F.lit(c.id)
-    )
+    """Stream-static anti-join: dangling references in flight — the
+    batch engine's ``fk_dangling`` (NULL FK values pass), with the
+    static dim always broadcast."""
+    return fk_dangling(stream_df, dim_df, c).withColumn("constraint_id", F.lit(c.id))
