@@ -936,63 +936,64 @@ def _ks_baseline(sf_dir: str):
     return grid, ecdf, int(len(v))
 
 
-def q_cv_drift_ks_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-checked (new this round): the grid-ECDF KS D statistic
-    fully in-plan via ks_statistic_df — ECDF terms are averages of 0/1
-    indicators (exact integer sums), so D is bit-identical between
-    Spark and the DuckDB replay. Two scenarios: self (D ~ 0) and a
-    +40-char shift (D large). p-values stay driver-side (ks_pvalue,
-    scipy-pinned) — see q_cv_drift_chi2 for the verdict path."""
-    from xsd2json_spark.engine.drift import ks_statistic_df
+def _ks_over_bins(sf_dir: str, df: DataFrame, by) -> DataFrame:
+    """KS verdict rows of ``df``'s n_chars per ``by`` group against the
+    deterministic baseline: the KS bin-count state (state_of, carrying
+    ``by``) read in-plan by ks_verdicts_over_bins at alpha 0.01."""
+    from xsd2json_spark.engine.drift import ks_verdicts_over_bins
+    from xsd2json_spark.engine.incremental import state_of
+    from xsd2json_spark.spec.constraints import Drift
 
-    grid, ecdf, _n = _ks_baseline(sf_dir)
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars").isNotNull())
-    cur = docs.select(F.lit("self").alias("scenario"), "n_chars").unionAll(
+    grid, ecdf, n_base = _ks_baseline(sf_dir)
+    baseline = {"grid": grid, "ecdf": ecdf, "n": n_base}
+    c = Drift(id="ks", column="n_chars", test="ks", baseline="b")
+    return ks_verdicts_over_bins(state_of(df, c, {"b": baseline}, by=by), baseline, window_cols=by, alpha=0.01)
+
+
+def _ks_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents' n_chars as two scenarios: self and a +40-char shift."""
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select(F.lit("self").alias("scenario"), "n_chars").unionAll(
         docs.select(F.lit("shift_plus40").alias("scenario"), (F.col("n_chars") + 40).alias("n_chars"))
     )
-    out = ks_statistic_df(cur, "n_chars", grid, ecdf, by=["scenario"])
-    return out.select(
-        "scenario", F.round("d_statistic", 6).alias("d_statistic"), "n_cur"
-    )
+
+
+def q_cv_drift_ks_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORACLE-checked: the grid-ECDF KS D statistic fully in-plan — the
+    KS bin-count state (state_of, by scenario) read by
+    ks_verdicts_over_bins. ECDF terms are integer ratios, so D is
+    bit-identical between Spark and the DuckDB replay's indicator
+    averages. Two scenarios: self (D ~ 0) and a +40-char shift
+    (D large). p-values stay driver-side (ks_pvalue, scipy-pinned) —
+    see q_cv_drift_ks for the verdict path."""
+    out = _ks_over_bins(sf_dir, _ks_scenarios(spark, sf_dir), ["scenario"])
+    return out.select("scenario", F.round("d_statistic", 6).alias("d_statistic"), "n_cur")
 
 
 def q_cv_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-checked end-to-end KS drift VERDICT fully in-plan (new
     round 5 — completes the in-plan verdict pair started by
-    cv_drift_chi2): D from the one-aggregation grid ECDF, pass/fail as
+    cv_drift_chi2): D from the KS bin-count state (state_of, by
+    scenario), pass/fail by ks_verdicts_over_bins as
     D <= ks_crit_lambda(alpha) / (sqrt(ne) + 0.12 + 0.11/sqrt(ne))
     where the alpha part is ONE driver-side constant and ne is a pure
     expression of the per-scenario count — no p-value conversion
     anywhere. DuckDB replays the whole rule including the critical
     constant as a literal. Scenarios: self (D ~ 0, passes) and a
     +40-char shift (fails)."""
-    from xsd2json_spark.engine.drift import ks_drift_verdicts_df
-
-    grid, ecdf, n_base = _ks_baseline(sf_dir)
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars").isNotNull())
-    cur = docs.select(F.lit("self").alias("scenario"), "n_chars").unionAll(
-        docs.select(F.lit("shift_plus40").alias("scenario"), (F.col("n_chars") + 40).alias("n_chars"))
-    )
-    baseline = {"grid": grid, "ecdf": ecdf, "n": n_base}
-    out = ks_drift_verdicts_df(cur, "n_chars", baseline, by=["scenario"], alpha=0.01)
-    return out.select(
-        "scenario", F.round("d_statistic", 6).alias("d_statistic"), "n_cur", "passed"
-    )
+    out = _ks_over_bins(sf_dir, _ks_scenarios(spark, sf_dir), ["scenario"])
+    return out.select("scenario", F.round("d_statistic", 6).alias("d_statistic"), "n_cur", "passed")
 
 
 def q_cv_drift_ks_by_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-checked PER-GROUP KS drill-down: each lang's n_chars
-    distribution against the global baseline ECDF, one distributed
-    aggregation for all groups (ks_statistic_df with by=['lang']).
-    Completes the drift-stat oracle matrix: {chi2, KS} x {global,
-    per-group}; p-values stay driver-side (scipy-pinned)."""
-    from xsd2json_spark.engine.drift import ks_statistic_df
-
-    grid, ecdf, _n = _ks_baseline(sf_dir)
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("n_chars").isNotNull() & F.col("lang").isNotNull()
-    )
-    out = ks_statistic_df(docs, "n_chars", grid, ecdf, by=["lang"])
+    distribution against the global baseline ECDF — the KS bin-count
+    state carrying lang (state_of with by=['lang']) read by
+    ks_verdicts_over_bins. NULL langs are filtered here: the state keeps
+    NULL by-keys. Completes the drift-stat oracle matrix: {chi2, KS} x
+    {global, per-group}; p-values stay driver-side (scipy-pinned)."""
+    docs = _t(spark, sf_dir, "documents").filter(F.col("lang").isNotNull())
+    out = _ks_over_bins(sf_dir, docs, ["lang"])
     return out.select("lang", F.round("d_statistic", 6).alias("d_statistic"), "n_cur")
 
 
@@ -1560,7 +1561,7 @@ def q_cv_metric_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "current run" (slice 0) drops half its English docs. Both the
     z-score and the MAD estimator judge the current values against the
     history — center/spread/score/verdict all in-plan (one aggregation
-    over the runs x metrics history + a broadcast of the current
+    over the runs x metrics history + a left join from the current
     values) — and DuckDB replays mean/stddev_samp, exact medians
     (quantile_cont == F.percentile interpolation), the 0.6745 MAD
     consistency constant, and the threshold rule."""
@@ -2109,15 +2110,16 @@ def _ivfpq_oracle() -> str:
     """
 
 
-def _chi2_crit_values(alpha: float = 0.01, max_dof: int = 128) -> str:
+def _chi2_crit_values(alpha: float = 0.01) -> str:
     """The chi2-critical-value table as DuckDB VALUES literals — the
     exact same pure-python chi2_crit doubles drift_verdicts_over_counts
     broadcasts Spark-side, so the in-plan pass/fail verdict replays
     bit-identically (repr round-trips doubles exactly; statistics sit
-    orders of magnitude away from the criticals, so no boundary risk)."""
+    orders of magnitude away from the criticals, so no boundary risk).
+    dof 1..128 covers every oracle query's dof."""
     from xsd2json_spark.engine.stats_math import chi2_crit
 
-    return ", ".join(f"({d}, {chi2_crit(d, alpha)!r})" for d in range(1, max_dof + 1))
+    return ", ".join(f"({d}, {chi2_crit(d, alpha)!r})" for d in range(1, 129))
 
 
 def _drift_verdict_oracle() -> str:

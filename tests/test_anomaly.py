@@ -74,3 +74,17 @@ def test_multi_metric_and_validation(spark):
     assert out["a"]["passed"] and not out["b"]["passed"]
     with pytest.raises(ValueError, match="unknown anomaly method"):
         metric_anomaly_verdicts(hist, cur, method="ewma")
+
+
+@pytest.mark.parametrize("method", ["zscore", "mad"])
+def test_new_metric_without_history_is_vacuous_pass(spark, method):
+    """A current metric with no history yet still gets its verdict row:
+    n_history 0, NULL center/spread/score, a vacuous pass."""
+    hist = _hist(spark, [100, 102, 98, 101], metric="a")
+    cur = spark.createDataFrame([("a", 60.0), ("new_metric", 5.0)], "metric string, value double")
+    rows = {r["metric"]: r for r in metric_anomaly_verdicts(hist, cur, method=method).collect()}
+    assert sorted(rows) == ["a", "new_metric"]
+    assert not rows["a"]["passed"] and rows["a"]["n_history"] == 4
+    new = rows["new_metric"]
+    assert new["passed"] and new["n_history"] == 0 and new["value"] == 5.0
+    assert new["score"] is None and new["center"] is None and new["spread"] is None

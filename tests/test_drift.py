@@ -3,13 +3,15 @@ Spark-side chi2/KS paths with shifted vs unshifted snapshots."""
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from xsd2json_spark.engine import ValidationEngine
 from xsd2json_spark.engine.drift import (
     chi2_from_counts,
-    ks_drift,
+    ks_from_bins,
+    ks_verdicts_over_bins,
     make_categorical_baseline,
     make_numeric_baseline,
 )
@@ -96,19 +98,38 @@ def test_chi2_drift_detected(spark, files):
     assert p < 0.01
 
 
+def oracle_ecdf(values, grid):
+    """numpy ECDF of the non-NULL, non-NaN values at each grid point."""
+    v = np.array([x for x in values if x is not None], dtype="float64")
+    v = v[~np.isnan(v)]
+    return [float((v <= q).mean()) for q in grid]
+
+
+def oracle_d(values, grid, ecdf):
+    """Grid KS D by brute force: max_i |mean(v <= grid[i]) - ecdf[i]|."""
+    return max(abs(e - b) for e, b in zip(oracle_ecdf(values, grid), ecdf))
+
+
+def _lengths(df):
+    return [r[0] for r in df.selectExpr("length(content)").collect()]
+
+
 def test_ks_no_drift(spark, files):
     base = make_numeric_baseline(files, "length(content)")
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
-    d, p = ks_drift(files, c, base)
+    d, p = ks_from_bins(state_of(files, c, {"b": base}), c, base)
     assert d < 0.01 and p > 0.5
+    assert base["ecdf"] == oracle_ecdf(_lengths(files), base["grid"])
+    assert d == oracle_d(_lengths(files), base["grid"], base["ecdf"])
 
 
 def test_ks_drift_detected(spark, files):
     base = make_numeric_baseline(files, "length(content)")
     shifted = files.withColumn("content", F.concat(F.col("content"), F.repeat(F.lit("pad"), 50)))
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
-    d, p = ks_drift(shifted, c, base)
+    d, p = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
     assert d > 0.3 and p < 1e-6
+    assert d == oracle_d(_lengths(shifted), base["grid"], base["ecdf"])
 
 
 def test_drift_inside_engine(spark, files):
@@ -285,32 +306,91 @@ def test_chi2_crit_published_values():
         assert math.isclose(chi2_sf(got, dof), alpha, rel_tol=1e-6)
 
 
-def test_ks_statistic_df_matches_driver_side(spark, files):
-    """The in-plan grid-ECDF D equals the driver-side ks_drift D on the
-    same baseline (bit-exact: indicator averages are integer ratios)."""
-    from xsd2json_spark.engine.drift import ks_drift, ks_statistic_df, make_numeric_baseline
-
+def test_ks_verdicts_over_bins_matches_oracle(spark, files):
+    """The in-plan D over the bin-count state equals the driver-side D
+    and the numpy oracle (bit-exact: ECDF terms are integer ratios),
+    globally and per group carried as a ``by`` key."""
     base = make_numeric_baseline(files, "length(content)")
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
     shifted = files.withColumn("content", F.concat(F.col("content"), F.repeat(F.lit("pad"), 10)))
-    d, _ = ks_drift(shifted, c, base)
-    row = ks_statistic_df(shifted, "length(content)", base["grid"], base["ecdf"]).collect()[0]
-    assert row["d_statistic"] == d  # exact, not approx
+    d, _ = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
+    row = ks_verdicts_over_bins(state_of(shifted, c, {"b": base}), base, window_cols=()).collect()[0]
+    assert row["d_statistic"] == d == oracle_d(_lengths(shifted), base["grid"], base["ecdf"])
     assert row["n_cur"] == shifted.filter("content is not null").count()
 
     # grouped: shift only one lang's lengths; only that group's D moves
-    grouped = ks_statistic_df(
-        files.withColumn(
-            "content",
-            F.when(F.col("lang") == "python", F.concat(F.col("content"), F.repeat(F.lit("x"), 80)))
-            .otherwise(F.col("content")),
-        ),
-        "length(content)", base["grid"], base["ecdf"], by=["lang"],
+    by_lang = files.withColumn(
+        "content",
+        F.when(F.col("lang") == "python", F.concat(F.col("content"), F.repeat(F.lit("x"), 80)))
+        .otherwise(F.col("content")),
+    )
+    grouped = ks_verdicts_over_bins(
+        state_of(by_lang, c, {"b": base}, by=["lang"]), base, window_cols=["lang"]
     ).collect()
     by = {r["lang"]: r["d_statistic"] for r in grouped}
+    for lang, got in by.items():
+        assert got == oracle_d(_lengths(by_lang.filter(F.col("lang") == lang)), base["grid"], base["ecdf"])
     # java's D vs the GLOBAL baseline is ~0.13 (per-lang length mixes
     # differ a little by construction); the shifted group is ~1.0
     assert by["python"] > 0.5 and by["java"] < 0.2
+
+
+INF = float("inf")
+KS_EDGE_CASES = {
+    # (current values, grid) — the baseline ECDF is a fixed ramp
+    "values_on_grid_points": ([0.0, 1.0, 1.0, 2.0, 3.0, 4.0, 4.0, 5.0, 2.5], [0.0, 1.0, 2.0, 3.0, 4.0]),
+    "repeated_grid_points": ([1.0, 1.0, 2.0, 2.0, 2.0, 3.0, 0.5, 9.0], [1.0, 1.0, 2.0, 2.0, 2.0, 3.0]),
+    "nan_and_null": ([float("nan"), 1.0, None, 2.0, float("nan"), 3.0, 0.0], [0.0, 1.0, 2.0, 3.0]),
+    "infinities": ([-INF, INF, INF, 1.0, 2.0, -5.0, 7.0], [-INF, 0.0, 1.0, 2.0, INF]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(KS_EDGE_CASES))
+def test_ks_d_matches_oracle_on_edge_values(spark, case):
+    """Engine KS D (driver-side ks_from_bins and in-plan
+    ks_verdicts_over_bins over state_of) equals the numpy oracle on
+    values equal to grid points, repeated grid points, NaN/NULL (not
+    values: dropped) and +-inf; make_numeric_baseline's ECDF and n
+    equal the oracle's at its own grid."""
+    values, grid = KS_EDGE_CASES[case]
+    ecdf = [(i + 1) / (len(grid) + 1) for i in range(len(grid))]
+    baseline = {"kind": "numeric", "n": 50, "grid": grid, "ecdf": ecdf}
+    df = spark.createDataFrame([(x,) for x in values], "x double")
+    c = Drift(id="ks", column="x", test="ks", baseline="b")
+    bins = state_of(df, c, {"b": baseline})
+    want = oracle_d(values, grid, ecdf)
+    d, _ = ks_from_bins(bins, c, baseline)
+    row = ks_verdicts_over_bins(bins, baseline, window_cols=()).collect()[0]
+    assert d == want and row["d_statistic"] == want
+    n_kept = sum(1 for x in values if x is not None and not math.isnan(x))
+    assert row["n_cur"] == n_kept
+
+    own = make_numeric_baseline(df, "x", grid_points=3)
+    assert own["n"] == n_kept
+    assert own["ecdf"] == oracle_ecdf(values, own["grid"])
+
+
+def test_chi2_verdicts_over_counts_beyond_128_categories(spark):
+    """The critical-value table covers the baseline's largest per-group
+    category count: a 150-category baseline still gets one verdict row
+    per (window, group), passing for identical counts and failing for a
+    shifted mix."""
+    from xsd2json_spark.engine.drift import drift_verdicts_over_counts
+
+    cats = ["c%d" % i for i in range(150)]
+    base = spark.createDataFrame(
+        [(g, cat, 10) for g in ("g1", "g2") for cat in cats] + [("g1", "extra", 10)],
+        "g string, cat string, n long",
+    )
+    counts = spark.createDataFrame(
+        [("w", "g1", cat, 10) for cat in cats + ["extra"]]
+        + [("w", "g2", cat, 40 if i < 10 else 2) for i, cat in enumerate(cats)],
+        "window string, g string, cat string, n long",
+    )
+    rows = {r["g"]: r for r in drift_verdicts_over_counts(counts, "cat", base, group_by=["g"]).collect()}
+    assert sorted(rows) == ["g1", "g2"]
+    assert rows["g1"]["dof"] == 150 and rows["g1"]["passed"] and rows["g1"]["statistic"] == 0.0
+    assert rows["g2"]["dof"] == 149 and not rows["g2"]["passed"]
 
 
 def test_psi_statistic_hand_computed(spark):

@@ -484,8 +484,8 @@ def test_incremental_drift_verdicts_match_full_run(spark):
 
 
 def test_incremental_ks_drift_matches_full_run(spark):
-    """KS drift from a composed bin state == the full-scan ks_drift
-    verdict (identical statistic: both read the ECDF only at the
+    """KS drift from a composed bin state == the full run's verdict
+    over a fresh state (identical statistic: both read the ECDF only at the
     baseline's quantile grid), for drifted and undrifted snapshots
     with adds, updates, and deletes."""
     from xsd2json_spark.engine.drift import make_numeric_baseline
@@ -633,20 +633,21 @@ NULL_COLS = "doc_id long, k string, grp string, cat string"
 
 
 @pytest.mark.parametrize("cid", ["unique", "fk", "cardinality", "chi2"])
-def test_null_rules_shared_by_engine_state_and_stream(spark, cid):
+def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
     """One NULL rule per kind across every path over a frame with NULL
     key, group and category values: unique and FK drop NULL keys,
     cardinality keeps the NULL group, chi2 drops NULL categories but
     keeps the NULL group. The engine's violations equal the reader
     over state_of, compose_state(state_of(a), delta) equals
-    state_of(b), and (FK) the stream-static anti-join flags the same
-    rows as the batch one."""
+    state_of(b), the stream-static FK anti-join flags the same rows as
+    the batch one, and the stateful stream unique check reports the
+    same duplicates as the batch one (NULL keys are no duplicates)."""
     from collections import Counter
     import json
 
     from xsd2json_spark.engine.drift import drift_verdicts, make_categorical_baseline_by
     from xsd2json_spark.engine.validate import fk_dangling
-    from xsd2json_spark.streaming.validate_stream import stream_fk_violations
+    from xsd2json_spark.streaming.validate_stream import stream_fk_violations, stream_unique_violations
 
     a = spark.createDataFrame([
         (1, "r1", "g1", "py"), (2, "r1", "g1", None), (3, "rX", None, "go"),
@@ -704,3 +705,14 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, cid):
         streamed = stream_fk_violations(b, c, dim)
         assert sorted(r["doc_id"] for r in streamed.collect()) == sorted(
             int(r["doc_id"]) for r in direct.collect())
+    if cid == "unique":
+        src = str(tmp_path / "unique_src")
+        b.write.parquet(src)
+        stream = spark.readStream.schema(b.schema).parquet(src)
+        q = (
+            stream_unique_violations(stream, c).writeStream.format("memory")
+            .queryName("null_rule_unique").outputMode("append").trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        dups = {r["k"]: r["dup_count"] for r in spark.table("null_rule_unique").collect()}
+        assert dups == {r["k"]: r["n"] - 1 for r in state_b.collect() if r["n"] > 1} == {"r1": 2}

@@ -52,10 +52,11 @@ def metric_anomaly_verdicts(
     (metric_cols..., value_col); ``current`` one row per metric with
     the same columns. Returns (metric_cols..., value, n_history,
     center, spread, score, passed) — passed is the verdict, score the
-    normalized deviation (NULL when history is too short).
+    normalized deviation (NULL when history is too short). Every
+    current metric gets a row; one without history has n_history 0.
 
     One shuffle keyed on the metric identity (history is
-    runs x metrics rows — tiny); the current values broadcast."""
+    runs x metrics rows — tiny)."""
     if method not in ("zscore", "mad"):
         raise ValueError(f"unknown anomaly method {method!r}")
     gb = list(metric_cols)
@@ -82,8 +83,10 @@ def metric_anomaly_verdicts(
             )
         )
         scale = F.lit(MAD_CONSISTENCY)
+    # left join from the current run: a metric with no history yet
+    # reads n_history 0 — the vacuous pass below, not a dropped row
     cur = current.select(*gb, v.alias("value"))
-    j = base.join(F.broadcast(cur), gb, "inner")
+    j = cur.join(base, gb, "left").withColumn("n_history", F.coalesce(F.col("n_history"), F.lit(0)))
     score = scale * F.try_divide(F.col("value") - F.col("center"), F.col("spread"))
     passed = (
         F.when(F.col("n_history") < min_history, F.lit(True))  # vacuous: not enough evidence

@@ -25,15 +25,21 @@ aggregation each —
   bounded by category cardinality), then the Pearson statistic
   driver-side (O(#categories), no row collect) in ``chi2_from_counts``.
 - ks: the baseline stores a ~199-point value grid with its ECDF; the
-  current ECDF at those grid points is one agg of
-  sum(value <= q_i)/count — 200 counters in a single pass, no sort, no
-  row collect; D = max_i |ecdf_cur(q_i) - ecdf_base(q_i)|. The grid
-  bounds the error of D by the grid resolution (1/(grid+1) per cell),
-  which is what you want at 10^12 rows — an exact KS needs a full sort.
+  current side is the constraint's bin-count state (``state_of``:
+  groupBy(__bin).count(), __bin = the number of grid points strictly
+  below the value — at most grid+1 counters, no sort, no row collect).
+  The ECDF at grid point i is (rows with bin <= i) / n, read
+  driver-side by ``ecdf_at_grid`` (the baseline's own ECDF, the
+  engine's D) and in-plan by ``ks_verdicts_over_bins`` (queries,
+  streams, any extra group key); D = max_i |ecdf_cur(q_i) -
+  ecdf_base(q_i)|. The grid bounds the error of D by the grid
+  resolution (1/(grid+1) per cell), which is what you want at 10^12
+  rows — an exact KS needs a full sort.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -71,36 +77,18 @@ def make_categorical_baseline(df: DataFrame, column: str) -> dict:
 def make_numeric_baseline(
     df: DataFrame, expr: str, grid_points: int = DEFAULT_GRID_POINTS
 ) -> dict:
-    """Quantile grid + ECDF of the baseline itself at that grid."""
-    col = F.expr(expr).cast("double")
+    """Quantile grid (percentile_approx) + the baseline's own ECDF at
+    that grid, read off its bin-count state like any current side."""
+    from xsd2json_spark.engine.incremental import state_of
+
     probs = [i / (grid_points + 1) for i in range(1, grid_points + 1)]
-    agg = df.select(col.alias("v")).na.drop()
-    row = agg.agg(
-        F.percentile_approx("v", probs, 10000).alias("grid"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    grid = [float(g) for g in row["grid"]]
-    # ECDF of the baseline at its own grid (exact, one more agg)
-    ecdf_exprs = [F.avg((F.col("v") <= F.lit(q)).cast("double")).alias(f"e{i}") for i, q in enumerate(grid)]
-    erow = agg.agg(*ecdf_exprs).collect()[0]
-    return {
-        "kind": "numeric",
-        "n": int(row["n"]),
-        "grid": grid,
-        "ecdf": [float(erow[f"e{i}"]) for i in range(len(grid))],
-    }
-
-
-def ks_drift(df: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
-    grid, base_ecdf, n_base = baseline["grid"], baseline["ecdf"], baseline["n"]
-    v = _value_col(c).cast("double")
-    cur = df.select(v.alias("v")).na.drop()
-    exprs = [F.avg((F.col("v") <= F.lit(q)).cast("double")).alias(f"e{i}") for i, q in enumerate(grid)]
-    row = cur.agg(*exprs, F.count(F.lit(1)).alias("n")).collect()[0]
-    n_cur = row["n"] or 0
-    if n_cur == 0:
-        raise SpecError(f"drift {c.id}: no current values")
-    d = max(abs(float(row[f"e{i}"]) - base_ecdf[i]) for i in range(len(grid)))
-    return d, ks_pvalue(d, n_base, n_cur)
+    # percentile_approx skips NULLs; nanvl makes NaN one too, so the
+    # grid sees exactly the values state_rows keeps
+    v = F.nanvl(F.expr(expr).cast("double"), F.lit(None))
+    grid = [float(g) for g in df.agg(F.percentile_approx(v, probs, 10000)).first()[0]]
+    c = Drift(id="baseline", column=expr, expr=expr, test="ks", baseline="self")
+    ecdf, n = ecdf_at_grid(state_of(df, c, {"self": {"grid": grid}}), len(grid))
+    return {"kind": "numeric", "n": n, "grid": grid, "ecdf": ecdf}
 
 
 def chi2_statistic_df(
@@ -212,38 +200,12 @@ def psi_statistic_df(
     )
 
 
-def ks_statistic_df(
-    df: DataFrame, expr: str, grid, base_ecdf, by=None
-) -> DataFrame:
-    """Grid-ECDF Kolmogorov–Smirnov D STATISTIC fully in-plan: one
-    aggregation evaluates the current ECDF at every baseline grid point
-    (avg of (v <= q_i) indicators), then D = max_i |ecdf_i - base_i| as
-    a greatest() over literal baseline values. `by` optionally groups
-    (one D row per group — per-scenario, per-window, per-lang...).
-
-    Because the ECDF terms are averages of 0/1 indicators, the sums are
-    exact integers in ANY engine — D is bit-identical across Spark and
-    a SQL replay, which is what makes the statistic oracle-able (unlike
-    p-values, which stay driver-side via ks_pvalue, scipy-pinned).
-    Returns (by..., d_statistic, n_cur)."""
-    gb = list(by or [])
-    v = F.expr(expr).cast("double")
-    cur = df.filter(v.isNotNull())
-    exprs = [
-        F.avg((v <= F.lit(float(q))).cast("double")).alias(f"__e{i}") for i, q in enumerate(grid)
-    ] + [F.count(F.lit(1)).alias("n_cur")]
-    agg = cur.groupBy(*gb).agg(*exprs) if gb else cur.agg(*exprs)
-    diffs = [F.abs(F.col(f"__e{i}") - F.lit(float(e))) for i, e in enumerate(base_ecdf)]
-    d = F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
-    return agg.select(*gb, d.alias("d_statistic"), F.col("n_cur").cast("long").alias("n_cur"))
-
-
 def bin_index_expr(v, grid) -> "F.Column":
     """In-plan bin index against a baseline quantile grid: the number
     of grid edges STRICTLY BELOW the value ``v`` (a Column), so rows
-    with v <= grid[i] are exactly the rows with bin <= i — the same
-    boundary semantics as ks_drift's avg(v <= q) probes. Shared by the
-    incremental KS state and the streaming KS counter."""
+    with v <= grid[i] are exactly the rows with bin <= i, for any
+    sorted grid (repeated points included). Used only by the KS count
+    state (``incremental.state_rows``)."""
     edges = F.array(*[F.lit(float(q)) for q in grid])
     return F.size(F.filter(edges, lambda e: e < v))
 
@@ -255,17 +217,22 @@ def ks_verdicts_over_bins(
     alpha: float = 0.01,
 ) -> DataFrame:
     """Per-window KS drift verdicts as a STATELESS view over a
-    bin-counter table — the KS sibling of drift_verdicts_over_counts:
-    the stateful part is just the watermarked bin-count aggregation
-    (streaming.stream_bin_counts); this view folds each window's bins
+    bin-count state — the in-plan reader of the KS state and the KS
+    sibling of drift_verdicts_over_counts. It folds each window's bins
     into a map, evaluates the ECDF at every baseline grid point as a
     cumulative map sum, takes D as a greatest() over the grid, and
-    applies the in-plan pass rule (ks_crit_lambda constant over the
-    sample-size expression — see ks_drift_verdicts_df). Entirely
-    in-plan: no per-row Python, no driver-side stats.
+    passes iff D <= ks_crit_lambda(alpha) / (sqrt(ne) + 0.12 +
+    0.11/sqrt(ne)), ne = n_base*n_cur/(n_base+n_cur): the alpha part is
+    one driver-side constant, the sample-size part a pure expression of
+    the per-window n, so the rule replays in plain SQL (it is
+    ks_pvalue(D) >= alpha by monotonicity of the Kolmogorov series).
+    Entirely in-plan: no per-row Python, no driver-side stats. Because
+    the ECDF terms are integer ratios, D is bit-identical to
+    ``ecdf_at_grid``'s driver-side D and to a SQL replay.
 
-    bins_df: (window_cols..., __bin, n) — a micro-batch sink, a
-    composed incremental state, or any batch equivalent. Returns
+    bins_df: (window_cols..., __bin, n) — ``state_of(df, c, baselines,
+    by=window_cols)``, a streaming sink of stream_bin_counts, or a
+    composed incremental state. Returns
     (window_cols..., d_statistic, n_cur, passed)."""
     from xsd2json_spark.engine.stats_math import ks_crit_lambda
 
@@ -301,30 +268,6 @@ def ks_verdicts_over_bins(
     )
 
 
-def ks_drift_verdicts_df(
-    df: DataFrame, expr: str, baseline: dict, by=None, alpha: float = 0.01
-) -> DataFrame:
-    """Grid-ECDF KS drift VERDICTS fully in-plan — the KS sibling of
-    drift_verdicts_over_counts' chi2 rule: D from ks_statistic_df's
-    one-aggregation ECDF evaluation, and pass/fail as
-    D <= ks_crit_lambda(alpha) / (sqrt(ne) + 0.12 + 0.11/sqrt(ne)),
-    ne = n_base*n_cur/(n_base+n_cur) — the alpha-dependent part is one
-    driver-side CONSTANT (``stats_math.ks_crit_lambda``), the sample-
-    size part a pure expression of the per-group n, so the verdict
-    needs no driver-side p-value conversion and replays in plain SQL
-    (the rule is equivalent to ks_pvalue(D) >= alpha by monotonicity
-    of the Kolmogorov series). Returns
-    (by..., d_statistic, n_cur, passed)."""
-    from xsd2json_spark.engine.stats_math import ks_crit_lambda
-
-    lam = ks_crit_lambda(alpha)
-    n_base = int(baseline["n"])
-    stat = ks_statistic_df(df, expr, baseline["grid"], baseline["ecdf"], by=by)
-    ne = (F.lit(float(n_base)) * F.col("n_cur")) / (F.lit(float(n_base)) + F.col("n_cur"))
-    d_crit = F.lit(lam) / (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne))
-    return stat.withColumn("passed", F.col("d_statistic") <= d_crit)
-
-
 def make_categorical_baseline_df(df: DataFrame, column: str, group_by=()) -> DataFrame:
     """Baseline counts as a DATAFRAME (no driver collect): one row per
     (group..., category). The distributed sibling of
@@ -346,7 +289,6 @@ def drift_verdicts_over_counts(
     group_by=(),
     window_cols=("window",),
     alpha: float = 0.01,
-    max_dof: int = 128,
 ) -> DataFrame:
     """Per-(window, group) chi-square drift verdicts as a STATELESS view
     over a category-counter table — the streaming-drift shape: the
@@ -354,8 +296,9 @@ def drift_verdicts_over_counts(
     (streaming.stream_category_counts); this view joins those counters
     against the baseline counts and evaluates pass/fail entirely
     in-plan (statistic <= chi2_crit(dof, alpha), critical values
-    broadcast as a tiny dof-indexed table — no per-row Python, no
-    driver-side stats).
+    broadcast as a tiny dof-indexed table up to the baseline's largest
+    per-group category count — no per-row Python, no driver-side
+    stats).
 
     counts_df: (window_cols..., group_by..., column, n) — a micro-batch
     sink, a materialized counter table, or any batch equivalent.
@@ -397,8 +340,9 @@ def drift_verdicts_over_counts(
         .withColumn("dof", F.greatest(F.col("n_cats") - 1, F.lit(1)).cast("int"))
         .drop("n_cats")
     )
+    max_cats = b.groupBy(*gb).count().agg(F.max("count")).first()[0] or 0
     crit = spark.createDataFrame(
-        [(d, chi2_crit(d, alpha)) for d in range(1, max_dof + 1)], "dof int, __crit double"
+        [(d, chi2_crit(d, alpha)) for d in range(1, max(max_cats - 1, 1) + 1)], "dof int, __crit double"
     )
     return (
         agg.join(F.broadcast(crit), "dof")
@@ -501,23 +445,27 @@ def chi2_from_counts(counts: DataFrame, c: Drift, baseline: dict) -> "list[tuple
     return out
 
 
-def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
-    """Global KS (D, p) from a bin-count state (``incremental.state_of``:
-    (__bin, n) rows against the baseline grid) — the IDENTICAL
-    statistic to ``ks_drift`` on the full snapshot: the ECDF at grid
-    point i is (rows with bin <= i) / n, exactly the avg(v <= grid[i])
-    the full scan computes. The collect is grid-sized."""
-    grid, base_ecdf, n_base = baseline["grid"], baseline["ecdf"], baseline["n"]
+def ecdf_at_grid(bins: DataFrame, grid_len: int) -> "tuple[list, int]":
+    """(ECDF at each grid point, n) from collected bin-count rows
+    (``incremental.state_of``: (__bin, n) against a grid of
+    ``grid_len`` points) — the one driver-side grid ECDF. The ECDF at
+    point i is (rows with bin <= i) / n, a running sum; the collect is
+    grid-sized. An empty state gives ([], 0)."""
     per_bin = {r["__bin"]: r["n"] for r in bins.collect()}
-    n_cur = sum(per_bin.values())
+    n = sum(per_bin.values())
+    if n == 0:
+        return [], 0
+    return [k / n for k in accumulate(per_bin.get(i, 0) for i in range(grid_len))], n
+
+
+def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
+    """Global KS (D, p) from the constraint's bin-count state — a fresh
+    one on the full run, the composed one on the incremental run."""
+    ecdf, n_cur = ecdf_at_grid(bins, len(baseline["grid"]))
     if n_cur == 0:
         raise SpecError(f"drift {c.id}: no current values")
-    cum = 0
-    d = 0.0
-    for i in range(len(grid)):
-        cum += per_bin.get(i, 0)
-        d = max(d, abs(cum / n_cur - base_ecdf[i]))
-    return d, ks_pvalue(d, n_base, n_cur)
+    d = max(abs(e - b) for e, b in zip(ecdf, baseline["ecdf"]))
+    return d, ks_pvalue(d, baseline["n"], n_cur)
 
 
 def ks_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
@@ -575,20 +523,18 @@ def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=No
 
     chi2 and global KS read the constraint's count state: ``counts``
     when given (the incremental run's composed state; ``df`` is then
-    unused), else chi2 builds a fresh ``state_of(df, c)`` and KS runs
-    its one-aggregation grid scan (``ks_drift``). Per-group KS has no
-    state and runs ``ks_drift_by``."""
+    unused), else a fresh ``state_of(df, c, baselines)``. Per-group KS
+    has no state and runs ``ks_drift_by``."""
     baseline = baseline_of(c, baselines)
-    if c.test == "chi2":
+    if c.test == "ks" and c.group_by:
+        results = ks_drift_by(df, c, baseline)
+    else:
         if counts is None:
             from xsd2json_spark.engine.incremental import state_of
 
-            counts = state_of(df, c)
-        results = chi2_from_counts(counts, c, baseline)
-    elif counts is not None:
-        results = [("ALL", *ks_from_bins(counts, c, baseline))]
-    elif c.group_by:
-        results = ks_drift_by(df, c, baseline)
-    else:
-        results = [("ALL", *ks_drift(df, c, baseline))]
+            counts = state_of(df, c, baselines)
+        if c.test == "chi2":
+            results = chi2_from_counts(counts, c, baseline)
+        else:
+            results = [("ALL", *ks_from_bins(counts, c, baseline))]
     return [(key, c.id, 0 if p >= c.alpha else 1, None, p >= c.alpha) for key, _stat, p in results]

@@ -33,7 +33,8 @@ What is and is not incrementally composable:
   - KS drift: __bin, the index in the BASELINE's quantile grid, NULL
     values dropped — KS only reads the ECDF at that grid, a
     cumulative sum of bin counts, so the composed statistic is
-    identical to the full-scan ks_drift, not an approximation.
+    identical to the full run's (which reads a fresh ``state_of``),
+    not an approximation.
   Verdicts read off the counts with the engine's own readers
   (``unique_violations_from_counts``, ``fk_dangling``,
   ``cardinality_violations_from_counts`` in engine/validate.py;
@@ -159,43 +160,48 @@ def incremental_row_verdicts(
     return out.select(*VERDICT_COLUMNS)
 
 
-def state_rows(df: DataFrame, c, baselines=None) -> "tuple[list, DataFrame]":
+def state_rows(df: DataFrame, c, baselines=None, by=()) -> "tuple[list, DataFrame]":
     """(key columns, keyed rows) that enter the count state of table
     check ``c`` — the one place the NULL rule lives: unique and FK drop
     rows with any NULL key (embedded-uniqueness reading; NULL FK values
     pass), cardinality keeps NULL groups (groupBy semantics), drift
-    drops NULL values. KS keys each value by its bin in the baseline's
-    quantile grid, so it needs ``baselines``."""
+    drops NULL values (and, for KS, NaN). KS keys each value by its bin
+    in the baseline's quantile grid, so it needs ``baselines``.
+
+    ``by`` names extra group keys carried in front of the kind's keys
+    (a scenario, a lang, an event-time window); the NULL rule never
+    applies to them."""
     from xsd2json_spark.engine.drift import _value_col, baseline_of, bin_index_expr
 
+    by = list(by)
     if isinstance(c, (Unique, ForeignKey)):
         cols = list(c.columns)
-        return cols, df.select(*cols).na.drop(subset=cols)
+        return [*by, *cols], df.select(*by, *cols).na.drop(subset=cols)
     if isinstance(c, Cardinality):
-        cols = list(c.group_by)
+        cols = [*by, *c.group_by]
         return cols, df.select(*cols)
     if isinstance(c, Drift) and c.test == "chi2":
-        gb = list(c.group_by)
+        gb = [*by, *c.group_by]
         return [*gb, "__cat"], df.select(*gb, _value_col(c).alias("__cat")).filter(F.col("__cat").isNotNull())
     if isinstance(c, Drift) and not c.group_by:
-        v = df.select(_value_col(c).cast("double").alias("__v")).na.drop()
+        v = df.select(*by, _value_col(c).cast("double").alias("__v")).na.drop(subset=["__v"])
         grid = baseline_of(c, baselines or {})["grid"]
-        return ["__bin"], v.select(bin_index_expr(F.col("__v"), grid).alias("__bin"))
+        return [*by, "__bin"], v.select(*by, bin_index_expr(F.col("__v"), grid).alias("__bin"))
     raise ValueError(
         f"{c.kind} {c.id}: no count state — order statistics (quantile, "
         "per-group KS) and functional dependencies don't compose; recompute"
     )
 
 
-def state_of(df: DataFrame, c, baselines=None) -> DataFrame:
+def state_of(df: DataFrame, c, baselines=None, by=()) -> DataFrame:
     """The materialized count state of table check ``c`` over ``df``:
-    one (key..., n) row per distinct key (see ``state_rows`` for the key
-    and NULL rule of each kind). Key/category/grid-cardinality-sized —
-    persist it next to the snapshot's verdicts and the NEXT snapshot's
+    one (by..., key..., n) row per distinct key (see ``state_rows`` for
+    the key and NULL rule of each kind). Key/category/grid-cardinality-
+    sized — persist it next to the snapshot's verdicts and the NEXT snapshot's
     check composes it with the delta (``compose_state``) instead of
     rescanning the table. One key shuffle; Spark's partial aggregation
     pre-combines map-side."""
-    cols, rows = state_rows(df, c, baselines)
+    cols, rows = state_rows(df, c, baselines, by)
     return rows.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -24,8 +24,8 @@ Plan shape (idiomatic, Catalyst-friendly):
   foreign_key-> left_anti join (broadcast when dim is small, else
                 sort-merge with AQE skew handling)
   cardinality-> groupBy(group_key).count() with bound filter
-  drift      -> see engine/drift.py (single-pass grid ECDF / category
-                histogram vs persisted baseline snapshot)
+  drift      -> see engine/drift.py (bin-count grid ECDF / category
+                counts vs persisted baseline snapshot)
 
 - VERDICTS: one rule (``verdict_passed``) turns every
   (constraint_id, violation_count, evaluated_count) row into ``passed``.

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from xsd2json_spark.engine.compile import compile_predicate
+from xsd2json_spark.engine.incremental import state_of, state_rows
 from xsd2json_spark.engine.validate import fk_dangling
 from xsd2json_spark.spec.constraints import ForeignKey, Spec, Unique
 
@@ -66,6 +67,11 @@ def stream_windowed_verdicts(
     )
 
 
+def _windowed(stream_df: DataFrame, time_col: str, window: str, watermark: str) -> DataFrame:
+    """The stream with its event-time ``window`` column, watermarked."""
+    return stream_df.withWatermark(time_col, watermark).withColumn("window", F.window(F.col(time_col), window))
+
+
 def stream_category_counts(
     stream_df: DataFrame,
     c,
@@ -74,25 +80,16 @@ def stream_category_counts(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Watermarked per-(window, group, category) counts for a Drift
-    constraint — the ONLY stateful piece of streaming drift. Sink these
-    counters (memory table for tests, Delta/Iceberg in production) and
-    derive chi-square verdicts statelessly with
-    engine.drift.drift_verdicts_over_counts: chained streaming
-    aggregations would need multi-stateful-operator support, while a
-    counter table + stateless verdict view restarts cleanly and keeps
-    the drift math replayable over history."""
-    gb = list(c.group_by or [])
-    value = F.expr(c.expr) if c.expr else F.col(c.column)
-    return (
-        stream_df.withWatermark(time_col, watermark)
-        .filter(value.isNotNull())
-        .groupBy(
-            F.window(F.col(time_col), window).alias("window"),
-            *gb,
-            value.alias(c.column),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    constraint — the constraint's count state (engine.incremental.state_of)
+    keyed by event-time window, and the ONLY stateful piece of
+    streaming drift. Sink these counters (memory table for tests,
+    Delta/Iceberg in production) and derive chi-square verdicts
+    statelessly with engine.drift.drift_verdicts_over_counts: chained
+    streaming aggregations would need multi-stateful-operator support,
+    while a counter table + stateless verdict view restarts cleanly and
+    keeps the drift math replayable over history."""
+    counts = state_of(_windowed(stream_df, time_col, window, watermark), c, by=["window"])
+    return counts.withColumnRenamed("__cat", c.column)
 
 
 def stream_bin_counts(
@@ -104,25 +101,14 @@ def stream_bin_counts(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Watermarked per-(window, bin) counts for a KS (numeric) Drift
-    constraint against the BASELINE's quantile grid — the KS sibling of
-    stream_category_counts and the only stateful piece of streaming KS
-    drift. Sink these counters and derive verdicts statelessly with
-    engine.drift.ks_verdicts_over_bins (per-window D + in-plan pass
-    rule): same chained-aggregation avoidance, same restart story, and
-    the counter table, summed over windows, is the incremental KS
-    state (engine.incremental.state_of / compose_state)."""
-    from xsd2json_spark.engine.drift import bin_index_expr
-
-    value = (F.expr(c.expr) if c.expr else F.col(c.column)).cast("double")
-    return (
-        stream_df.withWatermark(time_col, watermark)
-        .filter(value.isNotNull())
-        .groupBy(
-            F.window(F.col(time_col), window).alias("window"),
-            bin_index_expr(value, baseline["grid"]).alias("__bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    constraint against the BASELINE's quantile grid — the KS count
+    state (engine.incremental.state_of) keyed by event-time window, and
+    the only stateful piece of streaming KS drift. Sink these counters
+    and derive verdicts statelessly with engine.drift.ks_verdicts_over_bins
+    (per-window D + in-plan pass rule): same chained-aggregation
+    avoidance, same restart story, and the counter table, summed over
+    windows, is the incremental KS state."""
+    return state_of(_windowed(stream_df, time_col, window, watermark), c, {c.baseline: baseline}, by=["window"])
 
 
 def stream_session_counts(
@@ -196,7 +182,8 @@ def stream_unique_violations(
     Scale notes: state is one long per distinct key, hash-partitioned
     by Spark's streaming state store across executors (RocksDB-backed
     in production) — the streaming form of the batch unique count state
-    (engine.incremental.state_of), without its NULL-key drop. For
+    (engine.incremental.state_of), with its NULL rule: rows with any
+    NULL key are no duplicates and never reach the state. For
     unbounded key churn pass ``ttl`` (milliseconds, or a duration
     string like ``"10 minutes"``): idle keys then expire via
     ProcessingTimeTimeout and their state is removed, bounding
@@ -234,7 +221,8 @@ def stream_unique_violations(
                 columns=keys + ["constraint_id", "dup_count", "total_seen"],
             )
 
-    keyed = stream_df.select(*[F.col(k).cast("string").alias(k) for k in keys])
+    _, rows = state_rows(stream_df, c)
+    keyed = rows.select(*[F.col(k).cast("string").alias(k) for k in keys])
     return keyed.groupBy(*keys).applyInPandasWithState(
         fn, out_schema, state_schema, "append",
         "ProcessingTimeTimeout" if ttl is not None else "NoTimeout",
