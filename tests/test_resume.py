@@ -243,3 +243,105 @@ def test_staged_input_path_fast_path(spark, tmp_path):
     assert _verdict_map(fast.global_verdicts()) == truth
     assert not _os.path.exists(_os.path.join(audit, "staging"))  # no staging write
     files.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# checks whose groups span buckets: every repo is distinct and buckets hash
+# repo, so a group keyed off path or commit lands in several buckets
+# ---------------------------------------------------------------------------
+
+SPAN_CASES = ["uq_span", "card_span", "fd_span", "q_global", "drift_chi2", "q_by_repo", "uq_aligned", "fk", "nn"]
+
+
+def _span_spec():
+    from xsd2json_spark.spec.constraints import (
+        Cardinality, Drift, ForeignKey, FunctionalDependency, Quantile,
+    )
+
+    return Spec(
+        name="resume_span",
+        key_columns=["repo"],
+        constraints=[
+            NotNull(id="nn", column="repo"),
+            Unique(id="uq_span", columns=["path", "commit"]),
+            Cardinality(id="card_span", group_by=["path"], max=4),
+            FunctionalDependency(id="fd_span", determinants=["commit"], dependent="path"),
+            Quantile(id="q_global", column="x", p=0.5, min=20, max=21, approx=False),
+            Drift(id="drift_chi2", column="lang", test="chi2", baseline="b", alpha=0.01),
+            Quantile(id="q_by_repo", column="x", p=0.5, max=38, approx=False, group_by=["repo"]),
+            Unique(id="uq_aligned", columns=["repo", "path"]),
+            ForeignKey(id="fk", columns=["repo"], ref_table="repos"),
+        ],
+    )
+
+
+def _span_engine(spark, files):
+    from xsd2json_spark.engine.drift import make_categorical_baseline
+
+    repos = spark.createDataFrame([(f"r{i}",) for i in range(30)], "repo string")
+    return ValidationEngine(
+        spark, _span_spec(), dims={"repos": repos},
+        baselines={"b": make_categorical_baseline(files, "lang")},
+    )
+
+
+def _span_result(verdicts, violations):
+    """(verdicts, violation-row multiset) keyed by constraint id."""
+    from collections import Counter
+
+    by_id = {
+        r["constraint_id"]: (r["partition_key"], r["violation_count"], r["evaluated_count"], r["passed"])
+        for r in verdicts.collect()
+    }
+    rows: dict = {}
+    for r in violations.collect():
+        rows.setdefault(r["constraint_id"], Counter())[tuple(r)] += 1
+    return by_id, rows
+
+
+@pytest.fixture(scope="module")
+def span_files(spark):
+    rows = [(f"r{i}", f"p{i % 5}", f"c{i % 3}", float(i), "abc"[i % 3]) for i in range(40)]
+    rows += [(None, "p0", "c9", 40.0, "a"), (None, "p0", "c9", 41.0, "b")]  # NULL repo: one bucket
+    files = spark.createDataFrame(rows, "repo string, path string, commit string, x double, lang string").cache()
+    files.count()
+    single = _span_engine(spark, files).run(files)
+    truth = _span_result(single.verdicts, single.violations)
+    single.unpersist()
+    yield files, truth
+    files.unpersist()
+
+
+@pytest.fixture(scope="module")
+def span_audit(spark, span_files, tmp_path_factory):
+    files, _ = span_files
+    audit = str(tmp_path_factory.mktemp("span"))
+    runner = ResumableRunner(_span_engine(spark, files), audit, run_id="r1", n_buckets=4)
+    runner.run(files)
+    return _span_result(runner.global_verdicts(), runner.global_violations())
+
+
+@pytest.mark.parametrize("cid", SPAN_CASES)
+def test_audit_equals_single_shot_when_groups_span_buckets(span_files, span_audit, cid):
+    """Unique, cardinality and FD groups keyed off a non-bucket column,
+    and quantiles, must not be judged per bucket and summed: each
+    check's global verdict and violation rows equal a single-shot run."""
+    truth_v, truth_rows = span_files[1]
+    got_v, got_rows = span_audit
+    assert got_v[cid] == truth_v[cid]
+    assert got_rows.get(cid) == truth_rows.get(cid)
+
+
+def test_span_audit_crash_and_resume_commit_one_global_unit(spark, span_files, tmp_path):
+    files, truth = span_files
+    audit = str(tmp_path / "span")
+    runner = ResumableRunner(_span_engine(spark, files), audit, run_id="r1", n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        runner.run(files, fail_after_bucket=1)
+    resumed = ResumableRunner(_span_engine(spark, files), audit, run_id="r1", n_buckets=4)
+    assert resumed.run(files) == {2, 3}
+    assert resumed.run(files) == set()  # a finished run commits nothing more
+    assert _span_result(resumed.global_verdicts(), resumed.global_violations()) == truth
+    manifest = spark.read.parquet(f"{audit}/manifest")
+    assert manifest.filter(F.col("bucket") == -1).count() == 1
+    assert resumed.completed_buckets() == {0, 1, 2, 3}

@@ -113,6 +113,19 @@ def test_indexed_probe_is_partition_pruned(spark, emb, query, tmp_path):
     assert "bucket" in plan.split("PartitionFilters")[1][:300]
 
 
+def test_index_cache_key_ignores_trailing_slash(spark, tmp_path):
+    """``idx`` and ``idx/`` name one index: a rebuild at ``idx`` must not
+    leave a stale scan cached under ``idx/``."""
+    rows = [(i, [float((i * k) % 7 - 3) for k in range(1, 5)]) for i in range(32)]
+    small = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    idx = str(tmp_path / "idx")
+    S.build_ann_index(small, idx, kind="lsh", n_planes=8, seed=42)
+    assert len(S._load_meta(spark, idx + "/")["planes"]) == 8
+    S.build_ann_index(small, idx, kind="lsh", n_planes=4, seed=42)
+    assert len(S._load_meta(spark, idx + "/")["planes"]) == 4
+    assert len(S._load_meta(spark, idx)["planes"]) == 4
+
+
 def test_ivf_indexed_recall(spark, emb, query, tmp_path):
     idx = str(tmp_path / "ivf_idx")
     meta = S.build_ann_index(emb, idx, kind="ivf", n_centroids=8, iters=2, seed=42)

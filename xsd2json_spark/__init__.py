@@ -4,7 +4,7 @@ Generalizes the constraint vocabulary of fnogatz/xsd2json (XSD facets ->
 JSON Schema draft-04; see /root/reference/lib-pl/xsd2json.pl) into
 declarative column-level constraint specs evaluated over large DataFrames
 (Iceberg/parquet tables of source-code repositories) with a single-pass
-stats sketch, salted uniqueness, referential joins, and distribution-drift
+stats sketch, hash-count uniqueness, referential joins, and distribution-drift
 tests — all expressed through the DataFrame API so Catalyst/Tungsten pick
 the physical plan.
 

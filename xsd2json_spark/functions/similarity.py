@@ -360,21 +360,24 @@ def build_ann_index(
 #: ~0.5 s of the 0.68 s pruned-probe wall, against 0.06 s of execution.
 #: The scan frame is an unresolved immutable node; every probe still
 #: reads its partitions from disk at execution. Index builders
-#: invalidate their path so a rebuilt index is re-discovered.
+#: invalidate their path so a rebuilt index is re-discovered; the key
+#: drops trailing slashes, so ``idx`` and ``idx/`` are one entry.
 _INDEX_CACHE: dict = {}
 
 
 def _invalidate_index_cache(path: str) -> None:
+    path = path.rstrip("/")
     for k in [k for k in _INDEX_CACHE if k[1] == path]:
         del _INDEX_CACHE[k]
 
 
 def _index_scan(spark: SparkSession, index_path: str):
-    k = (id(spark), index_path)
+    path = index_path.rstrip("/")
+    k = (id(spark), path)
     hit = _INDEX_CACHE.get(k)
     if hit is None:
-        meta = json.loads(fsutil.read_text(spark, index_path.rstrip("/") + "/" + META_FILE))
-        _INDEX_CACHE[k] = hit = (spark, spark.read.parquet(index_path), meta)
+        meta = json.loads(fsutil.read_text(spark, path + "/" + META_FILE))
+        _INDEX_CACHE[k] = hit = (spark, spark.read.parquet(path), meta)
     return hit[1], hit[2]
 
 

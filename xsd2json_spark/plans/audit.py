@@ -33,11 +33,15 @@ lands between the data write and the manifest append, the resumed run
 re-processes the bucket and OVERWRITES its partition instead of
 appending a second copy, so ``global_verdicts()`` never double-counts.
 
-Drift semantics: distribution-drift constraints are excluded from the
-per-bucket loop (per-bucket drift would run n_buckets lower-powered
-tests against the full baseline — not equal to a single-shot run) and
-evaluated ONCE globally after all data buckets complete, recorded under
-the reserved lineage bucket ``-1``.
+Split rule: a check runs per bucket only when no group it judges can
+span two buckets. Row-level checks and foreign keys judge each row
+alone; unique, cardinality and functional-dependency checks qualify
+when their columns, group or determinants contain the bucket column
+(rows with a NULL bucket value all hash to one bucket). The rest —
+those checks keyed off other columns, quantiles and drift — run in ONE
+global pass: a plain engine run over the whole staged input after the
+data buckets, committed like a bucket under the reserved lineage unit
+``-1``. So summing the units' verdicts equals a single-shot run.
 
 Storage: parquet directories by default; an Iceberg catalog table works
 by passing format="iceberg" when the runtime has the Iceberg jars (this
@@ -50,7 +54,6 @@ sandbox does not — the layout is identical either way:
 
 from __future__ import annotations
 
-import dataclasses
 import os
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -59,14 +62,16 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xsd2json_spark.engine.validate import VERDICT_SCHEMA, ValidationEngine, verdict_passed
+from xsd2json_spark.engine.validate import (
+    VERDICT_COLUMNS, VERDICT_SCHEMA, ValidationEngine, ValidationResult, verdict_passed,
+)
 from xsd2json_spark.sources import fsutil
-from xsd2json_spark.spec.constraints import Drift
+from xsd2json_spark.spec.constraints import Cardinality, Drift, FunctionalDependency, Quantile, Unique
 
 MANIFEST_SCHEMA = (
     "run_id string, bucket int, status string, n_violations long, n_rows long"
 )
-DRIFT_BUCKET = -1  # reserved lineage bucket for the single global drift pass
+GLOBAL_BUCKET = -1  # reserved lineage unit of the one global pass
 
 
 @contextmanager
@@ -92,9 +97,22 @@ class ResumableRunner:
     #: bucket-partitioned-table fast path.
     staged_input_path: Optional[str] = None
 
+    @property
+    def _bucket_col(self) -> str:
+        return self.bucket_column or (self.engine.spec.key_columns or ["*"])[0]
+
     def _bucket_expr(self):
-        col = self.bucket_column or (self.engine.spec.key_columns or ["*"])[0]
-        return F.pmod(F.abs(F.xxhash64(F.col(col))), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.abs(F.xxhash64(F.col(self._bucket_col))), F.lit(self.n_buckets)).cast("int")
+
+    def _per_bucket(self, c) -> bool:
+        """The split rule (module docstring): True iff no group ``c``
+        judges can span two buckets."""
+        if isinstance(c, (Drift, Quantile)):
+            return False
+        for kind, cols in ((Unique, "columns"), (Cardinality, "group_by"), (FunctionalDependency, "determinants")):
+            if isinstance(c, kind):
+                return self._bucket_col in getattr(c, cols)
+        return True
 
     @property
     def _manifest_path(self):
@@ -104,33 +122,17 @@ class ResumableRunner:
     def _staging_path(self):
         return self.staged_input_path or os.path.join(self.audit_dir, "staging")
 
-    def completed_buckets(self) -> "set[int]":
-        spark = self.engine.spark
+    def _done(self) -> "set[int]":
+        """Every completed lineage unit of this run, GLOBAL_BUCKET included."""
         try:
-            m = spark.read.parquet(self._manifest_path)
+            m = self.engine.spark.read.parquet(self._manifest_path)
         except Exception:
             return set()
-        rows = (
-            m.filter((F.col("run_id") == self.run_id) & (F.col("status") == "complete"))
-            .select("bucket")
-            .collect()
-        )
-        return {r["bucket"] for r in rows if r["bucket"] != DRIFT_BUCKET}
+        rows = m.filter((F.col("run_id") == self.run_id) & (F.col("status") == "complete")).select("bucket")
+        return {r["bucket"] for r in rows.collect()}
 
-    def drift_done(self) -> bool:
-        spark = self.engine.spark
-        try:
-            m = spark.read.parquet(self._manifest_path)
-        except Exception:
-            return False
-        return (
-            m.filter(
-                (F.col("run_id") == self.run_id)
-                & (F.col("status") == "complete")
-                & (F.col("bucket") == DRIFT_BUCKET)
-            ).limit(1).count()
-            > 0
-        )
+    def completed_buckets(self) -> "set[int]":
+        return self._done() - {GLOBAL_BUCKET}
 
     # ------------------------------------------------------------------
 
@@ -167,122 +169,90 @@ class ResumableRunner:
     def _staged(self) -> DataFrame:
         return self.engine.spark.read.parquet(self._staging_path)
 
-    def _bucket_engine(self) -> ValidationEngine:
-        """Engine for per-bucket passes: drift constraints stripped (they
-        are evaluated once, globally — see module docstring)."""
-        spec = self.engine.spec
-        no_drift = tuple(c for c in spec.constraints if not isinstance(c, Drift))
-        if len(no_drift) == len(spec.constraints):
-            return self.engine
-        return ValidationEngine(
-            self.engine.spark,
-            dataclasses.replace(spec, constraints=no_drift),
-            dims=self.engine.dims,
-            baselines=self.engine.baselines,
-            config=self.engine.config,
-        )
-
     def run(
         self,
         df: DataFrame,
         fail_after_bucket: Optional[int] = None,
         fail_before_manifest: Optional[int] = None,
     ) -> "set[int]":
-        """Validate every not-yet-complete bucket; returns the set of
-        buckets processed in THIS invocation. ``fail_after_bucket``
-        simulates a crash after a bucket fully commits;
-        ``fail_before_manifest`` simulates the nastier crash AFTER the
-        bucket's data write but BEFORE its manifest row (the resumed run
-        must overwrite, not duplicate)."""
-        spark = self.engine.spark
-        done = self.completed_buckets()
+        """Validate every not-yet-complete bucket, then the global pass
+        if it is not complete; returns the set of buckets processed in
+        THIS invocation. ``fail_after_bucket`` simulates a crash after a
+        bucket fully commits; ``fail_before_manifest`` simulates the
+        nastier crash AFTER the bucket's data write but BEFORE its
+        manifest row (the resumed run must overwrite, not duplicate)."""
+        e, spec = self.engine, self.engine.spec
+        global_cs = [c for c in spec.constraints if not self._per_bucket(c)]
+        bucket_eng, global_eng = e, None
+        if global_cs:
+            def sub(cs):
+                return ValidationEngine(
+                    e.spark, spec.with_constraints(cs), dims=e.dims, baselines=e.baselines, config=e.config
+                )
+
+            bucket_eng = sub([c for c in spec.constraints if self._per_bucket(c)])
+            global_eng = sub(global_cs)
+        done = self._done()
         self._ensure_staged(df)
         staged = self._staged()
-        eng = self._bucket_engine()
         processed: set[int] = set()
         for b in range(self.n_buckets):
             if b in done:
                 continue
             # partition-pruned read: only __bucket=b files are scanned
             part = staged.filter(F.col("__bucket") == b).drop("__bucket")
-            res = eng.run(part)
-            # verdicts are tiny (O(#constraints x #partitions)): collect
-            # once, derive the manifest metrics from them — no count()
-            # jobs over the bucket data.
-            verd_rows = res.verdicts.collect()
+            crash = fail_before_manifest is not None and b >= fail_before_manifest
+            self._commit(b, bucket_eng.run(part), part, crash)
+            processed.add(b)
+            if fail_after_bucket is not None and b >= fail_after_bucket:
+                raise RuntimeError(f"simulated crash after bucket {b}")
+        if global_eng is not None and GLOBAL_BUCKET not in done:
+            self._commit(GLOBAL_BUCKET, global_eng.run(staged.drop("__bucket")))
+        return processed
+
+    def _commit(
+        self, unit: int, res: ValidationResult, part: Optional[DataFrame] = None, crash: bool = False
+    ) -> None:
+        """Write one lineage unit's verdicts and violations over
+        ``bucket=unit`` (dynamic partition overwrite: re-processing
+        after a crash between this write and the manifest append is
+        idempotent), then append its manifest row. Verdicts are tiny
+        (O(#constraints x #partitions)): collect once and derive the
+        manifest metrics from them — no count() jobs over the data. The
+        global unit (``part`` None) records no row count."""
+        spark = self.engine.spark
+        verd_rows = [tuple(r[c] for c in VERDICT_COLUMNS) for r in res.verdicts.collect()]
+        n_rows = None
+        if part is not None:
             # with spec.partition_by, evaluated_count is per partition_key,
             # so the bucket's row count is the SUM over partition keys per
             # constraint (max over constraints, not max over rows)
             per_constraint: dict = {}
-            for r in verd_rows:
-                if r["evaluated_count"] is not None:
-                    per_constraint[r["constraint_id"]] = (
-                        per_constraint.get(r["constraint_id"], 0) + r["evaluated_count"]
-                    )
+            for _pk, cid, _vc, ec, _ok in verd_rows:
+                if ec is not None:
+                    per_constraint[cid] = per_constraint.get(cid, 0) + ec
             n_rows = max(per_constraint.values()) if per_constraint else part.count()
-            n_viol = sum(r["violation_count"] or 0 for r in verd_rows)
-            verd_tuples = [
-                (r["partition_key"], r["constraint_id"], r["violation_count"],
-                 r["evaluated_count"], r["passed"])
-                for r in verd_rows
-            ]
-            verd = spark.createDataFrame(verd_tuples, schema=VERDICT_SCHEMA).withColumn(
-                "bucket", F.lit(b)
-            )
-            viol = res.violations.withColumn("bucket", F.lit(b))
-            with _dynamic_partition_overwrite(spark):
-                # overwrite ONLY bucket=b: re-processing after a crash
-                # between this write and the manifest append is idempotent
-                viol.write.mode("overwrite").partitionBy("bucket").parquet(
-                    os.path.join(self.audit_dir, "violations")
-                )
-                verd.write.mode("overwrite").partitionBy("bucket").parquet(
-                    os.path.join(self.audit_dir, "verdicts")
-                )
-            res.unpersist()
-            if fail_before_manifest is not None and b >= fail_before_manifest:
-                raise RuntimeError(f"simulated crash before manifest of bucket {b}")
-            manifest_row = spark.createDataFrame(
-                [(self.run_id, b, "complete", n_viol, n_rows)], schema=MANIFEST_SCHEMA
-            )
-            manifest_row.write.mode("append").parquet(self._manifest_path)
-            processed.add(b)
-            if fail_after_bucket is not None and b >= fail_after_bucket:
-                raise RuntimeError(f"simulated crash after bucket {b}")
-        self._run_global_drift()
-        return processed
-
-    def _run_global_drift(self) -> None:
-        """Drift constraints evaluate ONCE over the full staged input
-        (identical to a single-shot run), recorded under bucket=-1."""
-        drifts = [c for c in self.engine.spec.constraints if isinstance(c, Drift)]
-        if not drifts or self.drift_done():
-            return
-        from xsd2json_spark.engine.drift import drift_verdicts
-
-        spark = self.engine.spark
-        full = self._staged().drop("__bucket")
-        rows = [r for c in drifts for r in drift_verdicts(full, c, self.engine.baselines)]
-        verd = spark.createDataFrame(rows, schema=VERDICT_SCHEMA).withColumn(
-            "bucket", F.lit(DRIFT_BUCKET)
-        )
+        n_viol = sum(r[2] or 0 for r in verd_rows)
+        verd = spark.createDataFrame(verd_rows, schema=VERDICT_SCHEMA)
         with _dynamic_partition_overwrite(spark):
-            verd.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.audit_dir, "verdicts")
-            )
-        n_viol = sum(r[2] or 0 for r in rows)
+            for name, out in (("violations", res.violations), ("verdicts", verd)):
+                out.withColumn("bucket", F.lit(unit)).write.mode("overwrite").partitionBy("bucket").parquet(
+                    os.path.join(self.audit_dir, name)
+                )
+        res.unpersist()
+        if crash:
+            raise RuntimeError(f"simulated crash before manifest of bucket {unit}")
         manifest_row = spark.createDataFrame(
-            [(self.run_id, DRIFT_BUCKET, "complete", n_viol, None)], schema=MANIFEST_SCHEMA
+            [(self.run_id, unit, "complete", n_viol, n_rows)], schema=MANIFEST_SCHEMA
         )
         manifest_row.write.mode("append").parquet(self._manifest_path)
 
     # ------------------------------------------------------------------
 
     def global_verdicts(self) -> DataFrame:
-        """Fold per-bucket verdict rows back into global verdicts —
-        the same AC merge discipline as the engine's partial aggregates.
-        Drift rows (bucket=-1) are already global; the groupBy is a
-        no-op for them."""
+        """Fold the units' verdict rows back into global verdicts — the
+        same AC merge discipline as the engine's partial aggregates. By
+        the split rule no group spans two units, so the sum is exact."""
         spark = self.engine.spark
         v = spark.read.parquet(os.path.join(self.audit_dir, "verdicts"))
         return (

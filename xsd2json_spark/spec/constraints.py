@@ -235,7 +235,8 @@ class AnyOf(Constraint):
 @dataclass(frozen=True)
 class Unique(Constraint):
     """Key uniqueness — XSD ID analog (xsd2json.pl:888) + north_star
-    ``unique (repo, path, commit)``. Scale path: salted two-stage agg."""
+    ``unique (repo, path, commit)``. Scale path: an xxhash64 count per
+    key, then the duplicate candidates verified on the true key."""
 
     columns: Sequence[str] = ()
 
