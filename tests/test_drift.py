@@ -451,3 +451,26 @@ def test_psi_novel_category_contributes_penalty(spark):
         cur.filter("scenario = 'novel'").select("lang"), "lang", base
     ).collect()[0]
     assert abs(g["psi"] - (vanished_b + novel_c)) < 1e-9 and g["n_cats"] == 3
+
+
+def test_psi_baseline_with_duplicate_categories(spark):
+    """A baseline that lists a category twice is summed per category
+    first: ("a", 25), ("a", 25), ("b", 50) gives the same PSI as the
+    deduplicated ("a", 50), ("b", 50), instead of failing the map fold
+    with DUPLICATED_MAP_KEY."""
+    from xsd2json_spark.engine.drift import psi_statistic_df
+
+    dup = spark.createDataFrame([("a", 25), ("a", 25), ("b", 50)], "lang string, n long")
+    dedup = spark.createDataFrame([("a", 50), ("b", 50)], "lang string, n long")
+    cur = spark.createDataFrame(
+        [("shift", "a")] * 80 + [("shift", "b")] * 20 + [("novel", "c")] * 10,
+        "scenario string, lang string",
+    )
+
+    def psi(base):
+        rows = psi_statistic_df(cur, "lang", base, by=["scenario"]).collect()
+        return {r["scenario"]: (r["psi"], r["n_cats"]) for r in rows}
+
+    want = psi(dedup)
+    assert psi(dup) == want
+    assert want["shift"][1] == 2 and want["novel"][1] == 3

@@ -68,6 +68,21 @@ def test_ivf_topk_recall(spark, emb, query):
     assert hits >= 5
 
 
+def test_kmeans_seed_pool_ignores_partition_order(spark):
+    """The same rows in two partition orders give equal centroids: the
+    seed pool must not be whichever rows a bare limit() reaches first.
+    Integer-valued vectors keep the per-cluster sums exact in any
+    summation order."""
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randint(-8, 9, size=4)]) for i in range(64)]
+    schema = "vec_id long, embedding array<double>"
+    fwd = spark.createDataFrame(rows, schema).coalesce(1)
+    rev = spark.createDataFrame(rows[::-1], schema).coalesce(1)
+    a = S.kmeans_centroids(fwd, n_centroids=4, iters=2)
+    b = S.kmeans_centroids(rev, n_centroids=4, iters=2)
+    np.testing.assert_array_equal(a, b)
+
+
 def test_topk_plan_is_take_ordered(spark, emb, query):
     plan = S.cosine_topk(emb, query, k=10)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # no global sort

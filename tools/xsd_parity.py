@@ -50,7 +50,14 @@ def semantically_equal(a, b, key=None):
     return a == b
 
 
-def main():
+def main() -> int:
+    if not os.path.isdir(XSD_DIR):
+        print(
+            f"xsd_parity: reference fixtures not found at {XSD_DIR}; "
+            "tests/test_xsd_goldens.py pins the compiler output without them",
+            file=sys.stderr,
+        )
+        return 2
     verbose = "-v" in sys.argv
     only = [a for a in sys.argv[1:] if not a.startswith("-")]
     names = sorted(f[:-4] for f in os.listdir(XSD_DIR) if f.endswith(".xsd"))
@@ -83,7 +90,8 @@ def main():
         print("failed:", " ".join(failed))
     if errored:
         print("errored:", " ".join(errored))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

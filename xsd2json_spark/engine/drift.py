@@ -151,10 +151,8 @@ def psi_statistic_df(
     driver). Returns (by..., psi, n_cats); n_cats counts the union
     spine per group.
 
-    ``baseline_df`` must hold ONE (``column``, n) row per category (every
-    baseline builder here groups): both sides fold into maps, and a
-    repeated category raises DUPLICATED_MAP_KEY under Spark's default
-    ``spark.sql.mapKeyDedupPolicy=EXCEPTION``."""
+    ``baseline_df`` holds (``column``, n) rows; a category may repeat,
+    and its counts are summed before the baseline folds into a map."""
     gb = list(by or [])
     obs = (
         df.filter(F.col(column).isNotNull())
@@ -176,19 +174,21 @@ def psi_statistic_df(
     )
     b1 = (
         baseline_df.filter(F.col(column).isNotNull())
+        .groupBy(F.col(column).alias("__cat"))
+        .agg(F.sum("n").alias("__b"))
         .agg(
             F.map_from_entries(
-                F.collect_list(F.struct(F.col(column).alias("__cat"), F.col("n").alias("__b")))
+                F.collect_list(F.struct("__cat", "__b"))
             ).alias("__bm"),
-            F.sum("n").alias("__bt"),
+            F.sum("__b").alias("__bt"),
         )
     )
     j = gm.crossJoin(F.broadcast(b1))
     cats = F.array_union(F.map_keys("__m"), F.map_keys("__bm"))
 
     def term(c):
-        o = F.coalesce(F.element_at(F.col("__m"), c), F.lit(0))
-        bv = F.coalesce(F.element_at(F.col("__bm"), c), F.lit(0))
+        o = F.coalesce(F.try_element_at(F.col("__m"), c), F.lit(0))
+        bv = F.coalesce(F.try_element_at(F.col("__bm"), c), F.lit(0))
         p_cur = F.greatest(o / F.col("__n"), F.lit(eps))
         p_base = F.greatest(bv / F.col("__bt"), F.lit(eps))
         return (p_cur - p_base) * F.log(p_cur / p_base)

@@ -349,6 +349,15 @@ def minhash_pairs_from_base(
     return _minhash_pairs_over_base(base, bands, num_hashes // bands, threshold, hashed_bands)
 
 
+def _release_checkpoint(df: "DataFrame | None") -> None:
+    """Drop the executor blocks behind a ``localCheckpoint``-ed frame
+    (its plan is one LogicalRDD over the checkpointed RDD). Spark has no
+    public call for this; without it the blocks stay registered until a
+    later JVM GC lets the ContextCleaner reclaim them."""
+    if df is not None:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -368,58 +377,54 @@ def connected_components(
     (label := label's label) — a self-join that halves label-chain
     depth, so convergence is O(log diameter) rounds instead of
     O(diameter); dup clusters are near-cliques, so 2-4 rounds in
-    practice. Each round persists its label table and unpersists the
-    previous one (truncates the iterative lineage — the standard Spark
-    iterative-algorithm discipline). The per-round count() action is
-    the convergence test, O(#nodes) not O(#rows). The FINAL labels are
-    localCheckpoint-ed (eager; tiny — two ids per node) and every
-    intermediate persist is released before returning, so repeated
-    calls leave nothing cached in executor storage and the returned
-    DataFrame is lineage-free (no recompute of the iteration on
-    reuse).
+    practice. The edges and each round's label table are
+    localCheckpoint-ed eagerly, so a round reads materialized labels
+    and never re-runs earlier rounds (a constant number of Spark jobs
+    per round); the previous round's table is released once the new one
+    exists. The convergence test is an ``isEmpty`` probe over the
+    checkpointed table. The returned labels are that last checkpoint
+    (lineage-free, two ids per node); the edges and every earlier
+    round are released before returning.
 
     Raises after ``max_iter`` rounds without convergence rather than
     returning silently-partial components."""
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    edges = edges.persist()
-    labels = edges.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id")).persist()
-    try:
-        for _ in range(max_iter):
-            nbr = (
-                edges.join(
-                    labels.select(F.col("id").alias("b"), F.col("comp").alias("__nc")), "b"
-                )
-                .groupBy("a")
-                .agg(F.min("__nc").alias("__mn"))
-                .select(F.col("a").alias("id"), "__mn")
+    edges = edges.localCheckpoint(eager=True)
+    labels = edges.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
+    hop = None
+    for _ in range(max_iter):
+        nbr = (
+            edges.join(
+                labels.select(F.col("id").alias("b"), F.col("comp").alias("__nc")), "b"
             )
-            prop = labels.join(nbr, "id", "left").select(
-                "id", F.least("comp", F.coalesce("__mn", "comp")).alias("comp"), F.col("comp").alias("__old")
-            )
-            # path halving: comp := label(comp) (comp values ARE node ids)
-            hop = prop.join(
-                prop.select(F.col("id").alias("comp"), F.col("comp").alias("__cc")),
-                "comp",
-                "left",
-            ).select(
-                "id", F.least(F.coalesce("__cc", "comp"), "comp").alias("comp"), "__old"
-            )
-            new_labels = hop.select("id", "comp").persist()
-            changed = hop.filter(F.col("comp") != F.col("__old")).count()
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                return labels.select("id", "comp").localCheckpoint(eager=True)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(pathological graph diameter?)"
+            .groupBy("a")
+            .agg(F.min("__nc").alias("__mn"))
+            .select(F.col("a").alias("id"), "__mn")
         )
-    finally:
-        # runs after the checkpoint materialized (or on the error
-        # path): no label table stays persisted either way
-        edges.unpersist()
-        labels.unpersist()
+        prop = labels.join(nbr, "id", "left").select(
+            "id", F.least("comp", F.coalesce("__mn", "comp")).alias("comp"), F.col("comp").alias("__old")
+        )
+        # path halving: comp := label(comp) (comp values ARE node ids)
+        prev = hop
+        hop = prop.join(
+            prop.select(F.col("id").alias("comp"), F.col("comp").alias("__cc")),
+            "comp",
+            "left",
+        ).select(
+            "id", F.least(F.coalesce("__cc", "comp"), "comp").alias("comp"), "__old"
+        ).localCheckpoint(eager=True)
+        _release_checkpoint(prev)  # the new labels exist: drop the old
+        labels = hop.select("id", "comp")
+        if hop.filter(F.col("comp") != F.col("__old")).isEmpty():
+            _release_checkpoint(edges)
+            return labels
+    _release_checkpoint(edges)
+    _release_checkpoint(hop)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"(pathological graph diameter?)"
+    )
 
 
 def dedup_survivors(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:

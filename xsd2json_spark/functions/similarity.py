@@ -181,10 +181,13 @@ def kmeans_centroids(
     """A few Lloyd iterations as DataFrame aggregations: assign = argmin
     distance to broadcast centroid literals; update = avg of vectors per
     cluster (posexplode + groupBy) — all JVM-side, centroids only on the
-    driver (n_centroids x dim floats)."""
-    dim = len(df.select(vec_col).first()[0])
+    driver (n_centroids x dim floats). The seed pool is the first
+    n_centroids * 4 vectors in (xxhash64, vector) order, so the same rows
+    give the same centroids whatever their partition order."""
     rng = np.random.RandomState(seed)
-    seed_rows = df.select(vec_col).limit(n_centroids * 4).collect()
+    seed_rows = (
+        df.select(vec_col).orderBy(F.xxhash64(vec_col), vec_col).limit(n_centroids * 4).collect()
+    )
     idx = rng.choice(len(seed_rows), size=n_centroids, replace=False)
     cents = np.array([seed_rows[i][0] for i in idx], dtype=np.float64)
     for _ in range(iters):

@@ -287,6 +287,8 @@ def detect_lang_ngram_over(
     all-zero-scores branch, because every joined weight is strictly
     positive (log(w/eps) with w > eps). Raw text never shuffles: the
     explode ships 3-char grams keyed by ``keys`` only.
+    ``keys`` must be unique per row: scores are summed per key, so rows
+    that share a key pool their grams and all get the pooled language.
     Returns one row per input row: (*keys, out_col)."""
     import math
 

@@ -42,6 +42,7 @@ from typing import Optional
 XS_NS = "http://www.w3.org/2001/XMLSchema"
 XS = "{" + XS_NS + "}"
 DRAFT04 = "http://json-schema.org/draft-04/schema#"
+GROUPS = ("sequence", "all", "choice")
 
 # --------------------------------------------------------------------------
 # convert_xsd_type/2 — exact port of xsd2json.pl:857-904
@@ -94,9 +95,6 @@ XSD_TYPE_JSON: dict = {
                                 {"type": "number"}, {"type": "boolean"}, {"type": "null"}]},
 }
 
-# facets with no JSON Schema equivalent — dropped (xsd2json.pl:1472-1492)
-IGNORED_FACETS = {"totalDigits", "fractionDigits", "whiteSpace"}
-
 
 def to_number(value: str):
     """to_number/2 (xsd2json.pl:436-453): int if integral, else float."""
@@ -122,6 +120,20 @@ def cast_by_json(json_type: Optional[str], value: str):
     return value
 
 
+# convert_xsd_restriction (xsd2json.pl:907-967): bound facets. Facets
+# with no JSON Schema equivalent (totalDigits, fractionDigits,
+# whiteSpace) are dropped (xsd2json.pl:1472-1492).
+FACET_JSON = {
+    "minExclusive": lambda v: {"minimum": to_number(v), "exclusiveMinimum": True},
+    "maxExclusive": lambda v: {"maximum": to_number(v), "exclusiveMaximum": True},
+    "minInclusive": lambda v: {"minimum": to_number(v), "exclusiveMinimum": False},
+    "maxInclusive": lambda v: {"maximum": to_number(v), "exclusiveMaximum": False},
+    "minLength": lambda v: {"minLength": int(v)},
+    "maxLength": lambda v: {"maxLength": int(v)},
+    "length": lambda v: {"minLength": int(v), "maxLength": int(v)},
+}
+
+
 def _normalize_ref(d: dict, other: dict) -> dict:
     """$ref merging with siblings wraps the ref into allOf first
     (merge_json.pl:27-46): {$ref: R, ...} + {...} ->
@@ -134,10 +146,10 @@ def _normalize_ref(d: dict, other: dict) -> dict:
 
 def merge_json(a: dict, b: dict) -> dict:
     """merge_json/3 (merge_json.pl:19-124): key-wise recursive merge.
-    description concatenates with \\n (:55-61); required/enum set-union
-    (:76-78); facet bounds tightest (merge_facet/4 :143-157); pattern
-    ORs (:152); $ref wrapped into allOf before sibling merge (:27-46);
-    dicts recurse; equal values dedupe."""
+    description concatenates with \\n (:55-61); required/enum/allOf/
+    oneOf/anyOf set-union (:76-78); facet bounds tightest (merge_facet/4
+    :143-157); pattern ORs (:152); $ref wrapped into allOf before sibling
+    merge (:27-46); dicts recurse; equal values dedupe."""
     if a and b and a != b:
         a = _normalize_ref(a, b)
         b = _normalize_ref(b, a)
@@ -151,9 +163,7 @@ def merge_json(a: dict, b: dict) -> dict:
             continue
         if k == "description":
             out[k] = cur + "\n" + v
-        elif k in ("required",):
-            out[k] = cur + [x for x in v if x not in cur]
-        elif k == "enum":
+        elif k in ("required", "enum", "allOf", "oneOf", "anyOf"):
             out[k] = cur + [x for x in v if x not in cur]
         elif k in ("minimum", "minLength", "minItems"):
             out[k] = max(cur, v)
@@ -161,8 +171,6 @@ def merge_json(a: dict, b: dict) -> dict:
             out[k] = min(cur, v)
         elif k == "pattern":
             out[k] = f"({cur}|{v})"
-        elif k in ("allOf", "oneOf", "anyOf"):
-            out[k] = cur + [x for x in v if x not in cur]
         elif isinstance(cur, dict) and isinstance(v, dict):
             out[k] = merge_json(cur, v)
         else:
@@ -280,11 +288,13 @@ class XsdCompiler:
         return json
 
     def reference_type(self, type_name: str) -> dict:
-        """reference_type/2 (xsd2json.pl:971-986)."""
-        local = self._strip_ns_prefix(type_name)
-        if local in XSD_TYPE_JSON:
-            return copy.deepcopy(XSD_TYPE_JSON[local])
-        return {"$ref": f"#/definitions/{type_name}"}
+        """reference_type/2 (xsd2json.pl:971-986): a fresh copy of the
+        builtin's type-table entry, else a $ref to the named definition."""
+        entry = XSD_TYPE_JSON.get(self._strip_ns_prefix(type_name))
+        if entry is None:
+            return {"$ref": f"#/definitions/{type_name}"}
+        # anySimpleType's oneOf is the only nested entry
+        return copy.deepcopy(entry) if "oneOf" in entry else dict(entry)
 
     # -- restriction / facets (xsd2json.pl:907-967, 1271-1386) ------------
 
@@ -298,88 +308,39 @@ class XsdCompiler:
             acc = f"({acc}|{p})"
         return acc
 
-    @staticmethod
-    def _facet_update(facets: dict, new: dict):
-        """Repeated facets within one restriction merge tightest-bound
-        (merge_facet/4, merge_json.pl:143-157; fixture restriction3)."""
-        for k, v in new.items():
-            if k in facets:
-                if k in ("minLength", "minimum", "minItems"):
-                    v = max(facets[k], v)
-                elif k in ("maxLength", "maximum", "maxItems"):
-                    v = min(facets[k], v)
-            facets[k] = v
-
     def restriction_json(self, node) -> dict:
-        base = self._strip_ns_prefix(node.get("base"))
-        base_raw = node.get("base")
+        """The restriction's own facets narrow its base: @base, or a
+        nested anonymous simpleType (the inline base). Repeated bounds
+        keep the tightest (merge_facet/4, fixture restriction3). A base
+        that is only a JSON type absorbs the facets; any other base with
+        facets becomes allOf [base, facets], a user type by $ref and a
+        non-primitive builtin by $ref to an 'xs:'-prefixed definition
+        (xsd2json.pl:1271-1326, resolve_facets :539-560, restriction6)."""
+        base = node.get("base")
+        base_json = self.reference_type(base) if base is not None else {}
         facets: dict = {}
-        enum_vals = []
-        patterns = []
+        enum_vals, patterns = [], []
         for child in node:
             local = self._local(child.tag)
-            value = child.get("value")
-            if local in IGNORED_FACETS or local == "annotation":
-                continue  # xsd2json.pl:1472-1492
-            if local == "enumeration":
-                enum_vals.append(value)
+            if local == "simpleType":
+                base, base_json = None, self.simple_type_json(child)
+            elif local == "enumeration":
+                enum_vals.append(child.get("value"))
             elif local == "pattern":
-                patterns.append(value)
-            elif local == "minExclusive":
-                self._facet_update(facets, dict(minimum=to_number(value), exclusiveMinimum=True))
-            elif local == "maxExclusive":
-                self._facet_update(facets, dict(maximum=to_number(value), exclusiveMaximum=True))
-            elif local == "minInclusive":
-                self._facet_update(facets, dict(minimum=to_number(value), exclusiveMinimum=False))
-            elif local == "maxInclusive":
-                self._facet_update(facets, dict(maximum=to_number(value), exclusiveMaximum=False))
-            elif local == "minLength":
-                self._facet_update(facets, dict(minLength=int(value)))
-            elif local == "maxLength":
-                self._facet_update(facets, dict(maxLength=int(value)))
-            elif local == "length":
-                self._facet_update(facets, dict(minLength=int(value), maxLength=int(value)))
-            elif local == "simpleType":
-                # restriction with nested simpleType base
-                return merge_json(self.simple_type_json(child), facets)
-
-        has_facets = bool(facets or enum_vals or patterns)
-
-        if base is not None and base in XSD_TYPE_JSON:
-            base_json = copy.deepcopy(XSD_TYPE_JSON[base])
-            # NON-PRIMITIVE builtin base (its JSON carries facets of its
-            # own, e.g. positiveInteger) + own facets -> 'xs:'-prefixed
-            # definition + allOf (xsd2json.pl:1271-1311, restriction6)
-            if has_facets and set(base_json) - {"type"}:
-                self.definitions[base_raw] = base_json
-                extra = dict(facets)
-                if enum_vals:
-                    extra["enum"] = [cast_by_json(base_json.get("type"), v) for v in enum_vals]
-                if patterns:
-                    extra["pattern"] = self._combine_patterns(patterns)
-                return {"allOf": [{"$ref": f"#/definitions/{base_raw}"}, extra]}
-        elif base_raw is not None:
-            # user-defined base: alias or {facets + base} -> allOf
-            ref = {"$ref": f"#/definitions/{base_raw}"}
-            if not has_facets:
-                return ref  # pure alias (xsd2json.pl:1314-1326)
-            extra = dict(facets)
-            if enum_vals:
-                extra["enum"] = list(enum_vals)
-            if patterns:
-                extra["pattern"] = self._combine_patterns(patterns)
-            return {"allOf": [ref, extra]}  # resolve_facets (xsd2json.pl:539-560)
-        else:
-            base_json = {}
-
-        out = dict(base_json)
-        jtype = out.get("type")
+                patterns.append(child.get("value"))
+            elif local in FACET_JSON:
+                facets = merge_json(facets, FACET_JSON[local](child.get("value")))
         if enum_vals:
-            out["enum"] = [cast_by_json(jtype, v) for v in enum_vals]
+            facets["enum"] = [cast_by_json(base_json.get("type"), v) for v in enum_vals]
         if patterns:
-            out["pattern"] = self._combine_patterns(patterns)
-        out.update(facets)
-        return out
+            facets["pattern"] = self._combine_patterns(patterns)
+        if not facets or not set(base_json) - {"type"}:
+            return merge_json(base_json, facets)
+        if base is not None:
+            if "$ref" not in base_json:
+                self.definitions[base] = base_json
+            base_json = {"$ref": f"#/definitions/{base}"}
+        return {"allOf": [base_json, facets]}
 
     # -- simpleType (xsd2json.pl:2062-2076) --------------------------------
 
@@ -404,22 +365,22 @@ class XsdCompiler:
     # -- element (xsd2json.pl:1393-1448) -----------------------------------
 
     def element_json(self, node) -> dict:
-        out: dict = {}
+        """An element or attribute declaration (xsd2json.pl:1393-1448,
+        1762-1873): @type, an inline simpleType or complexType, @fixed
+        as enum:[value] (:1393-1402) or else @default (XSD forbids both;
+        fixed wins as in :1870-1873), and documentation."""
         etype = node.get("type")
-        fixed = node.get("fixed")
-        if etype is not None:
-            out = self.reference_type(etype)
+        out = self.reference_type(etype) if etype is not None else {}
         for child in node:
             local = self._local(child.tag)
             if local == "complexType":
                 out = merge_json(out, self.complex_type_json(child))
             elif local == "simpleType":
                 out = merge_json(out, self.simple_type_json(child))
+        fixed, default = node.get("fixed"), node.get("default")
         if fixed is not None:
-            # @fixed -> enum:[cast value] (xsd2json.pl:1393-1402)
             out = merge_json(out, {"enum": [cast_by_json(out.get("type"), fixed)]})
-        default = node.get("default")
-        if default is not None:
+        elif default is not None:
             out = merge_json(out, {"default": cast_by_json(out.get("type"), default)})
         return self._with_description(node, out)
 
@@ -460,121 +421,86 @@ class XsdCompiler:
         local = self._local(group.tag)
         entries = self._element_entries(group)
         nested: dict = {}
-        for sub in group:
-            sl = self._local(sub.tag)
-            if sl in ("sequence", "all", "choice"):
-                nested = merge_json(nested, self.group_json(sub))
+        for sub in self._children(group, *GROUPS):
+            nested = merge_json(nested, self.group_json(sub))
 
         if local == "choice" and len(entries) >= 2:
-            # oneOf of property groups, nothing required (xsd2json.pl:2198-?
-            # per fixture choice_element3)
-            opts = []
-            for name, json, mino, maxo in entries:
-                opts.append({"properties": {name: self._occurs_wrap(json, mino, maxo)}})
-            out = {"type": "object", "oneOf": opts}
-            return merge_json(out, nested) if nested else out
+            # oneOf of property groups, nothing required (fixture
+            # choice_element3)
+            opts = [{"properties": {name: self._occurs_wrap(json, mino, maxo)}}
+                    for name, json, mino, maxo in entries]
+            return merge_json({"type": "object", "oneOf": opts}, nested)
 
+        out: dict = {"type": "object"}
         props: dict = {}
         required: list = []
         for name, json, mino, maxo in entries:
-            wrapped = self._occurs_wrap(json, mino, maxo)
-            props[name] = wrapped
-            # required iff minOccurs >= 1 (is_required_property/2
-            # xsd2json.pl:1495-1508); choice single element: only when
-            # minOccurs >= 1 too (xsd2json.pl:1539-1562)
-            if local != "choice" and int(mino if mino != "unbounded" else 1) >= 1:
+            props[name] = self._occurs_wrap(json, mino, maxo)
+            # required iff minOccurs >= 1 (is_required_property/2,
+            # xsd2json.pl:1495-1508); a choice of one element also needs
+            # maxOccurs != 0 (:1539-1562)
+            if int(mino if mino != "unbounded" else 1) >= 1 and (local != "choice" or maxo != "0"):
                 required.append(name)
-            elif local == "choice" and int(mino if mino != "unbounded" else 1) >= 1 and maxo not in ("0",):
-                # choice of ONE element with minOccurs>=1 is required
-                # (xsd2json.pl:1539-1562 required branch)
-                required.append(name)
-        out: dict = {"type": "object"}
         if props:
             out["properties"] = props
         if required:
             out["required"] = required
-        return merge_json(out, nested) if nested else out
+        return merge_json(out, nested)
 
     # -- attributes (xsd2json.pl:1762-2059) ---------------------------------
 
     def attribute_entry(self, node) -> "tuple[str, dict, bool]":
-        name = node.get("name")
+        """('@' + name, json, required); a ref points at the '@'-keyed
+        top-level attribute definition."""
+        required = node.get("use") == "required"
         ref = node.get("ref")
         if ref is not None:
-            return ("@" + ref, {"$ref": f"#/definitions/@{ref}"}, node.get("use") == "required")
-        atype = node.get("type")
-        json: dict = {}
-        if atype is not None:
-            json = self.reference_type(atype)
-        for st in self._children(node, "simpleType"):
-            json = merge_json(json, self.simple_type_json(st))
-        fixed, default = node.get("fixed"), node.get("default")
-        if fixed is not None:
-            # fixed/default mutually exclusive (xsd2json.pl:1870-1873)
-            json = merge_json(json, {"enum": [cast_by_json(json.get("type"), fixed)]})
-        elif default is not None:
-            json = merge_json(json, {"default": cast_by_json(json.get("type"), default)})
-        json = self._with_description(node, json)
-        return ("@" + name, json, node.get("use") == "required")
+            return "@" + ref, {"$ref": f"#/definitions/@{ref}"}, required
+        return "@" + node.get("name"), self.element_json(node), required
 
     def _attributes_json(self, node) -> dict:
-        props: dict = {}
-        required: list = []
-        found = False
-        for attr in self._children(node, "attribute"):
-            found = True
-            name, json, req = self.attribute_entry(attr)
-            props[name] = json
-            if req:
-                required.append(name)
-        if not found:
+        attrs = [self.attribute_entry(a) for a in self._children(node, "attribute")]
+        if not attrs:
             return {}
-        out: dict = {"type": "object", "properties": props}
+        out: dict = {"type": "object", "properties": {name: json for name, json, _ in attrs}}
+        required = [name for name, _, req in attrs if req]
         if required:
             out["required"] = required
         return out
 
     # -- complexType (xsd2json.pl:1678-1759) --------------------------------
 
-    def complex_type_json(self, node) -> dict:
+    def _content_json(self, node) -> dict:
+        """Content groups, complex/simple content and attributes of a
+        complexType or of a complexContent extension/restriction."""
         out: dict = {}
         for child in node:
             local = self._local(child.tag)
-            if local in ("sequence", "all", "choice"):
+            if local in GROUPS:
                 out = merge_json(out, self.group_json(child))
             elif local == "complexContent":
-                for ext in self._children(child, "extension"):
+                for ext in self._children(child, "extension", "restriction"):
                     out = merge_json(out, self.extension_json(ext))
-                for rst in self._children(child, "restriction"):
-                    out = merge_json(out, self.extension_json(rst))
             elif local == "simpleContent":
                 for ext in self._children(child, "extension"):
                     out = merge_json(out, self.simple_content_extension_json(ext))
-        out = merge_json(out, self._attributes_json(node))
-        if not out:
-            out = {"type": "object"}
-        return self._with_description(node, out)
+        return merge_json(out, self._attributes_json(node))
+
+    def complex_type_json(self, node) -> dict:
+        return self._with_description(node, self._content_json(node) or {"type": "object"})
 
     def extension_json(self, node) -> dict:
         """complexContent extension: base merged with own content
-        (xsd2json.pl:1208-1268, 1721-1732)."""
+        (xsd2json.pl:1208-1268, 1721-1732); a user-defined base is an
+        allOf branch."""
+        out = self._content_json(node)
         base = node.get("base")
-        out: dict = {}
-        for child in node:
-            local = self._local(child.tag)
-            if local in ("sequence", "all", "choice"):
-                out = merge_json(out, self.group_json(child))
-        out = merge_json(out, self._attributes_json(node))
-        if base is not None:
-            base_local = self._strip_ns_prefix(base)
-            if base_local in XSD_TYPE_JSON:
-                out = merge_json(copy.deepcopy(XSD_TYPE_JSON[base_local]), out)
-            else:
-                ref = {"$ref": f"#/definitions/{base}"}
-                if out:
-                    return {"allOf": [ref, out]}
-                return ref
-        return out
+        if base is None:
+            return out
+        base_json = self.reference_type(base)
+        if "$ref" not in base_json:
+            return merge_json(base_json, out)
+        return {"allOf": [base_json, out]} if out else base_json
 
     def simple_content_extension_json(self, node) -> dict:
         """simpleContent extension: base becomes properties.value
@@ -597,31 +523,23 @@ class XsdCompiler:
         for st in self._children(self.root, "simpleType"):
             self.definitions[st.get("name")] = self.simple_type_json(st)
         for attr in self._children(self.root, "attribute"):
-            name, json, _req = self.attribute_entry(attr)
+            name, json, _ = self.attribute_entry(attr)
             self.definitions[name] = json
 
         schema: dict = {}
         if len(root_elements) == 1:
-            el = root_elements[0]
-            json = self.element_json(el)
-            if "$ref" in json and len(json) == 1:
+            schema = self.element_json(root_elements[0])
+            if "$ref" in schema and len(schema) == 1:
                 # root ref wrapped in allOf (merge_json.pl:27-46,
                 # fixture schema2/schema_recursive)
-                json = {"allOf": [json]}
-            schema = json
+                schema = {"allOf": [schema]}
         elif len(root_elements) >= 2:
             # oneOf of single-property CLOSED objects (xsd2json.pl:2198-2218)
-            opts = []
-            for el in root_elements:
-                opts.append(
-                    {
-                        "type": "object",
-                        "properties": {el.get("name"): self.element_json(el)},
-                        "required": [el.get("name")],
-                        "additionalProperties": False,
-                    }
-                )
-            schema = {"oneOf": opts}
+            schema = {"oneOf": [
+                {"type": "object", "properties": {el.get("name"): self.element_json(el)},
+                 "required": [el.get("name")], "additionalProperties": False}
+                for el in root_elements
+            ]}
 
         # include/import: nested runs merged (xsd2json.pl:2079-2161)
         for inc in includes:
@@ -633,8 +551,8 @@ class XsdCompiler:
             nested_schema.pop("$schema", None)
             nested_defs = nested_schema.pop("definitions", {})
             for k, v in nested_defs.items():
-                self.definitions[k] = merge_json(self.definitions.get(k, {}), v) if k in self.definitions else v
-            schema = merge_json(schema, nested_schema) if schema else nested_schema
+                self.definitions[k] = merge_json(self.definitions.get(k, {}), v)
+            schema = merge_json(schema, nested_schema)
 
         # schema-level annotation first (fixture `annotation`)
         doc = self._documentation(self.root)
