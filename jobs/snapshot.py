@@ -6,8 +6,10 @@
         --output /data/baselines.json
 
 For every Drift constraint in the spec, computes the matching baseline
-(categorical counts for chi2, quantile-grid ECDF for ks; per-group
-variants when group_by is set) over the input table and writes ONE JSON
+of its value (``expr`` when set, else ``column``) over the input table:
+categorical counts for chi2, a quantile-grid ECDF for ks, per group
+when group_by is set. Each is read off the constraint's own count
+state, so the baseline counts what the verdict counts. Writes ONE JSON
 file keyed by the constraints' baseline names — the file
 jobs/validate.py consumes via --baselines. This is the "snapshot then
 compare future runs against it" loop of the north star, runnable
@@ -22,12 +24,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from xsd2json_spark.engine.drift import (
-    make_categorical_baseline,
-    make_categorical_baseline_by,
-    make_numeric_baseline,
-    make_numeric_baseline_by,
-)
+from xsd2json_spark.engine.drift import make_categorical_baseline, make_numeric_baseline
 from xsd2json_spark.spec.constraints import Drift
 from xsd2json_spark.spec.loader import load_spec
 
@@ -37,20 +34,8 @@ def build_baselines(spark: SparkSession, df, spec) -> dict:
     for c in spec.constraints:
         if not isinstance(c, Drift) or c.baseline in out:
             continue
-        expr = c.expr or c.column
-        if c.test == "chi2":
-            base = (
-                make_categorical_baseline_by(df, c.column, list(c.group_by))
-                if c.group_by
-                else make_categorical_baseline(df, c.column)
-            )
-        else:
-            base = (
-                make_numeric_baseline_by(df, expr, list(c.group_by))
-                if c.group_by
-                else make_numeric_baseline(df, expr)
-            )
-        out[c.baseline] = base
+        make = make_categorical_baseline if c.test == "chi2" else make_numeric_baseline
+        out[c.baseline] = make(df, c.expr or c.column, group_by=c.group_by)
     return out
 
 

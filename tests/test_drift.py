@@ -117,7 +117,7 @@ def _lengths(df):
 def test_ks_no_drift(spark, files):
     base = make_numeric_baseline(files, "length(content)")
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
-    d, p = ks_from_bins(state_of(files, c, {"b": base}), c, base)
+    [(_, d, p)] = ks_from_bins(state_of(files, c, {"b": base}), c, base)
     assert d < 0.01 and p > 0.5
     assert base["ecdf"] == oracle_ecdf(_lengths(files), base["grid"])
     assert d == oracle_d(_lengths(files), base["grid"], base["ecdf"])
@@ -127,7 +127,7 @@ def test_ks_drift_detected(spark, files):
     base = make_numeric_baseline(files, "length(content)")
     shifted = files.withColumn("content", F.concat(F.col("content"), F.repeat(F.lit("pad"), 50)))
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
-    d, p = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
+    [(_, d, p)] = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
     assert d > 0.3 and p < 1e-6
     assert d == oracle_d(_lengths(shifted), base["grid"], base["ecdf"])
 
@@ -161,9 +161,7 @@ def grouped(spark):
 
 
 def test_chi2_drift_by_group(spark, grouped):
-    from xsd2json_spark.engine.drift import make_categorical_baseline_by
-
-    base = make_categorical_baseline_by(grouped, "cat", ["g"])
+    base = make_categorical_baseline(grouped, "cat", group_by=["g"])
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
     res = chi2_from_counts(state_of(grouped, c), c, base)
     assert len(res) == 2 and all(p > 0.9 for _, _, p in res)  # self-drift passes per group
@@ -176,34 +174,52 @@ def test_chi2_drift_by_group(spark, grouped):
     assert by["g1"] > 0.9 and by["g2"] < 0.01
 
 
-def test_ks_drift_by_group(spark, grouped):
-    from xsd2json_spark.engine.drift import ks_drift_by, make_numeric_baseline_by
+def _group_values(df, g):
+    return [r[0] for r in df.filter(F.col("g") == g).select("v").collect()]
 
-    base = make_numeric_baseline_by(grouped, "v", ["g"])
+
+def test_ks_drift_by_group(spark, grouped):
+    """Per-group KS reads the per-group bin-count state: each group's D
+    equals the numpy oracle against that group's own grid, and only
+    the shifted group fails."""
+    base = make_numeric_baseline(grouped, "v", group_by=["g"])
     c = Drift(id="d", column="v", test="ks", baseline="b", alpha=0.01, group_by=["g"])
-    res = {k: p for k, _, p in ks_drift_by(grouped, c, base)}
+    assert state_of(grouped, c, {"b": base}).columns == ["g", "__bin", "n"]
+    for g, gbase in base["groups"].items():
+        assert gbase["ecdf"] == oracle_ecdf(_group_values(grouped, g), gbase["grid"])
+    res = {k: p for k, _, p in ks_from_bins(state_of(grouped, c, {"b": base}), c, base)}
     assert set(res) == {"g1", "g2"} and all(p > 0.5 for p in res.values())
 
     shifted = grouped.withColumn(
         "v", F.when(F.col("g") == "g2", F.col("v") + 50.0).otherwise(F.col("v"))
     )
-    by = {k: p for k, _, p in ks_drift_by(shifted, c, base)}
+    got = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
+    for g, d, _ in got:
+        gbase = base["groups"][g]
+        assert d == oracle_d(_group_values(shifted, g), gbase["grid"], gbase["ecdf"])
+    by = {k: p for k, _, p in got}
     assert by["g1"] > 0.5 and by["g2"] < 0.01
 
 
 def test_unseen_group_counts_as_drift(spark, grouped):
-    from xsd2json_spark.engine.drift import make_categorical_baseline_by
-
-    base = make_categorical_baseline_by(grouped.filter("g = 'g1'"), "cat", ["g"])
+    """A group absent from the baseline fails with p = 0 (not a crash,
+    not a dropped row), for chi2 and KS; the baseline's own group still
+    passes."""
+    only_g1 = grouped.filter("g = 'g1'")
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
-    by = {k: p for k, _, p in chi2_from_counts(state_of(grouped, c), c, base)}
-    assert by["g2"] == 0.0  # group absent from baseline -> fail, not crash
+    cbase = make_categorical_baseline(only_g1, "cat", group_by=["g"])
+    ck = Drift(id="d", column="v", test="ks", baseline="b", alpha=0.01, group_by=["g"])
+    nbase = make_numeric_baseline(only_g1, "v", group_by=["g"])
+    for got in (
+        chi2_from_counts(state_of(grouped, c), c, cbase),
+        ks_from_bins(state_of(grouped, ck, {"b": nbase}), ck, nbase),
+    ):
+        by = {k: p for k, _, p in got}
+        assert by["g2"] == 0.0 and by["g1"] > 0.5
 
 
 def test_drift_by_group_inside_engine(spark, grouped):
-    from xsd2json_spark.engine.drift import make_categorical_baseline_by
-
-    base = make_categorical_baseline_by(grouped, "cat", ["g"])
+    base = make_categorical_baseline(grouped, "cat", group_by=["g"])
     spec = Spec(
         name="s", key_columns=["g"],
         constraints=[Drift(id="dg", column="cat", test="chi2", baseline="b",
@@ -220,22 +236,19 @@ def test_drift_by_group_inside_engine(spark, grouped):
 def test_vanished_group_counts_as_drift(spark, grouped):
     """A group present in the BASELINE but absent from the current data
     must emit a fail row (population vanished = drift), for chi2 and KS."""
-    from xsd2json_spark.engine.drift import (
-        ks_drift_by,
-        make_categorical_baseline_by,
-        make_numeric_baseline_by,
-    )
-
     only_g1 = grouped.filter("g = 'g1'")
-    cbase = make_categorical_baseline_by(grouped, "cat", ["g"])
+    cbase = make_categorical_baseline(grouped, "cat", group_by=["g"])
     c = Drift(id="d", column="cat", test="chi2", baseline="b", alpha=0.01, group_by=["g"])
     by = {k: p for k, _, p in chi2_from_counts(state_of(only_g1, c), c, cbase)}
     assert by["g2"] == 0.0 and by["g1"] > 0.9
 
-    nbase = make_numeric_baseline_by(grouped, "v", ["g"])
+    nbase = make_numeric_baseline(grouped, "v", group_by=["g"])
     ck = Drift(id="d", column="v", test="ks", baseline="b", alpha=0.01, group_by=["g"])
-    byk = {k: p for k, _, p in ks_drift_by(only_g1, ck, nbase)}
+    got = ks_from_bins(state_of(only_g1, ck, {"b": nbase}), ck, nbase)
+    byk = {k: p for k, _, p in got}
     assert byk["g2"] == 0.0 and byk["g1"] > 0.5
+    g1 = nbase["groups"]["g1"]
+    assert {k: d for k, d, _ in got}["g1"] == oracle_d(_group_values(only_g1, "g1"), g1["grid"], g1["ecdf"])
 
 
 def test_group_key_escaping_distinguishes_collisions():
@@ -247,6 +260,25 @@ def test_group_key_escaping_distinguishes_collisions():
     assert group_key([None]) != group_key(["None"])
     assert group_key(["a\\|b"]) != group_key(["a|b"])
     assert group_key(["g1"]) == "g1"  # plain single keys stay natural
+
+
+def test_group_key_col_matches_group_key(spark):
+    """The in-plan key equals the driver-side one on separators and
+    backslashes, NULL, int and boolean values, alone and as a
+    two-column key; a double group key is refused."""
+    from xsd2json_spark.engine.drift import group_key, group_key_col
+    from xsd2json_spark.spec.constraints import SpecError
+
+    df = spark.createDataFrame(
+        [("a|b", 1, True, 1.5), ("a\\|b", -7, False, 2.0), ("x\\", None, None, None),
+         (None, 42, True, 0.0), ("None", 0, None, 1.0), ("plain", 3, False, 3.0)],
+        "s string, i int, b boolean, d double",
+    )
+    for cols in (["s"], ["i"], ["b"], ["s", "i"], ["i", "b"]):
+        got = df.select(group_key_col(df, cols, "d").alias("k"), *cols).collect()
+        assert [r["k"] for r in got] == [group_key([r[x] for x in cols]) for r in got], cols
+    with pytest.raises(SpecError, match="drift ksd: group key 'd'"):
+        group_key_col(df, ["s", "d"], "ksd")
 
 
 def test_chi2_statistic_df_matches_driver_side(spark, files):
@@ -313,7 +345,7 @@ def test_ks_verdicts_over_bins_matches_oracle(spark, files):
     base = make_numeric_baseline(files, "length(content)")
     c = Drift(id="d", column="content", expr="length(content)", test="ks", baseline="b", alpha=0.01)
     shifted = files.withColumn("content", F.concat(F.col("content"), F.repeat(F.lit("pad"), 10)))
-    d, _ = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
+    [(_, d, _)] = ks_from_bins(state_of(shifted, c, {"b": base}), c, base)
     row = ks_verdicts_over_bins(state_of(shifted, c, {"b": base}), base, window_cols=()).collect()[0]
     assert row["d_statistic"] == d == oracle_d(_lengths(shifted), base["grid"], base["ecdf"])
     assert row["n_cur"] == shifted.filter("content is not null").count()
@@ -359,7 +391,7 @@ def test_ks_d_matches_oracle_on_edge_values(spark, case):
     c = Drift(id="ks", column="x", test="ks", baseline="b")
     bins = state_of(df, c, {"b": baseline})
     want = oracle_d(values, grid, ecdf)
-    d, _ = ks_from_bins(bins, c, baseline)
+    [(_, d, _)] = ks_from_bins(bins, c, baseline)
     row = ks_verdicts_over_bins(bins, baseline, window_cols=()).collect()[0]
     assert d == want and row["d_statistic"] == want
     n_kept = sum(1 for x in values if x is not None and not math.isnan(x))

@@ -434,10 +434,7 @@ def test_incremental_drift_verdicts_match_full_run(spark):
     """incremental_verdicts with drift states equals the from-scratch
     engine verdicts — drifted and undrifted scenarios, global and
     per-group (incl. the vanished-group failure)."""
-    from xsd2json_spark.engine.drift import (
-        make_categorical_baseline,
-        make_categorical_baseline_by,
-    )
+    from xsd2json_spark.engine.drift import make_categorical_baseline
 
     base_df = spark.createDataFrame(
         [(i, ["py", "go"][i % 2], "g%d" % (i % 2)) for i in range(400)],
@@ -462,7 +459,7 @@ def test_incremental_drift_verdicts_match_full_run(spark):
         ]})
     baselines = {
         "base": make_categorical_baseline(base_df, "lang"),
-        "base_by": make_categorical_baseline_by(base_df, "lang", ["grp"]),
+        "base_by": make_categorical_baseline(base_df, "lang", group_by=["grp"]),
     }
     drift_cs = {c.id: c for c in spec.table_level()}
     state = {cid: state_of(a, c) for cid, c in drift_cs.items()
@@ -522,11 +519,53 @@ def test_incremental_ks_drift_matches_full_run(spark):
     assert not imap["ks"][1]  # the shifted snapshot drifts
 
 
+def test_incremental_ks_by_drift_matches_full_run(spark):
+    """Per-group KS drift composed from build_states' per-group bin
+    state plus the delta == the full run's per-group verdicts: an
+    untouched group passes, a shifted group fails, a vanished baseline
+    group and a group the baseline never saw fail too."""
+    from xsd2json_spark.engine.drift import make_numeric_baseline
+    from xsd2json_spark.engine.incremental import build_states
+
+    cols = "doc_id long, x double, grp string"
+    base_df = spark.createDataFrame([(i, float(i % 100), "g%d" % (i % 3)) for i in range(600)], cols)
+    a = spark.createDataFrame([(i, float((i * 7) % 100), "g%d" % (i % 3)) for i in range(450)], cols)
+    # B: g2 vanishes, g1 shifts upward, rows of an unseen group g9 arrive
+    b = (
+        a.filter("grp != 'g2'")
+        .withColumn("x", F.when(F.col("grp") == "g1", F.col("x") + 400.0).otherwise(F.col("x")))
+        .unionByName(spark.createDataFrame([(900 + i, float(i), "g9") for i in range(20)], cols))
+    )
+    spec = spec_from_dict({
+        "name": "ks_by_inc", "key_columns": ["doc_id"], "constraints": [
+            {"kind": "not_null", "id": "nn", "column": "x"},
+            {"kind": "drift", "id": "ksg", "column": "x", "test": "ks",
+             "baseline": "base", "group_by": ["grp"]},
+        ]})
+    baselines = {"base": make_numeric_baseline(base_df, "x", group_by=["grp"])}
+    states = build_states(a, spec, baselines=baselines)
+    assert states["ksg"].columns == ["grp", "__bin", "n"]
+
+    def pmap(verdicts):
+        return {(r["partition_key"], r["constraint_id"]): (r["violation_count"], r["passed"])
+                for r in verdicts.collect()}
+
+    prev = ValidationEngine(spark, spec, baselines=baselines).run(a).verdicts
+    for cur in (a, b):
+        inc = incremental_verdicts(spark, spec, a, cur, prev, states=states, baselines=baselines)
+        full = ValidationEngine(spark, spec, baselines=baselines).run(cur).verdicts
+        imap = pmap(inc)
+        assert imap == pmap(full)
+    assert {k: v[1] for k, v in imap.items() if k[1] == "ksg"} == {
+        ("g0", "ksg"): True, ("g1", "ksg"): False, ("g2", "ksg"): False, ("g9", "ksg"): False,
+    }
+
+
 def test_build_states_covers_all_kinds(spark):
     """build_states emits exactly the maintainable states (unique, FK,
-    cardinality, chi2 drift, global KS drift — not quantile, not
-    per-group KS), each keyed by its kind's key columns; the kinds
-    without a state refuse loudly."""
+    cardinality, chi2 drift, KS drift global and per group — not
+    quantile), each keyed by its kind's key columns; the kinds without
+    a state refuse loudly."""
     from xsd2json_spark.engine.drift import make_numeric_baseline
     from xsd2json_spark.engine.incremental import build_states
 
@@ -541,22 +580,23 @@ def test_build_states_covers_all_kinds(spark):
             {"kind": "cardinality", "id": "card", "group_by": ["repo"], "min": 1},
             {"kind": "drift", "id": "chi", "column": "lang", "test": "chi2", "baseline": "b"},
             {"kind": "drift", "id": "ks", "column": "x", "test": "ks", "baseline": "b"},
-            {"kind": "drift", "id": "ksg", "column": "x", "test": "ks", "baseline": "b",
+            {"kind": "drift", "id": "ksg", "column": "x", "test": "ks", "baseline": "bg",
              "group_by": ["repo"]},
             {"kind": "quantile", "id": "q", "column": "x", "p": 0.5, "min": 0},
         ]})
-    baselines = {"b": make_numeric_baseline(df, "x")}
+    baselines = {"b": make_numeric_baseline(df, "x"),
+                 "bg": make_numeric_baseline(df, "x", group_by=["repo"])}
     states = build_states(df, spec, baselines=baselines)
-    assert sorted(states) == ["card", "chi", "fk", "ks", "pk"]  # no q, no ksg
+    assert sorted(states) == ["card", "chi", "fk", "ks", "ksg", "pk"]  # no q
     assert states["pk"].columns == ["doc_id", "n"]
     assert states["fk"].columns == ["repo", "n"]
     assert states["card"].columns == ["repo", "n"]
     assert states["ks"].columns == ["__bin", "n"]
+    assert states["ksg"].columns == ["repo", "__bin", "n"]
     assert states["chi"].columns == ["__cat", "n"]
     by_id = {c.id: c for c in spec.table_level()}
-    for cid in ("q", "ksg"):
-        with pytest.raises(ValueError, match="no count state"):
-            state_of(df, by_id[cid], baselines)
+    with pytest.raises(ValueError, match="no count state"):
+        state_of(df, by_id["q"], baselines)
 
 
 def test_incremental_chi2_empty_baseline_raises_like_full_run(spark, snapshots):
@@ -628,24 +668,27 @@ NULL_SPEC = {
         {"kind": "cardinality", "id": "cardinality", "group_by": ["grp"], "min": 2, "max": 3},
         {"kind": "drift", "id": "chi2", "column": "cat", "test": "chi2", "baseline": "base",
          "group_by": ["grp"]},
+        {"kind": "drift", "id": "ks_by", "column": "cat", "expr": "length(cat)", "test": "ks",
+         "baseline": "nbase", "group_by": ["grp"]},
     ]}
 NULL_COLS = "doc_id long, k string, grp string, cat string"
 
 
-@pytest.mark.parametrize("cid", ["unique", "fk", "cardinality", "chi2"])
+@pytest.mark.parametrize("cid", ["unique", "fk", "cardinality", "chi2", "ks_by"])
 def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
     """One NULL rule per kind across every path over a frame with NULL
     key, group and category values: unique and FK drop NULL keys,
-    cardinality keeps the NULL group, chi2 drops NULL categories but
-    keeps the NULL group. The engine's violations equal the reader
-    over state_of, compose_state(state_of(a), delta) equals
-    state_of(b), the stream-static FK anti-join flags the same rows as
-    the batch one, and the stateful stream unique check reports the
-    same duplicates as the batch one (NULL keys are no duplicates)."""
+    cardinality keeps the NULL group, chi2 and per-group KS drop NULL
+    values but keep the NULL group (as the \\N group). The engine's
+    violations equal the reader over state_of, compose_state(state_of(a),
+    delta) equals state_of(b), the stream-static FK anti-join flags the
+    same rows as the batch one, and the stateful stream unique check
+    reports the same duplicates as the batch one (NULL keys are no
+    duplicates)."""
     from collections import Counter
     import json
 
-    from xsd2json_spark.engine.drift import drift_verdicts, make_categorical_baseline_by
+    from xsd2json_spark.engine.drift import drift_verdicts, make_categorical_baseline, make_numeric_baseline
     from xsd2json_spark.engine.validate import fk_dangling
     from xsd2json_spark.streaming.validate_stream import stream_fk_violations, stream_unique_violations
 
@@ -663,9 +706,10 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
     spec = spec_from_dict(NULL_SPEC)
     c = next(x for x in spec.table_level() if x.id == cid)
     dim = spark.createDataFrame([("r1",), ("r2",)], "k string")
-    baselines = {"base": make_categorical_baseline_by(a, "cat", ["grp"])}
+    baselines = {"base": make_categorical_baseline(a, "cat", group_by=["grp"]),
+                 "nbase": make_numeric_baseline(a, "length(cat)", group_by=["grp"])}
     eng = ValidationEngine(spark, spec, dims={"dim": dim}, baselines=baselines)
-    state_b = state_of(b, c)
+    state_b = state_of(b, c, baselines)
     rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
 
     # the NULL rule, read off the state's keys
@@ -674,8 +718,16 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
         assert (None,) not in keys and ("rY",) in keys
     elif cid == "cardinality":
         assert (None,) in keys
-    else:
+    elif cid == "chi2":
         assert all(cat is not None for _, cat in keys) and (None, "py") in keys
+    else:
+        per_grp = Counter()
+        for r in state_b.collect():
+            per_grp[r["grp"]] += r["n"]
+        # 6 non-NULL cat values, 3 of them in the NULL group; every group
+        # has a baseline grid, so no row takes the unseen-group bin
+        assert per_grp == {"g1": 2, None: 3, "g2": 1}
+        assert all(b_ >= 0 for _, b_ in keys)
 
     # engine violations == the reader over state_of
     if cid == "unique":
@@ -699,7 +751,7 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
 
     # composed state == from-scratch state on B
     added, removed = snapshot_delta(a, b, ["doc_id"])
-    assert rows(compose_state(state_of(a, c), added, removed, c)) == rows(state_b)
+    assert rows(compose_state(state_of(a, c, baselines), added, removed, c, baselines)) == rows(state_b)
 
     if cid == "fk":
         streamed = stream_fk_violations(b, c, dim)

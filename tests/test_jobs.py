@@ -61,6 +61,27 @@ def test_snapshot_then_validate_drift_loop(spark, tmp_path):
                      "--baselines", bl]) == 1  # drift detected -> CI gate fails
 
 
+def test_snapshot_baselines_the_drift_expr(spark, tmp_path):
+    """A drift check with an ``expr`` is snapshotted on that expr, as
+    its verdict counts it: validating the snapshotted table passes."""
+    from jobs.snapshot import main as snap_main
+    from jobs.validate import main as val_main
+
+    inp = str(tmp_path / "in.parquet")
+    files_table(spark, n_rows=500).write.parquet(inp)
+    spec_path = _write_spec(tmp_path, [
+        {"kind": "drift", "id": "c", "column": "lang", "expr": "upper(lang)",
+         "test": "chi2", "baseline": "b", "alpha": 0.01},
+    ])
+    bl = str(tmp_path / "baselines.json")
+    assert snap_main(["--input", inp, "--spec", spec_path, "--output", bl]) == 0
+    with open(bl) as fh:
+        counts = json.load(fh)["b"]["counts"]
+    assert counts and all(k == k.upper() for k in counts)
+    assert val_main(["--input", inp, "--spec", spec_path, "--output", str(tmp_path / "audit"),
+                     "--baselines", bl]) == 0
+
+
 def test_snapshot_without_drift_constraints_errors(spark, tmp_path):
     from jobs.snapshot import main as snap_main
 

@@ -83,6 +83,32 @@ def test_kmeans_seed_pool_ignores_partition_order(spark):
     np.testing.assert_array_equal(a, b)
 
 
+def _jobs_in_group(spark, name, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_kmeans_jobs_per_iteration_are_bounded(spark):
+    """kmeans_centroids runs one seed-pool collect and then one collect
+    per Lloyd iteration, so its Spark jobs grow linearly with iters.
+    1 + 2 * iters jobs were measured on Spark 4.1 with AQE (each
+    iteration's shuffle stage and its result)."""
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randint(-8, 9, size=4)]) for i in range(64)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    df.count()
+    for iters in (1, 4):
+        jobs = _jobs_in_group(
+            spark, f"kmeans-{iters}", lambda: S.kmeans_centroids(df, n_centroids=4, iters=iters)
+        )
+        assert jobs <= 3 * (iters + 1), f"{jobs} Spark jobs for {iters} iterations"
+
+
 def test_topk_plan_is_take_ordered(spark, emb, query):
     plan = S.cosine_topk(emb, query, k=10)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # no global sort

@@ -53,6 +53,22 @@ def test_spark_bpe_matches_pure_python(spark):
     assert got[4] == ref("lowest")  # lowercased before encoding
 
 
+def test_train_bpe_jobs_do_not_grow_with_merges(spark):
+    """train_bpe runs one distributed word count and one collect; the
+    merge loop is driver-side, so more merges start no more Spark
+    jobs (2 were measured on Spark 4.1 with AQE)."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame([(1, "low lower newest"), (2, "widest low low")], "doc_id long, text string")
+    for merges in (1, 50):
+        sc.setJobGroup(f"bpe-{merges}", "train_bpe job count")
+        try:
+            BP.train_bpe(docs, "text", num_merges=merges)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(f"bpe-{merges}"))
+        assert jobs <= 3, f"{jobs} Spark jobs for {merges} merges"
+
+
 def test_distributed_word_frequencies(spark):
     docs = spark.createDataFrame([(1, "a b a"), (2, "  b  ")], "doc_id long, text string")
     wc = {r["word"]: r["n"] for r in BP.word_frequencies(docs, "text").collect()}

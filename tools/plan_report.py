@@ -6,6 +6,7 @@ Python in the plan. This is the 'is the plan the one you'd want at
 
 Usage: python tools/plan_report.py           # writes PLANS.md
        python tools/plan_report.py --engine  # prints engine plans
+       python tools/plan_report.py --drift   # prints drift query plans
 
 --engine prints the optimized logical plans of the ValidationEngine
 run (verdicts / violations / stats) of bench.FILES_SPEC over
@@ -14,6 +15,9 @@ and EngineConfig(fused=True), then of incremental_verdicts over the
 same spec, with expression ids (#12, #34L) normalised to '#'. Run it on
 two checkouts and diff the outputs to show a refactor left the plans
 unchanged.
+
+--drift prints, the same way, the optimized plans of the in-plan drift
+queries (DRIFT_QUERIES) over SF_DIR.
 """
 
 from __future__ import annotations
@@ -74,6 +78,14 @@ AUDITED = [
     "emb_knn_ivfpq",
 ]
 
+DRIFT_QUERIES = [
+    "cv_drift_chi2",
+    "cv_drift_by_lang",
+    "cv_drift_chi2_stat",
+    "cv_drift_chi2_by_stat",
+    "cv_drift_psi_stat",
+]
+
 
 def audit(plan: str) -> list:
     notes = []
@@ -128,6 +140,21 @@ def _plan(df) -> str:
     return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
 
 
+def _plan_session():
+    # pinned so the printed plans do not depend on the host's core count
+    spark = get_spark(app_name="plan_report", master="local[2]", shuffle_partitions=4)
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    return spark
+
+
+def drift_plans():
+    spark = _plan_session()
+    qs = entrymod.queries()
+    for name in DRIFT_QUERIES:
+        print(f"=== {name}")
+        print(_plan(qs[name](spark, SF_DIR)))
+
+
 def engine_plans():
     from pyspark.sql import functions as F
 
@@ -137,9 +164,7 @@ def engine_plans():
     from xsd2json_spark.engine.incremental import incremental_verdicts
     from xsd2json_spark.sources.synth import files_table, repos_dim
 
-    # pinned so the printed plans do not depend on the host's core count
-    spark = get_spark(app_name="plan_report", master="local[2]", shuffle_partitions=4)
-    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    spark = _plan_session()
     spec = spec_from_dict(FILES_SPEC)
     dims = {"repos_dim": repos_dim(spark)}
     df = files_table(spark, n_rows=2000)
@@ -159,6 +184,8 @@ def engine_plans():
 def main():
     if "--engine" in sys.argv[1:]:
         return engine_plans()
+    if "--drift" in sys.argv[1:]:
+        return drift_plans()
     spark = get_spark(app_name="plan_report")
     qs = entrymod.queries()
     out = ["# PLANS — physical-plan audit of headline queries",

@@ -2,7 +2,7 @@
 (north_star extension; the reference has no runtime analog — this
 generalizes its accumulate-then-verdict shape to distributions).
 
-Baseline snapshot format (JSON-serializable dict, see make_snapshot):
+Baseline snapshot format (JSON-serializable dict, see jobs/snapshot.py):
 
     {
       "<name>": {
@@ -17,24 +17,31 @@ Baseline snapshot format (JSON-serializable dict, see make_snapshot):
       }
     }
 
-Scale design: the current-side statistics are computed with ONE
-aggregation each —
+A per-group baseline (a Drift with group_by) is {"kind":
+"categorical_by" | "numeric_by", "group_by": [...], "groups": {key:
+counts | {"n", "grid", "ecdf"}}}, keyed by ``group_key``.
 
-- chi2: the constraint's category-count state
-  (``incremental.state_of``: groupBy(group..., category).count(),
-  bounded by category cardinality), then the Pearson statistic
-  driver-side (O(#categories), no row collect) in ``chi2_from_counts``.
-- ks: the baseline stores a ~199-point value grid with its ECDF; the
-  current side is the constraint's bin-count state (``state_of``:
-  groupBy(__bin).count(), __bin = the number of grid points strictly
-  below the value — at most grid+1 counters, no sort, no row collect).
-  The ECDF at grid point i is (rows with bin <= i) / n, read
-  driver-side by ``ecdf_at_grid`` (the baseline's own ECDF, the
-  engine's D) and in-plan by ``ks_verdicts_over_bins`` (queries,
-  streams, any extra group key); D = max_i |ecdf_cur(q_i) -
-  ecdf_base(q_i)|. The grid bounds the error of D by the grid
-  resolution (1/(grid+1) per cell), which is what you want at 10^12
-  rows — an exact KS needs a full sort.
+Scale design: every drift statistic reads the constraint's count
+state (``incremental.state_of``), ONE aggregation whose size is
+bounded by the categories or grid points, never the rows:
+
+- chi2: groupBy(group..., __cat).count(); the Pearson statistic is
+  computed driver-side (O(#categories)) in ``chi2_from_counts``.
+- ks: the baseline stores a ~199-point value grid with its ECDF, per
+  group when grouped; the state is groupBy(group..., __bin).count(),
+  __bin = the number of grid points strictly below the value (at most
+  grid+1 counters per group, no sort). A per-group state finds each
+  row's grid with a broadcast left join on ``group_key_col``. The ECDF
+  at grid point i is (rows with bin <= i) / n, read driver-side by
+  ``ecdf_at_grid`` (baselines and ``ks_from_bins``) and in-plan by
+  ``ks_verdicts_over_bins`` (queries, streams, any extra group key);
+  D = max_i |ecdf_cur(q_i) - ecdf_base(q_i)|. The grid bounds the
+  error of D by the grid resolution (1/(grid+1) per cell), which is
+  what you want at 10^12 rows — an exact KS needs a full sort.
+
+The baselines are built from the same states, and the in-plan
+statistics (``chi2_statistic_df``, ``psi_statistic_df``) count their
+observed side with ``state_of`` too.
 """
 
 from __future__ import annotations
@@ -42,13 +49,18 @@ from __future__ import annotations
 from itertools import accumulate
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xsd2json_spark.engine.stats_math import chi2_sf, chi2_stat, ks_pvalue
 from xsd2json_spark.spec.constraints import Drift, SpecError
 
 DEFAULT_GRID_POINTS = 199
+#: the per-group KS bin of a row whose group has no baseline grid; the
+#: reader fails such a group, so the row only has to keep it visible
+UNSEEN_GROUP_BIN = -1
+#: group-key column types that ``group_key_col`` spells as str() does
+_KEYABLE_TYPES = ("string", "tinyint", "smallint", "int", "bigint", "boolean")
 
 
 def _value_col(c: Drift):
@@ -69,26 +81,92 @@ def group_key(values) -> str:
     return "|".join(esc(v) for v in values)
 
 
-def make_categorical_baseline(df: DataFrame, column: str) -> dict:
-    rows = df.groupBy(column).agg(F.count(F.lit(1)).alias("n")).collect()
-    return {"kind": "categorical", "counts": {str(r[column]): r["n"] for r in rows if r[column] is not None}}
+def group_key_col(df: DataFrame, cols, cid: str) -> Column:
+    """In-plan twin of ``group_key`` over ``df``'s columns ``cols``: the
+    same string for the same values, so a row finds its group's entry
+    in a baseline keyed by ``group_key``. Exact for string, integral
+    and boolean columns (a boolean is spelt "True"/"False", as Python's
+    str() spells it); any other type may print differently in Spark
+    and Python, so it raises SpecError naming drift ``cid``."""
+    types = dict(df.dtypes)
+
+    def esc(name):
+        col, t = F.col(name), types.get(name)
+        if t not in _KEYABLE_TYPES:
+            raise SpecError(
+                f"drift {cid}: group key {name!r} has type {t}; per-group KS "
+                "needs a string, integral or boolean group key"
+            )
+        if t == "boolean":
+            s = F.when(col, F.lit("True")).otherwise(F.lit("False"))
+        else:
+            s = F.replace(F.replace(col.cast("string"), F.lit("\\"), F.lit("\\\\")), F.lit("|"), F.lit("\\|"))
+        return F.when(col.isNull(), F.lit("\\N")).otherwise(s)
+
+    return F.concat_ws("|", *[esc(name) for name in cols])
+
+
+def make_categorical_baseline(df: DataFrame, expr: str, group_by=()) -> dict:
+    """Category counts of ``expr`` (a column name or SQL expression),
+    per ``group_key`` when ``group_by`` is set: a collect of the chi2
+    count state, so NULL categories are dropped as the verdict drops
+    them."""
+    from xsd2json_spark.engine.incremental import state_of
+
+    gb = list(group_by)
+    c = Drift(id="baseline", column=expr, expr=expr, test="chi2", baseline="self", group_by=gb)
+    by_group = _rows_by_group(state_of(df, c).collect(), gb)
+    groups = {key: {str(r["__cat"]): r["n"] for r in rows} for key, rows in by_group.items()}
+    if not gb:
+        return {"kind": "categorical", "counts": groups.get("", {})}
+    return {"kind": "categorical_by", "group_by": gb, "groups": groups}
 
 
 def make_numeric_baseline(
-    df: DataFrame, expr: str, grid_points: int = DEFAULT_GRID_POINTS
+    df: DataFrame, expr: str, grid_points: int = DEFAULT_GRID_POINTS, group_by=()
 ) -> dict:
-    """Quantile grid (percentile_approx) + the baseline's own ECDF at
-    that grid, read off its bin-count state like any current side."""
+    """Quantile grid (percentile_approx, per group when ``group_by`` is
+    set) + the baseline's own ECDF at that grid, read off its bin-count
+    state like any current side. A group with no values gets no entry."""
     from xsd2json_spark.engine.incremental import state_of
 
+    gb = list(group_by)
     probs = [i / (grid_points + 1) for i in range(1, grid_points + 1)]
     # percentile_approx skips NULLs; nanvl makes NaN one too, so the
     # grid sees exactly the values state_rows keeps
     v = F.nanvl(F.expr(expr).cast("double"), F.lit(None))
-    grid = [float(g) for g in df.agg(F.percentile_approx(v, probs, 10000)).first()[0]]
-    c = Drift(id="baseline", column=expr, expr=expr, test="ks", baseline="self")
-    ecdf, n = ecdf_at_grid(state_of(df, c, {"self": {"grid": grid}}), len(grid))
-    return {"kind": "numeric", "n": n, "grid": grid, "ecdf": ecdf}
+    grids = {
+        group_key(r[:-1]): [float(q) for q in r[-1]]
+        for r in df.groupBy(*gb).agg(F.percentile_approx(v, probs, 10000)).collect()
+        if r[-1] is not None
+    }
+    c = Drift(id="baseline", column=expr, expr=expr, test="ks", baseline="self", group_by=gb)
+    base = {"groups": {k: {"grid": g} for k, g in grids.items()}} if gb else {"grid": grids[""]}
+    groups = {}
+    for key, rows in _rows_by_group(state_of(df, c, {"self": base}).collect(), gb).items():
+        ecdf, n = ecdf_at_grid(rows, len(grids[key]))
+        groups[key] = {"n": n, "grid": grids[key], "ecdf": ecdf}
+    if not gb:
+        return {"kind": "numeric", **groups[""]}
+    return {"kind": "numeric_by", "group_by": gb, "groups": groups}
+
+
+def _baseline_counts(baseline_df: DataFrame, column: str, group_by=()) -> DataFrame:
+    """A caller's baseline count rows (group_by..., ``column``, n) as
+    (group_by..., __cat, __b), NULL categories dropped — the NULL rule
+    of the chi2 state (``incremental.state_rows``) applied to counts
+    that arrive already aggregated."""
+    return baseline_df.select(*group_by, F.col(column).alias("__cat"), F.col("n").alias("__b")).filter(
+        F.col("__cat").isNotNull()
+    )
+
+
+def _observed_counts(df: DataFrame, column: str, by) -> DataFrame:
+    """(by..., __cat, __o): the chi2 count state of ``column``."""
+    from xsd2json_spark.engine.incremental import state_of
+
+    c = Drift(id="observed", column=column, test="chi2", baseline="self")
+    return state_of(df, c, by=by).withColumnRenamed("n", "__o")
 
 
 def chi2_statistic_df(
@@ -110,14 +188,8 @@ def chi2_statistic_df(
     p-value stays driver-side via chi2_sf, which is scipy-pinned in
     tests."""
     gb = list(by or [])
-    obs = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(*gb, F.col(column).alias("__cat"))
-        .agg(F.count(F.lit(1)).alias("__o"))
-    )
-    b = baseline_df.select(F.col(column).alias("__cat"), F.col("n").alias("__b")).filter(
-        F.col("__cat").isNotNull()
-    )
+    obs = _observed_counts(df, column, gb)
+    b = _baseline_counts(baseline_df, column)
     bt = b.agg(F.sum("__b").alias("__bt"))
     n = obs.groupBy(*gb).agg(F.sum("__o").alias("__n"))
     spine = n.crossJoin(F.broadcast(b)).crossJoin(F.broadcast(bt))
@@ -154,11 +226,7 @@ def psi_statistic_df(
     ``baseline_df`` holds (``column``, n) rows; a category may repeat,
     and its counts are summed before the baseline folds into a map."""
     gb = list(by or [])
-    obs = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(*gb, F.col(column).alias("__cat"))
-        .agg(F.count(F.lit(1)).alias("__o"))
-    )
+    obs = _observed_counts(df, column, gb)
     # Round 6 shape: ONE reference to the observed counts. The previous
     # spine (groups x baseline-cats union + three joins) re-expanded the
     # obs subtree four times in the physical plan — 22 scans and 32
@@ -173,9 +241,9 @@ def psi_statistic_df(
         F.sum("__o").alias("__n"),
     )
     b1 = (
-        baseline_df.filter(F.col(column).isNotNull())
-        .groupBy(F.col(column).alias("__cat"))
-        .agg(F.sum("n").alias("__b"))
+        _baseline_counts(baseline_df, column)
+        .groupBy("__cat")
+        .agg(F.sum("__b").alias("__b"))
         .agg(
             F.map_from_entries(
                 F.collect_list(F.struct("__cat", "__b"))
@@ -200,13 +268,14 @@ def psi_statistic_df(
     )
 
 
-def bin_index_expr(v, grid) -> "F.Column":
-    """In-plan bin index against a baseline quantile grid: the number
-    of grid edges STRICTLY BELOW the value ``v`` (a Column), so rows
-    with v <= grid[i] are exactly the rows with bin <= i, for any
+def bin_index_expr(v, grid) -> Column:
+    """In-plan bin index against a baseline quantile grid (a list of
+    points, or an array Column holding each row's group grid): the
+    number of grid edges STRICTLY BELOW the value ``v`` (a Column), so
+    rows with v <= grid[i] are exactly the rows with bin <= i, for any
     sorted grid (repeated points included). Used only by the KS count
     state (``incremental.state_rows``)."""
-    edges = F.array(*[F.lit(float(q)) for q in grid])
+    edges = grid if isinstance(grid, Column) else F.array(*[F.lit(float(q)) for q in grid])
     return F.size(F.filter(edges, lambda e: e < v))
 
 
@@ -269,17 +338,16 @@ def ks_verdicts_over_bins(
 
 
 def make_categorical_baseline_df(df: DataFrame, column: str, group_by=()) -> DataFrame:
-    """Baseline counts as a DATAFRAME (no driver collect): one row per
-    (group..., category). The distributed sibling of
-    make_categorical_baseline(_by) — feed it to chi2_statistic_df /
-    drift_verdicts_over_counts, or persist it as the baseline-snapshot
-    table a production deployment would keep in the warehouse."""
-    gb = list(group_by)
-    return (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(*gb, column)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    """Baseline counts as a DATAFRAME (no driver collect): the chi2
+    count state, one (group..., ``column``, n) row per category. The
+    distributed sibling of make_categorical_baseline — feed it to
+    chi2_statistic_df / drift_verdicts_over_counts, or persist it as
+    the baseline-snapshot table a production deployment would keep in
+    the warehouse."""
+    from xsd2json_spark.engine.incremental import state_of
+
+    c = Drift(id="baseline", column=column, test="chi2", baseline="self", group_by=group_by)
+    return state_of(df, c).withColumnRenamed("__cat", column)
 
 
 def drift_verdicts_over_counts(
@@ -310,9 +378,7 @@ def drift_verdicts_over_counts(
     gb = list(group_by)
     wc = list(window_cols)
     spark = counts_df.sparkSession
-    b = baseline_df.select(*gb, F.col(column).alias("__cat"), F.col("n").alias("__b")).filter(
-        F.col("__cat").isNotNull()
-    )
+    b = _baseline_counts(baseline_df, column, gb)
     bt = b.groupBy(*gb).agg(F.sum("__b").alias("__bt")) if gb else b.agg(F.sum("__b").alias("__bt"))
     bb = b.join(bt, gb) if gb else b.crossJoin(bt)
     # ONE reference to the counter table: fold each (window, group)'s
@@ -351,58 +417,33 @@ def drift_verdicts_over_counts(
     )
 
 
-# ---------------------------------------------------------------------------
-# per-group drift (SURVEY §4.3: chi2/KS per (lang, ...) group vs a
-# per-group baseline)
-# ---------------------------------------------------------------------------
-
-
-def make_categorical_baseline_by(df: DataFrame, column: str, group_by) -> dict:
-    """Per-group categorical baseline: ONE aggregation over
-    (group, category) — bounded by #groups x #categories."""
-    gb = list(group_by)
-    rows = df.groupBy(*gb, F.col(column).alias("__cat")).agg(F.count(F.lit(1)).alias("n")).collect()
-    groups: dict = {}
+def _rows_by_group(rows, group_by) -> dict:
+    """Collected state rows split by their ``group_key``."""
+    out: dict = {}
     for r in rows:
-        if r["__cat"] is None:
-            continue
-        key = group_key([r[g] for g in gb])
-        groups.setdefault(key, {})[str(r["__cat"])] = r["n"]
-    return {"kind": "categorical_by", "group_by": gb, "groups": groups}
+        out.setdefault(group_key([r[g] for g in group_by]), []).append(r)
+    return out
 
 
-def make_numeric_baseline_by(
-    df: DataFrame, expr: str, group_by, grid_points: int = 49
-) -> dict:
-    """Per-group numeric baseline (value grid + ECDF per group), built
-    with applyInPandas — one shuffle on the group key, each group's
-    quantile grid computed inside its Arrow batch."""
-    import numpy as np
-    import pandas as pd
-
-    gb = list(group_by)
-    probs = [i / (grid_points + 1) for i in range(1, grid_points + 1)]
-
-    def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pd.to_numeric(pdf["__v"], errors="coerce").dropna().to_numpy()
-        key = group_key([pdf[g].iloc[0] for g in gb])
-        if len(v) == 0:
-            return pd.DataFrame({"key": [], "n": [], "grid": [], "ecdf": []})
-        grid = np.quantile(v, probs)
-        ecdf = [(v <= q).mean() for q in grid]
-        return pd.DataFrame(
-            {"key": [key], "n": [len(v)], "grid": [grid.tolist()], "ecdf": [ecdf]}
-        )
-
-    src = df.select(*gb, F.expr(expr).cast("double").alias("__v"))
-    out = src.groupBy(*gb).applyInPandas(
-        _per_group, schema="key string, n long, grid array<double>, ecdf array<double>"
-    )
-    groups = {
-        r["key"]: {"n": r["n"], "grid": list(r["grid"]), "ecdf": list(r["ecdf"])}
-        for r in out.collect()
-    }
-    return {"kind": "numeric_by", "group_by": gb, "groups": groups}
+def _read_state(state: DataFrame, c: Drift, whole: dict, groups: dict, test) -> "list[tuple]":
+    """[(group_key, stat, p), ...] of drift check ``c`` from its
+    collected count state; ``test`` maps (state rows, baseline entry)
+    to (stat, p). A global check gives one "ALL" row against ``whole``.
+    Per group, every group present in the state and in ``groups`` is
+    tested against its own entry; a group unseen by the baseline and a
+    baseline group with no current rows (a vanished population, the
+    classic drift signal) both fail with p = 0 instead of silently
+    producing no verdict."""
+    rows = state.collect()
+    if not c.group_by:
+        return [("ALL", *test(rows, whole))]
+    observed = _rows_by_group(rows, c.group_by)
+    return [
+        (key, *test(observed[key], groups[key]))
+        if key in observed and groups.get(key)
+        else (key, float("nan"), 0.0)
+        for key in sorted(set(observed) | set(groups))
+    ]
 
 
 def chi2_from_counts(counts: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
@@ -412,100 +453,46 @@ def chi2_from_counts(counts: DataFrame, c: Drift, baseline: dict) -> "list[tuple
     composed one on the incremental run. The collect is
     category-cardinality-sized, never the table.
 
-    Returns [(group_key, stat, p), ...]: one "ALL" row for a global
-    constraint; per group, one row for every group present in the
-    counts OR the baseline — a group unseen by the baseline and a
-    baseline group with no current rows (a vanished population, the
-    classic drift signal) both fail with p = 0 instead of silently
-    producing no verdict."""
-    gb = list(c.group_by)
-    rows = counts.collect()
-    if not gb:
-        total = sum(baseline["counts"].values())
+    Returns [(group_key, stat, p), ...] (see ``_read_state``)."""
+
+    def test(rows, base_counts):
+        total = sum(base_counts.values())
         if total == 0:
             raise SpecError(f"drift {c.id}: empty baseline")
-        probs = {k: v / total for k, v in baseline["counts"].items()}
-        stat, dof = chi2_stat({str(r["__cat"]): r["n"] for r in rows}, probs)
-        return [("ALL", stat, chi2_sf(stat, dof))]
-    observed: dict = {}
-    for r in rows:
-        observed.setdefault(group_key([r[g] for g in gb]), {})[str(r["__cat"])] = r["n"]
-    out = []
-    for key, obs in sorted(observed.items()):
-        base_counts = baseline["groups"].get(key)
-        if not base_counts:
-            out.append((key, float("nan"), 0.0))  # unseen group = drift
-            continue
-        total = sum(base_counts.values())
         probs = {k: v / total for k, v in base_counts.items()}
-        stat, dof = chi2_stat(obs, probs)
-        out.append((key, stat, chi2_sf(stat, dof)))
-    for key in sorted(set(baseline["groups"]) - set(observed)):
-        out.append((key, float("nan"), 0.0))  # vanished group = drift
-    return out
+        stat, dof = chi2_stat({str(r["__cat"]): r["n"] for r in rows}, probs)
+        return stat, chi2_sf(stat, dof)
+
+    return _read_state(counts, c, baseline.get("counts"), baseline.get("groups"), test)
 
 
-def ecdf_at_grid(bins: DataFrame, grid_len: int) -> "tuple[list, int]":
+def ecdf_at_grid(bins, grid_len: int) -> "tuple[list, int]":
     """(ECDF at each grid point, n) from collected bin-count rows
     (``incremental.state_of``: (__bin, n) against a grid of
     ``grid_len`` points) — the one driver-side grid ECDF. The ECDF at
-    point i is (rows with bin <= i) / n, a running sum; the collect is
-    grid-sized. An empty state gives ([], 0)."""
-    per_bin = {r["__bin"]: r["n"] for r in bins.collect()}
+    point i is (rows with bin <= i) / n, a running sum. No rows give
+    ([], 0)."""
+    per_bin = {r["__bin"]: r["n"] for r in bins}
     n = sum(per_bin.values())
     if n == 0:
         return [], 0
     return [k / n for k in accumulate(per_bin.get(i, 0) for i in range(grid_len))], n
 
 
-def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "tuple[float, float]":
-    """Global KS (D, p) from the constraint's bin-count state — a fresh
-    one on the full run, the composed one on the incremental run."""
-    ecdf, n_cur = ecdf_at_grid(bins, len(baseline["grid"]))
-    if n_cur == 0:
-        raise SpecError(f"drift {c.id}: no current values")
-    d = max(abs(e - b) for e, b in zip(ecdf, baseline["ecdf"]))
-    return d, ks_pvalue(d, baseline["n"], n_cur)
+def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
+    """Two-sample KS from the constraint's bin-count state — a fresh
+    one on the full run, the composed one on the incremental run — as
+    [(group_key, d, p), ...], each group against its own grid (see
+    ``_read_state``)."""
 
+    def test(rows, base):
+        ecdf, n_cur = ecdf_at_grid(rows, len(base["grid"]))
+        if n_cur == 0:
+            raise SpecError(f"drift {c.id}: no current values")
+        d = max(abs(e - b) for e, b in zip(ecdf, base["ecdf"]))
+        return d, ks_pvalue(d, base["n"], n_cur)
 
-def ks_drift_by(df: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
-    """Per-group two-sample KS via applyInPandas (SURVEY §4.3): each
-    group's current ECDF is evaluated at ITS baseline grid inside one
-    Arrow batch per group; p-values driver-side.
-    Returns [(group_key, d_statistic, p), ...] — baseline groups with no
-    current rows (vanished populations) emit a (key, nan, 0.0) fail row
-    like chi2_from_counts."""
-    import numpy as np
-    import pandas as pd
-
-    gb = list(c.group_by)
-    grids = {k: (g["grid"], g["ecdf"], g["n"]) for k, g in baseline["groups"].items()}
-
-    def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = group_key([pdf[g].iloc[0] for g in gb])
-        v = pd.to_numeric(pdf["__v"], errors="coerce").dropna().to_numpy()
-        if key not in grids or len(v) == 0:
-            return pd.DataFrame({"key": [key], "d": [float("nan")], "n_cur": [len(v)]})
-        grid, base_ecdf, _ = grids[key]
-        d = max(abs((v <= q).mean() - e) for q, e in zip(grid, base_ecdf))
-        return pd.DataFrame({"key": [key], "d": [float(d)], "n_cur": [len(v)]})
-
-    src = df.select(*gb, (F.expr(c.expr) if c.expr else F.col(c.column)).cast("double").alias("__v"))
-    rows = src.groupBy(*gb).applyInPandas(
-        _per_group, schema="key string, d double, n_cur long"
-    ).collect()
-    out = []
-    for r in sorted(rows, key=lambda r: r["key"]):
-        key = r["key"]
-        if key not in grids or r["n_cur"] == 0 or r["d"] != r["d"]:
-            out.append((key, float("nan"), 0.0))  # unseen group / no data = drift
-            continue
-        n_base = grids[key][2]
-        out.append((key, r["d"], ks_pvalue(r["d"], n_base, r["n_cur"])))
-    seen = {r["key"] for r in rows}
-    for key in sorted(set(grids) - seen):
-        out.append((key, float("nan"), 0.0))  # vanished group = drift
-    return out
+    return _read_state(bins, c, baseline, baseline.get("groups"), test)
 
 
 def baseline_of(c: Drift, baselines: dict) -> dict:
@@ -521,20 +508,13 @@ def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=No
     one "ALL" row, or with c.group_by one row per group present in the
     data or the baseline.
 
-    chi2 and global KS read the constraint's count state: ``counts``
-    when given (the incremental run's composed state; ``df`` is then
-    unused), else a fresh ``state_of(df, c, baselines)``. Per-group KS
-    has no state and runs ``ks_drift_by``."""
+    Every test reads the constraint's count state: ``counts`` when
+    given (the incremental run's composed state; ``df`` is then
+    unused), else a fresh ``state_of(df, c, baselines)``."""
     baseline = baseline_of(c, baselines)
-    if c.test == "ks" and c.group_by:
-        results = ks_drift_by(df, c, baseline)
-    else:
-        if counts is None:
-            from xsd2json_spark.engine.incremental import state_of
+    if counts is None:
+        from xsd2json_spark.engine.incremental import state_of
 
-            counts = state_of(df, c, baselines)
-        if c.test == "chi2":
-            results = chi2_from_counts(counts, c, baseline)
-        else:
-            results = [("ALL", *ks_from_bins(counts, c, baseline))]
-    return [(key, c.id, 0 if p >= c.alpha else 1, None, p >= c.alpha) for key, _stat, p in results]
+        counts = state_of(df, c, baselines)
+    read = chi2_from_counts if c.test == "chi2" else ks_from_bins
+    return [(key, c.id, 0 if p >= c.alpha else 1, None, p >= c.alpha) for key, _stat, p in read(counts, c, baseline)]

@@ -19,10 +19,10 @@ What is and is not incrementally composable:
   dtype, constant, allOf/anyOf): exact composition via the formula
   above — the expensive per-row work (regex + casts over content)
   runs only on the delta.
-- TABLE-LEVEL unique, foreign key, cardinality, chi2 drift and global
-  KS drift: each has ONE count state, (key..., n) rows built by
-  ``state_of`` and rolled forward over the delta by ``compose_state``
-  with the same +added -removed identity. The constraint kind fixes
+- TABLE-LEVEL unique, foreign key, cardinality and drift (chi2 and KS,
+  global and per group): each has ONE count state, (key..., n) rows
+  built by ``state_of`` and rolled forward over the delta by
+  ``compose_state`` with the same +added -removed identity. The constraint kind fixes
   the key and the NULL rule (``state_rows``):
   - unique / FK: the key columns, NULL keys dropped (the engine's
     NULL-pass rules); the FK state is fact-side only, so a changed
@@ -30,19 +30,20 @@ What is and is not incrementally composable:
   - cardinality: the group columns, NULL groups kept (groupBy
     semantics);
   - chi2 drift: (group..., __cat), NULL categories dropped;
-  - KS drift: __bin, the index in the BASELINE's quantile grid, NULL
-    values dropped — KS only reads the ECDF at that grid, a
-    cumulative sum of bin counts, so the composed statistic is
-    identical to the full run's (which reads a fresh ``state_of``),
-    not an approximation.
+  - KS drift: (group..., __bin), the index in the BASELINE's quantile
+    grid (per group, the group's grid), NULL values dropped, NULL
+    groups kept — KS only reads the ECDF at that grid, a cumulative
+    sum of bin counts, so the composed statistic is identical to the
+    full run's (which reads a fresh ``state_of``), not an
+    approximation.
   Verdicts read off the counts with the engine's own readers
   (``unique_violations_from_counts``, ``fk_dangling``,
   ``cardinality_violations_from_counts`` in engine/validate.py;
   ``drift_verdicts`` in engine/drift.py). ``build_states`` builds every
   state of a spec; pass them back as ``incremental_verdicts(states=)``
   and the verdict table touches the snapshots only for the delta scan.
-- TABLE-LEVEL quantile, functional dependency and per-group KS drift:
-  no state (order statistics don't subtract); recomputed on the
+- TABLE-LEVEL quantile and functional dependency: no state (order
+  statistics and dependent sets don't subtract); recomputed on the
   current snapshot.
 
 Delta discovery: a fingerprint anti-join on (key, sha256-of-payload)
@@ -165,13 +166,16 @@ def state_rows(df: DataFrame, c, baselines=None, by=()) -> "tuple[list, DataFram
     check ``c`` — the one place the NULL rule lives: unique and FK drop
     rows with any NULL key (embedded-uniqueness reading; NULL FK values
     pass), cardinality keeps NULL groups (groupBy semantics), drift
-    drops NULL values (and, for KS, NaN). KS keys each value by its bin
-    in the baseline's quantile grid, so it needs ``baselines``.
+    drops NULL values (and, for KS, NaN) and keeps NULL groups. KS keys
+    each value by its bin in the baseline's quantile grid, so it needs
+    ``baselines``; per group, a broadcast left join on ``group_key_col``
+    finds the group's grid, and a group the baseline lacks gets
+    ``UNSEEN_GROUP_BIN`` (its verdict fails).
 
     ``by`` names extra group keys carried in front of the kind's keys
     (a scenario, a lang, an event-time window); the NULL rule never
     applies to them."""
-    from xsd2json_spark.engine.drift import _value_col, baseline_of, bin_index_expr
+    from xsd2json_spark.engine.drift import UNSEEN_GROUP_BIN, _value_col, baseline_of, bin_index_expr, group_key_col
 
     by = list(by)
     if isinstance(c, (Unique, ForeignKey)):
@@ -180,16 +184,26 @@ def state_rows(df: DataFrame, c, baselines=None, by=()) -> "tuple[list, DataFram
     if isinstance(c, Cardinality):
         cols = [*by, *c.group_by]
         return cols, df.select(*cols)
-    if isinstance(c, Drift) and c.test == "chi2":
+    if isinstance(c, Drift):
         gb = [*by, *c.group_by]
-        return [*gb, "__cat"], df.select(*gb, _value_col(c).alias("__cat")).filter(F.col("__cat").isNotNull())
-    if isinstance(c, Drift) and not c.group_by:
-        v = df.select(*by, _value_col(c).cast("double").alias("__v")).na.drop(subset=["__v"])
-        grid = baseline_of(c, baselines or {})["grid"]
-        return [*by, "__bin"], v.select(*by, bin_index_expr(F.col("__v"), grid).alias("__bin"))
+        if c.test == "chi2":
+            return [*gb, "__cat"], df.select(*gb, _value_col(c).alias("__cat")).filter(F.col("__cat").isNotNull())
+        v = df.select(*gb, _value_col(c).cast("double").alias("__v")).na.drop(subset=["__v"])
+        baseline = baseline_of(c, baselines or {})
+        if not c.group_by:
+            return [*gb, "__bin"], v.select(*gb, bin_index_expr(F.col("__v"), baseline["grid"]).alias("__bin"))
+        grids = df.sparkSession.createDataFrame(
+            [(k, [float(q) for q in g["grid"]]) for k, g in baseline["groups"].items()],
+            "__gk string, __grid array<double>",
+        )
+        keyed = v.withColumn("__gk", group_key_col(v, c.group_by, c.id)).join(F.broadcast(grids), "__gk", "left")
+        b = F.when(F.col("__grid").isNull(), F.lit(UNSEEN_GROUP_BIN)).otherwise(
+            bin_index_expr(F.col("__v"), F.col("__grid"))
+        )
+        return [*gb, "__bin"], keyed.select(*gb, b.alias("__bin"))
     raise ValueError(
-        f"{c.kind} {c.id}: no count state — order statistics (quantile, "
-        "per-group KS) and functional dependencies don't compose; recompute"
+        f"{c.kind} {c.id}: no count state — order statistics (quantile) "
+        "and functional dependencies don't compose; recompute"
     )
 
 
@@ -308,16 +322,14 @@ def incremental_verdicts(
 
 def build_states(df: DataFrame, spec: Spec, baselines=None) -> "dict[str, DataFrame]":
     """Every count state of a snapshot: {constraint_id: ``state_of``}
-    for each unique, FK, cardinality, chi2 drift and global KS drift
-    check. Persist these next to the snapshot's verdicts and the next
-    run composes them over the delta via
-    ``incremental_verdicts(states=...)``. Quantile, functional
-    dependency and per-group KS have no state."""
+    for each unique, FK, cardinality and drift check. Persist these
+    next to the snapshot's verdicts and the next run composes them over
+    the delta via ``incremental_verdicts(states=...)``. Quantile and
+    functional dependency have no state."""
     return {
         c.id: state_of(df, c, baselines)
         for c in spec.table_level()
-        if isinstance(c, (Unique, ForeignKey, Cardinality))
-        or (isinstance(c, Drift) and (c.test == "chi2" or not c.group_by))
+        if isinstance(c, (Unique, ForeignKey, Cardinality, Drift))
     }
 
 

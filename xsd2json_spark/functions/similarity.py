@@ -201,10 +201,8 @@ def kmeans_centroids(
             .collect()
         )
         new = cents.copy()
-        counts = np.zeros(len(cents))
         for r in sums:
             new[r["__c"]][r["__p"]] = r["s"] / r["n"]
-            counts[r["__c"]] = r["n"]
         cents = new
     return cents
 
