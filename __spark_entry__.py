@@ -348,14 +348,14 @@ def q_doc_minhash_dups_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash (md5-bit variant, 32 bits) — EXACTLY replayed by the
     DuckDB oracle (md5 is the hash both engines share; see
-    dedup.simhash_md5). The production 64-bit xxhash64 simhash is
+    dedup.simhash). The production 64-bit xxhash64 simhash is
     exercised by q_doc_simhash_pairs + pytest goldens."""
     docs = _t(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 300) & F.col("text").isNotNull()
     )
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        D.simhash_md5("text", num_bits=32).alias("simhash32"),
+        D.simhash("text", num_bits=32, family="md5").alias("simhash32"),
     )
 
 
@@ -2699,7 +2699,7 @@ def _simhash_pairs_oracle() -> str:
 
 def _minhash_oracle() -> str:
     """DuckDB replay of the md5-family MinHash LSH pipeline (mirrors
-    functions/dedup.py minhash_signature_sql + band_keys + the verify
+    functions/dedup.py minhash_signature + band_keys + the verify
     joins): u1/u2 come from md5 hex digits (the one hash both engines
     share — hexval via strpos, like the simhash32 oracle), signatures
     are min_j over shingles of (u1 + j*u2) & 0xffffffff, band keys are

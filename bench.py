@@ -87,9 +87,6 @@ def bench_validation_throughput(spark, n_rows: int) -> dict:
     df = spark.read.parquet(path)
 
     def one_run():
-        # two-pass plan: measured FASTER than the observe single-pass
-        # mode at scale (CollectMetrics defeats whole-stage codegen on
-        # the scan; 64M local[32]: 75s two-pass vs 139s single-pass)
         eng = ValidationEngine(
             spark, spec_from_dict(FILES_SPEC),
             dims={"repos_dim": repos_dim(spark)},

@@ -101,7 +101,7 @@ def test_simhash_md5_matches_pure_python(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     got = {r["doc_id"]: r["s"] for r in
-           df.select("doc_id", D.simhash_md5(F.col("text"), 32).alias("s")).collect()}
+           df.select("doc_id", D.simhash("text", 32, family="md5").alias("s")).collect()}
     for i, t in enumerate(texts):
         assert got[i] == ref_simhash_md5(t), t
 
@@ -114,17 +114,76 @@ def test_ngram_jaccard_exact(spark, docs):
     assert (1, 4) not in got
 
 
-def test_minhash_sql_equals_column_api(spark, docs):
-    """The F.expr fast-path kernel and the Column-API kernel are the
-    same function, for both hash families."""
-    sh = D.shingled(docs, "doc_id", "text", 5)
+_MASK32 = (1 << 32) - 1
+
+
+def _as_long(v):
+    """An unsigned 64-bit Python int as Spark's signed bigint."""
+    v &= (1 << 64) - 1
+    return v - (1 << 64) if v >> 63 else v
+
+
+def _base_hashes(df, family):
+    """Per-element (u1, u2) base hashes of the exploded strings of
+    ``df`` (__id, __s): md5 hex digits through hashlib, xxhash64 from a
+    plain F.xxhash64 select (Python has no xxhash64 of its own)."""
+    import hashlib
+
+    out = {}
+    if family == "md5":
+        for r in df.collect():
+            h = hashlib.md5(r["__s"].encode()).hexdigest()
+            out.setdefault(r["__id"], []).append((int(h[:8], 16), int(h[8:16], 16) | 1))
+    else:
+        rows = df.select(
+            "__id", F.xxhash64("__s").alias("h1"), F.xxhash64("__s", F.lit(1)).alias("h2")
+        ).collect()
+        for r in rows:
+            out.setdefault(r["__id"], []).append((r["h1"] & _MASK32, (r["h2"] & _MASK32) | 1))
+    return out
+
+
+def test_minhash_matches_python_oracle(spark, docs):
+    """minhash_signature and band_keys agree, for both hash families,
+    with a Python oracle that takes only the per-shingle base hashes
+    from Spark: Kirsch-Mitzenmacher slots, the element-wise minimum and
+    the band strings are computed here. Hashed band keys are xxhash64
+    of those strings. Empty and whitespace-only texts included."""
+    num_hashes, bands, rows = 16, 4, 4
+    extra = spark.createDataFrame([(7, ""), (8, "   ")], "doc_id long, text string")
+    sh = D.shingled(docs.unionByName(extra), "doc_id", "text", 5)
+    shingles = sh.select("__id", F.explode("__sh").alias("__s"))
     for fam in ("xxhash64", "md5"):
-        a = sh.select("__id", D.minhash_signature(F.col("__sh"), 16, fam).alias("s"))
-        b = sh.select("__id", D.minhash_signature("__sh", 16, fam).alias("s"))
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    ba = sh.select(D.band_keys(D.minhash_signature(F.col("__sh"), 16), 4, 4).alias("k"))
-    bb = sh.select(D.band_keys(D.minhash_signature("__sh", 16), 4, 4).alias("k"))
-    assert ba.exceptAll(bb).count() == 0
+        want = {
+            i: [min((u1 + j * u2) & _MASK32 for u1, u2 in hs) for j in range(num_hashes)]
+            for i, hs in _base_hashes(shingles, fam).items()
+        }
+        got = sh.select(
+            "__id",
+            D.minhash_signature("__sh", num_hashes, fam).alias("sig"),
+        ).select(
+            "__id", "sig",
+            D.band_keys("sig", bands, rows, hashed=False).alias("k"),
+            D.band_keys("sig", bands, rows).alias("kh"),
+        ).collect()
+        assert {r["__id"]: r["sig"] for r in got} == want, fam
+        strs = {
+            i: [",".join(map(str, sig[b * rows:(b + 1) * rows])) for b in range(bands)]
+            for i, sig in want.items()
+        }
+        assert {r["__id"]: [(k["band"], k["h"]) for k in r["k"]] for r in got} == {
+            i: list(enumerate(s)) for i, s in strs.items()
+        }, fam
+        flat = [(i, b, s) for i, ss in strs.items() for b, s in enumerate(ss)]
+        hashed = {
+            (r["i"], r["b"]): r["h"]
+            for r in spark.createDataFrame(flat, "i long, b int, s string")
+            .select("i", "b", F.xxhash64("s").alias("h"))
+            .collect()
+        }
+        assert {r["__id"]: [(k["band"], k["h"]) for k in r["kh"]] for r in got} == {
+            i: [(b, hashed[(i, b)]) for b in range(bands)] for i in strs
+        }, fam
 
 
 def test_minhash_md5_family_finds_planted_dups(spark):
@@ -201,19 +260,29 @@ def test_embedding_near_dups_candidates_are_banded_not_all_pairs(spark):
     assert out.collect() == []  # opposite sign bits in every band -> no candidate
 
 
-def test_embedding_near_dups_arrow_equals_exprs(spark):
+def _has_python(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "ArrowEvalPython" in plan or "InPandas" in plan
+
+
+def test_embedding_near_dups_arrow_equals_exprs(spark, monkeypatch):
     """The Arrow matmul bucket path must produce the identical pair set
     and cosines as the single-parse SQL expression path (the DuckDB
-    oracle configuration)."""
+    oracle configuration). The literal-count threshold picks the path."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(dim=64, threshold=0.4405)
-    exprs = sorted(map(tuple, D.embedding_near_dups(emb, use_arrow=False, **kw).collect()))
-    arrow = sorted(map(tuple, D.embedding_near_dups(emb, use_arrow=True, **kw).collect()))
+    kw = dict(dim=64, threshold=0.4405, n_bands=8, planes_per_band=4)
+    monkeypatch.setattr(D, "EMB_ARROW_THRESHOLD", 8 * 4 * 64)
+    exprs_df = D.embedding_near_dups(emb, **kw)
+    monkeypatch.setattr(D, "EMB_ARROW_THRESHOLD", 0)
+    arrow_df = D.embedding_near_dups(emb, **kw)
+    assert not _has_python(exprs_df) and _has_python(arrow_df)
+    exprs = sorted(map(tuple, exprs_df.collect()))
+    arrow = sorted(map(tuple, arrow_df.collect()))
     assert exprs == arrow
     assert len(exprs) > 0
 
 
-def test_embedding_near_dups_single_arrow_cosine_node(spark):
+def test_embedding_near_dups_single_arrow_cosine_node(spark, monkeypatch):
     """The verify cosine must appear ONCE in the physical plan: without
     the asNondeterministic pushdown fence Catalyst pushes the threshold
     filter through the projection and duplicates the ArrowEvalPython,
@@ -222,7 +291,8 @@ def test_embedding_near_dups_single_arrow_cosine_node(spark):
     import re
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = D.embedding_near_dups(emb, dim=64, threshold=0.4405, use_arrow=True)
+    monkeypatch.setattr(D, "EMB_ARROW_THRESHOLD", 0)
+    out = D.embedding_near_dups(emb, dim=64, threshold=0.4405)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"ArrowEvalPython \[_cos", plan)) == 1
 
@@ -252,6 +322,15 @@ def test_minhash_pairs_from_persisted_base_match_inmemory(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         D.minhash_pairs_from_base(spark, path, bands=7)
+
+
+def test_minhash_lsh_pairs_rejects_bands_not_dividing_num_hashes(spark, docs):
+    """bands must divide num_hashes on the in-memory path as on the
+    persisted one: bands > num_hashes leaves every band empty (every
+    pair of docs a candidate), and a remainder drops signature slots."""
+    for bands in (128, 10, 0):
+        with pytest.raises(ValueError, match="must divide"):
+            D.minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=64, bands=bands)
 
 
 def test_connected_components_shapes(spark):
@@ -415,16 +494,30 @@ def test_exploded_word_ngrams_equals_array_form(spark):
         assert arr == new and len(arr) > 0
 
 
-def test_simhash_sql_equals_column_api(spark):
-    """The one-parse F.expr simhash fast path (round-6 driver-time fix)
-    must produce bit-identical signatures to the Column form for both
-    hash families, including empty and whitespace-only texts."""
+def test_simhash_matches_python_oracle(spark):
+    """simhash agrees, for both hash families, with a Python oracle
+    that takes only the per-token hashes from Spark (md5 through
+    hashlib, xxhash64 from a plain F.xxhash64 select over the exploded
+    tokens) and computes the +-1 bit votes and the signed 64-bit pack
+    here. Empty and whitespace-only texts included."""
+    import hashlib
+
     rows = [(1, "alpha beta gamma"), (2, "alpha beta gamma delta"),
             (3, ""), (4, "   "), (5, "one")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fam, fn, bits in [("xxhash64", D.simhash, 64), ("md5", D.simhash_md5, 32)]:
-        col_form = {r["doc_id"]: r["s"] for r in
-                    df.select("doc_id", fn(F.col("text"), bits).alias("s")).collect()}
-        sql_form = {r["doc_id"]: r["s"] for r in
-                    df.select("doc_id", fn("text", bits).alias("s")).collect()}
-        assert col_form == sql_form, fam
+    toks = df.select(
+        "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t")
+    ).select("doc_id", "t", F.xxhash64("t").alias("h")).collect()
+    for fam, bits in (("xxhash64", 64), ("md5", 32)):
+        votes = {i: [0] * bits for i, _ in rows}
+        for r in toks:
+            if fam == "md5":
+                hx = hashlib.md5(r["t"].encode()).hexdigest()
+                on = [(int(hx[j // 4], 16) >> (j % 4)) & 1 for j in range(bits)]
+            else:
+                on = [(r["h"] >> j) & 1 for j in range(bits)]
+            votes[r["doc_id"]] = [v + (1 if b else -1) for v, b in zip(votes[r["doc_id"]], on)]
+        want = {i: _as_long(sum(1 << j for j, v in enumerate(vs) if v > 0)) for i, vs in votes.items()}
+        got = {r["doc_id"]: r["s"] for r in
+               df.select("doc_id", D.simhash("text", bits, family=fam).alias("s")).collect()}
+        assert got == want, fam

@@ -215,3 +215,30 @@ def test_incremental_job_reads_state_dir_uri(spark, tmp_path):
     inc = {r["constraint_id"]: (r["violation_count"], r["passed"])
            for r in spark.read.parquet(out_b + "/verdicts").collect()}
     assert inc == {"pk": (1, False)}
+
+
+def test_snapshot_numeric_baseline_of_empty_table_raises_spec_error(spark):
+    """A KS baseline over a table with no value of its expr raises a
+    SpecError naming the expr, global and grouped alike: a global one
+    must not fail with a bare KeyError, and a grouped one must not
+    return an empty group map that fails every later group as
+    unseen."""
+    import pytest
+
+    from jobs.snapshot import build_baselines
+    from xsd2json_spark import spec_from_dict
+    from xsd2json_spark.spec.constraints import SpecError
+
+    empty = files_table(spark, n_rows=50).limit(0)
+    for extra in ({}, {"group_by": ["lang"]}):
+        spec = spec_from_dict({
+            "name": "empty_t",
+            "key_columns": ["repo", "path", "commit"],
+            "constraints": [
+                {"kind": "drift", "id": "len_drift", "column": "content",
+                 "expr": "length(content)", "test": "ks", "baseline": "len_base",
+                 "alpha": 0.01, **extra},
+            ],
+        })
+        with pytest.raises(SpecError, match=r"length\(content\)"):
+            build_baselines(spark, empty, spec)

@@ -7,6 +7,7 @@ Python in the plan. This is the 'is the plan the one you'd want at
 Usage: python tools/plan_report.py           # writes PLANS.md
        python tools/plan_report.py --engine  # prints engine plans
        python tools/plan_report.py --drift   # prints drift query plans
+       python tools/plan_report.py --dedup   # prints dedup/ANN query plans
 
 --engine prints the optimized logical plans of the ValidationEngine
 run (verdicts / violations / stats) of bench.FILES_SPEC over
@@ -17,7 +18,8 @@ two checkouts and diff the outputs to show a refactor left the plans
 unchanged.
 
 --drift prints, the same way, the optimized plans of the in-plan drift
-queries (DRIFT_QUERIES) over SF_DIR.
+queries (DRIFT_QUERIES) over SF_DIR; --dedup those of the dedup, ANN
+and BPE queries (DEDUP_QUERIES).
 """
 
 from __future__ import annotations
@@ -86,6 +88,20 @@ DRIFT_QUERIES = [
     "cv_drift_psi_stat",
 ]
 
+DEDUP_QUERIES = [
+    "doc_minhash_dups",
+    "doc_minhash_dups_xx",
+    "doc_simhash",
+    "doc_simhash_pairs",
+    "doc_simhash_pairs_md5",
+    "emb_near_dups",
+    "emb_knn_lsh",
+    "emb_knn_lsh_pruned",
+    "emb_knn_ivf",
+    "emb_knn_ivfpq",
+    "doc_bpe_token_stats",
+]
+
 
 def audit(plan: str) -> list:
     notes = []
@@ -147,10 +163,10 @@ def _plan_session():
     return spark
 
 
-def drift_plans():
+def query_plans(names):
     spark = _plan_session()
     qs = entrymod.queries()
-    for name in DRIFT_QUERIES:
+    for name in names:
         print(f"=== {name}")
         print(_plan(qs[name](spark, SF_DIR)))
 
@@ -185,7 +201,9 @@ def main():
     if "--engine" in sys.argv[1:]:
         return engine_plans()
     if "--drift" in sys.argv[1:]:
-        return drift_plans()
+        return query_plans(DRIFT_QUERIES)
+    if "--dedup" in sys.argv[1:]:
+        return query_plans(DEDUP_QUERIES)
     spark = get_spark(app_name="plan_report")
     qs = entrymod.queries()
     out = ["# PLANS — physical-plan audit of headline queries",

@@ -127,7 +127,8 @@ def make_numeric_baseline(
 ) -> dict:
     """Quantile grid (percentile_approx, per group when ``group_by`` is
     set) + the baseline's own ECDF at that grid, read off its bin-count
-    state like any current side. A group with no values gets no entry."""
+    state like any current side. A group with no values gets no entry;
+    a table with no value at all raises SpecError."""
     from xsd2json_spark.engine.incremental import state_of
 
     gb = list(group_by)
@@ -140,6 +141,8 @@ def make_numeric_baseline(
         for r in df.groupBy(*gb).agg(F.percentile_approx(v, probs, 10000)).collect()
         if r[-1] is not None
     }
+    if not grids:
+        raise SpecError(f"numeric baseline of {expr!r}: no non-NULL, non-NaN value")
     c = Drift(id="baseline", column=expr, expr=expr, test="ks", baseline="self", group_by=gb)
     base = {"groups": {k: {"grid": g} for k, g in grids.items()}} if gb else {"grid": grids[""]}
     groups = {}

@@ -1,8 +1,12 @@
 """Deduplication at training-data scale: exact, MinHash+LSH, SimHash,
 n-gram Jaccard, embedding-cosine.
 
-The text kernels are built-in Column expressions — shingling, MinHash,
-banding, and Hamming distance all run JVM-side. The LSH self-joins
+The text kernels are built-in expressions — shingling, MinHash,
+banding, and Hamming distance all run JVM-side. The MinHash, banding
+and SimHash kernels each have one builder, which takes a column NAME
+and parses its whole expression as one SQL string (the same tree
+through the Column API costs hundreds of py4j round-trips of driver
+time per query build). The LSH self-joins
 shuffle on band-bucket keys, so candidate generation is O(#colliding
 pairs), not O(n^2); the exact verify (Jaccard / cosine) touches
 candidates only. The embedding kernels auto-dispatch to Arrow-batched
@@ -66,61 +70,28 @@ _MASK32 = (1 << 32) - 1
 _MIN_INIT = 1 << 33
 
 
-def minhash_hash_family(s: Column, num_hashes: int, family: str = "xxhash64") -> Column:
-    """All ``num_hashes`` 32-bit hash values of ONE shingle, computed
-    with exactly TWO base-hash evaluations (Kirsch–Mitzenmacher double
-    hashing: h_j = (u1 + j*u2) mod 2^32 behaves like an independent
-    family for min-wise use — the standard Bloom-filter construction).
+def minhash_signature(col_name: str, num_hashes: int = 64, family: str = "xxhash64") -> Column:
+    """MinHash signature (array<long>, length num_hashes) of the shingle
+    array column ``col_name``, in a SINGLE traversal: one aggregate whose
+    accumulator is the element-wise running minimum of the per-shingle
+    hash family.
 
-    The base hashes are computed once inside a single-element
-    transform(): the lambda variable is a BOUND value, so the 64 slot
-    expressions read u1/u2 instead of re-evaluating the base hash —
-    higher-order functions are interpreted and re-evaluate captured
-    expressions per reference (the round-2 O(len^2) lesson).
+    Each shingle costs TWO base hashes (Kirsch–Mitzenmacher double
+    hashing: h_j = (u1 + j*u2) mod 2^32 behaves like an independent
+    family for min-wise use — the standard Bloom-filter construction),
+    then num_hashes cheap multiply-adds. The base hashes are bound once
+    inside a single-element transform(): higher-order functions are
+    interpreted and re-evaluate a captured expression per reference, so
+    the slot expressions must read the bound u1/u2.
 
     family='xxhash64' is the production path (one JVM hash); family
     ='md5' derives u1/u2 from md5 hex digits — md5 is the one hash
     Spark and DuckDB share, which makes the whole signature -> band ->
-    pair pipeline exactly replayable as a DuckDB oracle."""
-    mask = F.lit(_MASK32).cast("long")
-    if family == "xxhash64":
-        pre = F.array(
-            F.struct(
-                F.xxhash64(s).bitwiseAND(mask).alias("u1"),
-                F.xxhash64(s, F.lit(1)).bitwiseAND(mask).bitwiseOR(F.lit(1)).alias("u2"),
-            )
-        )
-    elif family == "md5":
-        h = F.md5(s)
-        pre = F.array(
-            F.struct(
-                F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("u1"),
-                F.conv(F.substring(h, 9, 8), 16, 10).cast("long").bitwiseOR(F.lit(1)).alias("u2"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown minhash family {family!r}")
-    expanded = F.transform(
-        pre,
-        lambda st: F.array(
-            *[
-                (st["u1"] + F.lit(j).cast("long") * st["u2"]).bitwiseAND(mask)
-                for j in range(num_hashes)
-            ]
-        ),
-    )
-    return F.element_at(expanded, 1)
+    pair pipeline exactly replayable as a DuckDB oracle.
 
-
-def minhash_signature_sql(col_name: str, num_hashes: int = 64, family: str = "xxhash64") -> str:
-    """The signature kernel as ONE Spark-SQL expression string.
-
-    Semantically identical to ``minhash_signature`` over a column — kept
-    as a string because building the 64-slot expression tree through the
-    Column API costs hundreds of py4j round-trips (~1-2 s of pure driver
-    time per query build, measured); one F.expr parse is ~10 ms. The
-    equality of the two forms is pinned by
-    test_minhash_sql_equals_column_api."""
+    Built as ONE SQL expression string: the same tree through the Column
+    API costs hundreds of py4j round-trips (~1-2 s of pure driver time
+    per query build, measured); one F.expr parse is ~10 ms."""
     if family == "xxhash64":
         u1 = f"xxhash64(s) & {_MASK32}"
         u2 = f"xxhash64(s, 1) & {_MASK32} | 1"
@@ -133,45 +104,20 @@ def minhash_signature_sql(col_name: str, num_hashes: int = 64, family: str = "xx
     hashes = (
         f"transform(array(named_struct('u1', {u1}, 'u2', {u2})), st -> array({slots}))[0]"
     )
-    return (
+    return F.expr(
         f"aggregate({col_name}, "
         f"array_repeat(cast({_MIN_INIT} as bigint), {num_hashes}), "
         f"(acc, s) -> zip_with(acc, {hashes}, (a, b) -> least(a, b)))"
     )
 
 
-def minhash_signature(sh, num_hashes: int = 64, family: str = "xxhash64") -> Column:
-    """MinHash signature (array<long>, length num_hashes) in a SINGLE
-    traversal of the shingle array: one F.aggregate whose accumulator is
-    the element-wise running minimum of the per-shingle hash family.
-
-    Round 2 shipped 64 independent ``array_min(transform(sh, ...))``
-    passes — 64 interpreted traversals and 64 xxhash64 calls per
-    shingle; this fold is one traversal and two base hashes per shingle
-    (then 64 cheap multiply-adds), which is what made doc_minhash_dups
-    the slowest bench query. Same banding semantics downstream.
-
-    Pass a column NAME (str) to take the F.expr fast path (one SQL parse
-    instead of hundreds of py4j calls — see minhash_signature_sql).
-
-    (Historical footnote kept because it bites: a 2-parameter transform
-    lambda is bound as (element, array_index), so ``lambda s, j=j``
-    silently hashed with the element POSITION as the seed.)"""
-    if isinstance(sh, str):
-        return F.expr(minhash_signature_sql(sh, num_hashes, family))
-    init = F.array_repeat(F.lit(_MIN_INIT).cast("long"), num_hashes)
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc, minhash_hash_family(s, num_hashes, family), lambda a, b: F.least(a, b)
-        ),
-    )
-
-
-def band_keys_sql(col_name: str, bands: int = 16, rows: int = 4, hashed: bool = True) -> str:
-    """``band_keys`` as one SQL expression string (same py4j-round-trip
-    rationale as minhash_signature_sql)."""
+def band_keys(col_name: str, bands: int = 16, rows: int = 4, hashed: bool = True) -> Column:
+    """LSH banding of the signature column ``col_name``: key each band
+    of `rows` signature slots; docs sharing ANY band key are candidates.
+    hashed=True keys on xxhash64 of the band (8-byte shuffle key — the
+    scale default); hashed=False keys on the comma-joined slot string,
+    which DuckDB can reproduce exactly (the oracle path). One SQL parse,
+    for the same reason as minhash_signature."""
     entries = []
     for b in range(bands):
         joined = (
@@ -180,25 +126,7 @@ def band_keys_sql(col_name: str, bands: int = 16, rows: int = 4, hashed: bool = 
         )
         key = f"xxhash64({joined})" if hashed else joined
         entries.append(f"named_struct('band', {b}, 'h', {key})")
-    return f"array({', '.join(entries)})"
-
-
-def band_keys(sig, bands: int = 16, rows: int = 4, hashed: bool = True) -> Column:
-    """LSH banding: key each band of `rows` signature slots; docs
-    sharing ANY band key are candidates. hashed=True keys on
-    xxhash64 of the band (8-byte shuffle key — the scale default);
-    hashed=False keys on the comma-joined slot string, which DuckDB can
-    reproduce exactly (the oracle path). Pass a column NAME (str) for
-    the one-parse F.expr fast path."""
-    if isinstance(sig, str):
-        return F.expr(band_keys_sql(sig, bands, rows, hashed))
-    keys = []
-    for b in range(bands):
-        sl = F.slice(sig, b * rows + 1, rows)
-        joined = F.concat_ws(",", F.transform(sl, lambda x: x.cast("string")))
-        key = F.xxhash64(joined) if hashed else joined
-        keys.append(F.struct(F.lit(b).alias("band"), key.alias("h")))
-    return F.array(*keys)
+    return F.expr(f"array({', '.join(entries)})")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -212,8 +140,7 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Returns (fingerprint, n_docs, doc_ids) for groups with n>1. The
     groupBy key is the 256-bit hash, not the text itself, so the shuffle
     carries 32 bytes per row instead of the document."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    h = F.sha2(norm, 256)
+    h = F.sha2(normalized_text(F.col(text_col)), 256)
     return (
         df.select(F.col(id_col), h.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -232,7 +159,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     family: str = "xxhash64",
     hashed_bands: bool = True,
-    cache_base: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH:
       shingle -> minhash -> band -> bucket self-join -> exact-Jaccard
@@ -244,28 +170,39 @@ def minhash_lsh_pairs(
     the exact-Jaccard verify of surviving candidates only). The
     (id, shingles, signature) base is computed ONCE and persisted
     (MEMORY_AND_DISK) because the self-join + verify read it three
-    times; at warehouse scale write it to a table instead (same role as
-    build_ann_index's persisted buckets) and set cache_base=False.
+    times; at warehouse scale write it to a table instead with
+    build_minhash_base and pair it with minhash_pairs_from_base.
 
     family='md5' + hashed_bands=False is the oracle configuration: every
     step (md5-derived signatures, comma-joined band keys, candidate
     join, exact Jaccard) is replayable in DuckDB SQL."""
-    rows = num_hashes // bands
-    base = shingled(df, id_col, text_col, k).withColumn(
+    base = _minhash_base(df, id_col, text_col, k, num_hashes, family).persist()
+    return _minhash_pairs_over_base(base, num_hashes, bands, threshold, hashed_bands)
+
+
+def _minhash_base(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, family: str
+) -> DataFrame:
+    """The (__id, __sh, __sig) MinHash base: shingles plus signature."""
+    return shingled(df, id_col, text_col, k).withColumn(
         "__sig", minhash_signature("__sh", num_hashes, family)
     )
-    if cache_base:
-        base = base.persist()
-    return _minhash_pairs_over_base(base, bands, rows, threshold, hashed_bands)
 
 
 def _minhash_pairs_over_base(
-    base: DataFrame, bands: int, rows: int, threshold: float, hashed_bands: bool
+    base: DataFrame, num_hashes: int, bands: int, threshold: float, hashed_bands: bool
 ) -> DataFrame:
     """Band self-join + exact-Jaccard verify over a (__id, __sh, __sig)
     base — shared by the in-memory (minhash_lsh_pairs) and persisted
     (minhash_pairs_from_base) paths, so the warehouse route runs the
-    byte-identical plan over a parquet base instead of a cached one."""
+    byte-identical plan over a parquet base instead of a cached one.
+
+    ``bands`` must divide ``num_hashes``: otherwise the trailing slots
+    are silently dropped, and with bands > num_hashes every band is
+    empty, so every pair of docs becomes a candidate."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    rows = num_hashes // bands
     banded = base.select(
         "__id", F.explode(band_keys("__sig", bands, rows, hashed_bands)).alias("__bk")
     )
@@ -301,12 +238,12 @@ def build_minhash_base(
     family: str = "xxhash64",
 ) -> dict:
     """Materialize the (__id, __sh, __sig) MinHash base as a parquet
-    table — the warehouse-scale alternative to minhash_lsh_pairs'
-    cache_base=True, which persists the corpus' shingle sets in
-    executor memory/disk (fine at bench scale, not at 100 TB). Build
-    cost is ONE pass (shingle + signature + write); the shingle/hash
-    parameters ride a sidecar so the pair job can't silently mismatch
-    them. Mirrors similarity.build_ann_index."""
+    table — the warehouse-scale alternative to minhash_lsh_pairs, which
+    persists the corpus' shingle sets in executor memory/disk (fine at
+    bench scale, not at 100 TB). Build cost is ONE pass (shingle +
+    signature + write); the shingle/hash parameters ride a sidecar so
+    the pair job can't silently mismatch them. Mirrors
+    similarity.build_ann_index."""
     import json
 
     from xsd2json_spark.sources import fsutil
@@ -315,10 +252,7 @@ def build_minhash_base(
         "id_col": id_col, "text_col": text_col, "k": k,
         "num_hashes": num_hashes, "family": family,
     }
-    base = shingled(df, id_col, text_col, k).withColumn(
-        "__sig", minhash_signature("__sh", num_hashes, family)
-    )
-    base.write.mode("overwrite").parquet(path)
+    _minhash_base(df, id_col, text_col, k, num_hashes, family).write.mode("overwrite").parquet(path)
     fsutil.write_text(
         df.sparkSession, path.rstrip("/") + "/" + MINHASH_META_FILE, json.dumps(meta)
     )
@@ -342,11 +276,8 @@ def minhash_pairs_from_base(
     from xsd2json_spark.sources import fsutil
 
     meta = json.loads(fsutil.read_text(spark, path.rstrip("/") + "/" + MINHASH_META_FILE))
-    num_hashes = int(meta["num_hashes"])
-    if num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     base = spark.read.parquet(path)
-    return _minhash_pairs_over_base(base, bands, num_hashes // bands, threshold, hashed_bands)
+    return _minhash_pairs_over_base(base, int(meta["num_hashes"]), bands, threshold, hashed_bands)
 
 
 def _release_checkpoint(df: "DataFrame | None") -> None:
@@ -437,13 +368,23 @@ def dedup_survivors(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     return df.join(losers, id_col, "left_anti")
 
 
-def _simhash_sql(col_sql: str, num_bits: int, family: str) -> str:
-    """simhash/simhash_md5 as ONE SQL expression string: the same
-    fold/vote/pack tree the Column API builds (identical values), but
-    one F.expr parse instead of ~4 x num_bits py4j round-trips
-    (measured 2.8 s of pure driver time per doc_simhash_pairs build).
-    The token hash and the vote vector are each bound once via the
-    single-element-transform trick."""
+def simhash(col_name: str, num_bits: int = 64, family: str = "xxhash64") -> Column:
+    """SimHash over the whitespace tokens of the text column
+    ``col_name``: per bit position, sum +-1 votes of each token's hash
+    bit; the sign vector packs into a long. Pure aggregate/zip_with — no
+    UDF. The token hash and the vote vector are each bound once via the
+    single-element-transform trick (a captured expression would be
+    re-evaluated per bit).
+
+    family='xxhash64' is the production path (64 bits, one JVM hash);
+    family='md5' takes bit j of token t from md5 hex digits,
+    (hexval(md5(t)[j/4]) >> (j%4)) & 1 — md5 is the one hash Spark and
+    DuckDB implement identically, so that variant replays EXACTLY as an
+    oracle query.
+
+    Built as ONE SQL expression string: the Column-API tree costs
+    ~4 x num_bits py4j round-trips (measured 2.8 s of pure driver time
+    per doc_simhash_pairs build); one F.expr parse is milliseconds."""
     if family == "xxhash64":
         slots = ", ".join(
             f"CAST((shiftright(h, {b}) & 1) * 2 - 1 AS BIGINT)" for b in range(num_bits)
@@ -458,7 +399,7 @@ def _simhash_sql(col_sql: str, num_bits: int, family: str) -> str:
     else:
         raise ValueError(f"unknown simhash family {family!r}")
     votes = (
-        f"aggregate(split(lower(trim({col_sql})), '\\\\s+'), "
+        f"aggregate(split(lower(trim(`{col_name}`)), '\\\\s+'), "
         f"array_repeat(CAST(0 AS BIGINT), {num_bits}), "
         f"(acc, t) -> zip_with(acc, {hashed}, (a, v) -> a + v))"
     )
@@ -467,83 +408,7 @@ def _simhash_sql(col_sql: str, num_bits: int, family: str) -> str:
         f"THEN shiftleft(CAST(1 AS BIGINT), {b}) ELSE CAST(0 AS BIGINT) END)"
         for b in range(num_bits)
     )
-    return f"transform(array({votes}), v -> CAST({packed} AS BIGINT))[0]"
-
-
-def simhash(col, num_bits: int = 64) -> Column:
-    """SimHash over whitespace tokens: per bit position, sum +-1 votes of
-    each token's hash bit; the sign vector packs into a long. Pure
-    aggregate/zip_with — no UDF. Pass a column NAME (str) for the
-    one-parse F.expr fast path (same values, no py4j literal tree)."""
-    if isinstance(col, str):
-        return F.expr(_simhash_sql(f"`{col}`", num_bits, "xxhash64"))
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-
-    def _bits_pm1(t):
-        # single-element transform binds the hash ONCE per token: the
-        # 64 slot expressions read the bound h instead of re-evaluating
-        # xxhash64(t) per bit — higher-order lambdas re-evaluate
-        # captured expressions per reference (the minhash_hash_family
-        # lesson; measured 64 hash evals/token before this).
-        # shift amounts must be literal ints for shiftright
-        return F.element_at(
-            F.transform(
-                F.array(F.xxhash64(t)),
-                lambda h: F.array(
-                    *[(F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long") for b in range(num_bits)]
-                ),
-            ),
-            1,
-        )
-
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), num_bits),
-        lambda acc, t: F.zip_with(acc, _bits_pm1(t), lambda a, v: a + v),
-    )
-    packed = F.lit(0).cast("long")
-    for b in range(num_bits):
-        packed = packed + F.when(
-            F.element_at(votes, b + 1) > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-    return packed
-
-
-def simhash_md5(col, num_bits: int = 32) -> Column:
-    """SimHash variant whose per-token bits come from md5 hex digits
-    instead of xxhash64 — md5 is the one 128-bit hash both Spark and
-    DuckDB implement identically, so this variant is EXACTLY replayable
-    as an oracle query (bit j of token t = (hexval(md5(t)[j/4]) >> (j%4))
-    & 1). Same vote-and-pack construction as ``simhash``; use that
-    (xxhash64, 64-bit, no hex decode) as the production path. Pass a
-    column NAME (str) for the one-parse F.expr fast path."""
-    if isinstance(col, str):
-        return F.expr(_simhash_sql(f"`{col}`", num_bits, "md5"))
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-
-    def _bits_pm1(t):
-        # bind md5(t) once per token (same re-evaluation trap as the
-        # xxhash64 variant: 32 references would mean 32 md5 evals)
-        def _slots(h):
-            bits = []
-            for j in range(num_bits):
-                d = F.conv(F.substring(h, 1 + j // 4, 1), 16, 10).cast("int")
-                bits.append(((F.shiftright(d, j % 4).bitwiseAND(F.lit(1))) * 2 - 1).cast("long"))
-            return F.array(*bits)
-
-        return F.element_at(F.transform(F.array(F.md5(t)), _slots), 1)
-
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), num_bits),
-        lambda acc, t: F.zip_with(acc, _bits_pm1(t), lambda a, v: a + v),
-    )
-    packed = F.lit(0).cast("long")
-    for b in range(num_bits):
-        packed = packed + F.when(
-            F.element_at(votes, b + 1) > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-    return packed
+    return F.expr(f"transform(array({votes}), v -> CAST({packed} AS BIGINT))[0]")
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -564,12 +429,11 @@ def simhash_near_duplicates(
     distance within blocks. family='md5' (with num_bits<=32) is the
     oracle configuration — every step (md5 bit votes, prefix block,
     bit_count Hamming) replays in DuckDB SQL."""
-    sig = simhash(text_col, num_bits) if family == "xxhash64" else simhash_md5(text_col, num_bits)
-    sigs = df.select(F.col(id_col).alias("__id"), sig.alias("__sim"))
+    sigs = df.select(F.col(id_col).alias("__id"), simhash(text_col, num_bits, family).alias("__sim"))
     sigs = sigs.withColumn("__block", F.shiftrightunsigned(F.col("__sim"), num_bits - prefix_bits))
     # the self-join reads sigs twice; persisting runs the vote fold
-    # once per row instead of once per side (the minhash cache_base
-    # precedent — bench harnesses clear the cache between samples)
+    # once per row instead of once per side (as minhash_lsh_pairs
+    # persists its base — bench harnesses clear the cache between samples)
     sigs = sigs.persist()
     l, r = sigs.alias("l"), sigs.alias("r")
     return (
@@ -793,8 +657,6 @@ def embedding_near_dups(
     n_bands: int = 8,
     planes_per_band: int = 4,
     seed: int = 42,
-    use_arrow: bool | None = None,
-    cache_base: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded hyperplane LSH:
       sign-bit bucket per band -> per-(band, bucket) self-join ->
@@ -816,21 +678,18 @@ def embedding_near_dups(
     literals cost ~13 s/run of driver-side analysis at 500 rows), and
     per ROW the interpreted higher-order folds pay ~n_planes x dim
     lambda evaluations where the Arrow path is one record-batch BLAS
-    matmul. use_arrow=False forces the pure-expression plan (no Python
-    — the DuckDB-oracle configuration, test-asserted equal to Arrow).
+    matmul. Below the crossover the plan is pure expressions (no
+    Python — the DuckDB-oracle configuration, test-asserted equal to
+    Arrow).
 
-    cache_base persists the (id, band, bucket) keying: ReuseExchange
-    does NOT canonicalize across the Python-UDF self-join, so without
-    it the bucket computation runs once per join side (measured 2x
-    ArrowEvalPython[_buckets] in the plan). The persisted keying is
-    3 longs x n_bands per row; at warehouse scale write it to a table
-    instead (the build_minhash_base precedent) and set
-    cache_base=False."""
+    The expression path persists the (id, band, bucket) keying, which
+    its self-join reads once per side. The persisted keying is 3 longs
+    x n_bands per row; at warehouse scale it belongs in a table (the
+    build_minhash_base precedent)."""
     from xsd2json_spark.functions.similarity import cosine
 
     planes = band_planes(dim, n_bands, planes_per_band, seed)
-    if use_arrow is None:
-        use_arrow = n_bands * planes_per_band * dim > EMB_ARROW_THRESHOLD
+    use_arrow = n_bands * planes_per_band * dim > EMB_ARROW_THRESHOLD
     if use_arrow:
         # Scale path (round 6): the old shape self-joined the (id, band,
         # bucket) keying and verified every colliding pair — with coarse
@@ -862,9 +721,7 @@ def embedding_near_dups(
         bands = F.expr(_sql_band_structs(f"`{vec_col}`", planes))
         keyed = df.select(F.col(id_col).alias("__id"), F.explode(bands).alias("__bb")).select(
             "__id", F.col("__bb.band").alias("__band"), F.col("__bb.bucket").alias("__bucket")
-        )
-        if cache_base:
-            keyed = keyed.persist()
+        ).persist()
         left, right = keyed.alias("l"), keyed.alias("r")
         cand = (
             left.join(

@@ -11,7 +11,7 @@ split assignment never changes as the corpus grows. The standard trick:
 hash the key into a fixed-range bucket and compare against fraction
 boundaries.
 
-Two hash families, same pattern as MinHash (`dedup.minhash_hash_family`):
+Two hash families, same pattern as MinHash (`dedup.minhash_signature`):
 - family='xxhash64' — one JVM hash, the production path;
 - family='md5' — md5 is the one hash Spark and DuckDB share, which
   makes sample membership and split counts exactly SQL-replayable.

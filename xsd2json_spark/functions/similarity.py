@@ -69,8 +69,9 @@ def _norm_sql(vec_sql: str) -> str:
 
 
 def cosine_lit(vec_col: str, query_vec: Sequence[float]) -> Column:
-    """cosine(col, literal query vector) via the one-parse SQL fast
-    path; expression-identical to cosine(F.col(vec_col), _lit_vec(q))."""
+    """cosine(col, literal query vector) as one SQL parse — the one
+    cosine-against-a-literal form (top-k scoring and every re-rank).
+    Expression-identical to cosine(F.col(vec_col), _lit_vec(q))."""
     v = f"`{vec_col}`"
     nq = _norm_sql(_lit_sql(query_vec))  # constant-folded at plan time
     return F.expr(
@@ -113,23 +114,18 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket(vec_col, planes: np.ndarray) -> Column:
-    """Sign-bit bucket id: bit j = 1 iff vec . plane_j > 0. Pass a
-    column NAME (str) for the one-parse F.expr fast path (same fold
-    dots, no py4j literal tree)."""
-    if isinstance(vec_col, str):
-        v = f"`{vec_col}`"
-        terms = "CAST(0 AS BIGINT)"
-        for j, plane in enumerate(planes):
-            terms += (
-                f" + (CASE WHEN {_fold_dot_sql(v, plane)} > 0.0D "
-                f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            )
-        return F.expr(terms)
-    bucket = F.lit(0).cast("long")
+def lsh_bucket(vec_col: str, planes: np.ndarray) -> Column:
+    """Sign-bit bucket id of the vector column ``vec_col``: bit j = 1
+    iff vec . plane_j > 0, as one F.expr parse of the fold dots (no
+    py4j literal tree)."""
+    v = f"`{vec_col}`"
+    terms = "CAST(0 AS BIGINT)"
     for j, plane in enumerate(planes):
-        bucket = bucket + F.when(dot(vec_col, _lit_vec(plane)) > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
+        terms += (
+            f" + (CASE WHEN {_fold_dot_sql(v, plane)} > 0.0D "
+            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        )
+    return F.expr(terms)
 
 
 def lsh_probe_set(query_vec: Sequence[float], planes: np.ndarray, multi_probe: int = 1) -> "set[int]":
@@ -544,10 +540,9 @@ def pq_topk_rerank(
     corpus; this recovers exact-metric ordering at the top while the
     scan stays compressed-domain."""
     short = pq_topk(codes_df, query_vec, codebooks, k=rerank, id_col=id_col, code_col=code_col)
-    qv = _lit_vec(query_vec)
     return (
         df.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-        .select(F.col(id_col), cosine(F.col(vec_col), qv).alias("score"))
+        .select(F.col(id_col), cosine_lit(vec_col, query_vec).alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col))
         .limit(k)
     )
@@ -676,11 +671,10 @@ def ivfpq_topk(
         return short.limit(k)
     if not meta.get("keep_vectors"):
         raise ValueError("rerank needs keep_vectors=True at index build")
-    qv = _lit_vec(query_vec)
     return (
         scan.filter(F.col("list_id").isin(probes))
         .join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), qv), 6).alias("score"))
+        .select(F.col(id_col), F.round(cosine_lit(vec_col, query_vec), 6).alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col))
         .limit(k)
     )

@@ -143,19 +143,20 @@ def bpe_encode_word_bytes(word: str, ranks: dict) -> list:
     return _greedy_merge(list(_byte_symbols(word)), ranks)
 
 
-def bpe_tokens(text_col: Column, merges: list, lowercase: bool = True) -> Column:
-    """array<string> of BPE tokens per document, via an Arrow-batched
-    pandas_udf. The rank table rides in the closure; per-worker
-    lru_cache makes repeated words (the Zipfian bulk) dictionary hits."""
+def _bpe_udf(text_col: Column, merges: list, lowercase: bool, encode_word, return_type: str) -> Column:
+    """The Arrow-batched encode loop shared by both BPE variants:
+    ``encode_word(word, ranks)`` maps one word to its tokens. The rank
+    table rides in the closure; per-worker lru_cache makes repeated
+    words (the Zipfian bulk) dictionary hits."""
     from pyspark.sql.functions import pandas_udf
 
     ranks = {tuple(m): i for i, m in enumerate(merges)}
 
-    @pandas_udf("array<string>")
+    @pandas_udf(return_type)
     def _encode(s: pd.Series) -> pd.Series:
         @lru_cache(maxsize=65536)
         def enc(word: str) -> tuple:
-            return tuple(bpe_encode_word(word, ranks))
+            return tuple(encode_word(word, ranks))
 
         out = []
         for text in s:
@@ -170,6 +171,12 @@ def bpe_tokens(text_col: Column, merges: list, lowercase: bool = True) -> Column
         return pd.Series(out)
 
     return _encode(text_col)
+
+
+def bpe_tokens(text_col: Column, merges: list, lowercase: bool = True) -> Column:
+    """array<string> of BPE tokens per document, via an Arrow-batched
+    pandas_udf (one Python pass per record batch)."""
+    return _bpe_udf(text_col, merges, lowercase, bpe_encode_word, "array<string>")
 
 
 def bpe_token_count(text_col: Column, merges: list, lowercase: bool = True) -> Column:
@@ -192,27 +199,5 @@ def bpe_tokens_bytes(text_col: Column, merges: list, lowercase: bool = True) -> 
     raw byte strings — a multi-byte UTF-8 character may be split across
     tokens mid-merge, which is exactly GPT-2's representation; join the
     word's tokens to recover its UTF-8 bytes losslessly). Same
-    Arrow-batch + per-worker lru_cache shape as bpe_tokens."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {tuple(m): i for i, m in enumerate(merges)}
-
-    @pandas_udf("array<binary>")
-    def _encode(s: pd.Series) -> pd.Series:
-        @lru_cache(maxsize=65536)
-        def enc(word: str) -> tuple:
-            return tuple(bpe_encode_word_bytes(word, ranks))
-
-        out = []
-        for text in s:
-            if text is None:
-                out.append([])
-                continue
-            t = text.lower() if lowercase else text
-            toks = []
-            for w in _ws_split(t):
-                toks.extend(enc(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    return _encode(text_col)
+    Arrow-batch loop as bpe_tokens."""
+    return _bpe_udf(text_col, merges, lowercase, bpe_encode_word_bytes, "array<binary>")
