@@ -16,7 +16,7 @@ merge sequence, deterministic codec); where a SQL-replayable sibling
 exists it IS oracle-checked end-to-end (doc_minhash_dups,
 doc_simhash_pairs_md5), so the pipeline logic itself is hash-verified.
 The drift verdicts (chi2/PSI) are fully oracle-checked since round 4 —
-pass/fail evaluates in-plan against a broadcast critical-value table
+pass/fail evaluates in-plan against a literal critical-value table
 that DuckDB replays as literals; only the p-value CONVERSION (chi2_sf,
 ks_pvalue) stays a driver-side utility, scipy-pinned in tests.
 """
@@ -717,7 +717,7 @@ def q_cv_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end chi-square drift VERDICT fully in-plan via
     drift_verdicts_over_counts — observed counts, expected counts, the
     Pearson sum, and pass/fail (statistic <= chi2_crit(dof, alpha),
-    critical values broadcast as a tiny dof-indexed table) are all
+    critical values a tiny literal dof-indexed table) are all
     distributed; DuckDB replays the crit table as VALUES literals.
     Scenarios: self (statistic 0 => passes) and an en->zh shift (large
     => fails)."""
@@ -2113,7 +2113,7 @@ def _ivfpq_oracle() -> str:
 def _chi2_crit_values(alpha: float = 0.01) -> str:
     """The chi2-critical-value table as DuckDB VALUES literals — the
     exact same pure-python chi2_crit doubles drift_verdicts_over_counts
-    broadcasts Spark-side, so the in-plan pass/fail verdict replays
+    inlines Spark-side, so the in-plan pass/fail verdict replays
     bit-identically (repr round-trips doubles exactly; statistics sit
     orders of magnitude away from the criticals, so no boundary risk).
     dof 1..128 covers every oracle query's dof."""
@@ -2124,7 +2124,7 @@ def _chi2_crit_values(alpha: float = 0.01) -> str:
 
 def _drift_verdict_oracle() -> str:
     """DuckDB replay of q_cv_drift_chi2: spine-joined Pearson statistic
-    (same shape as cv_drift_chi2_stat) + the broadcast critical-value
+    (same shape as cv_drift_chi2_stat) + the critical-value
     verdict. The en->zh shift moves mass OFF the baseline spine, so the
     novel category contributes via n only — matching the map-lookup
     semantics of drift_verdicts_over_counts."""

@@ -198,3 +198,20 @@ def test_max_fail_ratio_spec_validation():
     with pytest.raises(SpecError, match="outside"):
         spec_from_dict({"name": "t", "constraints": [
             {"kind": "not_null", "id": "nn", "column": "a", "max_fail_ratio": 1.0}]})
+
+
+def test_quantile_approx_passes_through_loader():
+    """A quantile document's approx is three-valued like Quantile.approx:
+    omitted or null is auto-dispatch (None), true/false pin the sketch
+    or the exact path, anything else (1, "yes") is refused."""
+    def approx_of(**extra):
+        doc = {"kind": "quantile", "id": "q", "column": "x", "p": 0.9, "max": 1.0, **extra}
+        return spec_from_dict({"name": "t", "constraints": [doc]}).constraints[0].approx
+
+    assert approx_of() is None
+    assert approx_of(approx=None) is None
+    assert approx_of(approx=True) is True
+    assert approx_of(approx=False) is False
+    for bad in (1, 0, "yes"):
+        with pytest.raises(SpecError, match="quantile q: approx"):
+            approx_of(approx=bad)

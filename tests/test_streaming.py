@@ -336,3 +336,59 @@ def test_stream_ks_drift_bins(spark, tmp_path):
     want = max(abs((later <= q).mean() - e) for q, e in zip(baseline["grid"], baseline["ecdf"]))
     assert math.isclose(rows[True]["d_statistic"], want, rel_tol=1e-9)
     assert rows[True]["n_cur"] == len(later)
+
+
+def test_stream_ks_drift_per_group(spark, tmp_path):
+    """Streaming per-group KS drift: the per-group bin state per window
+    read by ks_verdicts_over_bins(group_by=...), each group against its
+    own baseline grid. Only the (later window, g2) cell drifts; a group
+    the baseline lacks (g3) fails in the window it shows up in, and a
+    baseline group with no rows in a window (g2 in the first) fails
+    there, its group column NULL and named by group_key."""
+    import numpy as np
+
+    from xsd2json_spark.engine.drift import ks_verdicts_over_bins, make_numeric_baseline
+    from xsd2json_spark.spec.constraints import Drift
+    from xsd2json_spark.streaming.validate_stream import stream_bin_counts
+
+    t0 = 1_700_000_000
+    base = spark.range(4000).select(
+        F.when(F.col("id") % 2 == 0, "g1").otherwise("g2").alias("g"),
+        (F.col("id") % 100).cast("double").alias("x"),
+    )
+    later = F.lit(t0 + 600) + F.col("id")
+    rows = (
+        # first window: g1 only; later window: g1 as baselined, g2 shifted, plus g3
+        base.filter("g = 'g1'").withColumn("ts", F.timestamp_seconds(F.lit(t0) + F.col("x")))
+        .unionByName(base.withColumn("ts", F.timestamp_seconds(F.lit(t0 + 600) + F.col("x")))
+                     .withColumn("x", F.when(F.col("g") == "g2", F.col("x") + 50.0).otherwise(F.col("x"))))
+        .unionByName(spark.range(30).select(F.lit("g3").alias("g"), F.col("id").cast("double").alias("x"),
+                                            F.timestamp_seconds(later).alias("ts")))
+    )
+    src = str(tmp_path / "ks_by_src")
+    rows.write.parquet(src)
+
+    baseline = make_numeric_baseline(base, "x", group_by=["g"])
+    c = Drift(id="ksg", column="x", test="ks", baseline="b", alpha=0.01, group_by=["g"])
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    counts = stream_bin_counts(stream, c, baseline, time_col="ts", window="5 minutes", watermark="10 minutes")
+    q = (
+        counts.writeStream.format("memory").queryName("ks_by_bins")
+        .outputMode("complete").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+
+    verd = ks_verdicts_over_bins(
+        spark.table("ks_by_bins"), baseline, alpha=0.01, group_by=["g"]
+    ).withColumn("ws", F.unix_timestamp(F.col("window.start")))
+    got = {(r["ws"] >= t0 + 300, r["group_key"]): r for r in verd.collect()}
+    assert {k: r["passed"] for k, r in got.items()} == {
+        (False, "g1"): True, (False, "g2"): False,
+        (True, "g1"): True, (True, "g2"): False, (True, "g3"): False,
+    }
+    # the drifted cell's D equals the numpy oracle against g2's own grid
+    g2 = baseline["groups"]["g2"]
+    v = np.array([r["x"] for r in rows.filter("g = 'g2'").collect()])
+    want = max(abs((v <= q).mean() - e) for q, e in zip(g2["grid"], g2["ecdf"]))
+    assert got[(True, "g2")]["d_statistic"] == want and got[(True, "g2")]["n_cur"] == len(v)
+    assert got[(False, "g2")]["n_cur"] is None and got[(False, "g2")]["g"] is None

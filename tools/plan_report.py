@@ -13,9 +13,9 @@ Usage: python tools/plan_report.py           # writes PLANS.md
 run (verdicts / violations / stats) of bench.FILES_SPEC over
 files_table(n_rows=2000) under EngineConfig(), EngineConfig(exact=True)
 and EngineConfig(fused=True), then of incremental_verdicts over the
-same spec, with expression ids (#12, #34L) normalised to '#'. Run it on
-two checkouts and diff the outputs to show a refactor left the plans
-unchanged.
+same spec, with expression ids (#12, #34L) normalised to '#' and
+lambda variables (x_3) to 'x_'. Run it on two checkouts and diff the
+outputs to show a refactor left the plans unchanged.
 
 --drift prints, the same way, the optimized plans of the in-plan drift
 queries (DRIFT_QUERIES) over SF_DIR; --dedup those of the dedup, ANN
@@ -86,6 +86,9 @@ DRIFT_QUERIES = [
     "cv_drift_chi2_stat",
     "cv_drift_chi2_by_stat",
     "cv_drift_psi_stat",
+    "cv_drift_ks",
+    "cv_drift_ks_stat",
+    "cv_drift_ks_by_stat",
 ]
 
 DEDUP_QUERIES = [
@@ -153,7 +156,10 @@ def audit(plan: str) -> list:
 
 
 def _plan(df) -> str:
-    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+    # PySpark numbers lambda variables (x_3) from a process-wide counter,
+    # so they depend on what ran before; normalised like expression ids
+    plan = re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+    return re.sub(r"(lambda [a-z]+)_\d+", r"\1_", plan)
 
 
 def _plan_session():

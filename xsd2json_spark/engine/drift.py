@@ -25,21 +25,25 @@ Scale design: every drift statistic reads the constraint's count
 state (``incremental.state_of``), ONE aggregation whose size is
 bounded by the categories or grid points, never the rows:
 
-- chi2: groupBy(group..., __cat).count(); the Pearson statistic is
-  computed driver-side (O(#categories)) in ``chi2_from_counts``.
+- chi2: the state is groupBy(group..., __cat).count();
 - ks: the baseline stores a ~199-point value grid with its ECDF, per
   group when grouped; the state is groupBy(group..., __bin).count(),
   __bin = the number of grid points strictly below the value (at most
   grid+1 counters per group, no sort). A per-group state finds each
   row's grid with a broadcast left join on ``group_key_col``. The ECDF
-  at grid point i is (rows with bin <= i) / n, read driver-side by
-  ``ecdf_at_grid`` (baselines and ``ks_from_bins``) and in-plan by
-  ``ks_verdicts_over_bins`` (queries, streams, any extra group key);
-  D = max_i |ecdf_cur(q_i) - ecdf_base(q_i)|. The grid bounds the
-  error of D by the grid resolution (1/(grid+1) per cell), which is
-  what you want at 10^12 rows — an exact KS needs a full sort.
+  at grid point i is (rows with bin <= i) / n, and D = max_i
+  |ecdf_cur(q_i) - ecdf_base(q_i)|. The grid bounds the error of D by
+  the grid resolution (1/(grid+1) per cell), which is what you want at
+  10^12 rows — an exact KS needs a full sort.
 
-The baselines are built from the same states, and the in-plan
+Each test has ONE verdict reader, in-plan: ``drift_verdicts_over_counts``
+(chi2) and ``ks_verdicts_over_bins`` (KS). The engine, incremental
+runs (through ``drift_verdicts``), streams and queries all read their
+states through them, so one rule decides every drift verdict: a
+group the baseline lacks, a baseline group with no current rows, an
+empty current table and a category the group's baseline lacks all
+fail. The baselines are built from the same states (``ecdf_at_grid``
+reads a baseline's own ECDF off its collected state), and the in-plan
 statistics (``chi2_statistic_df``, ``psi_statistic_df``) count their
 observed side with ``state_of`` too.
 """
@@ -52,7 +56,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from xsd2json_spark.engine.stats_math import chi2_sf, chi2_stat, ks_pvalue
+from xsd2json_spark.engine.stats_math import chi2_crit, ks_crit_lambda
 from xsd2json_spark.spec.constraints import Drift, SpecError
 
 DEFAULT_GRID_POINTS = 199
@@ -81,26 +85,34 @@ def group_key(values) -> str:
     return "|".join(esc(v) for v in values)
 
 
-def group_key_col(df: DataFrame, cols, cid: str) -> Column:
+def _as_str(df: DataFrame, name: str) -> Column:
+    """Column ``name`` of ``df`` spelt as Python's str() spells it for
+    string, integral and boolean values (a boolean is "True"/"False")."""
+    col = F.col(name)
+    if dict(df.dtypes).get(name) == "boolean":
+        return F.when(col, F.lit("True")).otherwise(F.lit("False"))
+    return col.cast("string")
+
+
+def group_key_col(df: DataFrame, cols, cid: Optional[str] = None) -> Column:
     """In-plan twin of ``group_key`` over ``df``'s columns ``cols``: the
     same string for the same values, so a row finds its group's entry
     in a baseline keyed by ``group_key``. Exact for string, integral
-    and boolean columns (a boolean is spelt "True"/"False", as Python's
-    str() spells it); any other type may print differently in Spark
-    and Python, so it raises SpecError naming drift ``cid``."""
+    and boolean columns; any other type may print differently in Spark
+    and Python, so it raises SpecError (naming drift ``cid`` if given)."""
     types = dict(df.dtypes)
 
     def esc(name):
         col, t = F.col(name), types.get(name)
         if t not in _KEYABLE_TYPES:
+            where = f"drift {cid}: " if cid else ""
             raise SpecError(
-                f"drift {cid}: group key {name!r} has type {t}; per-group KS "
+                f"{where}group key {name!r} has type {t}; per-group drift "
                 "needs a string, integral or boolean group key"
             )
-        if t == "boolean":
-            s = F.when(col, F.lit("True")).otherwise(F.lit("False"))
-        else:
-            s = F.replace(F.replace(col.cast("string"), F.lit("\\"), F.lit("\\\\")), F.lit("|"), F.lit("\\|"))
+        s = _as_str(df, name)
+        if t != "boolean":
+            s = F.replace(F.replace(s, F.lit("\\"), F.lit("\\\\")), F.lit("|"), F.lit("\\|"))
         return F.when(col.isNull(), F.lit("\\N")).otherwise(s)
 
     return F.concat_ws("|", *[esc(name) for name in cols])
@@ -282,61 +294,93 @@ def bin_index_expr(v, grid) -> Column:
     return F.size(F.filter(edges, lambda e: e < v))
 
 
+def _cells(state: DataFrame, key: Column, spine: DataFrame, group_by, window_cols) -> DataFrame:
+    """The one read of a drift count state (window_cols...,
+    group_by..., key, n): per (window, group) cell, the counts as a map
+    __m (key -> n), their total __n, the ``group_key`` __gk and the
+    payload of the group's ``spine`` row (__gk, payload...). Each group
+    of the state or the spine gets a cell in each window of the state
+    (no window: one, so an empty global state still gets its cell); a
+    cell without rows has __n NULL, a group without baseline NULL
+    payload. The spine joins by a union and the cells fold in ONE task:
+    the state is group-sized, so the fold adds no shuffle, and without
+    windows no broadcast either."""
+    gb, wc = list(group_by), list(window_cols)
+    gk = group_key_col(state, gb) if gb else F.lit("")
+    rows = state.select(*wc, *gb, gk.alias("__gk"), key.alias("__k"), "n")
+    if wc:
+        # the windows with rows; a bare distinct() would be rewritten
+        # into a second scan of the input, a sum reuses the state's shuffle
+        windows = rows.groupBy(*wc).agg(F.sum("n").alias("__w")).filter(F.col("__w") > 0)
+        spine = windows.select(*wc).crossJoin(spine)
+    payload = [x for x in spine.columns if x not in (*wc, *gb, "__gk")]
+    first = lambda x: F.first(x, ignorenulls=True).alias(x)  # noqa: E731
+    return (
+        rows.unionByName(spine, allowMissingColumns=True)
+        .coalesce(1)
+        .groupBy(*wc, "__gk")
+        .agg(
+            *[first(g) for g in gb],
+            F.map_from_entries(F.collect_list(F.when(F.col("__k").isNotNull(), F.struct("__k", "n")))).alias("__m"),
+            F.sum("n").alias("__n"),
+            *[first(x) for x in payload],
+        )
+    )
+
+
+def _key_cols(window_cols, group_by) -> list:
+    """A reader's key columns: windows, groups, ``group_key`` if grouped."""
+    return [*window_cols, *group_by, *([F.col("__gk").alias("group_key")] if group_by else [])]
+
+
 def ks_verdicts_over_bins(
     bins_df: DataFrame,
     baseline: dict,
     window_cols=("window",),
     alpha: float = 0.01,
+    group_by=(),
 ) -> DataFrame:
-    """Per-window KS drift verdicts as a STATELESS view over a
-    bin-count state — the in-plan reader of the KS state and the KS
-    sibling of drift_verdicts_over_counts. It folds each window's bins
-    into a map, evaluates the ECDF at every baseline grid point as a
-    cumulative map sum, takes D as a greatest() over the grid, and
-    passes iff D <= ks_crit_lambda(alpha) / (sqrt(ne) + 0.12 +
-    0.11/sqrt(ne)), ne = n_base*n_cur/(n_base+n_cur): the alpha part is
-    one driver-side constant, the sample-size part a pure expression of
-    the per-window n, so the rule replays in plain SQL (it is
-    ks_pvalue(D) >= alpha by monotonicity of the Kolmogorov series).
-    Entirely in-plan: no per-row Python, no driver-side stats. Because
-    the ECDF terms are integer ratios, D is bit-identical to
-    ``ecdf_at_grid``'s driver-side D and to a SQL replay.
+    """Per-(window, group) KS drift verdicts as a STATELESS view over a
+    bin-count state — the one KS verdict reader (engine, incremental
+    runs, streams, queries). D = max_i |ecdf_cur(q_i) - ecdf_base(q_i)|,
+    ecdf_cur(q_i) = (rows with bin <= i) / n_cur as a running sum; a
+    cell passes iff D <= ks_crit_lambda(alpha) / (sqrt(ne) + 0.12 +
+    0.11/sqrt(ne)), ne = n_base*n_cur/(n_base+n_cur) — ks_pvalue(D) >=
+    alpha by monotonicity, as one constant over a pure expression, so
+    the rule replays in plain SQL. ECDF terms are integer ratios, so D
+    is bit-identical to a SQL or numpy replay.
 
-    bins_df: (window_cols..., __bin, n) — ``state_of(df, c, baselines,
-    by=window_cols)``, a streaming sink of stream_bin_counts, or a
-    composed incremental state. Returns
-    (window_cols..., d_statistic, n_cur, passed)."""
-    from xsd2json_spark.engine.stats_math import ks_crit_lambda
+    ``baseline``: a numeric snapshot (``make_numeric_baseline``); with
+    ``group_by`` a per-group one, each group read against its own grid,
+    ECDF and n. A group the baseline lacks, a baseline group with no
+    current rows and an empty global state fail; a baseline with no
+    values raises SpecError. bins_df: (window_cols..., group_by...,
+    __bin, n) — ``state_of(df, c, baselines, by=window_cols)``, a sink
+    of stream_bin_counts, or a composed state. Returns (window_cols...,
+    group_by..., [group_key,] d_statistic, n_cur, passed)."""
+    gb, wc = list(group_by), list(window_cols)
+    groups = baseline["groups"] if gb else {"": baseline}
+    rows = [(k, [float(e) for e in g["ecdf"]], int(g["n"])) for k, g in groups.items() if g.get("ecdf") and g.get("n")]
+    if not rows:
+        raise SpecError("empty baseline")
+    spine = bins_df.sparkSession.createDataFrame(rows, "__gk string, __ecdf array<double>, __nb bigint")
+    cells = _cells(bins_df, F.col("__bin"), spine, gb, wc)
+    n_cur, n_base = F.col("__n"), F.col("__nb")
 
-    grid, base_ecdf, n_base = baseline["grid"], baseline["ecdf"], int(baseline["n"])
-    lam = ks_crit_lambda(alpha)
-    wc = list(window_cols)
-    per = (
-        bins_df.groupBy(*wc)
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("__bin", "n"))).alias("__m"),
-            F.sum("n").alias("n_cur"),
-        )
-    )
-    # ECDF at grid point i = (rows with bin <= i) / n_cur — a bounded
-    # fold over the ~grid-sized map, per grid point
-    def ecdf_at(i):
-        acc = F.aggregate(
-            F.map_entries("__m"),
-            F.lit(0).cast("long"),
-            lambda a, e: a + F.when(e.key <= F.lit(i), e.value).otherwise(F.lit(0)),
-        )
-        return acc.cast("double") / F.col("n_cur").cast("double")
+    def step(acc, e):
+        cum = acc["cum"] + F.coalesce(F.try_element_at(F.col("__m"), acc["i"]), F.lit(0).cast("long"))
+        diff = F.abs(cum.cast("double") / n_cur.cast("double") - e)
+        return F.struct((acc["i"] + 1).alias("i"), cum.alias("cum"), F.greatest(acc["d"], diff).alias("d"))
 
-    diffs = [F.abs(ecdf_at(i) - F.lit(float(e))) for i, e in enumerate(base_ecdf)]
-    d = F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
-    ne = (F.lit(float(n_base)) * F.col("n_cur")) / (F.lit(float(n_base)) + F.col("n_cur"))
-    d_crit = F.lit(lam) / (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne))
-    return per.select(
-        *wc,
+    start = F.struct(F.lit(0).alias("i"), F.lit(0).cast("long").alias("cum"), F.lit(0.0).alias("d"))
+    d = F.when(n_cur > 0, F.aggregate("__ecdf", start, step, lambda acc: acc["d"]))
+    ne = (n_base.cast("double") * n_cur) / (n_base + n_cur)
+    d_crit = F.lit(ks_crit_lambda(alpha)) / (F.sqrt(ne) + F.lit(0.12) + F.lit(0.11) / F.sqrt(ne))
+    return cells.select(
+        *_key_cols(wc, gb),
         d.alias("d_statistic"),
-        F.col("n_cur").cast("long").alias("n_cur"),
-        (d <= d_crit).alias("passed"),
+        n_cur.cast("long").alias("n_cur"),
+        F.coalesce(n_base.isNotNull() & (d <= d_crit), F.lit(False)).alias("passed"),
     )
 
 
@@ -356,67 +400,65 @@ def make_categorical_baseline_df(df: DataFrame, column: str, group_by=()) -> Dat
 def drift_verdicts_over_counts(
     counts_df: DataFrame,
     column: str,
-    baseline_df: DataFrame,
+    baseline,
     group_by=(),
     window_cols=("window",),
     alpha: float = 0.01,
 ) -> DataFrame:
     """Per-(window, group) chi-square drift verdicts as a STATELESS view
-    over a category-counter table — the streaming-drift shape: the
-    stateful part is just the watermarked counts aggregation
-    (streaming.stream_category_counts); this view joins those counters
-    against the baseline counts and evaluates pass/fail entirely
-    in-plan (statistic <= chi2_crit(dof, alpha), critical values
-    broadcast as a tiny dof-indexed table up to the baseline's largest
-    per-group category count — no per-row Python, no driver-side
-    stats).
+    over a category-counter table — the one chi2 verdict reader
+    (engine, incremental runs, streams, queries). The statistic sums
+    (o - e)^2 / e over the group's baseline categories, e = n * b /
+    b_total, dof = max(n_cats - 1, 1); a cell passes iff statistic <=
+    chi2_crit(dof, alpha), from a literal table up to the largest
+    per-group category count, and it holds no category its group's
+    baseline lacks. A group the baseline lacks, a baseline group with
+    no current rows and an empty global state fail.
 
-    counts_df: (window_cols..., group_by..., column, n) — a micro-batch
-    sink, a materialized counter table, or any batch equivalent.
-    Observed categories must be a subset of the baseline's per group
-    (same contract as chi2_statistic_df).
-    Returns (window_cols..., group_by..., statistic, dof, passed)."""
-    from xsd2json_spark.engine.stats_math import chi2_crit
+    counts_df: (window_cols..., group_by..., column, n) — a sink of
+    stream_category_counts, a (composed) ``state_of``, or any batch
+    equivalent. ``baseline``: a DataFrame of (group_by..., column, n)
+    rows or a categorical snapshot dict (``make_categorical_baseline``);
+    categories match as strings (str() spelling). A baseline with no
+    category raises SpecError (for a DataFrame one small job, for a
+    dict none). Returns (window_cols..., group_by..., [group_key,]
+    statistic, dof, passed)."""
+    gb, wc = list(group_by), list(window_cols)
+    if isinstance(baseline, DataFrame):
+        b = _baseline_counts(baseline, column, gb).groupBy(*gb, "__cat").agg(F.sum("__b").alias("__b"))
+        spine = b.groupBy(*gb).agg(
+            F.map_from_entries(F.collect_list(F.struct(_as_str(b, "__cat"), "__b"))).alias("__bm"),
+            F.sum("__b").alias("__bt"),
+        )
+        spine = spine.withColumn("__gk", group_key_col(spine, gb) if gb else F.lit(""))
+        max_cats = spine.agg(F.max(F.size("__bm"))).first()[0] or 0
+    else:
+        groups = baseline["groups"] if gb else {"": baseline["counts"]}
+        maps = {k: {str(cat): int(n) for cat, n in (m or {}).items() if n > 0} for k, m in groups.items()}
+        rows = [(k, m, sum(m.values())) for k, m in maps.items() if m]
+        max_cats = max((len(m) for _, m, _ in rows), default=0)
+        if max_cats:
+            spine = counts_df.sparkSession.createDataFrame(rows, "__gk string, __bm map<string,bigint>, __bt bigint")
+    if not max_cats:
+        raise SpecError("empty baseline")
+    cells = _cells(counts_df, _as_str(counts_df, column), spine, gb, wc)
+    n = F.col("__n")
 
-    gb = list(group_by)
-    wc = list(window_cols)
-    spark = counts_df.sparkSession
-    b = _baseline_counts(baseline_df, column, gb)
-    bt = b.groupBy(*gb).agg(F.sum("__b").alias("__bt")) if gb else b.agg(F.sum("__b").alias("__bt"))
-    bb = b.join(bt, gb) if gb else b.crossJoin(bt)
-    # ONE reference to the counter table: fold each (window, group)'s
-    # category counts into a map, then expand along the broadcast
-    # baseline spine (unobserved baseline categories read 0 from the
-    # map). A join-back onto the counts would be a streaming-sink
-    # self-join (conflicting attributes) and a second shuffle.
-    per = (
-        counts_df.select(*wc, *gb, F.col(column).alias("__cat"), F.col("n").alias("__o"))
-        .groupBy(*wc, *gb)
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("__cat", "__o"))).alias("__m"),
-            F.sum("__o").alias("__n"),
-        )
-    )
-    j = per.join(F.broadcast(bb), gb) if gb else per.crossJoin(F.broadcast(bb))
-    o = F.coalesce(F.col("__m")[F.col("__cat")], F.lit(0))
-    e = F.col("__n") * F.col("__b") / F.col("__bt")
-    agg = (
-        j.groupBy(*wc, *gb)
-        .agg(
-            F.sum((o - e) ** 2 / e).alias("statistic"),
-            F.count(F.lit(1)).alias("n_cats"),
-        )
-        .withColumn("dof", F.greatest(F.col("n_cats") - 1, F.lit(1)).cast("int"))
-        .drop("n_cats")
-    )
-    max_cats = b.groupBy(*gb).count().agg(F.max("count")).first()[0] or 0
-    crit = spark.createDataFrame(
-        [(d, chi2_crit(d, alpha)) for d in range(1, max(max_cats - 1, 1) + 1)], "dof int, __crit double"
-    )
-    return (
-        agg.join(F.broadcast(crit), "dof")
-        .withColumn("passed", F.col("statistic") <= F.col("__crit"))
-        .select(*wc, *gb, "statistic", "dof", "passed")
+    def term(acc, kv):
+        e = n.cast("double") * kv["value"] / F.col("__bt")
+        o = F.coalesce(F.try_element_at(F.col("__m"), kv["key"]), F.lit(0))
+        return acc + (o - e) ** 2 / e
+
+    statistic = F.when(n > 0, F.aggregate(F.map_entries("__bm"), F.lit(0.0), term))
+    dof = F.greatest(F.size("__bm") - 1, F.lit(1))
+    crit = F.array(*[F.lit(chi2_crit(k, alpha)) for k in range(1, max(max_cats - 1, 1) + 1)])
+    novel = F.exists(F.map_keys("__m"), lambda k: ~F.map_contains_key("__bm", k))
+    ok = F.col("__bm").isNotNull() & ~novel & (statistic <= F.try_element_at(crit, dof))
+    return cells.select(
+        *_key_cols(wc, gb),
+        statistic.alias("statistic"),
+        F.when(F.col("__bm").isNotNull(), dof).alias("dof"),
+        F.coalesce(ok, F.lit(False)).alias("passed"),
     )
 
 
@@ -426,47 +468,6 @@ def _rows_by_group(rows, group_by) -> dict:
     for r in rows:
         out.setdefault(group_key([r[g] for g in group_by]), []).append(r)
     return out
-
-
-def _read_state(state: DataFrame, c: Drift, whole: dict, groups: dict, test) -> "list[tuple]":
-    """[(group_key, stat, p), ...] of drift check ``c`` from its
-    collected count state; ``test`` maps (state rows, baseline entry)
-    to (stat, p). A global check gives one "ALL" row against ``whole``.
-    Per group, every group present in the state and in ``groups`` is
-    tested against its own entry; a group unseen by the baseline and a
-    baseline group with no current rows (a vanished population, the
-    classic drift signal) both fail with p = 0 instead of silently
-    producing no verdict."""
-    rows = state.collect()
-    if not c.group_by:
-        return [("ALL", *test(rows, whole))]
-    observed = _rows_by_group(rows, c.group_by)
-    return [
-        (key, *test(observed[key], groups[key]))
-        if key in observed and groups.get(key)
-        else (key, float("nan"), 0.0)
-        for key in sorted(set(observed) | set(groups))
-    ]
-
-
-def chi2_from_counts(counts: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
-    """Pearson chi-square from a category-count state
-    (``incremental.state_of``: (group..., __cat, n) rows, NULL
-    categories already excluded) — a fresh one on the full run, the
-    composed one on the incremental run. The collect is
-    category-cardinality-sized, never the table.
-
-    Returns [(group_key, stat, p), ...] (see ``_read_state``)."""
-
-    def test(rows, base_counts):
-        total = sum(base_counts.values())
-        if total == 0:
-            raise SpecError(f"drift {c.id}: empty baseline")
-        probs = {k: v / total for k, v in base_counts.items()}
-        stat, dof = chi2_stat({str(r["__cat"]): r["n"] for r in rows}, probs)
-        return stat, chi2_sf(stat, dof)
-
-    return _read_state(counts, c, baseline.get("counts"), baseline.get("groups"), test)
 
 
 def ecdf_at_grid(bins, grid_len: int) -> "tuple[list, int]":
@@ -482,22 +483,6 @@ def ecdf_at_grid(bins, grid_len: int) -> "tuple[list, int]":
     return [k / n for k in accumulate(per_bin.get(i, 0) for i in range(grid_len))], n
 
 
-def ks_from_bins(bins: DataFrame, c: Drift, baseline: dict) -> "list[tuple]":
-    """Two-sample KS from the constraint's bin-count state — a fresh
-    one on the full run, the composed one on the incremental run — as
-    [(group_key, d, p), ...], each group against its own grid (see
-    ``_read_state``)."""
-
-    def test(rows, base):
-        ecdf, n_cur = ecdf_at_grid(rows, len(base["grid"]))
-        if n_cur == 0:
-            raise SpecError(f"drift {c.id}: no current values")
-        d = max(abs(e - b) for e, b in zip(ecdf, base["ecdf"]))
-        return d, ks_pvalue(d, base["n"], n_cur)
-
-    return _read_state(bins, c, baseline, baseline.get("groups"), test)
-
-
 def baseline_of(c: Drift, baselines: dict) -> dict:
     baseline: Optional[dict] = baselines.get(c.baseline)
     if baseline is None:
@@ -509,15 +494,23 @@ def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=No
     """Verdict row tuples (partition_key, constraint_id,
     violation_count, evaluated_count, passed) of one Drift constraint:
     one "ALL" row, or with c.group_by one row per group present in the
-    data or the baseline.
+    data or the baseline, sorted by key.
 
-    Every test reads the constraint's count state: ``counts`` when
-    given (the incremental run's composed state; ``df`` is then
-    unused), else a fresh ``state_of(df, c, baselines)``."""
+    The constraint's count state — ``counts`` when given (the
+    incremental run's composed state; ``df`` is then unused), else a
+    fresh ``state_of(df, c, baselines)`` — is read by the test's one
+    in-plan reader and collected (group-sized)."""
     baseline = baseline_of(c, baselines)
     if counts is None:
         from xsd2json_spark.engine.incremental import state_of
 
         counts = state_of(df, c, baselines)
-    read = chi2_from_counts if c.test == "chi2" else ks_from_bins
-    return [(key, c.id, 0 if p >= c.alpha else 1, None, p >= c.alpha) for key, _stat, p in read(counts, c, baseline)]
+    try:
+        if c.test == "chi2":
+            v = drift_verdicts_over_counts(counts, "__cat", baseline, c.group_by, (), c.alpha)
+        else:
+            v = ks_verdicts_over_bins(counts, baseline, (), c.alpha, c.group_by)
+    except SpecError as e:
+        raise SpecError(f"drift {c.id}: {e}") from None
+    got = sorted((r["group_key"] if c.group_by else "ALL", r["passed"]) for r in v.collect())
+    return [(key, c.id, int(not ok), None, ok) for key, ok in got]

@@ -609,7 +609,7 @@ class ValidationEngine:
         from the (persisted) violations union with one groupBy, instead
         of one eager .count() job per constraint — at scale each extra
         action is another full scan. Eager exceptions: drift (its
-        statistic is a driver-side formula over tiny aggregates) and
+        group-sized verdict rows are collected) and
         the unique dup-hash set (counted so it can be broadcast — see
         unique_violations).
 

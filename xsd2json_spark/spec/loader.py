@@ -147,13 +147,16 @@ def _mk_inner(doc: Mapping, idx: int) -> Constraint:
             max=doc.get("max"),  # default maxOccurs unbounded at group level
         )
     if kind == "quantile":
+        approx = doc.get("approx")
+        if approx is not None and not isinstance(approx, bool):
+            raise SpecError(f"quantile {cid}: approx must be true, false or null (auto), not {approx!r}")
         return Quantile(
             id=cid,
             column=col,
             p=float(doc.get("p", 0.5)),
             min=doc.get("min"),
             max=doc.get("max"),
-            approx=bool(doc.get("approx", False)),
+            approx=approx,
             accuracy=int(doc.get("accuracy", 10000)),
             group_by=doc.get("group_by", ()),
             expr=doc.get("expr"),

@@ -100,14 +100,15 @@ def stream_bin_counts(
     window: str = "5 minutes",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Watermarked per-(window, bin) counts for a KS (numeric) Drift
-    constraint against the BASELINE's quantile grid — the KS count
-    state (engine.incremental.state_of) keyed by event-time window, and
-    the only stateful piece of streaming KS drift. Sink these counters
-    and derive verdicts statelessly with engine.drift.ks_verdicts_over_bins
-    (per-window D + in-plan pass rule): same chained-aggregation
-    avoidance, same restart story, and the counter table, summed over
-    windows, is the incremental KS state."""
+    """Watermarked per-(window, group, bin) counts for a KS (numeric)
+    Drift constraint against the BASELINE's quantile grid (per group,
+    the group's grid) — the KS count state (engine.incremental.state_of)
+    keyed by event-time window, and the only stateful piece of
+    streaming KS drift. Sink these counters and derive verdicts
+    statelessly with engine.drift.ks_verdicts_over_bins (group_by =
+    the constraint's; per-window D + in-plan pass rule): same
+    chained-aggregation avoidance, same restart story, and the counter
+    table, summed over windows, is the incremental KS state."""
     return state_of(_windowed(stream_df, time_col, window, watermark), c, {c.baseline: baseline}, by=["window"])
 
 
