@@ -311,11 +311,31 @@ def test_group_key_col_matches_group_key(spark):
         group_key_col(df, ["s", "d"], "ksd")
 
 
+def chi2_stat(observed: dict, expected_probs: dict) -> "tuple[float, int]":
+    """Oracle: Pearson chi-square of observed category counts against
+    expected probabilities. Categories present in either side are
+    included (missing observed -> 0; missing expected -> small epsilon
+    prob)."""
+    n = sum(observed.values())
+    if n == 0:
+        return 0.0, max(1, len(expected_probs) - 1)
+    cats = set(observed) | set(expected_probs)
+    total_p = sum(expected_probs.get(c, 0.0) for c in cats)
+    eps = 1e-9
+    stat = 0.0
+    for c in cats:
+        p = expected_probs.get(c, 0.0)
+        p = max(p / total_p if total_p > 0 else 0.0, eps)
+        e = n * p
+        o = observed.get(c, 0)
+        stat += (o - e) ** 2 / e
+    return stat, max(1, len(cats) - 1)
+
+
 def test_chi2_statistic_df_matches_driver_side(spark, files):
     """The fully in-plan statistic equals the driver-side chi2_stat
-    kernel on the same observed/baseline counts."""
+    oracle on the same observed/baseline counts."""
     from xsd2json_spark.engine.drift import chi2_statistic_df, make_categorical_baseline
-    from xsd2json_spark.engine.stats_math import chi2_stat
 
     base_counts = make_categorical_baseline(files, "lang")["counts"]
     base_df = files.sparkSession.createDataFrame(
@@ -708,6 +728,12 @@ def test_chi2_reader_dict_and_frame_baselines_agree(spark, matrix):
             assert rows(via_dict) == rows(via_df), (case, c.id)
 
 
+#: Spark jobs of the matrix spec's engine and incremental runs
+#: (test_engine_drift_check_jobs_are_bounded); 10 and 51 while each
+#: drift check collected its rows during the plan build
+ENGINE_JOBS, INCREMENTAL_JOBS = 7, 45
+
+
 def _jobs_in_group(spark, name, fn):
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
@@ -719,20 +745,26 @@ def _jobs_in_group(spark, name, fn):
 
 
 def test_engine_drift_check_jobs_are_bounded(spark, matrix):
-    """ValidationEngine.run reads each drift check with one collect of
-    its in-plan verdict rows: 2 Spark jobs measured on Spark 4.1 with
-    AQE (the state's shuffle stage and the result; the baseline joins
-    the state by a union and the fold runs in one task, so the reader
-    adds neither a shuffle nor a broadcast), plus the grid broadcast
-    of a per-group KS state. That is the job count of a plain collect
-    of the state."""
-    base, baselines, spec = matrix[:3]
-    bound = {"c": 2, "cg": 2, "k": 2, "kg": 3}
-    for c in spec.table_level():
-        one = Spec(name="one", key_columns=["id"], constraints=[c])
-        res = []
-        jobs = _jobs_in_group(
-            spark, f"drift-{c.id}", lambda: res.append(ValidationEngine(spark, one, baselines=baselines).run(base))
-        )
-        assert jobs <= bound[c.id], f"{jobs} Spark jobs for drift check {c.id}"
-        res[0].unpersist()
+    """Per-spec Spark job bounds for the matrix spec (not_null plus the
+    four drift checks) on the "shift" case over warm snapshots and
+    states, measured on Spark 4.1 with AQE at local[4]. Drift verdicts
+    stay in the plan, so building the engine's result runs no job.
+    ``ValidationEngine.run`` + ``verdicts.collect()`` and
+    ``incremental_verdicts(states=...)`` + ``collect()`` each stay at
+    the measured job count (ENGINE_JOBS, INCREMENTAL_JOBS)."""
+    from xsd2json_spark.engine.incremental import incremental_verdicts
+
+    base, baselines, spec, prev, states, _ = matrix
+    cur = _case_runs(spark, matrix, "shift")[0]
+    for df in [prev, *states.values()]:
+        df.count()
+    res = []
+    build = _jobs_in_group(spark, "drift-build", lambda: res.append(
+        ValidationEngine(spark, spec, baselines=baselines).run(cur)))
+    jobs = build + _jobs_in_group(spark, "drift-engine", res[0].verdicts.collect)
+    res[0].unpersist()
+    assert build == 0, f"{build} Spark jobs to build the engine's plan"
+    assert jobs <= ENGINE_JOBS, f"{jobs} Spark jobs to run the engine and collect its verdicts"
+    jobs = _jobs_in_group(spark, "drift-incremental", lambda: incremental_verdicts(
+        spark, spec, base, cur, prev, states=states, baselines=baselines).collect())
+    assert jobs <= INCREMENTAL_JOBS, f"{jobs} Spark jobs to collect the incremental verdicts"

@@ -746,7 +746,7 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
     else:
         full = [tuple(r) for r in eng.run(b).verdicts.filter(F.col("constraint_id") == cid)
                 .orderBy("partition_key").collect()]
-        assert full == sorted(drift_verdicts(None, c, baselines, counts=state_b))
+        assert full == sorted(map(tuple, drift_verdicts(None, c, baselines, counts=state_b).collect()))
         assert "\\N" in {r[0] for r in full}  # the NULL group gets its verdict
 
     # composed state == from-scratch state on B

@@ -41,7 +41,7 @@ def test_corpus_goldens(seed):
 
 
 def test_fixture_set_is_complete():
-    assert len(FIXTURES) == 16
+    assert len(FIXTURES) == 17
     for name in FIXTURES:
         assert os.path.exists(os.path.join(FIXTURE_DIR, name + ".xsd")), name
 

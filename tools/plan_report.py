@@ -13,9 +13,12 @@ Usage: python tools/plan_report.py           # writes PLANS.md
 run (verdicts / violations / stats) of bench.FILES_SPEC over
 files_table(n_rows=2000) under EngineConfig(), EngineConfig(exact=True)
 and EngineConfig(fused=True), then of incremental_verdicts over the
-same spec, with expression ids (#12, #34L) normalised to '#' and
-lambda variables (x_3) to 'x_'. Run it on two checkouts and diff the
-outputs to show a refactor left the plans unchanged.
+same spec, and last the verdicts plan of a four-drift-check spec over
+a synthetic frame and its baseline snapshots (drift_plans), with
+expression ids (#12, #34L) normalised to '#', lambda variables (x_3)
+to 'x_' and exchange ids (plan_id=7) to 'plan_id='. Run it on two
+checkouts and diff the outputs to show a refactor left the plans
+unchanged.
 
 --drift prints, the same way, the optimized plans of the in-plan drift
 queries (DRIFT_QUERIES) over SF_DIR; --dedup those of the dedup, ANN
@@ -156,9 +159,11 @@ def audit(plan: str) -> list:
 
 
 def _plan(df) -> str:
-    # PySpark numbers lambda variables (x_3) from a process-wide counter,
-    # so they depend on what ran before; normalised like expression ids
+    # PySpark numbers lambda variables (x_3) and Spark the exchanges of a
+    # cached plan (plan_id=7) from process-wide counters, so they depend
+    # on what ran before; normalised like expression ids
     plan = re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
     return re.sub(r"(lambda [a-z]+)_\d+", r"\1_", plan)
 
 
@@ -201,6 +206,40 @@ def engine_plans():
     cur = df.filter(F.abs(F.xxhash64("repo", "path", "commit")) % 31 != 0)
     print("=== incremental_verdicts")
     print(_plan(incremental_verdicts(spark, spec, df, cur, prev, dims=dims)))
+    drift_plans(spark)
+
+
+def drift_plans(spark):
+    """The engine's verdicts plan of a not_null + four-drift-check spec
+    (chi2 and KS, global and per group) over a 2,000-row synthetic
+    frame, read against baseline snapshots of that frame, with one
+    group shifted."""
+    from pyspark.sql import functions as F
+
+    from xsd2json_spark import spec_from_dict
+    from xsd2json_spark.engine import ValidationEngine
+    from xsd2json_spark.engine.drift import make_categorical_baseline, make_numeric_baseline
+
+    base = spark.createDataFrame(
+        [(i, "g%d" % (1 + i % 2), "x" if i % 5 < 3 else "y", float(i * 7 % 100)) for i in range(2000)],
+        "id long, g string, cat string, v double",
+    )
+    checks = [("c", "cat", "chi2", []), ("cg", "cat", "chi2", ["g"]), ("k", "v", "ks", []), ("kg", "v", "ks", ["g"])]
+    baselines = {
+        cid: (make_categorical_baseline if test == "chi2" else make_numeric_baseline)(base, col, group_by=gb)
+        for cid, col, test, gb in checks
+    }
+    spec = spec_from_dict({"name": "drift", "key_columns": ["id"], "constraints": [
+        {"kind": "not_null", "id": "nn", "column": "g"},
+        *({"kind": "drift", "id": cid, "column": col, "test": test, "baseline": cid, "group_by": gb}
+          for cid, col, test, gb in checks)]})
+    shifted = F.col("g") == "g2"
+    cur = base.withColumn("cat", F.when(shifted, F.lit("y")).otherwise(F.col("cat"))).withColumn(
+        "v", F.when(shifted, F.col("v") + 50.0).otherwise(F.col("v")))
+    res = ValidationEngine(spark, spec, baselines=baselines).run(cur)
+    print("=== drift verdicts")
+    print(_plan(res.verdicts))
+    res.unpersist()
 
 
 def main():

@@ -38,14 +38,18 @@ bounded by the categories or grid points, never the rows:
 
 Each test has ONE verdict reader, in-plan: ``drift_verdicts_over_counts``
 (chi2) and ``ks_verdicts_over_bins`` (KS). The engine, incremental
-runs (through ``drift_verdicts``), streams and queries all read their
-states through them, so one rule decides every drift verdict: a
-group the baseline lacks, a baseline group with no current rows, an
-empty current table and a category the group's baseline lacks all
-fail. The baselines are built from the same states (``ecdf_at_grid``
-reads a baseline's own ECDF off its collected state), and the in-plan
-statistics (``chi2_statistic_df``, ``psi_statistic_df``) count their
-observed side with ``state_of`` too.
+runs, streams and queries all read their states through them, so one
+rule decides every drift verdict: a group the baseline lacks, a
+baseline group with no current rows, an empty current table and a
+category the group's baseline lacks all fail. The engine and
+incremental runs reach them through ``drift_verdicts``, which shapes
+a reader's frame as verdict rows; they union it into their verdict
+table like every other table check's, so no drift verdict is
+collected while a plan is built. The baselines are built from the
+same states (``ecdf_at_grid`` reads a baseline's own ECDF off its
+collected state), and the in-plan statistics (``chi2_statistic_df``,
+``psi_statistic_df``) count their observed side with ``state_of``
+too.
 """
 
 from __future__ import annotations
@@ -490,16 +494,19 @@ def baseline_of(c: Drift, baselines: dict) -> dict:
     return baseline
 
 
-def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=None) -> "list[tuple]":
-    """Verdict row tuples (partition_key, constraint_id,
-    violation_count, evaluated_count, passed) of one Drift constraint:
-    one "ALL" row, or with c.group_by one row per group present in the
-    data or the baseline, sorted by key.
+def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=None) -> DataFrame:
+    """The verdict frame of one Drift constraint, in the engine's
+    verdict shape (partition_key, constraint_id, violation_count,
+    evaluated_count, passed): one "ALL" row, or with c.group_by one row
+    per group present in the data or the baseline, keyed by
+    ``group_key``. violation_count is (NOT passed)::long,
+    evaluated_count NULL.
 
     The constraint's count state — ``counts`` when given (the
     incremental run's composed state; ``df`` is then unused), else a
     fresh ``state_of(df, c, baselines)`` — is read by the test's one
-    in-plan reader and collected (group-sized)."""
+    in-plan reader. Lazy and group-sized: the caller unions it into its
+    verdict table like every other table check."""
     baseline = baseline_of(c, baselines)
     if counts is None:
         from xsd2json_spark.engine.incremental import state_of
@@ -512,5 +519,10 @@ def drift_verdicts(df: Optional[DataFrame], c: Drift, baselines: dict, counts=No
             v = ks_verdicts_over_bins(counts, baseline, (), c.alpha, c.group_by)
     except SpecError as e:
         raise SpecError(f"drift {c.id}: {e}") from None
-    got = sorted((r["group_key"] if c.group_by else "ALL", r["passed"]) for r in v.collect())
-    return [(key, c.id, int(not ok), None, ok) for key, ok in got]
+    return v.select(
+        (F.col("group_key") if c.group_by else F.lit("ALL")).alias("partition_key"),
+        F.lit(c.id).alias("constraint_id"),
+        (~F.col("passed")).cast("long").alias("violation_count"),
+        F.lit(None).cast("long").alias("evaluated_count"),
+        "passed",
+    )

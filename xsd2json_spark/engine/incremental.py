@@ -39,9 +39,10 @@ What is and is not incrementally composable:
   Verdicts read off the counts with the engine's own readers
   (``unique_violations_from_counts``, ``fk_dangling``,
   ``cardinality_violations_from_counts`` in engine/validate.py;
-  ``drift_verdicts`` in engine/drift.py). ``build_states`` builds every
-  state of a spec; pass them back as ``incremental_verdicts(states=)``
-  and the verdict table touches the snapshots only for the delta scan.
+  ``drift_verdicts`` in engine/drift.py), each a lazy frame unioned
+  into the verdict table. ``build_states`` builds every state of a
+  spec; pass them back as ``incremental_verdicts(states=)`` and the
+  verdict table touches the snapshots only for the delta scan.
 - TABLE-LEVEL quantile and functional dependency: no state (order
   statistics and dependent sets don't subtract); recomputed on the
   current snapshot.
@@ -65,7 +66,6 @@ from pyspark.sql.window import Window
 from xsd2json_spark.engine.drift import drift_verdicts
 from xsd2json_spark.engine.validate import (
     VERDICT_COLUMNS,
-    VERDICT_SCHEMA,
     ValidationEngine,
     cardinality_violations_from_counts,
     fk_dangling,
@@ -250,7 +250,7 @@ def _state_verdicts(spark: SparkSession, spec: Spec, c, counts: DataFrame, dims:
     run counts (duplicated keys, dangling fact ROWS = sum(n), groups out
     of bounds)."""
     if isinstance(c, Drift):
-        return spark.createDataFrame(drift_verdicts(None, c, baselines, counts=counts), schema=VERDICT_SCHEMA)
+        return drift_verdicts(None, c, baselines, counts=counts)
     if isinstance(c, Unique):
         n = unique_violations_from_counts(counts, c).agg(F.count(F.lit(1)).alias("__n"))
     elif isinstance(c, ForeignKey):
@@ -307,11 +307,15 @@ def incremental_verdicts(
     verdicts = incremental_row_verdicts(engine, added, removed, prev_verdicts)
     table_cs = []
     for c in spec.table_level():
-        if c.id not in states:
+        if c.id in states:
+            counts = compose_state(states[c.id], added, removed, c, baselines)
+            verdicts = verdicts.unionByName(_state_verdicts(spark, spec, c, counts, dims, baselines))
+        elif isinstance(c, Drift):
+            # the engine's own drift read, without the engine's persisted
+            # union: nothing could release it behind the lazy result
+            verdicts = verdicts.unionByName(drift_verdicts(cur_df, c, baselines))
+        else:
             table_cs.append(c)
-            continue
-        counts = compose_state(states[c.id], added, removed, c, baselines)
-        verdicts = verdicts.unionByName(_state_verdicts(spark, spec, c, counts, dims, baselines))
     if table_cs:
         table_spec = replace(spec, constraints=tuple(table_cs), watched_columns=())
         res = ValidationEngine(spark, table_spec, dims=dims, baselines=baselines, config=config).run(cur_df)

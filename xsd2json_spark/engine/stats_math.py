@@ -77,26 +77,6 @@ def chi2_sf(stat: float, dof: int) -> float:
     return gammainc_q(dof / 2.0, stat / 2.0)
 
 
-def chi2_stat(observed: dict, expected_probs: dict) -> "tuple[float, int]":
-    """Pearson chi-square of observed category counts against expected
-    probabilities. Categories present in either side are included
-    (missing observed -> 0; missing expected -> small epsilon prob)."""
-    n = sum(observed.values())
-    if n == 0:
-        return 0.0, max(1, len(expected_probs) - 1)
-    cats = set(observed) | set(expected_probs)
-    total_p = sum(expected_probs.get(c, 0.0) for c in cats)
-    eps = 1e-9
-    stat = 0.0
-    for c in cats:
-        p = expected_probs.get(c, 0.0)
-        p = max(p / total_p if total_p > 0 else 0.0, eps)
-        e = n * p
-        o = observed.get(c, 0)
-        stat += (o - e) ** 2 / e
-    return stat, max(1, len(cats) - 1)
-
-
 def chi2_crit(dof: int, alpha: float) -> float:
     """Critical value c with P[Chi2(dof) >= c] = alpha, by bisection on
     chi2_sf. Lets pass/fail be evaluated IN-PLAN as statistic <= crit
@@ -118,13 +98,9 @@ def chi2_crit(dof: int, alpha: float) -> float:
     return (lo + hi) / 2.0
 
 
-def ks_pvalue(d: float, n1: float, n2: float) -> float:
-    """Asymptotic two-sample KS p-value for statistic d with sample
-    sizes n1, n2 (Smirnov)."""
-    if d <= 0:
-        return 1.0
-    ne = n1 * n2 / (n1 + n2)
-    lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
+def _kolmogorov_q(lam: float) -> float:
+    """Q_KS(lambda) = 2 * sum_{j>=1} (-1)^{j-1} exp(-2 j^2 lambda^2),
+    clipped to [0, 1] — the one Kolmogorov series."""
     total = 0.0
     for j in range(1, 101):
         term = 2.0 * ((-1.0) ** (j - 1)) * math.exp(-2.0 * j * j * lam * lam)
@@ -134,10 +110,18 @@ def ks_pvalue(d: float, n1: float, n2: float) -> float:
     return min(max(total, 0.0), 1.0)
 
 
+def ks_pvalue(d: float, n1: float, n2: float) -> float:
+    """Asymptotic two-sample KS p-value for statistic d with sample
+    sizes n1, n2 (Smirnov)."""
+    if d <= 0:
+        return 1.0
+    ne = n1 * n2 / (n1 + n2)
+    return _kolmogorov_q((math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d)
+
+
 def ks_crit_lambda(alpha: float) -> float:
     """Critical lambda with Q_KS(lambda) = alpha, by bisection on the
-    Kolmogorov series (the same series ks_pvalue sums). Since
-    ks_pvalue(d, n1, n2) = Q_KS(lam(d)) with
+    Kolmogorov series. Since ks_pvalue(d, n1, n2) = Q_KS(lam(d)) with
     lam(d) = (sqrt(ne) + 0.12 + 0.11/sqrt(ne)) * d monotone in d, the
     pass rule p >= alpha becomes d <= ks_crit_lambda(alpha) /
     (sqrt(ne) + 0.12 + 0.11/sqrt(ne)) — an alpha-only CONSTANT over a
@@ -145,20 +129,10 @@ def ks_crit_lambda(alpha: float) -> float:
     in-plan like the chi2 one (chi2_crit)."""
     if not (0.0 < alpha < 1.0):
         raise ValueError("ks_crit_lambda: alpha must be in (0, 1)")
-
-    def q(lam: float) -> float:
-        total = 0.0
-        for j in range(1, 101):
-            term = 2.0 * ((-1.0) ** (j - 1)) * math.exp(-2.0 * j * j * lam * lam)
-            total += term
-            if abs(term) < 1e-12:
-                break
-        return min(max(total, 0.0), 1.0)
-
     lo, hi = 1e-6, 5.0
     for _ in range(200):
         mid = (lo + hi) / 2.0
-        if q(mid) > alpha:
+        if _kolmogorov_q(mid) > alpha:
             lo = mid
         else:
             hi = mid

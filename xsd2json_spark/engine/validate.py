@@ -30,8 +30,8 @@ Plan shape (idiomatic, Catalyst-friendly):
 - VERDICTS: one rule (``verdict_passed``) turns every
   (constraint_id, violation_count, evaluated_count) row into ``passed``.
 
-Scale notes: no collect() in any data path (only of per-constraint
-verdict rows, which are O(#constraints x #partitions)); every join side
+Scale notes: no collect() in any data path (drift verdicts stay in
+the plan: group-sized reader frames, unioned); every join side
 that is provably small is broadcast; uniqueness shuffles key hashes, and
 Spark's partial aggregation combines hot keys map-side before the shuffle.
 """
@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass
+from functools import reduce
 from typing import Dict, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -608,10 +609,10 @@ class ValidationEngine:
         """Lazy where possible: table-level verdict counts are DERIVED
         from the (persisted) violations union with one groupBy, instead
         of one eager .count() job per constraint — at scale each extra
-        action is another full scan. Eager exceptions: drift (its
-        group-sized verdict rows are collected) and
-        the unique dup-hash set (counted so it can be broadcast — see
-        unique_violations).
+        action is another full scan. Drift verdicts are each check's
+        in-plan reader frame, unioned and persisted (group-sized) like
+        the violations. Eager exception: the unique dup-hash set
+        (counted so it can be broadcast — see unique_violations).
 
         The row-level plan reads the raw frame (two-pass: one scan for
         the aggregation, one for the violation rows) unless
@@ -649,7 +650,7 @@ class ValidationEngine:
         verdicts, stats = self._verdicts_stats_from_agg(agg)
         all_viol = [row_viol]
         table_ids = []
-        drift_rows = []
+        drifts = []
 
         for c in self.spec.table_level():
             if isinstance(c, Unique):
@@ -667,16 +668,14 @@ class ValidationEngine:
                 # the columns it names.
                 v = self.fd_violations(raw_df, c)
             elif isinstance(c, Drift):
-                drift_rows.extend(drift_verdicts(raw_df, c, self.baselines))
+                drifts.append(drift_verdicts(raw_df, c, self.baselines))
                 continue
             else:  # pragma: no cover
                 continue
             table_ids.append(c.id)
             all_viol.append(self._conform_violations(v, keys))
 
-        violations = all_viol[0]
-        for v in all_viol[1:]:
-            violations = violations.unionByName(v)
+        violations = reduce(DataFrame.unionByName, all_viol)
         if table_ids:
             violations = violations.persist()  # computed once, reused by verdicts + consumers
             cached.append(violations)
@@ -695,8 +694,10 @@ class ValidationEngine:
                 verdict_passed(self.spec, violation_count=vc, evaluated_count=ec).alias("passed"),
             )
             verdicts = verdicts.unionByName(tv)
-        if drift_rows:
-            verdicts = verdicts.unionByName(self.spark.createDataFrame(drift_rows, schema=VERDICT_SCHEMA))
+        if drifts:
+            drift = reduce(DataFrame.unionByName, drifts).persist()  # group-sized, read by every verdicts action
+            cached.append(drift)
+            verdicts = verdicts.unionByName(drift)
 
         return ValidationResult(
             verdicts=verdicts,

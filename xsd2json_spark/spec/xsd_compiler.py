@@ -39,10 +39,19 @@ import re
 import xml.etree.ElementTree as ET
 from typing import Optional
 
+from xsd2json_spark.spec.constraints import SpecError
+
 XS_NS = "http://www.w3.org/2001/XMLSchema"
 XS = "{" + XS_NS + "}"
 DRAFT04 = "http://json-schema.org/draft-04/schema#"
 GROUPS = ("sequence", "all", "choice")
+#: the keys that make a compiled schema a derived type for the Spark bridge
+BRIDGE_COMBINATORS = ("$ref", "allOf", "oneOf", "anyOf")
+#: the keys a derived type may hold (facets, annotations, combinators)
+BRIDGE_KEYS = frozenset({
+    *BRIDGE_COMBINATORS, "type", "format", "description", "default", "enum", "pattern",
+    "minLength", "maxLength", "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum",
+})
 
 # --------------------------------------------------------------------------
 # convert_xsd_type/2 — exact port of xsd2json.pl:857-904
@@ -595,10 +604,51 @@ class XsdCompiler:
     # -- bridge to the runtime engine ---------------------------------------
 
     def to_spec_constraints(self, column: str, json: Optional[dict] = None) -> list:
-        """Map the compiled JSON Schema of a scalar root onto runtime
-        constraint dicts for `column` (loader format) — XSD in, Spark
-        validation out."""
+        """Map the compiled JSON Schema of a scalar root or definition
+        onto runtime constraint dicts for `column` (loader format) — XSD
+        in, Spark validation out. A derived type maps to one constraint:
+        `$ref` resolves through the definitions, the facets of its
+        `allOf` branches form one all_of, and `oneOf`/`anyOf` form one
+        any_of (none when a branch constrains nothing). Anything else
+        in a derived type raises SpecError naming the definition."""
         j = json if json is not None else self.compile()
+        if not any(k in j for k in BRIDGE_COMBINATORS):
+            return self._facet_constraints(j, column)
+        name = next((k for k, v in self.definitions.items() if v == j), column)
+        return self._conjunction(self._derived_constraints(j, column, name), column)
+
+    def _derived_constraints(self, j: dict, column: str, name: str) -> list:
+        """Constraint dicts whose conjunction is node `j` of derived
+        definition `name`."""
+        bad = sorted(set(j) - BRIDGE_KEYS)
+        if j.get("type", "string") not in ("string", "integer", "number", "boolean"):
+            bad.append(f"type {j['type']!r}")
+        if bad:
+            raise SpecError(f"definition {name!r}: no column constraint expresses {', '.join(bad)}")
+        out = self._facet_constraints(j, column)
+        if "$ref" in j:
+            target = j["$ref"].partition("#/definitions/")[2]
+            if target not in self.definitions:
+                raise SpecError(f"definition {name!r}: $ref {j['$ref']!r} names no definition")
+            out += self._derived_constraints(self.definitions[target], column, target)
+        for branch in j.get("allOf", ()):
+            out += self._derived_constraints(branch, column, name)
+        for k in ("oneOf", "anyOf"):
+            branches = [self._derived_constraints(b, column, name) for b in j.get(k, ())]
+            if branches and all(branches):
+                out.append({"kind": "any_of", "id": f"{column}_any_of",
+                            "children": [self._conjunction(b, column)[0] for b in branches]})
+        return out
+
+    @staticmethod
+    def _conjunction(parts: list, column: str) -> list:
+        if len(parts) < 2:
+            return parts
+        return [{"kind": "all_of", "id": f"{column}_all_of", "children": parts}]
+
+    @staticmethod
+    def _facet_constraints(j: dict, column: str) -> list:
+        """The constraint dicts of one node's own scalar facets."""
         out = []
         if "enum" in j:
             out.append({"kind": "enum", "id": f"{column}_enum", "column": column, "values": j["enum"]})
@@ -619,7 +669,6 @@ class XsdCompiler:
             out.append({"kind": "dtype", "id": f"{column}_dtype", "column": column,
                         "type": {"integer": "integer", "number": "double", "boolean": "boolean"}[j["type"]]})
         return out
-
 
 def xsd_to_json_schema(source: str, base_dir: Optional[str] = None) -> dict:
     """xsd2json/3 equivalent: XSD file path or literal -> draft-04 dict."""
