@@ -70,6 +70,23 @@ def test_enum_fixture(spark, files):
     assert verdict_map(res)["lang_enum"]["violation_count"] == _expected_count(499)
 
 
+def test_numeric_enum_over_string_column_fails_rows_that_do_not_cast(spark):
+    # enum [10, 50] is what the XSD bridge emits for a restriction of
+    # xs:positiveInteger; 'abc' and '7' fail their rows, NULL passes
+    df = spark.createDataFrame([("10",), ("50",), ("abc",), ("7",), (None,)], schema="x string")
+    spec = Spec(name="t", key_columns=["x"], constraints=[
+        Enum(id="num", column="x", values=[10, 50]),
+        Enum(id="flag", column="x", values=[True]),
+        Enum(id="mixed", column="x", values=["abc", 7]),
+    ])
+    vm = verdict_map(ValidationEngine(spark, spec).run(df))
+    assert {k: v["violation_count"] for k, v in vm.items()} == {"num": 2, "flag": 4, "mixed": 2}
+    ints = spark.createDataFrame([(10,), (11,), (None,)], schema="x int")
+    num_only = Spec(name="t", key_columns=["x"], constraints=spec.constraints[:1])
+    vm = verdict_map(ValidationEngine(spark, num_only).run(ints))
+    assert vm["num"]["violation_count"] == 1
+
+
 def test_pattern_and_length_fixture(spark, files):
     spec = Spec(
         name="t",

@@ -74,6 +74,15 @@ def test_cli_version_and_help_and_trace():
     assert rc == 0 and "# trace" in err
 
 
+def test_cli_trace_prints_the_output_definitions():
+    # the traced bodies are the cleaned ones: attribute '@version' is 'version' in both
+    path = os.path.join(os.path.dirname(__file__), "data", "xsd_fixtures", "at_mark_extension_user_base.xsd")
+    rc, out, err = _run_cli(["-t", path])
+    assert rc == 0
+    traced = dict(line[4:].split(": ", 1) for line in err.splitlines() if line.startswith("#   "))
+    assert {k: json.loads(v) for k, v in traced.items()} == json.loads(out)["definitions"]
+
+
 def test_cli_error_exit_code():
     rc, _, err = _run_cli(["/nonexistent/nope.xsd"])
     assert rc == 1 and "error" in err

@@ -16,6 +16,8 @@ Semantics parity notes (SURVEY §7 hard parts):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -75,7 +77,16 @@ def compile_predicate(c: Constraint) -> Column:
 
     if isinstance(c, Enum):
         col = F.col(c.column)
-        return _null_passes(col, col.isin(list(c.values)))
+        # a number or boolean compares with the column's try_cast, so a
+        # value that does not cast fails its row; a bare isin would
+        # ANSI-cast the whole column and raise on it
+        by_cast: dict = {}
+        for v in c.values:
+            by_cast.setdefault({bool: "boolean", int: "double", float: "double"}.get(type(v)), []).append(v)
+        plain = by_cast.pop(None, [])
+        preds = [col.isin(plain)] if plain else []
+        preds += [col.try_cast(t).isin(vals) for t, vals in by_cast.items()]
+        return _null_passes(col, reduce(Column.__or__, preds))
 
     if isinstance(c, Constant):
         col = F.col(c.column)

@@ -29,6 +29,10 @@ control evaluation order):
                         multi-root oneOf of closed single-prop objects)
 - @-prefix cleanup      remove_at_from_property_names xsd2json.pl:563-641
 - $schema stamp         cleanup_json/2 xsd2json.pl:499-506
+
+Children match by XSD-qualified tag ('{XS_NS}element'), so any prefix
+or the default namespace reads alike and an element of another
+namespace is ignored; only documentation HTML keeps its local names.
 """
 
 from __future__ import annotations
@@ -141,6 +145,10 @@ FACET_JSON = {
     "maxLength": lambda v: {"maxLength": int(v)},
     "length": lambda v: {"minLength": int(v), "maxLength": int(v)},
 }
+#: XSD-qualified tag -> local name of each element dispatched on by name
+XS_LOCAL = {XS + n: n for n in (
+    *GROUPS, *FACET_JSON, "complexContent", "complexType", "enumeration", "extension",
+    "list", "pattern", "restriction", "simpleContent", "simpleType", "union")}
 
 
 def _normalize_ref(d: dict, other: dict) -> dict:
@@ -231,10 +239,6 @@ class XsdCompiler:
     # -- helpers ----------------------------------------------------------
 
     @staticmethod
-    def _local(tag: str) -> str:
-        return tag.split("}", 1)[1] if "}" in tag else tag
-
-    @staticmethod
     def _strip_ns_prefix(value: Optional[str]) -> Optional[str]:
         """'xs:string' -> 'string'; unprefixed stays (namespace/3 analog,
         xsd2json.pl:306-366 — prefix resolution reduced to the common
@@ -244,7 +248,7 @@ class XsdCompiler:
         return value.split(":", 1)[1] if ":" in value else value
 
     def _children(self, node, *locals_):
-        return [c for c in node if self._local(c.tag) in locals_]
+        return [c for c in node if XS_LOCAL.get(c.tag) in locals_]
 
     def _resolve_location(self, loc: str) -> str:
         """schemaLocation resolution: absolute URLs pass through;
@@ -263,7 +267,7 @@ class XsdCompiler:
         xsd_flatten_nodes xsd2json.pl:705): element children of
         xs:documentation re-serialize to an HTML string; text trimmed,
         inter-element whitespace dropped, empty elements unclosed."""
-        tag = self._local(el.tag)
+        tag = el.tag.split("}", 1)[1] if "}" in el.tag else el.tag
         parts = []
         if el.text and el.text.strip():
             parts.append(re.sub(r"\s+", " ", el.text.strip()))
@@ -274,13 +278,15 @@ class XsdCompiler:
         inner = "".join(parts)
         return f"<{tag}>{inner}</{tag}>" if inner else f"<{tag}>"
 
-    def _documentation(self, node) -> Optional[str]:
-        """xs:annotation/xs:documentation -> description
+    def _with_description(self, node, json: dict) -> dict:
+        """xs:annotation/xs:documentation -> description, merged first
         (xsd2json.pl:1452-1468); plain text whitespace-collapsed,
         element content re-serialized as HTML (:705)."""
+        if node.find(XS + "annotation") is None:
+            return json
         texts = []
-        for ann in self._children(node, "annotation"):
-            for doc in self._children(ann, "documentation"):
+        for ann in node.findall(XS + "annotation"):
+            for doc in ann.findall(XS + "documentation"):
                 kids = list(doc)
                 if kids:
                     txt = "".join(self._serialize_html(k) for k in kids)
@@ -288,13 +294,7 @@ class XsdCompiler:
                     txt = re.sub(r"\s+", " ", ("".join(doc.itertext())).strip())
                 if txt:
                     texts.append(txt)
-        return "\n".join(texts) if texts else None
-
-    def _with_description(self, node, json: dict) -> dict:
-        doc = self._documentation(node)
-        if doc:
-            return merge_json({"description": doc}, json)
-        return json
+        return merge_json({"description": "\n".join(texts)}, json) if texts else json
 
     def reference_type(self, type_name: str) -> dict:
         """reference_type/2 (xsd2json.pl:971-986): a fresh copy of the
@@ -330,7 +330,7 @@ class XsdCompiler:
         facets: dict = {}
         enum_vals, patterns = [], []
         for child in node:
-            local = self._local(child.tag)
+            local = XS_LOCAL.get(child.tag)
             if local == "simpleType":
                 base, base_json = None, self.simple_type_json(child)
             elif local == "enumeration":
@@ -356,13 +356,13 @@ class XsdCompiler:
     def simple_type_json(self, node) -> dict:
         out: dict = {}
         for child in node:
-            local = self._local(child.tag)
+            local = XS_LOCAL.get(child.tag)
             if local == "restriction":
                 out = merge_json(out, self.restriction_json(child))
             elif local == "union":
                 member = child.get("memberTypes", "")
                 opts = [self.reference_type(t) for t in member.split() if t]
-                for st in self._children(child, "simpleType"):
+                for st in child.findall(XS + "simpleType"):
                     opts.append(self.simple_type_json(st))
                 out = merge_json(out, {"oneOf": opts})
             elif local == "list":
@@ -381,7 +381,7 @@ class XsdCompiler:
         etype = node.get("type")
         out = self.reference_type(etype) if etype is not None else {}
         for child in node:
-            local = self._local(child.tag)
+            local = XS_LOCAL.get(child.tag)
             if local == "complexType":
                 out = merge_json(out, self.complex_type_json(child))
             elif local == "simpleType":
@@ -401,7 +401,7 @@ class XsdCompiler:
         (xsd2json.pl:1070-1094)."""
         entries: list = []
         index: dict = {}
-        for el in self._children(group, "element"):
+        for el in group.findall(XS + "element"):
             name = el.get("name") or self._strip_ns_prefix(el.get("ref"))
             json = self.element_json(el) if el.get("name") else self.reference_type(el.get("ref"))
             mino = el.get("minOccurs", "1")  # defaults (xsd2json.pl:1126-1146)
@@ -427,7 +427,7 @@ class XsdCompiler:
         return json
 
     def group_json(self, group) -> dict:
-        local = self._local(group.tag)
+        local = XS_LOCAL[group.tag]
         entries = self._element_entries(group)
         nested: dict = {}
         for sub in self._children(group, *GROUPS):
@@ -468,7 +468,7 @@ class XsdCompiler:
         return "@" + node.get("name"), self.element_json(node), required
 
     def _attributes_json(self, node) -> dict:
-        attrs = [self.attribute_entry(a) for a in self._children(node, "attribute")]
+        attrs = [self.attribute_entry(a) for a in node.findall(XS + "attribute")]
         if not attrs:
             return {}
         out: dict = {"type": "object", "properties": {name: json for name, json, _ in attrs}}
@@ -484,14 +484,14 @@ class XsdCompiler:
         complexType or of a complexContent extension/restriction."""
         out: dict = {}
         for child in node:
-            local = self._local(child.tag)
+            local = XS_LOCAL.get(child.tag)
             if local in GROUPS:
                 out = merge_json(out, self.group_json(child))
             elif local == "complexContent":
                 for ext in self._children(child, "extension", "restriction"):
                     out = merge_json(out, self.extension_json(ext))
             elif local == "simpleContent":
-                for ext in self._children(child, "extension"):
+                for ext in child.findall(XS + "extension"):
                     out = merge_json(out, self.simple_content_extension_json(ext))
         return merge_json(out, self._attributes_json(node))
 
@@ -523,15 +523,15 @@ class XsdCompiler:
     # -- schema root (xsd2json.pl:2169-2263) --------------------------------
 
     def compile(self) -> dict:
-        root_elements = self._children(self.root, "element")
-        includes = self._children(self.root, "include") + self._children(self.root, "import")
+        root_elements = self.root.findall(XS + "element")
+        includes = self.root.findall(XS + "include") + self.root.findall(XS + "import")
 
         # named definitions (xsd2json.pl:2222-2263)
-        for ct in self._children(self.root, "complexType"):
+        for ct in self.root.findall(XS + "complexType"):
             self.definitions[ct.get("name")] = self.complex_type_json(ct)
-        for st in self._children(self.root, "simpleType"):
+        for st in self.root.findall(XS + "simpleType"):
             self.definitions[st.get("name")] = self.simple_type_json(st)
-        for attr in self._children(self.root, "attribute"):
+        for attr in self.root.findall(XS + "attribute"):
             name, json, _ = self.attribute_entry(attr)
             self.definitions[name] = json
 
@@ -564,42 +564,40 @@ class XsdCompiler:
             schema = merge_json(schema, nested_schema)
 
         # schema-level annotation first (fixture `annotation`)
-        doc = self._documentation(self.root)
-        if doc:
-            schema = merge_json({"description": doc}, schema)
-
-        schema = self._cleanup_at_marks(schema)
+        schema = self._with_description(self.root, schema)
+        # in place after every include merge: self.definitions keeps the output's bodies
+        for node in (schema, *self.definitions.values()):
+            self._cleanup_at_marks(node)
         out = {"$schema": DRAFT04}
         out.update(schema)
         if self.definitions:
-            out["definitions"] = {k: self._cleanup_at_marks(v) for k, v in self.definitions.items()}
+            out["definitions"] = dict(self.definitions)
         return out
 
     # -- @-prefix cleanup (xsd2json.pl:563-641) ------------------------------
 
-    def _cleanup_at_marks(self, json):
+    def _cleanup_at_marks(self, json: dict) -> None:
         """Strip '@' from attribute property names unless a same-name
         element property exists (then both kept, '@' stays on the
-        attribute)."""
-        if isinstance(json, list):
-            return [self._cleanup_at_marks(x) for x in json]
-        if not isinstance(json, dict):
-            return json
-        out = {}
+        attribute). In place, through the subschema keywords the
+        compiler emits; a node with a rename gets a new `properties`
+        dict and `required` list, so no dict or list it shares changes.
+        The rename reads only the node's own `properties`, so a node
+        reached twice is renamed once."""
         props = json.get("properties")
-        renames = {}
-        if isinstance(props, dict):
-            for k in props:
-                if k.startswith("@") and k[1:] not in props:
-                    renames[k] = k[1:]
-        for k, v in json.items():
-            if k == "properties":
-                out[k] = {renames.get(pk, pk): self._cleanup_at_marks(pv) for pk, pv in v.items()}
-            elif k == "required" and isinstance(v, list):
-                out[k] = [renames.get(x, x) for x in v]
-            else:
-                out[k] = self._cleanup_at_marks(v)
-        return out
+        if props:
+            renames = {k: k[1:] for k in props if k.startswith("@") and k[1:] not in props}
+            if renames:
+                json["properties"] = {renames.get(k, k): v for k, v in props.items()}
+                if "required" in json:
+                    json["required"] = [renames.get(x, x) for x in json["required"]]
+            for sub in props.values():
+                self._cleanup_at_marks(sub)
+        if "items" in json:
+            self._cleanup_at_marks(json["items"])
+        for key in ("allOf", "oneOf"):
+            for sub in json.get(key, ()):
+                self._cleanup_at_marks(sub)
 
     # -- bridge to the runtime engine ---------------------------------------
 
