@@ -5,6 +5,9 @@ constraint kind gets a pass AND a fail case with exactly countable
 injected violations.
 """
 
+import datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,6 +88,36 @@ def test_numeric_enum_over_string_column_fails_rows_that_do_not_cast(spark):
     num_only = Spec(name="t", key_columns=["x"], constraints=spec.constraints[:1])
     vm = verdict_map(ValidationEngine(spark, num_only).run(ints))
     assert vm["num"]["violation_count"] == 1
+
+
+def test_string_enum_value_over_numeric_column_matches_nothing(spark):
+    # 'abc' does not parse as an int, so it matches nothing instead of
+    # raising an ANSI cast error; 7 matches, 8 fails, NULL passes
+    df = spark.createDataFrame([(7,), (8,), (None,)], schema="x int")
+    spec = Spec(name="t", key_columns=["x"], constraints=[Enum(id="mixed", column="x", values=["abc", 7])])
+    res = ValidationEngine(spark, spec).run(df)
+    assert verdict_map(res)["mixed"]["violation_count"] == 1
+    assert [r["x"] for r in res.violations.filter(F.col("constraint_id") == "mixed").select("x").collect()] == ["8"]
+
+
+@pytest.mark.parametrize(
+    "dtype, rows, values, failing",
+    [
+        ("double", [10.0, 11.0], ["10"], ["11.0"]),
+        # '1.249' compares as 1.249, not rounded to the column's 1.25
+        ("decimal(5,2)", [Decimal("1.50"), Decimal("1.25")], ["1.5", "1.249"], ["1.25"]),
+        ("int", [10, 11], ["010", "+12"], ["11"]),
+        ("date", [datetime.date(2020, 1, 1), datetime.date(2020, 1, 2)], ["2020-01-01"], ["2020-01-02"]),
+    ],
+)
+def test_string_enum_value_compares_as_the_column_type(spark, dtype, rows, values, failing):
+    # an enumeration constrains the value space: '10' is 10.0 over a
+    # double column, not the text '10.0'
+    df = spark.createDataFrame([(v,) for v in rows] + [(None,)], schema=f"x {dtype}")
+    spec = Spec(name="t", key_columns=["x"], constraints=[Enum(id="e", column="x", values=values)])
+    res = ValidationEngine(spark, spec).run(df)
+    assert [r["x"] for r in res.violations.select("x").collect()] == failing
+    assert verdict_map(res)["e"]["violation_count"] == len(failing)
 
 
 def test_pattern_and_length_fixture(spark, files):

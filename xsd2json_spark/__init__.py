@@ -18,29 +18,44 @@ Layout:
               deterministic sampling/splits, multimodal codecs
   sources/    deterministic synthetic `files` table; parquet/iceberg IO
   streaming/  Structured Streaming validation (watermarked)
+
+The package's exports (the constraint classes, `load_spec`,
+`spec_from_dict`, `compose_specs`, `merge_constraints`) load on first
+access (PEP 562): the XSD compiler and the `xsd2json` CLI import this
+package but use none of them, and a fresh interpreter would otherwise
+spend most of its start-up importing the constraint layer. A new export
+goes into `_EXPORTS`, under the submodule that defines it.
 """
 
 __version__ = "0.1.0"
 
-from xsd2json_spark.spec.constraints import (  # noqa: F401
-    AllOf,
-    AnyOf,
-    Cardinality,
-    Constant,
-    Constraint,
-    Drift,
-    Dtype,
-    Enum,
-    ForeignKey,
-    FunctionalDependency,
-    Length,
-    NotNull,
-    Pattern,
-    Quantile,
-    Range,
-    Spec,
-    Unique,
-    Unsupported,
-)
-from xsd2json_spark.spec.loader import load_spec, spec_from_dict  # noqa: F401
-from xsd2json_spark.spec.merge import compose_specs, merge_constraints  # noqa: F401
+import importlib
+
+#: every lazy export, by the submodule of `xsd2json_spark.spec` that defines it
+_EXPORTS = {
+    name: f"{__name__}.spec.{module}"
+    for module, names in {
+        "constraints": (
+            "AllOf", "AnyOf", "Cardinality", "Constant", "Constraint", "Drift", "Dtype", "Enum",
+            "ForeignKey", "FunctionalDependency", "Length", "NotNull", "Pattern", "Quantile",
+            "Range", "Spec", "Unique", "Unsupported",
+        ),
+        "loader": ("load_spec", "spec_from_dict"),
+        "merge": ("compose_specs", "merge_constraints"),
+    }.items()
+    for name in names
+}
+
+__all__ = ["__version__", *_EXPORTS]
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list:
+    return sorted({*globals(), *__all__})

@@ -17,6 +17,7 @@ Semantics parity notes (SURVEY §7 hard parts):
 from __future__ import annotations
 
 from functools import reduce
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,6 +37,17 @@ from xsd2json_spark.spec.constraints import (
 )
 
 
+#: the type Spark's implicit coercion casts a string literal to when it
+#: meets a column of the key type (a decimal column meets a double)
+_STRING_LITERAL_CAST = {
+    "tinyint": "bigint",
+    "smallint": "bigint",
+    "int": "bigint",
+    "bigint": "bigint",
+    "float": "double",
+}
+
+
 def _target(c) -> Column:
     expr = getattr(c, "expr", None)
     return F.expr(expr) if expr else F.col(c.column)
@@ -47,8 +59,11 @@ def _null_passes(col: Column, pred: Column) -> Column:
     return F.when(col.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
 
 
-def compile_predicate(c: Constraint) -> Column:
-    """Return a boolean Column that is True iff the row SATISFIES c."""
+def compile_predicate(c: Constraint, dtypes: Optional[dict] = None) -> Column:
+    """Return a boolean Column that is True iff the row SATISFIES c.
+
+    ``dtypes`` maps a column to its Spark type name (``dict(df.dtypes)``);
+    an Enum over a column missing from it compares as over a string."""
     if isinstance(c, NotNull):
         return F.col(c.column).isNotNull()
 
@@ -79,11 +94,18 @@ def compile_predicate(c: Constraint) -> Column:
         col = F.col(c.column)
         # a number or boolean compares with the column's try_cast, so a
         # value that does not cast fails its row; a bare isin would
-        # ANSI-cast the whole column and raise on it
+        # ANSI-cast the whole column and raise on it. A string over a
+        # column of another type is a value of that type: it gets the
+        # cast Spark's own coercion would give it, as a try_cast, so
+        # '10' matches 10.0 and 'abc' over an int matches nothing
+        dtype = (dtypes or {}).get(c.column, "string")
         by_cast: dict = {}
         for v in c.values:
             by_cast.setdefault({bool: "boolean", int: "double", float: "double"}.get(type(v)), []).append(v)
         plain = by_cast.pop(None, [])
+        if dtype != "string":
+            to = _STRING_LITERAL_CAST.get(dtype, "double" if dtype.startswith("decimal") else dtype)
+            plain = [F.lit(v).try_cast(to) if isinstance(v, str) else v for v in plain]
         preds = [col.isin(plain)] if plain else []
         preds += [col.try_cast(t).isin(vals) for t, vals in by_cast.items()]
         return _null_passes(col, reduce(Column.__or__, preds))
@@ -120,13 +142,13 @@ def compile_predicate(c: Constraint) -> Column:
     if isinstance(c, AllOf):
         out = F.lit(True)
         for ch in c.children:
-            out = out & compile_predicate(ch)
+            out = out & compile_predicate(ch, dtypes)
         return out
 
     if isinstance(c, AnyOf):
         out = F.lit(False)
         for ch in c.children:
-            out = out | compile_predicate(ch)
+            out = out | compile_predicate(ch, dtypes)
         return out
 
     raise TypeError(f"not a row-level constraint: {type(c).__name__} (id {c.id})")

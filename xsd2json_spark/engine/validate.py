@@ -281,27 +281,30 @@ class ValidationEngine:
     # row-level: ONE plan builder for both the two-pass and fused runs
     # ------------------------------------------------------------------
 
-    def _pred(self, c) -> Column:
+    def _pred(self, c, dtypes: tuple) -> Column:
         """compile_predicate with a per-engine memo. A compiled predicate
         is an immutable UNRESOLVED Column tree, safe to re-bind in any
-        plan over any frame, and building one costs dozens of py4j round
-        trips — all driver wall-time inside the caller's measured
+        plan over a frame with the same column types (``dtypes``, the
+        frame's ``df.dtypes``), and building one costs dozens of py4j
+        round trips — all driver wall-time inside the caller's measured
         window, repeated per run of the same engine (one per audit
-        bucket). Keyed by object identity with a strong ref to the
-        constraint so the id cannot be recycled."""
+        bucket). Keyed by object identity and ``dtypes``, with a strong
+        ref to the constraint so the id cannot be recycled."""
         cache = self._pred_cache
-        hit = cache.get(id(c))
+        key = (id(c), dtypes)
+        hit = cache.get(key)
         if hit is None:
-            cache[id(c)] = hit = (c, compile_predicate(c))
+            cache[key] = hit = (c, compile_predicate(c, dict(dtypes)))
         return hit[1]
 
-    def _raw_inputs(self) -> "tuple[list, list]":
+    def _raw_inputs(self, df: DataFrame) -> "tuple[list, list]":
         """The row-level plan's inputs as expressions over the RAW fact
-        frame: per row-level constraint its fail flag ``~pred`` (nullable,
-        so a NULL comparison counts as neither fail nor pass), per
-        watched column its (null flag, prefix, distinct input, numeric)
-        Columns."""
-        fails = [~self._pred(c) for c in self.spec.row_level()]
+        frame ``df``: per row-level constraint its fail flag ``~pred``
+        (nullable, so a NULL comparison counts as neither fail nor
+        pass), per watched column its (null flag, prefix, distinct
+        input, numeric) Columns."""
+        dtypes = tuple(df.dtypes)
+        fails = [~self._pred(c, dtypes) for c in self.spec.row_level()]
         watched = []
         for col in self.spec.watched_columns:
             c = F.expr(col) if not col.isidentifier() else F.col(col)
@@ -367,12 +370,12 @@ class ValidationEngine:
 
     def row_verdicts_and_stats(self, df: DataFrame) -> "tuple[DataFrame, DataFrame]":
         """Row-level verdicts and the stats sketch of ``df``."""
-        agg, _ = self._row_plan(df, *self._raw_inputs(), self._keys(df))
+        agg, _ = self._row_plan(df, *self._raw_inputs(df), self._keys(df))
         return self._verdicts_stats_from_agg(agg)
 
     def row_violations(self, df: DataFrame) -> DataFrame:
         """Violation rows of every row-level constraint over ``df``."""
-        _, violations = self._row_plan(df, *self._raw_inputs(), self._keys(df))
+        _, violations = self._row_plan(df, *self._raw_inputs(df), self._keys(df))
         return violations
 
     def _keys(self, df: DataFrame) -> list:
@@ -622,7 +625,7 @@ class ValidationEngine:
         keys = self._keys(df)
         if self._resolve_fused():
             return self._run_fused(df, keys)
-        agg, row_viol = self._row_plan(df, *self._raw_inputs(), keys)
+        agg, row_viol = self._row_plan(df, *self._raw_inputs(df), keys)
         return self._finish(agg, row_viol, df, df, keys, [])
 
     def _finish(
@@ -757,7 +760,7 @@ class ValidationEngine:
                 for x in c.group_by:
                     _add(x)
 
-        fails, watched = self._raw_inputs()
+        fails, watched = self._raw_inputs(df)
         cols = [F.col(n) for n in passthrough]
         cols += [f.alias(f"__fail_{i}") for i, f in enumerate(fails)]
         for i, (null, prefix, value, numeric) in enumerate(watched):

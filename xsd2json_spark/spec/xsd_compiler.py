@@ -43,8 +43,6 @@ import re
 import xml.etree.ElementTree as ET
 from typing import Optional
 
-from xsd2json_spark.spec.constraints import SpecError
-
 XS_NS = "http://www.w3.org/2001/XMLSchema"
 XS = "{" + XS_NS + "}"
 DRAFT04 = "http://json-schema.org/draft-04/schema#"
@@ -618,6 +616,8 @@ class XsdCompiler:
     def _derived_constraints(self, j: dict, column: str, name: str) -> list:
         """Constraint dicts whose conjunction is node `j` of derived
         definition `name`."""
+        from xsd2json_spark.spec.constraints import SpecError  # the compiler alone never loads it
+
         bad = sorted(set(j) - BRIDGE_KEYS)
         if j.get("type", "string") not in ("string", "integer", "number", "boolean"):
             bad.append(f"type {j['type']!r}")

@@ -39,7 +39,8 @@ def stream_violations(stream_df: DataFrame, spec: Spec) -> DataFrame:
     """Stateless violation stream (append-mode friendly)."""
     keys = list(spec.key_columns) or stream_df.columns[:1]
     row_cs = spec.row_level()
-    failed = F.array_compact(F.array(*[F.when(~compile_predicate(c), F.lit(c.id)) for c in row_cs]))
+    dtypes = dict(stream_df.dtypes)
+    failed = F.array_compact(F.array(*[F.when(~compile_predicate(c, dtypes), F.lit(c.id)) for c in row_cs]))
     key_cols = [F.col(k).cast("string").alias(k) for k in keys]
     return (
         stream_df.select(*key_cols, failed.alias("__failed"))
@@ -58,8 +59,9 @@ def stream_windowed_verdicts(
     """Watermarked per-window constraint counters (update/append mode).
     Same counter semantics as the batch engine's single agg pass."""
     exprs = [F.count(F.lit(1)).alias("evaluated_count")]
+    dtypes = dict(stream_df.dtypes)
     for c in spec.row_level():
-        exprs.append(F.sum((~compile_predicate(c)).cast("long")).alias(f"viol__{c.id}"))
+        exprs.append(F.sum((~compile_predicate(c, dtypes)).cast("long")).alias(f"viol__{c.id}"))
     return (
         stream_df.withWatermark(time_col, watermark)
         .groupBy(F.window(F.col(time_col), window).alias("window"))
