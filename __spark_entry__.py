@@ -808,13 +808,14 @@ def q_cv_cube_drilldown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cv_drift_chi2_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-checked (new this round): the chi-square STATISTIC fully
-    in-plan via chi2_statistic_df — observed counts, expected counts,
-    and the Pearson sum all distributed, replayed exactly by DuckDB.
-    Two scenarios: self (statistic ~ 0) and an en->fr shift (large).
-    p-value conversion stays driver-side (chi2_sf, scipy-pinned) — see
-    q_cv_drift_chi2 for the verdict path."""
-    from xsd2json_spark.engine.drift import chi2_statistic_df
+    """ORACLE-checked: the chi-square STATISTIC fully in-plan via
+    chi2_statistic_over_counts over per-scenario category counts —
+    observed counts, expected counts, and the Pearson sum all
+    distributed, replayed exactly by DuckDB. Two scenarios: self
+    (statistic ~ 0) and an en->fr shift (large). p-value conversion
+    stays driver-side (chi2_sf, scipy-pinned) — see q_cv_drift_chi2 for
+    the verdict path."""
+    from xsd2json_spark.engine.drift import chi2_statistic_over_counts
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("lang").isNotNull())
     base = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
@@ -824,7 +825,8 @@ def q_cv_drift_chi2_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("lang") == "en", F.lit("fr")).otherwise(F.col("lang")).alias("lang"),
         )
     )
-    out = chi2_statistic_df(cur, "lang", base, by=["scenario"])
+    counts = cur.groupBy("scenario", "lang").agg(F.count(F.lit(1)).alias("n"))
+    out = chi2_statistic_over_counts(counts, "lang", base, window_cols=("scenario",))
     return out.select(
         "scenario",
         F.round("statistic", 6).alias("statistic"),
@@ -876,10 +878,11 @@ def q_doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cv_drift_psi_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-checked end-to-end drift VERDICT with zero driver-side
     math: PSI has no p-value, so the statistic AND the conventional
-    0.1/0.25 thresholds evaluate fully in-plan (psi_statistic_df) —
+    0.1/0.25 thresholds evaluate fully in-plan
+    (psi_statistic_over_counts over per-scenario category counts) —
     the one drift family where even the pass/fail is SQL-replayable.
     Scenarios: self (psi = 0) and an en->fr shift (psi large)."""
-    from xsd2json_spark.engine.drift import psi_statistic_df
+    from xsd2json_spark.engine.drift import psi_statistic_over_counts
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("lang").isNotNull())
     base = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
@@ -889,7 +892,8 @@ def q_cv_drift_psi_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("lang") == "en", F.lit("fr")).otherwise(F.col("lang")).alias("lang"),
         )
     )
-    out = psi_statistic_df(cur, "lang", base, by=["scenario"])
+    counts = cur.groupBy("scenario", "lang").agg(F.count(F.lit(1)).alias("n"))
+    out = psi_statistic_over_counts(counts, "lang", base, window_cols=("scenario",))
     return out.select(
         "scenario",
         F.round("psi", 6).alias("psi"),
@@ -998,18 +1002,20 @@ def q_cv_drift_ks_by_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cv_drift_chi2_by_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-checked (new this round): PER-GROUP drill-down of the
-    in-plan chi-square statistic — each lang's source mix against the
-    global source distribution (chi2_statistic_df with by=['lang'],
-    one distributed aggregation for all groups). The driver-checked
-    counterpart of the per-group drift path; p-values stay driver-side."""
-    from xsd2json_spark.engine.drift import chi2_statistic_df
+    """ORACLE-checked: PER-GROUP drill-down of the in-plan chi-square
+    statistic — each lang's source mix against the global source
+    distribution (chi2_statistic_over_counts over per-lang source
+    counts, one distributed aggregation for all langs). The
+    driver-checked counterpart of the per-group drift path; p-values
+    stay driver-side."""
+    from xsd2json_spark.engine.drift import chi2_statistic_over_counts
 
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("source").isNotNull() & F.col("lang").isNotNull()
     )
     base = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    out = chi2_statistic_df(docs, "source", base, by=["lang"])
+    counts = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("n"))
+    out = chi2_statistic_over_counts(counts, "source", base, window_cols=("lang",))
     return out.select(
         "lang",
         F.round("statistic", 6).alias("statistic"),

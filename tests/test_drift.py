@@ -332,10 +332,10 @@ def chi2_stat(observed: dict, expected_probs: dict) -> "tuple[float, int]":
     return stat, max(1, len(cats) - 1)
 
 
-def test_chi2_statistic_df_matches_driver_side(spark, files):
+def test_chi2_statistic_over_counts_matches_driver_side(spark, files):
     """The fully in-plan statistic equals the driver-side chi2_stat
     oracle on the same observed/baseline counts."""
-    from xsd2json_spark.engine.drift import chi2_statistic_df, make_categorical_baseline
+    from xsd2json_spark.engine.drift import chi2_statistic_over_counts, make_categorical_baseline
 
     base_counts = make_categorical_baseline(files, "lang")["counts"]
     base_df = files.sparkSession.createDataFrame(
@@ -344,7 +344,9 @@ def test_chi2_statistic_df_matches_driver_side(spark, files):
     shifted = files.withColumn(
         "lang", F.when(F.col("lang") == "python", F.lit("java")).otherwise(F.col("lang"))
     )
-    row = chi2_statistic_df(shifted, "lang", base_df).collect()[0]
+    c = Drift(id="d", column="lang", test="chi2", baseline="b")
+    counts = state_of(shifted, c).withColumnRenamed("__cat", "lang")
+    row = chi2_statistic_over_counts(counts, "lang", base_df, window_cols=()).collect()[0]
     total = sum(base_counts.values())
     probs = {k: v / total for k, v in base_counts.items()}
     observed = {
@@ -357,20 +359,26 @@ def test_chi2_statistic_df_matches_driver_side(spark, files):
     assert row["dof"] == dof
 
 
-def test_chi2_statistic_df_by_group(spark, grouped):
-    """One distributed statistic row per group; self-baseline is ~0,
-    a per-group shift moves only that group's statistic."""
-    from xsd2json_spark.engine.drift import chi2_statistic_df
+def test_chi2_statistic_over_counts_by_window(spark, grouped):
+    """One distributed statistic row per window (here each group's
+    counts against one global baseline); self-baseline is ~0, a
+    per-group shift moves only that group's statistic."""
+    from xsd2json_spark.engine.drift import chi2_statistic_over_counts
 
     base_df = grouped.groupBy("cat").agg(F.count(F.lit(1)).alias("n"))
-    rows = {r["g"]: r for r in chi2_statistic_df(grouped, "cat", base_df, by=["g"]).collect()}
+
+    def stats(df):
+        counts = df.groupBy("g", "cat").agg(F.count(F.lit(1)).alias("n"))
+        return {r["g"]: r for r in chi2_statistic_over_counts(counts, "cat", base_df, window_cols=["g"]).collect()}
+
+    rows = stats(grouped)
     assert set(rows) == {"g1", "g2"}
     assert all(r["statistic"] < 1.0 for r in rows.values())
 
     shifted = grouped.withColumn(
         "cat", F.when((F.col("g") == "g2") & (F.col("cat") == "x"), "y").otherwise(F.col("cat"))
     )
-    srows = {r["g"]: r for r in chi2_statistic_df(shifted, "cat", base_df, by=["g"]).collect()}
+    srows = stats(shifted)
     assert srows["g1"]["statistic"] < 1.0 and srows["g2"]["statistic"] > 100.0
 
 
@@ -453,6 +461,28 @@ def test_ks_d_matches_oracle_on_edge_values(spark, case):
     assert own["ecdf"] == oracle_ecdf(values, own["grid"])
 
 
+def test_per_group_ks_grid_lookup_is_exact(spark):
+    """Each row of a per-group KS state finds its group's grid in the
+    literal map: group keys with a quote, a backslash and a pipe find
+    their own grid, the grid points stay bit-exact (+-inf, repeated
+    points, 0.1 + 0.2, the smallest subnormal), and a group the
+    baseline lacks gets UNSEEN_GROUP_BIN."""
+    from collections import Counter
+
+    from xsd2json_spark.engine.drift import UNSEEN_GROUP_BIN, group_key
+
+    grids = {"it's": [-INF, 0.0, 0.0, 1.5, INF], "a\\b|c": [0.1 + 0.2, 2.0], "x": [5e-324, 1e300]}
+    values = [-5.0, 0.0, 0.3, 0.1 + 0.2, 1.5, 2.0, INF, 1e300, 5e-324]
+    rows = [(g, v) for g in [*grids, "unseen"] for v in values]
+    baseline = {"kind": "numeric_by", "group_by": ["g"], "groups": {
+        group_key([g]): {"grid": grid, "ecdf": [0.5] * len(grid), "n": 10} for g, grid in grids.items()}}
+    c = Drift(id="ks", column="x", test="ks", baseline="b", group_by=["g"])
+    df = spark.createDataFrame(rows, "g string, x double")
+    got = sorted(tuple(r) for r in state_of(df, c, {"b": baseline}).collect())
+    want = Counter((g, sum(q < v for q in grids[g]) if g in grids else UNSEEN_GROUP_BIN) for g, v in rows)
+    assert got == sorted((g, b, n) for (g, b), n in want.items())
+
+
 def test_chi2_verdicts_over_counts_beyond_128_categories(spark):
     """The critical-value table covers the baseline's largest per-group
     category count: a 150-category baseline still gets one verdict row
@@ -476,6 +506,17 @@ def test_chi2_verdicts_over_counts_beyond_128_categories(spark):
     assert rows["g2"]["dof"] == 149 and not rows["g2"]["passed"]
 
 
+def _psi_rows(cur, base, window_cols=("scenario",)):
+    """PSI rows of ``cur``'s (window..., lang) rows against ``base``,
+    read by the in-plan reader off per-window counts, keyed by scenario
+    ("ALL" without a window)."""
+    from xsd2json_spark.engine.drift import psi_statistic_over_counts
+
+    counts = cur.groupBy(*window_cols, "lang").agg(F.count(F.lit(1)).alias("n"))
+    rows = psi_statistic_over_counts(counts, "lang", base, window_cols=window_cols).collect()
+    return {r["scenario"] if window_cols else "ALL": r for r in rows}
+
+
 def test_psi_statistic_hand_computed(spark):
     """PSI against hand-computed values: baseline 50/50, current 80/20
     -> psi = 0.3*ln(1.6) - 0.3*ln(0.4) = 0.415888...; self -> 0; a
@@ -484,8 +525,6 @@ def test_psi_statistic_hand_computed(spark):
     chi2 needed the spine for)."""
     import math
 
-    from xsd2json_spark.engine.drift import psi_statistic_df
-
     base = spark.createDataFrame([("a", 50), ("b", 50)], "lang string, n long")
     cur = spark.createDataFrame(
         [("shift", "a")] * 80 + [("shift", "b")] * 20
@@ -493,7 +532,7 @@ def test_psi_statistic_hand_computed(spark):
         + [("vanish", "a")] * 100,
         "scenario string, lang string",
     )
-    rows = {r["scenario"]: r for r in psi_statistic_df(cur, "lang", base, by=["scenario"]).collect()}
+    rows = _psi_rows(cur, base)
     expected_shift = 0.3 * math.log(1.6) - 0.3 * math.log(0.4)
     assert abs(rows["shift"]["psi"] - expected_shift) < 1e-9
     assert abs(rows["self"]["psi"]) < 1e-12
@@ -509,10 +548,8 @@ def test_psi_novel_category_contributes_penalty(spark):
     penalty, not silently drop: baseline 50/50 a/b, current 50 a / 50 c
     -> b vanished (p_cur -> eps) and c is novel (p_base -> eps), each
     adding ~0.5*ln(0.5/1e-6); the round-3 spine dropped c's term
-    entirely. Per-group: only the group WITH the novel category pays."""
+    entirely. Per window: only the window WITH the novel category pays."""
     import math
-
-    from xsd2json_spark.engine.drift import psi_statistic_df
 
     base = spark.createDataFrame([("a", 50), ("b", 50)], "lang string, n long")
     cur = spark.createDataFrame(
@@ -520,19 +557,17 @@ def test_psi_novel_category_contributes_penalty(spark):
         + [("self", "a")] * 50 + [("self", "b")] * 50,
         "scenario string, lang string",
     )
-    rows = {r["scenario"]: r for r in psi_statistic_df(cur, "lang", base, by=["scenario"]).collect()}
+    rows = _psi_rows(cur, base)
     eps = 1e-6
     vanished_b = (eps - 0.5) * math.log(eps / 0.5)
     novel_c = (0.5 - eps) * math.log(0.5 / eps)
     assert abs(rows["novel"]["psi"] - (vanished_b + novel_c)) < 1e-9
     assert rows["novel"]["n_cats"] == 3  # union spine: a, b, c
     assert abs(rows["self"]["psi"]) < 1e-12
-    assert rows["self"]["n_cats"] == 2  # no novel cats in the self group
+    assert rows["self"]["n_cats"] == 2  # no novel cats in the self window
 
-    # global (by=None) path takes the crossJoin branch of the spine
-    g = psi_statistic_df(
-        cur.filter("scenario = 'novel'").select("lang"), "lang", base
-    ).collect()[0]
+    # the global cell (no window column)
+    g = _psi_rows(cur.filter("scenario = 'novel'").select("lang"), base, window_cols=())["ALL"]
     assert abs(g["psi"] - (vanished_b + novel_c)) < 1e-9 and g["n_cats"] == 3
 
 
@@ -541,8 +576,6 @@ def test_psi_baseline_with_duplicate_categories(spark):
     first: ("a", 25), ("a", 25), ("b", 50) gives the same PSI as the
     deduplicated ("a", 50), ("b", 50), instead of failing the map fold
     with DUPLICATED_MAP_KEY."""
-    from xsd2json_spark.engine.drift import psi_statistic_df
-
     dup = spark.createDataFrame([("a", 25), ("a", 25), ("b", 50)], "lang string, n long")
     dedup = spark.createDataFrame([("a", 50), ("b", 50)], "lang string, n long")
     cur = spark.createDataFrame(
@@ -551,8 +584,7 @@ def test_psi_baseline_with_duplicate_categories(spark):
     )
 
     def psi(base):
-        rows = psi_statistic_df(cur, "lang", base, by=["scenario"]).collect()
-        return {r["scenario"]: (r["psi"], r["n_cats"]) for r in rows}
+        return {k: (r["psi"], r["n_cats"]) for k, r in _psi_rows(cur, base).items()}
 
     want = psi(dedup)
     assert psi(dup) == want
@@ -730,8 +762,12 @@ def test_chi2_reader_dict_and_frame_baselines_agree(spark, matrix):
 
 #: Spark jobs of the matrix spec's engine and incremental runs
 #: (test_engine_drift_check_jobs_are_bounded); 10 and 51 while each
-#: drift check collected its rows during the plan build
-ENGINE_JOBS, INCREMENTAL_JOBS = 7, 45
+#: drift check collected its rows during the plan build, 7 and 45
+#: while a per-group KS state broadcast-joined its grids
+ENGINE_JOBS, INCREMENTAL_JOBS = 6, 43
+#: Spark jobs of ``ValidationEngine.run`` + ``verdicts.collect()`` of a
+#: spec of one KS check, global or per group
+KS_CHECK_JOBS = 3
 
 
 def _jobs_in_group(spark, name, fn):
@@ -768,3 +804,25 @@ def test_engine_drift_check_jobs_are_bounded(spark, matrix):
     jobs = _jobs_in_group(spark, "drift-incremental", lambda: incremental_verdicts(
         spark, spec, base, cur, prev, states=states, baselines=baselines).collect())
     assert jobs <= INCREMENTAL_JOBS, f"{jobs} Spark jobs to collect the incremental verdicts"
+
+
+def test_per_group_ks_check_runs_as_many_jobs_as_a_global_one(spark, matrix):
+    """A per-group KS state finds each row's grid in a literal map, so
+    an engine run + collect of one per-group KS check takes no more
+    Spark jobs than one of a global KS check (KS_CHECK_JOBS; a
+    broadcast join of the grids took one more)."""
+    from xsd2json_spark import spec_from_dict
+
+    _, baselines, _, _, _, _ = matrix
+    cur = _case_runs(spark, matrix, "shift")[0]
+    for cid, gb in [("k", []), ("kg", ["g"])]:
+        spec = spec_from_dict({"name": cid, "key_columns": ["id"], "constraints": [
+            {"kind": "drift", "id": cid, "column": "v", "test": "ks", "baseline": cid, "group_by": gb}]})
+
+        def run():
+            res = ValidationEngine(spark, spec, baselines=baselines).run(cur)
+            res.verdicts.collect()
+            res.unpersist()
+
+        jobs = _jobs_in_group(spark, "ks-" + cid, run)
+        assert jobs <= KS_CHECK_JOBS, f"{jobs} Spark jobs for drift check {cid}"

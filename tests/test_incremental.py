@@ -768,3 +768,47 @@ def test_null_rules_shared_by_engine_state_and_stream(spark, tmp_path, cid):
         q.awaitTermination(120)
         dups = {r["k"]: r["dup_count"] for r in spark.table("null_rule_unique").collect()}
         assert dups == {r["k"]: r["n"] - 1 for r in state_b.collect() if r["n"] > 1} == {"r1": 2}
+
+
+def test_incremental_without_states_leaves_nothing_persisted(spark, snapshots):
+    """A table check without a state reads a fresh count state of the
+    current snapshot inside the one lazy plan, so collecting the
+    incremental verdicts leaves no persisted frame behind that the
+    caller could not release (a nested engine run left its unique
+    dup-hash set and violations union cached)."""
+    a, b = snapshots
+    spec = spec_from_dict(SPEC)
+    prev = ValidationEngine(spark, spec).run(a).verdicts.cache()
+    prev.count()
+    persisted = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: E731
+    before = persisted()
+    got = vmap(incremental_verdicts(spark, spec, a, b, prev))
+    assert persisted() == before
+    prev.unpersist()
+    assert got["pk"] == (0, True)
+
+
+def test_incremental_stateless_table_checks_match_full_run(spark):
+    """Without states, unique, cardinality, quantile and FD verdicts of
+    an incremental run equal the full run's, passing and failing."""
+    a = spark.createDataFrame(
+        [(i, "r%d" % (i % 4), float(i % 50), "k%d" % (i % 4)) for i in range(200)],
+        "doc_id long, repo string, x double, dep string",
+    )
+    # B: a duplicated key, a fifth repo of one row, larger x, and one
+    # determinant r0 mapped to two dep values
+    b = a.filter("doc_id < 190").withColumn("x", F.col("x") * 3).unionByName(spark.createDataFrame(
+        [(5, "r9", 1.0, "k9"), (900, "r0", 2.0, "zz")], "doc_id long, repo string, x double, dep string"))
+    spec = spec_from_dict({
+        "name": "stateless", "key_columns": ["doc_id"], "constraints": [
+            {"kind": "not_null", "id": "nn", "column": "repo"},
+            {"kind": "unique", "id": "pk", "columns": ["doc_id"]},
+            {"kind": "cardinality", "id": "card", "group_by": ["repo"], "min": 2},
+            {"kind": "quantile", "id": "q", "column": "x", "p": 0.5, "max": 40.0, "approx": False},
+            {"kind": "functional_dependency", "id": "fd", "determinants": ["repo"], "dependent": "dep"},
+        ]})
+    prev = ValidationEngine(spark, spec).run(a).verdicts
+    assert vmap(incremental_verdicts(spark, spec, a, a, prev)) == vmap(ValidationEngine(spark, spec).run(a).verdicts)
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev))
+    assert inc == vmap(ValidationEngine(spark, spec).run(b).verdicts)
+    assert {k for k, (_, ok) in inc.items() if not ok} == {"pk", "card", "q", "fd"}

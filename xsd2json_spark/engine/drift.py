@@ -29,8 +29,8 @@ bounded by the categories or grid points, never the rows:
 - ks: the baseline stores a ~199-point value grid with its ECDF, per
   group when grouped; the state is groupBy(group..., __bin).count(),
   __bin = the number of grid points strictly below the value (at most
-  grid+1 counters per group, no sort). A per-group state finds each
-  row's grid with a broadcast left join on ``group_key_col``. The ECDF
+  grid+1 counters per group, no sort). A per-group state looks each
+  row's grid up by ``group_key_col`` in a literal map. The ECDF
   at grid point i is (rows with bin <= i) / n, and D = max_i
   |ecdf_cur(q_i) - ecdf_base(q_i)|. The grid bounds the error of D by
   the grid resolution (1/(grid+1) per cell), which is what you want at
@@ -47,9 +47,16 @@ a reader's frame as verdict rows; they union it into their verdict
 table like every other table check's, so no drift verdict is
 collected while a plan is built. The baselines are built from the
 same states (``ecdf_at_grid`` reads a baseline's own ECDF off its
-collected state), and the in-plan statistics (``chi2_statistic_df``,
-``psi_statistic_df``) count their observed side with ``state_of``
-too.
+collected state).
+
+A categorical baseline becomes ONE spine, (__gk, __bm, __bt) per
+baseline group (``_categorical_cells``), and three readers fold a
+category-count frame against it through the same ``_cells``: the chi2
+statistic (``chi2_statistic_over_counts``), the chi2 verdict
+(``drift_verdicts_over_counts``: that statistic, the critical-value
+table and the novel-category rule) and PSI
+(``psi_statistic_over_counts``). The Pearson statistic is one
+expression (``_chi2_columns``).
 """
 
 from __future__ import annotations
@@ -170,123 +177,6 @@ def make_numeric_baseline(
     return {"kind": "numeric_by", "group_by": gb, "groups": groups}
 
 
-def _baseline_counts(baseline_df: DataFrame, column: str, group_by=()) -> DataFrame:
-    """A caller's baseline count rows (group_by..., ``column``, n) as
-    (group_by..., __cat, __b), NULL categories dropped — the NULL rule
-    of the chi2 state (``incremental.state_rows``) applied to counts
-    that arrive already aggregated."""
-    return baseline_df.select(*group_by, F.col(column).alias("__cat"), F.col("n").alias("__b")).filter(
-        F.col("__cat").isNotNull()
-    )
-
-
-def _observed_counts(df: DataFrame, column: str, by) -> DataFrame:
-    """(by..., __cat, __o): the chi2 count state of ``column``."""
-    from xsd2json_spark.engine.incremental import state_of
-
-    c = Drift(id="observed", column=column, test="chi2", baseline="self")
-    return state_of(df, c, by=by).withColumnRenamed("n", "__o")
-
-
-def chi2_statistic_df(
-    df: DataFrame, column: str, baseline_df: DataFrame, by=None
-) -> DataFrame:
-    """Distributed Pearson chi-square STATISTIC: observed counts,
-    expected counts, and the statistic are all computed IN-PLAN (one
-    groupBy + a broadcast join against the baseline counts — no
-    driver-side math), which makes the statistic itself oracle-able in
-    plain SQL and scales per-group chi2 to any number of groups.
-
-    ``baseline_df`` carries the reference distribution as
-    (``column``, n) count rows; ``by`` optionally groups the current
-    data (one statistic row per group). NULL categories are excluded on
-    both sides. Observed categories MUST be a subset of the baseline's
-    (pre-bucket novel categories into an OTHER label for open
-    vocabularies — a spine-missing category would silently drop its
-    term). Returns (by..., statistic, n_cats, dof); converting to a
-    p-value stays driver-side via chi2_sf, which is scipy-pinned in
-    tests."""
-    gb = list(by or [])
-    obs = _observed_counts(df, column, gb)
-    b = _baseline_counts(baseline_df, column)
-    bt = b.agg(F.sum("__b").alias("__bt"))
-    n = obs.groupBy(*gb).agg(F.sum("__o").alias("__n"))
-    spine = n.crossJoin(F.broadcast(b)).crossJoin(F.broadcast(bt))
-    j = spine.join(obs, gb + ["__cat"], "left").withColumn(
-        "__o", F.coalesce(F.col("__o"), F.lit(0))
-    )
-    e = F.col("__n") * F.col("__b") / F.col("__bt")
-    return (
-        j.groupBy(*gb)
-        .agg(
-            F.sum((F.col("__o") - e) ** 2 / e).alias("statistic"),
-            F.count(F.lit(1)).alias("n_cats"),
-        )
-        .withColumn("dof", (F.col("n_cats") - 1).cast("long"))
-    )
-
-
-def psi_statistic_df(
-    df: DataFrame, column: str, baseline_df: DataFrame, by=None, eps: float = 1e-6
-) -> DataFrame:
-    """Population Stability Index, fully in-plan (same spine shape as
-    chi2_statistic_df, widened to the UNION of baseline and observed
-    categories): psi = sum_cat (p_cur - p_base) * ln(p_cur / p_base),
-    proportions clipped to ``eps`` so empty cells — including NOVEL
-    observed categories absent from the baseline, a primary PSI use
-    case — contribute the finite eps-clipped penalty instead of being
-    silently dropped. PSI has no p-value — the conventional action
-    thresholds are 0.1 (watch) / 0.25 (act), applied directly to the
-    statistic, which makes the whole check oracle-able (no driver-side
-    math at all, unlike chi2/KS where only the p-value stays on the
-    driver). Returns (by..., psi, n_cats); n_cats counts the union
-    spine per group.
-
-    ``baseline_df`` holds (``column``, n) rows; a category may repeat,
-    and its counts are summed before the baseline folds into a map."""
-    gb = list(by or [])
-    obs = _observed_counts(df, column, gb)
-    # Round 6 shape: ONE reference to the observed counts. The previous
-    # spine (groups x baseline-cats union + three joins) re-expanded the
-    # obs subtree four times in the physical plan — 22 scans and 32
-    # exchanges for a category-sized statistic. Instead each group
-    # collapses to a single (cat -> count) map row (category-bounded,
-    # the documented collect discipline), the baseline aggregates to ONE
-    # broadcast row, and the psi sum folds over the union of the two
-    # key sets — same cells, same eps clips, 3 scans / 4 exchanges.
-    # Novel observed cats read __b = 0, vanished baseline cats __o = 0.
-    gm = obs.groupBy(*gb).agg(
-        F.map_from_entries(F.collect_list(F.struct("__cat", "__o"))).alias("__m"),
-        F.sum("__o").alias("__n"),
-    )
-    b1 = (
-        _baseline_counts(baseline_df, column)
-        .groupBy("__cat")
-        .agg(F.sum("__b").alias("__b"))
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__cat", "__b"))
-            ).alias("__bm"),
-            F.sum("__b").alias("__bt"),
-        )
-    )
-    j = gm.crossJoin(F.broadcast(b1))
-    cats = F.array_union(F.map_keys("__m"), F.map_keys("__bm"))
-
-    def term(c):
-        o = F.coalesce(F.try_element_at(F.col("__m"), c), F.lit(0))
-        bv = F.coalesce(F.try_element_at(F.col("__bm"), c), F.lit(0))
-        p_cur = F.greatest(o / F.col("__n"), F.lit(eps))
-        p_base = F.greatest(bv / F.col("__bt"), F.lit(eps))
-        return (p_cur - p_base) * F.log(p_cur / p_base)
-
-    return j.select(
-        *gb,
-        F.aggregate(cats, F.lit(0.0), lambda acc, c: acc + term(c)).alias("psi"),
-        F.size(cats).cast("long").alias("n_cats"),
-    )
-
-
 def bin_index_expr(v, grid) -> Column:
     """In-plan bin index against a baseline quantile grid (a list of
     points, or an array Column holding each row's group grid): the
@@ -391,14 +281,108 @@ def ks_verdicts_over_bins(
 def make_categorical_baseline_df(df: DataFrame, column: str, group_by=()) -> DataFrame:
     """Baseline counts as a DATAFRAME (no driver collect): the chi2
     count state, one (group..., ``column``, n) row per category. The
-    distributed sibling of make_categorical_baseline — feed it to
-    chi2_statistic_df / drift_verdicts_over_counts, or persist it as
-    the baseline-snapshot table a production deployment would keep in
-    the warehouse."""
+    distributed sibling of make_categorical_baseline — feed it to the
+    categorical readers (``drift_verdicts_over_counts``,
+    ``chi2_statistic_over_counts``, ``psi_statistic_over_counts``), or
+    persist it as the baseline-snapshot table a production deployment
+    would keep in the warehouse."""
     from xsd2json_spark.engine.incremental import state_of
 
     c = Drift(id="baseline", column=column, test="chi2", baseline="self", group_by=group_by)
     return state_of(df, c).withColumnRenamed("__cat", column)
+
+
+def _categorical_cells(counts_df: DataFrame, column: str, baseline, group_by, window_cols):
+    """The cells (``_cells``) of a category-count frame (window_cols...,
+    group_by..., ``column``, n) against the ONE categorical baseline
+    spine — per baseline group (__gk, __bm, __bt): its category -> count
+    map (str() spelling; repeats summed, NULL dropped) and total — and
+    a function giving the largest per-group category count. A DataFrame
+    baseline of (group_by..., ``column``, n) rows folds in-plan (that
+    count is one small Spark job); a snapshot dict is a literal, and
+    one with no category raises SpecError."""
+    gb, wc = list(group_by), list(window_cols)
+    if isinstance(baseline, DataFrame):
+        b = (
+            baseline.select(*gb, F.col(column).alias("__cat"), F.col("n").alias("__b"))
+            .filter(F.col("__cat").isNotNull())
+            .groupBy(*gb, "__cat")
+            .agg(F.sum("__b").alias("__b"))
+        )
+        spine = b.groupBy(*gb).agg(
+            F.map_from_entries(F.collect_list(F.struct(_as_str(b, "__cat"), "__b"))).alias("__bm"),
+            F.sum("__b").alias("__bt"),
+        )
+        spine = spine.withColumn("__gk", group_key_col(spine, gb) if gb else F.lit(""))
+        max_cats = lambda: spine.agg(F.max(F.size("__bm"))).first()[0] or 0  # noqa: E731
+    else:
+        groups = baseline["groups"] if gb else {"": baseline["counts"]}
+        maps = {k: {str(cat): int(n) for cat, n in (m or {}).items() if n > 0} for k, m in groups.items()}
+        rows = [(k, m, sum(m.values())) for k, m in maps.items() if m]
+        if not rows:
+            raise SpecError("empty baseline")
+        spine = counts_df.sparkSession.createDataFrame(rows, "__gk string, __bm map<string,bigint>, __bt bigint")
+        max_cats = lambda: max(len(m) for _, m, _ in rows)  # noqa: E731
+    return _cells(counts_df, _as_str(counts_df, column), spine, gb, wc), max_cats
+
+
+def _chi2_columns() -> "tuple[Column, Column]":
+    """The Pearson statistic and its dof over a categorical cell: the
+    sum of (o - e)^2 / e over the group's baseline categories, e = n *
+    b / b_total (NULL for a cell without rows), and dof = max(n_cats -
+    1, 1). The one chi2 statistic expression; both chi2 readers select
+    it."""
+    n = F.col("__n")
+
+    def term(acc, kv):
+        e = n.cast("double") * kv["value"] / F.col("__bt")
+        o = F.coalesce(F.try_element_at(F.col("__m"), kv["key"]), F.lit(0))
+        return acc + (o - e) ** 2 / e
+
+    statistic = F.when(n > 0, F.aggregate(F.map_entries("__bm"), F.lit(0.0), term))
+    return statistic, F.greatest(F.size("__bm") - 1, F.lit(1))
+
+
+def chi2_statistic_over_counts(counts_df: DataFrame, column: str, baseline, window_cols=("window",)) -> DataFrame:
+    """The Pearson chi-square STATISTIC per window of a
+    category-count frame, fully in-plan and without a Spark job while
+    the plan is built, so it replays in plain SQL; the p-value stays
+    driver-side (``chi2_sf``). A novel category adds no term (the
+    verdict reader fails it). Arguments as ``drift_verdicts_over_counts``
+    with a global baseline; that reader reads the same statistic.
+    Returns (window_cols..., statistic, dof)."""
+    cells, _ = _categorical_cells(counts_df, column, baseline, (), window_cols)
+    statistic, dof = _chi2_columns()
+    return cells.select(*window_cols, statistic.alias("statistic"), dof.alias("dof"))
+
+
+def psi_statistic_over_counts(
+    counts_df: DataFrame, column: str, baseline, window_cols=("window",), eps: float = 1e-6
+) -> DataFrame:
+    """Population Stability Index per window, in-plan over the chi2
+    readers' cells: the sum over the UNION of baseline and
+    observed categories of (p_cur - p_base) * ln(p_cur / p_base),
+    proportions clipped to ``eps``, so a vanished or a NOVEL category
+    adds a finite penalty instead of dropping out. PSI has no p-value;
+    its 0.1 (watch) / 0.25 (act) thresholds apply to the statistic, so
+    the whole check replays in SQL. Arguments as
+    ``drift_verdicts_over_counts`` with a global baseline. Returns
+    (window_cols..., psi, n_cats), n_cats counting the union."""
+    cells, _ = _categorical_cells(counts_df, column, baseline, (), window_cols)
+    cats = F.array_union(F.map_keys("__m"), F.map_keys("__bm"))
+
+    def term(c):
+        o = F.coalesce(F.try_element_at(F.col("__m"), c), F.lit(0))
+        bv = F.coalesce(F.try_element_at(F.col("__bm"), c), F.lit(0))
+        p_cur = F.greatest(o / F.col("__n"), F.lit(eps))
+        p_base = F.greatest(bv / F.col("__bt"), F.lit(eps))
+        return (p_cur - p_base) * F.log(p_cur / p_base)
+
+    return cells.select(
+        *window_cols,
+        F.aggregate(cats, F.lit(0.0), lambda acc, c: acc + term(c)).alias("psi"),
+        F.size(cats).cast("long").alias("n_cats"),
+    )
 
 
 def drift_verdicts_over_counts(
@@ -411,9 +395,8 @@ def drift_verdicts_over_counts(
 ) -> DataFrame:
     """Per-(window, group) chi-square drift verdicts as a STATELESS view
     over a category-counter table — the one chi2 verdict reader
-    (engine, incremental runs, streams, queries). The statistic sums
-    (o - e)^2 / e over the group's baseline categories, e = n * b /
-    b_total, dof = max(n_cats - 1, 1); a cell passes iff statistic <=
+    (engine, incremental runs, streams, queries): the statistic of
+    ``chi2_statistic_over_counts``; a cell passes iff statistic <=
     chi2_crit(dof, alpha), from a literal table up to the largest
     per-group category count, and it holds no category its group's
     baseline lacks. A group the baseline lacks, a baseline group with
@@ -428,34 +411,12 @@ def drift_verdicts_over_counts(
     dict none). Returns (window_cols..., group_by..., [group_key,]
     statistic, dof, passed)."""
     gb, wc = list(group_by), list(window_cols)
-    if isinstance(baseline, DataFrame):
-        b = _baseline_counts(baseline, column, gb).groupBy(*gb, "__cat").agg(F.sum("__b").alias("__b"))
-        spine = b.groupBy(*gb).agg(
-            F.map_from_entries(F.collect_list(F.struct(_as_str(b, "__cat"), "__b"))).alias("__bm"),
-            F.sum("__b").alias("__bt"),
-        )
-        spine = spine.withColumn("__gk", group_key_col(spine, gb) if gb else F.lit(""))
-        max_cats = spine.agg(F.max(F.size("__bm"))).first()[0] or 0
-    else:
-        groups = baseline["groups"] if gb else {"": baseline["counts"]}
-        maps = {k: {str(cat): int(n) for cat, n in (m or {}).items() if n > 0} for k, m in groups.items()}
-        rows = [(k, m, sum(m.values())) for k, m in maps.items() if m]
-        max_cats = max((len(m) for _, m, _ in rows), default=0)
-        if max_cats:
-            spine = counts_df.sparkSession.createDataFrame(rows, "__gk string, __bm map<string,bigint>, __bt bigint")
-    if not max_cats:
+    cells, max_cats = _categorical_cells(counts_df, column, baseline, gb, wc)
+    most = max_cats()
+    if not most:
         raise SpecError("empty baseline")
-    cells = _cells(counts_df, _as_str(counts_df, column), spine, gb, wc)
-    n = F.col("__n")
-
-    def term(acc, kv):
-        e = n.cast("double") * kv["value"] / F.col("__bt")
-        o = F.coalesce(F.try_element_at(F.col("__m"), kv["key"]), F.lit(0))
-        return acc + (o - e) ** 2 / e
-
-    statistic = F.when(n > 0, F.aggregate(F.map_entries("__bm"), F.lit(0.0), term))
-    dof = F.greatest(F.size("__bm") - 1, F.lit(1))
-    crit = F.array(*[F.lit(chi2_crit(k, alpha)) for k in range(1, max(max_cats - 1, 1) + 1)])
+    statistic, dof = _chi2_columns()
+    crit = F.array(*[F.lit(chi2_crit(k, alpha)) for k in range(1, max(most - 1, 1) + 1)])
     novel = F.exists(F.map_keys("__m"), lambda k: ~F.map_contains_key("__bm", k))
     ok = F.col("__bm").isNotNull() & ~novel & (statistic <= F.try_element_at(crit, dof))
     return cells.select(

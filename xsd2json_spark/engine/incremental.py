@@ -57,6 +57,7 @@ table's own changelog/incremental read and skip the scan entirely;
 
 from __future__ import annotations
 
+import json
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,7 +73,7 @@ from xsd2json_spark.engine.validate import (
     unique_violations_from_counts,
     verdict_passed,
 )
-from xsd2json_spark.spec.constraints import Cardinality, Drift, ForeignKey, Spec, Unique
+from xsd2json_spark.spec.constraints import Cardinality, Drift, ForeignKey, FunctionalDependency, Quantile, Spec, Unique
 
 
 def snapshot_delta(
@@ -168,8 +169,8 @@ def state_rows(df: DataFrame, c, baselines=None, by=()) -> "tuple[list, DataFram
     pass), cardinality keeps NULL groups (groupBy semantics), drift
     drops NULL values (and, for KS, NaN) and keeps NULL groups. KS keys
     each value by its bin in the baseline's quantile grid, so it needs
-    ``baselines``; per group, a broadcast left join on ``group_key_col``
-    finds the group's grid, and a group the baseline lacks gets
+    ``baselines``; per group, the row's ``group_key_col`` looks its
+    grid up in a literal map, and a group the baseline lacks gets
     ``UNSEEN_GROUP_BIN`` (its verdict fails).
 
     ``by`` names extra group keys carried in front of the kind's keys
@@ -192,11 +193,12 @@ def state_rows(df: DataFrame, c, baselines=None, by=()) -> "tuple[list, DataFram
         baseline = baseline_of(c, baselines or {})
         if not c.group_by:
             return [*gb, "__bin"], v.select(*gb, bin_index_expr(F.col("__v"), baseline["grid"]).alias("__bin"))
-        grids = df.sparkSession.createDataFrame(
-            [(k, [float(q) for q in g["grid"]]) for k, g in baseline["groups"].items()],
-            "__gk string, __grid array<double>",
-        )
-        keyed = v.withColumn("__gk", group_key_col(v, c.group_by, c.id)).join(F.broadcast(grids), "__gk", "left")
+        # the grids as ONE json string literal, folded by the optimizer
+        # into a map constant: no join, no Spark job, one py4j call; json
+        # spells each double exactly (repr) and +-inf as +-Infinity
+        grids = json.dumps({k: [float(q) for q in g["grid"]] for k, g in baseline["groups"].items()})
+        grids = F.from_json(F.lit(grids), "map<string,array<double>>")
+        keyed = v.withColumn("__grid", F.try_element_at(grids, group_key_col(v, c.group_by, c.id)))
         b = F.when(F.col("__grid").isNull(), F.lit(UNSEEN_GROUP_BIN)).otherwise(
             bin_index_expr(F.col("__v"), F.col("__grid"))
         )
@@ -244,29 +246,36 @@ def compose_state(prev: DataFrame, added: DataFrame, removed: DataFrame, c, base
     return u.groupBy(*cols).agg(F.sum("n").cast("long").alias("n")).filter(F.col("n") > 0)
 
 
-def _state_verdicts(spark: SparkSession, spec: Spec, c, counts: DataFrame, dims: dict, baselines: dict) -> DataFrame:
-    """Verdict row(s) of table check ``c`` read off its count state with
-    the engine's own readers; violation_count counts what a from-scratch
-    run counts (duplicated keys, dangling fact ROWS = sum(n), groups out
-    of bounds)."""
+def _table_verdicts(engine: ValidationEngine, c, cur_df: DataFrame, counts) -> DataFrame:
+    """Verdict row(s) of table check ``c`` read with the engine's own
+    readers: off ``counts``, its count state, or for quantile and FD
+    (no state) off their violations over ``cur_df``. violation_count
+    counts what a from-scratch run counts (duplicated keys, dangling
+    fact ROWS = sum(n), groups out of bounds, offending groups)."""
     if isinstance(c, Drift):
-        return drift_verdicts(None, c, baselines, counts=counts)
-    if isinstance(c, Unique):
-        n = unique_violations_from_counts(counts, c).agg(F.count(F.lit(1)).alias("__n"))
-    elif isinstance(c, ForeignKey):
-        dim = dims.get(c.ref_table)
+        return drift_verdicts(None, c, engine.baselines, counts=counts)
+    if isinstance(c, ForeignKey):
+        dim = engine.dims.get(c.ref_table)
         if dim is None:
             raise KeyError(f"foreign_key {c.id}: dimension table {c.ref_table!r} not provided")
         n = fk_dangling(counts, dim, c).agg(F.sum("n").alias("__n"))
     else:
-        n = cardinality_violations_from_counts(counts, c).agg(F.count(F.lit(1)).alias("__n"))
+        if isinstance(c, Unique):
+            viol = unique_violations_from_counts(counts, c)
+        elif isinstance(c, Cardinality):
+            viol = cardinality_violations_from_counts(counts, c)
+        elif isinstance(c, Quantile):
+            viol = engine.quantile_violations(cur_df, c)
+        else:
+            viol = engine.fd_violations(cur_df, c)
+        n = viol.agg(F.count(F.lit(1)).alias("__n"))
     vc, ec = F.coalesce(F.col("__n"), F.lit(0)).cast("long"), F.lit(None).cast("long")
     return n.select(
         F.lit("ALL").alias("partition_key"),
         F.lit(c.id).alias("constraint_id"),
         vc.alias("violation_count"),
         ec.alias("evaluated_count"),
-        verdict_passed(spec, F.lit(c.id), vc, ec).alias("passed"),
+        verdict_passed(engine.spec, F.lit(c.id), vc, ec).alias("passed"),
     )
 
 
@@ -289,8 +298,10 @@ def incremental_verdicts(
     states: optional {constraint_id: count state} — the previous
     snapshot's ``state_of`` per table check (``build_states``). Each
     covered check's verdict is COMPOSED from its state plus the delta
-    (``compose_state``) instead of rescanning cur_df; every other table
-    check recomputes on cur_df. With every state supplied the verdict
+    (``compose_state``) instead of rescanning cur_df; any other check
+    reads a fresh ``state_of(cur_df)`` (quantile and FD: its
+    violations) through the same readers, in one lazy plan that
+    persists nothing. With every state supplied the verdict
     table touches cur_df only for the delta scan and the sketch-sized
     quantile checks. FK reads the CURRENT dim at verdict time, so dim
     changes need no state rebuild; drift states need ``baselines`` (the
@@ -305,22 +316,14 @@ def incremental_verdicts(
     )
     added, removed = snapshot_delta(prev_df, cur_df, spec.key_columns)
     verdicts = incremental_row_verdicts(engine, added, removed, prev_verdicts)
-    table_cs = []
     for c in spec.table_level():
         if c.id in states:
             counts = compose_state(states[c.id], added, removed, c, baselines)
-            verdicts = verdicts.unionByName(_state_verdicts(spark, spec, c, counts, dims, baselines))
-        elif isinstance(c, Drift):
-            # the engine's own drift read, without the engine's persisted
-            # union: nothing could release it behind the lazy result
-            verdicts = verdicts.unionByName(drift_verdicts(cur_df, c, baselines))
+        elif isinstance(c, (Quantile, FunctionalDependency)):
+            counts = None
         else:
-            table_cs.append(c)
-    if table_cs:
-        table_spec = replace(spec, constraints=tuple(table_cs), watched_columns=())
-        res = ValidationEngine(spark, table_spec, dims=dims, baselines=baselines, config=config).run(cur_df)
-        tv = res.verdicts.filter(F.col("constraint_id").isin([c.id for c in table_cs]))
-        verdicts = verdicts.unionByName(tv.select(*VERDICT_COLUMNS))
+            counts = state_of(cur_df, c, baselines)
+        verdicts = verdicts.unionByName(_table_verdicts(engine, c, cur_df, counts))
     return verdicts
 
 
